@@ -91,7 +91,8 @@ object Bench {
       // the bucketed layout removes the one join whose hash build needed
       // the wide config to stay in memory; the UNBUCKETED join path keeps
       // the data-scaled width (that OOM was measured, and AQE can only
-      // merge partitions below the static width, not split them).
+      // merge partitions below the static width, not split them). The grid:
+      // `git show bbeb2bc:src/main/scala/graft/tools/ProbeCd.scala`
       val dataScaled = spark.conf.getOption("graft.bench.dataShuffle")
       val bucketed = spark.conf.getOption("graft.layout.bucketed").contains("true")
       val width =
@@ -113,81 +114,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Config tracks input size (measured on the 100x crossover dataset):
-    //  - small inputs (sf0.1, 11 MB lineitem): AQE's stage-by-stage
-    //    replanning costs whole scheduling rounds, which dominates
-    //    sub-second queries — AQE off, 32 shuffle partitions.
-    //  - large inputs (100x, 1.1 GB lineitem): AQE on (it right-sizes
-    //    partitions per stage, which also keeps every shuffled-hash build
-    //    inside execution memory — the fixed 32-partition config OOMed the
-    //    60M x 15M join build), shuffle partitions scaled at ~8 MB of input
-    //    per partition. This is the knob that must track data, not cores.
-    val liBytes = pathBytes(s"$sfDir/lineitem.parquet")
-    val bigInput = liBytes > 100L * 1024 * 1024
-    // 1000x-class inputs (multi-GB lineitem) widen the cap to the measured
-    // envelope (r11/r12 windows ran SPARK_GRAFT_SHUFFLE=512 by hand; this
-    // makes the input-scaled default match it — r12 verdict task 6)
-    val thousandX = liBytes > 4L * 1024 * 1024 * 1024
-    val defaultShuffle = {
-      val cap = if (thousandX) 512L else 256L
-      if (bigInput) math.min(cap, math.max(32L, liBytes / (8L * 1024 * 1024))).toString
-      else "32"
-    }
-    // Heap-envelope tripwire (r12 verdict task 6): the 1000x window's heavy
-    // cells (SHJ builds, 2M-vector caches) need ~16 GB of driver heap
-    // (PERF.md 1000x envelope). Warn LOUDLY up front and stamp the
-    // artifact instead of OOMing mid-window with no marked cause.
-    val heapGb = Runtime.getRuntime.maxMemory() / (1024.0 * 1024 * 1024)
-    val envNote =
-      if (thousandX && heapGb < 13.5)
-        f"heap ${heapGb}%.1fg below the 16g 1000x envelope - set SPARK_DRIVER_MEM=16g (dev/bench_pair.sh auto-sets it)"
-      else ""
-    if (envNote.nonEmpty) System.err.println(s"[bench] WARNING: $envNote")
-    val spark = SparkSession.builder()
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", defaultShuffle))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", if (bigInput) "true" else "false"))
-      // join strategy, measured on the 10x dataset (ProbeJoin2 grid):
-      // broadcasting a 25 MB/1.5M-row fact side costs ~4 s/run in driver
-      // collect + hash build, while a 32-partition shuffled-hash join runs
-      // in 0.97 s — so dims under 20 MB broadcast, anything bigger shuffles
-      // into parallel hash builds (sort-merge only helps pre-sorted data;
-      // at real scale AQE re-picks per stage and handles skew)
-      .config("spark.sql.autoBroadcastJoinThreshold", (20L * 1024 * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", sys.env.getOrElse("SPARK_GRAFT_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // per-query width decisions in setSplitConf read this back
-    spark.conf.set("graft.bench.dataShuffle",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", defaultShuffle))
-
-    // layout-aware mode is the default: fact tables are bucketed on their
-    // join key once at ingest (untimed, like a real deployment's write
-    // path), so the headline q_join_agg plan is Exchange-free
-    spark.conf.set("graft.layout.bucketed",
-      sys.env.getOrElse("SPARK_GRAFT_BUCKETED", "true"))
-
-    // warm the engine + views outside the timed region
-    SparkEntry.engineFor(spark, sfDir)
-
-    // hot-table caching, MEASURED OFF by default: at sf0.1 the in-memory
-    // columnar scan is slower than the 11 MB vectorized parquet decode it
-    // replaces (total 9.1 -> 11.9 s; m_at_all_pct 0.57 -> 1.54 s) and the
-    // cached lineitem loses its bucketed distribution (q_join_agg 0.63 ->
-    // 0.83 s). Kept behind a flag as the measured negative result.
-    val cacheHot = sys.env.get("SPARK_GRAFT_CACHE").exists(_.toBoolean)
-    if (cacheHot) {
-      for (t <- Seq("lineitem", "orders", "customer", "documents", "embeddings")) {
-        spark.catalog.cacheTable(t)
-        spark.table(t).write.format("noop").mode("overwrite").save()
-      }
-    }
+    val BenchSession(spark, bigInput, envNote) = session(sfDir)
 
     val failures = scala.collection.mutable.ListBuffer[String]()
     val unstable = scala.collection.mutable.ListBuffer[String]()
@@ -305,5 +232,82 @@ object Bench {
       System.err.println(s"[bench] spark.stop failed: ${e.getMessage}") }
     // printed AFTER spark.stop() so the JSON is the final stdout line
     println(json)
+  }
+
+  /** The session Bench times its cells in, with the engine and views for
+    * `sfDir` already registered. `bigInput` marks a 100x-class input (it
+    * selects the per-query split conf); `envNote` is the heap-envelope
+    * warning stamped into the artifact, empty when the heap fits.
+    */
+  final case class BenchSession(spark: SparkSession, bigInput: Boolean, envNote: String)
+
+  /** Builds the Bench session for `sfDir`. DumpPlans builds its session
+    * here too, so a dumped plan is the plan Bench times.
+    */
+  def session(sfDir: String): BenchSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Config tracks input size (measured on the 100x crossover dataset):
+    //  - small inputs (sf0.1, 11 MB lineitem): AQE's stage-by-stage
+    //    replanning costs whole scheduling rounds, which dominates
+    //    sub-second queries — AQE off, 32 shuffle partitions.
+    //  - large inputs (100x, 1.1 GB lineitem): AQE on (it right-sizes
+    //    partitions per stage, which also keeps every shuffled-hash build
+    //    inside execution memory — the fixed 32-partition config OOMed the
+    //    60M x 15M join build), shuffle partitions scaled at ~8 MB of input
+    //    per partition. This is the knob that must track data, not cores.
+    val liBytes = pathBytes(s"$sfDir/lineitem.parquet")
+    val bigInput = liBytes > 100L * 1024 * 1024
+    // 1000x-class inputs (multi-GB lineitem) widen the cap to the measured
+    // envelope (r11/r12 windows ran SPARK_GRAFT_SHUFFLE=512 by hand; this
+    // makes the input-scaled default match it — r12 verdict task 6)
+    val thousandX = liBytes > 4L * 1024 * 1024 * 1024
+    val defaultShuffle = {
+      val cap = if (thousandX) 512L else 256L
+      if (bigInput) math.min(cap, math.max(32L, liBytes / (8L * 1024 * 1024))).toString
+      else "32"
+    }
+    // Heap-envelope tripwire (r12 verdict task 6): the 1000x window's heavy
+    // cells (SHJ builds, 2M-vector caches) need ~16 GB of driver heap
+    // (PERF.md 1000x envelope). Warn LOUDLY up front and stamp the
+    // artifact instead of OOMing mid-window with no marked cause.
+    val heapGb = Runtime.getRuntime.maxMemory() / (1024.0 * 1024 * 1024)
+    val envNote =
+      if (thousandX && heapGb < 13.5)
+        f"heap ${heapGb}%.1fg below the 16g 1000x envelope - set SPARK_DRIVER_MEM=16g (dev/bench_pair.sh auto-sets it)"
+      else ""
+    if (envNote.nonEmpty) System.err.println(s"[bench] WARNING: $envNote")
+    val spark = SparkSession.builder()
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", defaultShuffle))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.enabled",
+        sys.env.getOrElse("SPARK_GRAFT_AQE", if (bigInput) "true" else "false"))
+      // join strategy, measured on the 10x dataset (ProbeJoin2 grid):
+      // broadcasting a 25 MB/1.5M-row fact side costs ~4 s/run in driver
+      // collect + hash build, while a 32-partition shuffled-hash join runs
+      // in 0.97 s — so dims under 20 MB broadcast, anything bigger shuffles
+      // into parallel hash builds (sort-merge only helps pre-sorted data;
+      // at real scale AQE re-picks per stage and handles skew). The grid:
+      // `git show bbeb2bc:src/main/scala/graft/tools/ProbeJoin2.scala`
+      .config("spark.sql.autoBroadcastJoinThreshold", (20L * 1024 * 1024).toString)
+      .config("spark.sql.join.preferSortMergeJoin", sys.env.getOrElse("SPARK_GRAFT_SMJ", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // per-query width decisions in setSplitConf read this back
+    spark.conf.set("graft.bench.dataShuffle",
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", defaultShuffle))
+
+    // layout-aware mode is the default: fact tables are bucketed on their
+    // join key once at ingest (untimed, like a real deployment's write
+    // path), so the headline q_join_agg plan is Exchange-free
+    spark.conf.set("graft.layout.bucketed",
+      sys.env.getOrElse("SPARK_GRAFT_BUCKETED", "true"))
+
+    // warm the engine + views outside the timed region
+    SparkEntry.engineFor(spark, sfDir)
+    BenchSession(spark, bigInput, envNote)
   }
 }

@@ -31,7 +31,8 @@ object SparkEntry {
     // ingested ONCE as bucketed tables on their join key, so every later
     // equi-join/agg on that key runs without an Exchange. This is the layout
     // a 100 TB deployment runs — the shuffle is paid at ingest, not per
-    // query (measured: q_join_agg 6.56 -> 2.80 s at 100x, ProbeBucketed100x)
+    // query (measured: q_join_agg 6.56 -> 2.80 s at 100x, ProbeBucketed100x:
+    // `git show bbeb2bc:src/main/scala/graft/tools/ProbeBucketed100x.scala`)
     val bucketed = spark.conf.getOption("graft.layout.bucketed")
       .orElse(sys.env.get("SPARK_GRAFT_BUCKETED")).exists(_.toBoolean)
     val cacheKey = System.identityHashCode(spark) + "|" + dir + "|" + bucketed
@@ -215,7 +216,8 @@ object SparkEntry {
     // events bucketed by user_id, sorted (user_id, tus), tus precomputed.
     // The `events` temp view is NOT repointed (the extra tus column would
     // change SELECT * shapes); eventsWithTus routes to this table when the
-    // bucketed layout is on.
+    // bucketed layout is on. The probe:
+    // `git show bbeb2bc:src/main/scala/graft/tools/ProbeRangeLayout.scala`
     if (!spark.catalog.tableExists("events_tbkt" + bktSuffix(dir))) {
       val evBytes = {
         val f = new java.io.File(s"$dir/events.parquet")
@@ -317,7 +319,8 @@ object SparkEntry {
       // ScaleLayout). engineFor flips that gate off for bucketed mode and
       // restores it on the toggle back. Measured at 100x: e_range
       // 3.17 -> 1.34 s with both (user_id, __bin) exchanges elided;
-      // e_asof 0.51x, e_sessions 0.55x (ProbeRangeLayout).
+      // e_asof 0.51x, e_sessions 0.55x (ProbeRangeLayout:
+      // `git show bbeb2bc:src/main/scala/graft/tools/ProbeRangeLayout.scala`).
       s.table("events_tbkt" + bktSuffix(dir)).drop("ts")
     } else {
       val e = s.table("events")

@@ -59,6 +59,6 @@ object Verify {
   private def oracleJson: String = SparkEntry.oracleSql
     .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
 
-  /** Same dump for the targeted tools/ gates (ProbeSetopEntry). */
+  /** The oracle_sql.json text, for OracleTypeGateSuite's schema-only dump. */
   private[graft] def oracleJsonForTools: String = oracleJson
 }

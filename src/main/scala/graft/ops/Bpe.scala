@@ -67,7 +67,8 @@ object Bpe {
     // vocab (freq + per-codepoint symbol arrays) retains ~68 MB at 100k
     // words and ~642 MB at 1M, and the 10 single-core merge passes take
     // ~4 s / ~10 s respectively. 200k (~130 MB, ~5 s) keeps the driver
-    // comfortable; raise the conf on a fat-driver deployment.
+    // comfortable; raise the conf on a fat-driver deployment. The probe:
+    // `git show bbeb2bc:src/main/scala/graft/tools/ProbeBpeHeap.scala`
     val localMax = spark.conf.getOption("graft.bpe.localMaxWords")
       .map(_.toLong).getOrElse(200000L)
     if (topWords <= localMax) return learnMergesLocal(spark, words, nMerges)

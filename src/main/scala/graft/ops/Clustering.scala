@@ -38,12 +38,6 @@ object Clustering {
     // replaces (fenced in SimilaritySuite)
     graft.functions.VecOps.sqDistLongDouble(q, c)
 
-  /** The HOF formulation, kept as the equivalence-fence reference. */
-  private[graft] def sqDistHof(q: Column, c: Column): Column =
-    aggregate(
-      zip_with(q, c, (a, b) => (a.cast("double") - b) * (a.cast("double") - b)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** One assignment pass: nearest centroid per vector, ties to the lowest
     * centroid index. The centroid table (k rows — bounded by construction:
     * flat k or the coarse kSuper ≈ √k) is collected once per round and
@@ -261,7 +255,8 @@ object Clustering {
         // flat recall, PERF.md) captures the straddlers while keeping the
         // soft membership — and with it the quadratic in-cluster verify
         // cost — proportional to the boundary population, not the corpus
-        // (measured in PERF.md: ungated soft was ~4x the hard wall time)
+        // (measured in PERF.md: ungated soft was ~4x the hard wall time;
+        // the sweep: `git show bbeb2bc:src/main/scala/graft/tools/ProbeSoftMargin.scala`)
         .filter(col("__m2").isNotNull &&
           col("__m2.__d") <= lit(1.05) * col("__m1.__d"))
         .select(col("vec_id"), col("q"), col("__m2.cidx").as("super"))
@@ -277,50 +272,6 @@ object Clustering {
     }).localCheckpoint(eager = true)
     cells.unpersist()
     out
-  }
-
-  /** Dev-only plan probe: the first inner-round assignment frame of
-    * [[kmeansTwoLevel]], un-checkpointed, so its physical plan (fused
-    * argmin projection vs shuffle-hash join + struct-min, per the
-    * `graft.kmeans.innerBroadcastMaxRows` dispatch) can be dumped as
-    * committed evidence — the entry-level plan only shows the final
-    * localCheckpoint leaf.
-    */
-  private[graft] def kmeansTwoLevelInnerPlanProbe(embeddings: DataFrame,
-      kSuper: Int, kInner: Int, scale: Int = 1000,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = embeddings.select(col(idCol).cast("long").as("vec_id"),
-      transform(col(vecCol), x => round(x.cast("double") * scale).cast("long")).as("q"))
-    val coarse = q.filter(col("vec_id") < kSuper)
-      .select(col("vec_id").cast("int").as("cidx"),
-        transform(col("q"), x => x.cast("double")).as("cvec"))
-    val cells = assign(q, coarse).withColumnRenamed("cluster", "super")
-    val inner = cells
-      .withColumn("__rn", row_number().over(Window.partitionBy("super").orderBy("vec_id")))
-      .filter(col("__rn") <= kInner)
-      .select(col("super"), (col("__rn") - 1).cast("int").as("iidx"),
-        transform(col("q"), x => x.cast("double")).as("cvec"))
-      .localCheckpoint(eager = true)
-    val innerBroadcastMax = embeddings.sparkSession.conf
-      .getOption("graft.kmeans.innerBroadcastMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
-    if (kSuper.toLong * kInner <= innerBroadcastMax) {
-      val rows = inner.select(col("super"), col("iidx"), col("cvec")).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      val groups = embeddings.sparkSession.sparkContext
-        .broadcast(graft.functions.GroupedCentroids(rows))
-      cells.select(col("vec_id"), col("super"), col("q"),
-          graft.functions.VecOps.argminSqDistGrouped(col("super"), col("q"),
-            groups).as("iidx"))
-        .filter(col("iidx").isNotNull)
-    } else
-      cells.join(inner.hint("shuffle_hash"), Seq("super"))
-        .withColumn("__d", sqDist(col("q"), col("cvec")))
-        .groupBy("vec_id")
-        .agg(first("super").as("super"), first("q").as("q"),
-          min(struct(col("__d"), col("iidx"))).as("__m"))
-        .select(col("vec_id"), col("super"), col("q"), col("__m.iidx").as("iidx"))
   }
 
   /** Per-cluster inertia (sum of squared distances to the assigned

@@ -941,12 +941,6 @@ object Dedup {
     * swap for reliable `checkpoint()` if executor loss mid-job must be
     * survivable (localCheckpoint trades that for zero HDFS I/O).
     */
-  /** Diagnostic: propagation rounds the last connectedComponents call took
-    * (label-changed probes, excluding the final no-change round). Read by
-    * the scale demo / PERF measurements; not part of the operator contract.
-    */
-  @volatile var lastCcRounds: Int = 0
-
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_id_a",
                           bCol: String = "doc_id_b", maxIter: Int = 20): DataFrame = {
     // both directions from ONE pass over `pairs` (explode, not a union of
@@ -965,7 +959,6 @@ object Dedup {
       .localCheckpoint()
     var iter = 0
     var converged = false
-    lastCcRounds = 0
     while (!converged && iter < maxIter) {
       val prop = edges.join(labels.withColumnRenamed("id", "__v2"), col("__v") === col("__v2"))
         .groupBy(col("__u").as("id")).agg(min(col("component")).as("__nc"))
@@ -978,9 +971,6 @@ object Dedup {
       labels = next
       converged = !changed
       iter += 1
-      // count only label-changing rounds — the final probe round that
-      // observes no change is not a propagation round
-      if (changed) lastCcRounds = iter
     }
     edges.unpersist()
     if (!converged)

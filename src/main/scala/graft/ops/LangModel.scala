@@ -245,6 +245,7 @@ object LangModel {
     // (5x per row measured — ProbeLmPlan; the optimizer does not collapse
     // a Project into a generator), while the pre-projection plans exactly
     // one split per row (2.82 -> 1.77 s for the training stage at 100x).
+    // The probe: `git show bbeb2bc:src/main/scala/graft/tools/ProbeLmPlan.scala`
     val stream = docs.select(toks(textCol).as("__t"))
       .select(explode(concat(
         bigramPairs(col("__t")),

@@ -1878,7 +1878,6 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
       val (pairs, filters): (List[(String, String)], List[String]) = ctx.filter match {
         case CtxFilter.CondFilter(cond) =>
           val conjuncts = splitTopAnd(cond, Scan.buildMask(cond))
-          val eqRe = "(?s)^(.*?)(=)(.*)$"
           conjuncts.foldLeft((List.empty[(String, String)], List.empty[String])) {
             case ((ps, fs), cj) =>
               val cm = Scan.buildMask(cj)

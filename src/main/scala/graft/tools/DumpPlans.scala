@@ -1,15 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.{Bench, SparkEntry}
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for bench queries to <outDir>/<name>_<tag>.txt
   * — the committed plan evidence for OPTIMIZATION_r13.md (the judge cannot
   * run Spark; these files carry the Exchange counts / join strategies /
-  * PushedFilters the doc claims). Mirrors the Bench session config exactly
-  * (same master width, same per-query split conf, same layout default) so
-  * the dumped plan is the plan the bench actually times.
+  * PushedFilters the doc claims). The session is Bench's own
+  * (`Bench.session`: same master width, data-scaled shuffle width, AQE and
+  * join confs, layout default) and each query gets Bench's per-query split
+  * conf, so the dumped plan is the plan the bench actually times.
   *
   * Usage: runMain graft.tools.DumpPlans <outDir> <tag> [name...]
   *   (no names = the full headline+extras bench set)
@@ -20,27 +20,7 @@ object DumpPlans {
     val tag = args.lift(1).getOrElse(sys.error("usage: DumpPlans <outDir> <tag> [names...]"))
     val names = if (args.length > 2) args.drop(2).toSeq else Bench.headline ++ Bench.extras
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val liBytes = {
-      val f = new java.io.File(s"$sfDir/lineitem.parquet")
-      if (f.isDirectory) f.listFiles().map(_.length()).sum else f.length()
-    }
-    val bigInput = liBytes > 100L * 1024 * 1024
-    val spark = SparkSession.builder()
-      .appName("dump-plans").master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", if (bigInput) "128" else "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", if (bigInput) "true" else "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (20L * 1024 * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("graft.layout.bucketed",
-      sys.env.getOrElse("SPARK_GRAFT_BUCKETED", "true"))
-    SparkEntry.engineFor(spark, sfDir)
+    val Bench.BenchSession(spark, bigInput, _) = Bench.session(sfDir)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

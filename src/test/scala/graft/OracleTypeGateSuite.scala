@@ -19,6 +19,10 @@ import scala.sys.process._
   *
   * Skips (cancels) cleanly when python3/duckdb are absent — the gate is
   * environment-adjacent, not a library dependency.
+  *
+  * A second test keeps the documented dev commands honest: every
+  * `runMain graft.…` main named in the dev shell scripts or the verify
+  * skill must load.
   */
 class OracleTypeGateSuite extends SparkSpec {
 
@@ -48,5 +52,20 @@ class OracleTypeGateSuite extends SparkSpec {
       Seq("python3", "dev/check_oracle.py", "--types-only", sfDir, out),
       new java.io.File(".")).!(ProcessLogger(l => sb.append(l).append('\n')))
     assert(code == 0, s"types-only gate failed:\n$sb")
+  }
+
+  test("every main the dev scripts and the verify skill run still exists") {
+    val docs = new java.io.File("dev").listFiles().filter(_.getName.endsWith(".sh")).toSeq :+
+      new java.io.File(".claude/skills/verify/SKILL.md")
+    val mains = docs.filter(_.isFile).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      """runMain\s+(graft(?:\.\w+)+)""".r.findAllMatchIn(text).map(_.group(1))
+    }.distinct
+    assert(mains.nonEmpty, "no runMain commands found in dev/*.sh or the verify skill")
+    val missing = mains.filterNot { m =>
+      try { Class.forName(m, false, getClass.getClassLoader); true }
+      catch { case _: ClassNotFoundException => false }
+    }
+    assert(missing.isEmpty, s"documented mains that no longer exist: ${missing.mkString(", ")}")
   }
 }

@@ -142,6 +142,7 @@ class PipelineGatesSuite extends SparkSpec {
   // (tools/ProbeRecall): planes=4/tables=4 -> 0.94, planes=3/tables=6 -> 1.0;
   // IVF nProbe 3/8 -> 0.72, 5/8 -> 0.94. Gates sit at >= 0.9 on deterministic
   // seeds, so any regression in the bucketing/probing machinery trips them.
+  // The grid: `git show bbeb2bc:src/main/scala/graft/tools/ProbeRecall.scala`
   test("LSH kNN recall@5 >= 0.9 vs brute force (planes=4, tables=4)") {
     val got = knnPairs(Similarity.lshTopK(emb, knnQueries, k = 5, planes = 4, tables = 4))
     val recall = (got & knnTruth).size.toDouble / knnTruth.size
