@@ -183,7 +183,7 @@ final class GraftEngine(val spark: SparkSession) {
     // hidden permanent twin here too, or the inspected SQL is not the
     // executed one
     val before = batchHidden.toSet
-    val stmt = resolveMainQualified(Shims(stripSemantic(text.trim.stripSuffix(";"))))
+    val stmt = resolveMainQualified(preprocess(text))
     val out = expander.expand(stmt).getOrElse(stmt)
     // inspection must not leak catalog state: outside a batch nobody cleans
     // batchHidden until the NEXT sql() call, so drop what we materialized
@@ -197,11 +197,16 @@ final class GraftEngine(val spark: SparkSession) {
     out
   }
 
-  private def stripSemantic(stmt: String): String = {
-    val t = stmt.trim
-    if (t.length > 9 && t.regionMatches(true, 0, "SEMANTIC", 0, 8) &&
-        t.charAt(8).isWhitespace) t.substring(9).trim
-    else t
+  /** Statement text as the expander and Spark receive it: comments blanked
+    * (a statement may lead with a line comment ahead of its SEMANTIC
+    * prefix), a trailing ';' and the SEMANTIC prefix dropped, DuckDB
+    * spellings shimmed.
+    */
+  private def preprocess(stmt: String): String = {
+    val t = Scan.blankComments(stmt).trim.stripSuffix(";").trim
+    Shims(if (t.length > 9 && t.regionMatches(true, 0, "SEMANTIC", 0, 8) &&
+              t.charAt(8).isWhitespace) t.substring(9).trim
+          else t)
   }
 
   private val setWarningsRe =
@@ -212,9 +217,7 @@ final class GraftEngine(val spark: SparkSession) {
   private val prepared = TrieMap.empty[String, String]
 
   private def executeStatement(stmt0: String): DataFrame = {
-    // comments are blanked before the SEMANTIC check — a batch statement may
-    // lead with a line comment ahead of its SEMANTIC prefix
-    val stmtShimmed0 = Shims(stripSemantic(Scan.blankComments(stmt0)))
+    val stmtShimmed0 = preprocess(stmt0)
 
     // warnings as a queryable relation: `SELECT * FROM graft_warnings()` (or
     // the bare name) reads the warnings of the most recent statement. The
@@ -292,7 +295,10 @@ final class GraftEngine(val spark: SparkSession) {
         return spark.emptyDataFrame
       case prepareRe(name, body) =>
         // parameterless prepared statements (reference corpus uses them for
-        // deferred measure INSERTs)
+        // deferred measure INSERTs); a body that is itself a prepared-
+        // statement command could EXECUTE itself without bound
+        if ("(?is)^\\s*(PREPARE|EXECUTE|DEALLOCATE)\\b.*".r.matches(body))
+          throw new GraftException(s"PREPARE $name: the body cannot be PREPARE, EXECUTE or DEALLOCATE")
         prepared.put(name.toLowerCase, body.trim.stripSuffix(";"))
         return spark.emptyDataFrame
       case executeRe(name) =>
@@ -434,23 +440,9 @@ final class GraftEngine(val spark: SparkSession) {
       case viewBodyRe(p, b) => Some((p, b))
       case _ => None
     }
-    m.map { case (p, b0) =>
-      var b = b0.trim
-      if (b.startsWith("(")) {
-        val mask = Scan.buildMask(b)
-        val close = Scan.matchParen(b, mask, 0)
-        if (close == b.length - 1) b = b.substring(1, close).trim
-      }
-      (p, b)
-    }
+    m.map { case (p, b) => (p, Scan.unwrapParens(b).getOrElse(b).trim) }
   }
 
-  /** Register the clean view + catalog entry for an AS MEASURE CREATE VIEW.
-    * Decomposable and derived measures become typed NULL placeholder
-    * columns (virtual columns, measures.rs:4520-4524); non-decomposable and
-    * window measures stay materialized, with GROUP BY ALL appended when the
-    * view had no GROUP BY (measures.rs:4552-4570).
-    */
   /** Relation names a query references (lowercased last part), CTE-defined
     * names excluded; subquery expressions included. Parse failures return
     * empty — the caller's own CREATE will surface the real error.
@@ -469,6 +461,12 @@ final class GraftEngine(val spark: SparkSession) {
     } catch { case _: Exception => Set.empty }
   }
 
+  /** Register the clean view + catalog entry for an AS MEASURE CREATE VIEW.
+    * Decomposable and derived measures become typed NULL placeholder
+    * columns (virtual columns, measures.rs:4520-4524); non-decomposable and
+    * window measures stay materialized, with GROUP BY ALL appended when the
+    * view had no GROUP BY (measures.rs:4552-4570).
+    */
   private def registerMeasureView(p: ParsedMeasureView): DataFrame = {
     val tempName = Scan.lastPart(p.viewName)
     // Measure view over a measure view (r12 verdict task 4): v1's clean
@@ -557,7 +555,7 @@ final class GraftEngine(val spark: SparkSession) {
       mv = mv.copy(cleanViewSql = cleanSql)
       catalog.register(mv)
       baseColsCache.remove(tempName.toLowerCase)
-        if (p.temporary) {
+      if (p.temporary) {
         val lname = tempName.toLowerCase
         // first creation wins: a re-CREATE TEMP of the same live name keeps
         // the original shadow (the reference's snapshot chain nets out the

@@ -366,11 +366,8 @@ object Shims {
     val sb = new StringBuilder
     var pos = 0
     for ((tok, s, e) <- ids) {
-      var j = e
-      while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-      val isCall = j < sql.length && sql.charAt(j) == '('
       sb.append(sql.substring(pos, s))
-      if (isCall && !tok.contains('.') && fnRenames.contains(tok.toLowerCase))
+      if (Scan.isCallAt(sql, e) && !tok.contains('.') && fnRenames.contains(tok.toLowerCase))
         sb.append(fnRenames(tok.toLowerCase))
       else sb.append(tok)
       pos = e

@@ -41,16 +41,28 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
 
   private case class DimSpec(queryExpr: String, outName: String)
   private case class FromTable(name: String, alias: String)
-  private case class Frame(cte: String, sql: String, joinOn: Option[String], valueRef: String)
+
+  /** A CTE the outer query LEFT JOINs (`ON true` when it has no keys). */
+  private trait JoinedFrame { def cte: String; def joinOn: Option[String] }
+  private def leftJoins(frames: Iterable[JoinedFrame]): String =
+    frames.map(f => s" LEFT JOIN ${f.cte} ON ${f.joinOn.getOrElse("true")}").mkString
+
+  /** Merge key of a context frame: measures of the same view evaluated in
+    * the same (base, grouping keys, SET values, filter, window) context
+    * share one frame. Expressions are compared normalized.
+    */
+  private case class FrameKey(view: String, baseCte: String, innerKeys: List[String],
+                              setValues: List[String], filter: Option[String], window: Boolean)
 
   /** A context frame shared by every measure evaluated in the same
     * (grouping keys, SET conditions, filter) context: one shuffle produces
     * N value columns. The reference expands each call into its own subquery
     * (no sharing); merging is the optimizer rule SURVEY §4.2 flags as ours.
     */
-  private final class MergedFrame(val cte: String, val baseCte: String,
-                                  val innerKeys: List[String], val whereSql: Option[String],
-                                  val joinOn: Option[String], val isWindow: Boolean) {
+  private final class MergedFrame(val cte: String, val view: MeasureView, val baseCte: String,
+                                  val innerKeys: List[String], val hasSets: Boolean,
+                                  val whereSql: Option[String], val joinOn: Option[String],
+                                  val isWindow: Boolean) extends JoinedFrame {
     // (valueCol, aggExprSql, windowGuardMeasureName)
     val values = scala.collection.mutable.LinkedHashMap[String, (String, Option[String])]()
     private val byExpr = scala.collection.mutable.HashMap[String, String]()
@@ -104,39 +116,32 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     // refs written as `s . year` are tightened so the identifier scanner
     // sees one token
     val stmt = expandCurly(normalizeDots(Scan.blankComments(stmtRaw)).trim.stripSuffix(";"))
-    val mask = Scan.buildMask(stmt)
-    val withPos = Scan.findTopLevelWord(stmt, mask, "WITH", 0, stmt.length)
-    if (withPos >= 0 && stmt.substring(0, withPos).trim.isEmpty)
+    if (Scan.wordAt(stmt, 0, "WITH"))
       // expandWith recurses into every CTE body and the main query with the
       // correct accumulated CTE scope — rescanning the whole WITH here would
       // resolve CTE-shadowed names against the catalog again
-      expandWith(stmt, mask, withPos, cteNames)
+      SqlClauses.splitWith(stmt).flatMap(expandWith(stmt, _, cteNames))
     else
       // a NON-measure statement may still hold measure queries in subquery
       // positions (EXISTS / IN / scalar / derived tables) — expand each
       // parenthesized SELECT body recursively (reference: expand_cte_queries
       // recursion covers subqueries, measures.rs:2113-2251)
-      expandSelect(stmt, cteNames).orElse(expandSubqueries(stmt, mask, cteNames))
+      expandSelect(stmt, cteNames).orElse(expandSubqueries(stmt, cteNames))
   }
 
   /** Expand measure queries nested in `( SELECT ... )` spans of a statement
     * that is not itself a measure query. Outermost spans only — the
     * recursive expand() call handles deeper nesting.
     */
-  private def expandSubqueries(stmt: String, mask: Array[Boolean],
-                               cteNames: Set[String]): Option[String] = {
+  private def expandSubqueries(stmt: String, cteNames: Set[String]): Option[String] = {
+    val mask = Scan.buildMask(stmt)
     val repls = scala.collection.mutable.ListBuffer[(Int, Int, String)]()
     var i = 0
     while (i < stmt.length) {
       if (!mask(i) && stmt.charAt(i) == '(') {
         var j = i + 1
         while (j < stmt.length && (stmt.charAt(j).isWhitespace || mask(j))) j += 1
-        val isSelect =
-          (stmt.regionMatches(true, j, "SELECT", 0, 6) &&
-            (j + 6 >= stmt.length || !Scan.isIdentChar(stmt.charAt(j + 6)))) ||
-          (stmt.regionMatches(true, j, "WITH", 0, 4) &&
-            (j + 4 >= stmt.length || !Scan.isIdentChar(stmt.charAt(j + 4))))
-        if (isSelect) {
+        if (Scan.wordAt(stmt, j, "SELECT") || Scan.wordAt(stmt, j, "WITH")) {
           val close = Scan.matchParen(stmt, mask, i)
           if (close > 0) {
             val body = stmt.substring(i + 1, close)
@@ -163,71 +168,31 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
   /** Expand each top-level CTE body and the main query independently.
     * (Reference: expand_cte_queries, measures.rs:2113-2251.)
     */
-  private def expandWith(stmt: String, mask: Array[Boolean], withPos: Int,
-                         outerCtes: Set[String]): Option[String] = {
-    var i = withPos + 4
-    def skipWs(): Unit = { while (i < stmt.length && stmt.charAt(i).isWhitespace) i += 1 }
-    skipWs()
-    var recursive = false
-    if (stmt.regionMatches(true, i, "RECURSIVE", 0, 9)) { recursive = true; i += 9; skipWs() }
-    val ctes = scala.collection.mutable.ListBuffer[(String, String, String, String)]() // (name, name+cols, body, raw)
-    var parsing = true
-    while (parsing) {
-      skipWs()
-      val nameStart = i
-      if (i < stmt.length && mask(i)) {
-        // quoted CTE name — buildMask covers the full quoted span
-        while (i < stmt.length && mask(i)) i += 1
-      } else {
-        while (i < stmt.length && Scan.isIdentChar(stmt.charAt(i))) i += 1
-      }
-      if (i == nameStart) return None
-      val cteName = stmt.substring(nameStart, i)
-      var header = cteName
-      skipWs()
-      if (i < stmt.length && stmt.charAt(i) == '(') { // column list
-        val close = Scan.matchParen(stmt, mask, i)
-        if (close < 0) return None
-        header += " " + stmt.substring(i, close + 1)
-        i = close + 1
-        skipWs()
-      }
-      if (!stmt.regionMatches(true, i, "AS", 0, 2)) return None
-      i += 2
-      skipWs()
-      if (i >= stmt.length || stmt.charAt(i) != '(') return None
-      val close = Scan.matchParen(stmt, mask, i)
-      if (close < 0) return None
-      val body = stmt.substring(i + 1, close)
-      ctes += ((cteName, header, body, stmt.substring(nameStart, close + 1)))
-      i = close + 1
-      skipWs()
-      if (i < stmt.length && stmt.charAt(i) == ',') { i += 1 } else parsing = false
-    }
-    val main = stmt.substring(i)
+  private def expandWith(stmt: String, w: WithList, outerCtes: Set[String]): Option[String] = {
+    val main = stmt.substring(w.mainStart)
     var changed = false
     // each CTE body sees the names declared BEFORE it; the main query sees
     // all of them — in-scope CTE names shadow same-named measure views
     var inScope = outerCtes
     // under RECURSIVE every body may reference any CTE of the list (incl.
     // itself), so those bodies get the full name set
-    val allNames = outerCtes ++ ctes.map(_._1.toLowerCase)
-    val newCtes = ctes.map { case (name, header, body, _) =>
+    val allNames = outerCtes ++ w.ctes.map(_.name.toLowerCase)
+    val newCtes = w.ctes.map { cte =>
       val expanded =
-        if (recursive)
+        if (w.recursive)
           // a recursive body's top level has a fixed anchor/recursive-term
           // shape that the WITH-wrapped frame rewrite would break — expand
           // only nested subquery spans, with the full CTE scope
-          expandSubqueries(body, Scan.buildMask(body), allNames)
-        else expand(body, inScope)
+          expandSubqueries(cte.body, allNames)
+        else expand(cte.body, inScope)
       if (expanded.isDefined) changed = true
-      inScope = inScope + name.toLowerCase
-      s"$header AS (${expanded.getOrElse(body)})"
+      inScope = inScope + cte.name.toLowerCase
+      s"${cte.header} AS (${expanded.getOrElse(cte.body)})"
     }
     val mainExpanded = expand(main, inScope)
     if (mainExpanded.isDefined) changed = true
     if (!changed) None
-    else Some(s"WITH ${if (recursive) "RECURSIVE " else ""}${newCtes.mkString(", ")} ${mainExpanded.getOrElse(main)}")
+    else Some(s"WITH ${if (w.recursive) "RECURSIVE " else ""}${newCtes.mkString(", ")} ${mainExpanded.getOrElse(main)}")
   }
 
   /** Collapse whitespace around '.' in qualified references (outside
@@ -278,120 +243,6 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
 
   // ------------------------------------------------------------- SELECT
 
-  private case class TableRef(name: String, alias: String, nameStart: Int, refEnd: Int, hasAlias: Boolean)
-
-  /** Locate table refs (name + optional alias) with absolute offsets in the
-    * FROM text, for dedup-pushdown rewriting.
-    */
-  private def tableRefSpans(from: String): List[TableRef] = {
-    val mask = Scan.buildMask(from)
-    val out = scala.collection.mutable.ListBuffer[TableRef]()
-    var i = 0
-    var depth = 0
-    var expectTable = true
-    val joinPrefixes = Set("left", "right", "full", "inner", "cross", "outer", "semi", "anti", "lateral", "natural")
-    while (i < from.length) {
-      if (mask(i)) i += 1
-      else {
-        val c = from.charAt(i)
-        if (c == '(') { depth += 1; i += 1 }
-        else if (c == ')') { depth -= 1; if (depth < 0) depth = 0; i += 1 }
-        else if (depth == 0 && c == ',') { expectTable = true; i += 1 }
-        else if (depth == 0 && (c.isLetter || c == '_')) {
-          val s = i
-          while (i < from.length && Scan.isIdentChar(from.charAt(i))) i += 1
-          val word = from.substring(s, i)
-          val wl = word.toLowerCase
-          if (wl == "join") expectTable = true
-          else if (joinPrefixes.contains(wl) || wl == "on" || wl == "using") {
-            if (wl == "on" || wl == "using") expectTable = false
-          } else if (expectTable) {
-            // table name; look ahead for [AS] alias
-            var j = i
-            while (j < from.length && from.charAt(j).isWhitespace) j += 1
-            var aliasStart = j
-            var hasAs = false
-            if (j + 2 <= from.length && from.regionMatches(true, j, "AS", 0, 2) &&
-                (j + 2 >= from.length || !Scan.isIdentChar(from.charAt(j + 2)))) {
-              hasAs = true
-              j += 2
-              while (j < from.length && from.charAt(j).isWhitespace) j += 1
-              aliasStart = j
-            }
-            var k = aliasStart
-            while (k < from.length && Scan.isIdentChar(from.charAt(k))) k += 1
-            val aliasTok = from.substring(aliasStart, k)
-            val aliasOk = aliasTok.nonEmpty &&
-              (hasAs || !Set("join", "on", "using", "where", "group", "order", "left", "right",
-                "full", "inner", "cross", "outer", "natural").contains(aliasTok.toLowerCase))
-            if (aliasOk) out += TableRef(word, aliasTok, s, k, hasAlias = true)
-            else out += TableRef(word, word, s, i, hasAlias = false)
-            if (aliasOk) i = k
-            expectTable = false
-          }
-          // skip other words (ON condition content etc.)
-        } else i += 1
-      }
-    }
-    out.toList
-  }
-
-  private def parseFromTables(from: String): List[FromTable] = {
-    val mask = Scan.buildMask(from)
-    var i = 0
-    var depth = 0
-    val segs = scala.collection.mutable.ListBuffer[(Int, Int)]()
-    var segStart = 0
-    while (i < from.length) {
-      if (!mask(i)) {
-        val c = from.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth < 0) depth = 0 }
-        else if (depth == 0) {
-          if (c == ',') { segs += ((segStart, i)); segStart = i + 1 }
-          else if (from.regionMatches(true, i, "JOIN", 0, 4) &&
-                   (i == 0 || !Scan.isIdentChar(from.charAt(i - 1))) &&
-                   (i + 4 >= from.length || !Scan.isIdentChar(from.charAt(i + 4)))) {
-            segs += ((segStart, i)); segStart = i + 4; i += 3
-          }
-        }
-      }
-      i += 1
-    }
-    segs += ((segStart, from.length))
-    segs.toList.flatMap { case (s, e) =>
-      var seg = from.substring(s, e).trim
-      // drop join-type prefixes and ON/USING suffixes
-      val prefixes = List("LEFT", "RIGHT", "FULL", "INNER", "CROSS", "OUTER", "SEMI", "ANTI", "LATERAL", "NATURAL")
-      var changed = true
-      while (changed) {
-        changed = false
-        for (p <- prefixes if seg.length > p.length &&
-             seg.regionMatches(true, 0, p, 0, p.length) &&
-             !Scan.isIdentChar(seg.charAt(p.length))) {
-          seg = seg.substring(p.length).trim
-          changed = true
-        }
-      }
-      val segMask = Scan.buildMask(seg)
-      val onPos = Scan.findTopLevelWord(seg, segMask, "ON", 0, seg.length)
-      val usingPos = Scan.findTopLevelWord(seg, segMask, "USING", 0, seg.length)
-      val cut = List(onPos, usingPos).filter(_ >= 0).sorted.headOption.getOrElse(seg.length)
-      seg = seg.substring(0, cut).trim
-      if (seg.isEmpty || seg.startsWith("(")) None
-      else {
-        val toks = seg.split("\\s+").toList
-        toks match {
-          case name :: Nil => Some(FromTable(name, name))
-          case name :: "AS" :: alias :: Nil => Some(FromTable(name, alias))
-          case name :: "as" :: alias :: Nil => Some(FromTable(name, alias))
-          case name :: alias :: Nil if alias.forall(Scan.isIdentChar) => Some(FromTable(name, alias))
-          case _ => Some(FromTable(toks.head, toks.head))
-        }
-      }
-    }
-  }
-
   /** token -> base-level text for view v: strip any known FROM-alias
     * qualifier (including foreign aliases — a dim like `o.year` correlates
     * by bare name against another view's base), then apply the view's
@@ -424,14 +275,15 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     })
   }
 
-  private def containsAgg(text: String): Boolean = {
-    val mask = Scan.buildMask(text)
-    Scan.identifiers(text, mask, 0, text.length).exists { case (tok, _, e) =>
-      var j = e
-      while (j < text.length && text.charAt(j).isWhitespace) j += 1
-      j < text.length && text.charAt(j) == '(' &&
-        MeasureDdl.aggregateFns.contains(Scan.lastPart(tok).toLowerCase)
+  private def containsAgg(text: String): Boolean =
+    Scan.identifiers(text, Scan.buildMask(text), 0, text.length).exists { case (tok, _, e) =>
+      Scan.isCallAt(text, e) && MeasureDdl.aggregateFns.contains(Scan.lastPart(tok).toLowerCase)
     }
+
+  /** `alias.col` -> `col` for any FROM alias; other tokens unchanged. */
+  private def tokenToBase(allAliases: Set[String])(tok: String): Option[String] = {
+    val stripped = Scan.stripQual(tok, allAliases)
+    if (stripped != tok) Some(stripped) else None
   }
 
   /** Find sugar measure refs (bare `m` / `m AT (...)`) in an item, outside
@@ -447,48 +299,15 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
       val name = Scan.lastPart(tok)
       val qual = if (tok.contains('.')) Some(tok.substring(0, tok.lastIndexOf('.'))) else None
       val qualOk = qual.forall(q => aliases.contains(q.toLowerCase))
-      if (!inTaken && qualOk && measureNames.contains(name.toLowerCase)) {
-        // skip function calls and aliases (token right after AS)
-        var j = e
-        while (j < text.length && text.charAt(j).isWhitespace) j += 1
-        val isCall = j < text.length && text.charAt(j) == '('
-        var k = s - 1
-        while (k >= 0 && text.charAt(k).isWhitespace) k -= 1
-        val afterAs = k >= 1 && text.regionMatches(true, k - 1, "AS", 0, 2) &&
-          (k - 2 < 0 || !Scan.isIdentChar(text.charAt(k - 2)))
-        // skip qualified-struct-ish or preceded by '.' directly
-        val afterDot = k >= 0 && text.charAt(k) == '.'
-        if (!isCall && !afterAs && !afterDot) {
-          // m AT ( ... )?  chase AT chain
-          if (j < text.length && text.regionMatches(true, j, "AT", 0, 2) &&
-              (j + 2 >= text.length || !Scan.isIdentChar(text.charAt(j + 2)))) {
-            var end = e
-            val mods = scala.collection.mutable.ListBuffer[ContextModifier]()
-            var chasing = true
-            var cur = j
-            while (chasing) {
-              var p = cur
-              while (p < text.length && text.charAt(p).isWhitespace) p += 1
-              if (p < text.length && text.regionMatches(true, p, "AT", 0, 2) &&
-                  (p + 2 >= text.length || !Scan.isIdentChar(text.charAt(p + 2)))) {
-                var q = p + 2
-                while (q < text.length && text.charAt(q).isWhitespace) q += 1
-                if (q < text.length && text.charAt(q) == '(') {
-                  val close = Scan.matchParen(text, mask, q)
-                  if (close > 0) {
-                    mods ++= AtParser.parseModifiers(text.substring(q + 1, close))
-                    end = close + 1
-                    cur = close + 1
-                  } else chasing = false
-                } else chasing = false
-              } else chasing = false
-            }
-            if (mods.nonEmpty) out += AggCall(tok, mods.toList, s, end, paperDefault = false)
-            else out += AggCall(tok, Nil, s, e, paperDefault = true)
-          } else {
-            out += AggCall(tok, Nil, s, e, paperDefault = true)
-          }
-        }
+      if (!inTaken && qualOk && measureNames.contains(name.toLowerCase) &&
+          // skip function calls, aliases (token right after AS) and
+          // qualified-struct-ish refs preceded by '.' directly
+          !Scan.isCallAt(text, e) && !Scan.followsAs(text, s) &&
+          !text.substring(0, s).trim.endsWith(".")) {
+        // m AT ( ... )?  chase the AT chain
+        val (mods, end) = AtParser.chaseAt(text, mask, e, text.length)
+        out += (if (mods.nonEmpty) AggCall(tok, mods, s, end, paperDefault = false)
+                else AggCall(tok, Nil, s, e, paperDefault = true))
       }
     }
     out.toList
@@ -517,28 +336,8 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
   }
 
   /** mapColumnRefs + skip tokens right after AS (aliases). */
-  private def mapTokens(text: String, f: String => Option[String]): String = {
-    val mask = Scan.buildMask(text)
-    val ids = Scan.identifiers(text, mask, 0, text.length)
-    if (ids.isEmpty) return text
-    val sb = new StringBuilder
-    var pos = 0
-    for ((tok, s, e) <- ids) {
-      var j = e
-      while (j < text.length && text.charAt(j).isWhitespace) j += 1
-      val isCall = j < text.length && text.charAt(j) == '('
-      var k = s - 1
-      while (k >= 0 && text.charAt(k).isWhitespace) k -= 1
-      val afterAs = k >= 1 && text.regionMatches(true, k - 1, "AS", 0, 2) &&
-        (k - 2 < 0 || !Scan.isIdentChar(text.charAt(k - 2)))
-      sb.append(text.substring(pos, s))
-      if (isCall || afterAs) sb.append(tok)
-      else sb.append(f(tok).getOrElse(tok))
-      pos = e
-    }
-    sb.append(text.substring(pos))
-    sb.toString
-  }
+  private def mapTokens(text: String, f: String => Option[String]): String =
+    Scan.mapColumnRefs(text, f, skipAliases = true)
 
   /** Rewrite a QUALIFY clause into plain Spark SQL (Spark has no QUALIFY).
     * The original query minus QUALIFY/ORDER BY/LIMIT becomes a FROM
@@ -571,7 +370,6 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     out.toString
   }
 
-  // The main single-statement expansion.
   /** Expand measure queries in the branches of a top-level set operation
     * (`SELECT … UNION [ALL] SELECT …`). Each branch expands independently
     * (every expansion mints unique CTE names), the WITH prefixes are
@@ -581,26 +379,11 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     * statements with their own user WITH stay on the passthrough path.
     */
   private def expandSetOp(stmt: String, cteNames: Set[String]): Option[String] = {
-    val mask = Scan.buildMask(stmt)
-    // locate every top-level set operator (shared scanner: skips Spark's
-    // select-list `* EXCEPT (col)` form, keeps ALL/DISTINCT modifiers)
-    val sorted = graft.syntax.SqlClauses.setOpSpans(stmt, mask)
-    if (sorted.isEmpty) return None
-    val bounds = (0 :: sorted.map(_._2)) zip (sorted.map(_._1) :+ stmt.length)
-    val branchesRaw = bounds.map { case (s, e) => stmt.substring(s, e).trim }
-
-    // the union tail (ORDER BY/LIMIT/OFFSET) lives syntactically in the
-    // last branch but belongs to the whole union
-    val last = branchesRaw.last
-    val lm = Scan.buildMask(last)
-    val tailPos = Seq("ORDER", "LIMIT", "OFFSET")
-      .map(k => Scan.findTopLevelWord(last, lm, k, 0, last.length))
-      .filter(_ >= 0).sorted.headOption
-    val (lastBody, unionTail) = tailPos match {
-      case Some(p) => (last.substring(0, p).trim, " " + last.substring(p).trim)
-      case None => (last, "")
-    }
-    val branches = branchesRaw.init :+ lastBody
+    // shared scanner: skips Spark's select-list `* EXCEPT (col)` form, keeps
+    // ALL/DISTINCT modifiers, and splits off the whole-union tail
+    val (opBranches, tail) = SqlClauses.splitSetOp(stmt)
+    if (opBranches.isEmpty) return None
+    val branches = opBranches.map(_._2)
 
     def hasCall(b: String): Boolean = {
       val bm = Scan.buildMask(b)
@@ -621,49 +404,15 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
 
     // hoist each expanded branch's WITH prefix (generated CTE names are
     // globally unique, so concatenation cannot collide)
-    def splitWith(sql: String): (List[String], String) = {
-      val m = Scan.buildMask(sql)
-      if (!sql.regionMatches(true, 0, "WITH", 0, 4) ||
-          (sql.length > 4 && Scan.isIdentChar(sql.charAt(4)))) return (Nil, sql)
-      val ctes = scala.collection.mutable.ListBuffer[String]()
-      var i = 4
-      var more = true
-      while (more) {
-        val start = {
-          var j = i
-          while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-          j
-        }
-        // walk to the cte body's closing paren at depth 0
-        var j = start
-        var depth = 0
-        var opened = false
-        var end = -1
-        while (end < 0 && j < sql.length) {
-          if (!m(j)) {
-            val c = sql.charAt(j)
-            if (c == '(') { depth += 1; opened = true }
-            else if (c == ')') { depth -= 1; if (opened && depth == 0) end = j + 1 }
-          }
-          j += 1
-        }
-        if (end < 0) return (Nil, sql) // malformed; leave whole
-        ctes += sql.substring(start, end).trim
-        var k = end
-        while (k < sql.length && sql.charAt(k).isWhitespace) k += 1
-        if (k < sql.length && sql.charAt(k) == ',') { i = k + 1 }
-        else { more = false; i = k }
-      }
-      (ctes.toList, sql.substring(i))
-    }
-
-    val parts = expandedBranches.map(splitWith)
+    val parts = expandedBranches.map(sql => SqlClauses.splitWith(sql) match {
+      case Some(w) => (w.ctes.map(_.raw), sql.substring(w.mainStart).trim)
+      case None => (Nil, sql.trim)
+    })
     val allCtes = parts.flatMap(_._1)
-    val bodies = parts.map(_._2.trim)
-    val joined = bodies.head + sorted.zip(bodies.tail)
-      .map { case (op, b) => s" ${op._3} $b" }.mkString
+    val joined = opBranches.map(_._1).zip(parts.map(_._2))
+      .map { case (op, b) => if (op.isEmpty) b else s" $op $b" }.mkString
     val prefix = if (allCtes.isEmpty) "" else s"WITH ${allCtes.mkString(", ")} "
-    Some(prefix + joined + unionTail)
+    Some(prefix + joined + (if (tail.isEmpty) "" else " " + tail))
   }
 
   private def expandSelect(stmt: String, cteNames: Set[String] = Set.empty): Option[String] = {
@@ -676,7 +425,8 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
       return Some(expand(rewritten, cteNames).getOrElse(rewritten))
     }
     val fromText = clauses.from.getOrElse(return None)
-    val tables = parseFromTables(fromText)
+    // derived tables carry no name and take no part in measure resolution
+    val tables = SqlClauses.fromItems(fromText).flatMap(i => i.name.map(FromTable(_, i.alias)))
     // a WITH-clause name shadows a same-named measure view: the FROM ref
     // reads the user's CTE, so it must not be measure-expanded (the table
     // stays in `tables` so its alias still participates in qualifier
@@ -694,18 +444,11 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     // call-site FILTER is not a measure operation in the reference either
     // (FILTER lives in the measure DEFINITION, measures.test:2807-2823);
     // fail with guidance instead of leaking a generated-SQL parse error
-    locally {
-      val sm = Scan.buildMask(stmt)
-      for (c <- AtParser.extractCalls(stmt, sm, 0, stmt.length)) {
-        var j = c.end
-        while (j < stmt.length && stmt.charAt(j).isWhitespace) j += 1
-        if (stmt.regionMatches(true, j, "FILTER", 0, 6) &&
-            (j + 6 >= stmt.length || !Scan.isIdentChar(stmt.charAt(j + 6))))
-          throw new GraftException(
-            "FILTER on AGGREGATE() is not supported: put the FILTER in the measure " +
-              "definition (SUM(x) FILTER (WHERE ...) AS MEASURE m) or use AGGREGATE(m) AT (WHERE ...)")
-      }
-    }
+    for (c <- AtParser.extractCalls(stmt, Scan.buildMask(stmt), 0, stmt.length)
+         if Scan.wordAt(stmt, Scan.skipWs(stmt, c.end), "FILTER"))
+      throw new GraftException(
+        "FILTER on AGGREGATE() is not supported: put the FILTER in the measure " +
+          "definition (SUM(x) FILTER (WHERE ...) AS MEASURE m) or use AGGREGATE(m) AT (WHERE ...)")
 
     val singleFact = tables.length == 1 && measureViews.length == 1
     val primaryView = catalog.get(measureViews.head.name).get
@@ -737,14 +480,17 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     }
     val items = clauses.selectItems.map(analyzeItem)
 
-    // Row-level mode (paper Listing 12): AGGREGATE calls in the WHERE clause
-    // of an ungrouped, call-free-select query filter individual base rows
-    val whereCalls: List[AggCall] = clauses.where.toList.flatMap { w =>
+    // measure calls of a WHERE predicate: explicit AGGREGATE calls and
+    // `m AT (...)` sugar; bare refs in WHERE stay ordinary columns
+    def predicateCalls(w: String): List[AggCall] = {
       val wm = Scan.buildMask(w)
       val explicit = AtParser.extractCalls(w, wm, 0, w.length)
       explicit ++ findSugarCalls(w, wm, explicit.map(c => (c.start, c.end)), measureNames, allAliases)
-        .filter(_.modifiers.nonEmpty) // bare refs in WHERE stay ordinary columns
+        .filter(_.modifiers.nonEmpty)
     }
+    // Row-level mode (paper Listing 12): AGGREGATE calls in the WHERE clause
+    // of an ungrouped, call-free-select query filter individual base rows
+    val whereCalls: List[AggCall] = clauses.where.toList.flatMap(predicateCalls)
     if (whereCalls.nonEmpty) {
       val rowLevelOk = singleFact && clauses.groupBy.isEmpty &&
         items.forall(_.calls.isEmpty) && !items.exists(_.kind == "plainagg") &&
@@ -787,38 +533,20 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
           items.filter(_.kind == "dim").map(i => dimFor(i.exprNoAlias, i.alias))
         } else {
           val gsSeq = Scan.findTopLevelSeq(g, gm0, Seq("GROUPING", "SETS"), 0, g.length)
-          if (gsSeq != null && gsSeq._1 == 0) {
-            val rest = g.substring(gsSeq._2).trim
-            if (rest.startsWith("(")) {
-              val rm = Scan.buildMask(rest)
-              val close = Scan.matchParen(rest, rm, 0)
-              if (close == rest.length - 1) {
-                groupWrapper = "GROUPING SETS"
-                groupingSetsRaw = rest.substring(1, close)
-                // dims = distinct column refs across all sets, in order
-                val inner = groupingSetsRaw
-                val im = Scan.buildMask(inner)
-                g = Scan.identifiers(inner, im, 0, inner.length).filter { case (_, _, e) =>
-                  var j = e
-                  while (j < inner.length && inner.charAt(j).isWhitespace) j += 1
-                  !(j < inner.length && inner.charAt(j) == '(')
-                }.map(_._1).distinct.mkString(", ")
-              }
+          if (gsSeq != null && gsSeq._1 == 0)
+            Scan.unwrapParens(g.substring(gsSeq._2)).foreach { inner =>
+              groupWrapper = "GROUPING SETS"
+              groupingSetsRaw = inner
+              // dims = distinct column refs across all sets, in order
+              g = Scan.columnRefs(inner, Scan.buildMask(inner), 0, inner.length)
+                .map(_._1).distinct.mkString(", ")
             }
-          }
-          for (w <- List("ROLLUP", "CUBE") if groupWrapper.isEmpty) {
-            if (g.length > w.length && g.regionMatches(true, 0, w, 0, w.length)) {
-              val rest = g.substring(w.length).trim
-              if (rest.startsWith("(")) {
-                val rm = Scan.buildMask(rest)
-                val close = Scan.matchParen(rest, rm, 0)
-                if (close == rest.length - 1) {
-                  groupWrapper = w
-                  g = rest.substring(1, close)
-                }
-              }
+          for (w <- List("ROLLUP", "CUBE")
+               if groupWrapper.isEmpty && g.length > w.length && g.regionMatches(true, 0, w, 0, w.length))
+            Scan.unwrapParens(g.substring(w.length)).foreach { inner =>
+              groupWrapper = w
+              g = inner
             }
-          }
           val gm = Scan.buildMask(g)
           val parts = Scan.splitTopLevel(g, gm, ',', 0, g.length)
             .map { case (s, e) => g.substring(s, e).trim }.filter(_.nonEmpty)
@@ -932,14 +660,11 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
       if (dot > 0) valiases.contains(tok.substring(0, dot).toLowerCase) || nameOwned
       else nameOwned
     }
+    def columnTokens(expr: String): List[String] =
+      Scan.columnRefs(expr, Scan.buildMask(expr), 0, expr.length).map(_._1).filterNot(isSqlKeyword)
     def exprOwnedBy(expr: String, v: MeasureView, valiases: Set[String]): Boolean = {
-      val mask = Scan.buildMask(expr)
-      val cols = Scan.identifiers(expr, mask, 0, expr.length).filter { case (t, _, e) =>
-        var j = e
-        while (j < expr.length && expr.charAt(j).isWhitespace) j += 1
-        !(j < expr.length && expr.charAt(j) == '(') && !isSqlKeyword(t)
-      }
-      cols.nonEmpty && cols.forall { case (t, _, _) => tokenOwnedBy(t, v, valiases) }
+      val cols = columnTokens(expr)
+      cols.nonEmpty && cols.forall(tokenOwnedBy(_, v, valiases))
     }
     def ownedConjuncts(where: String, v: MeasureView, valiases: Set[String]): Option[String] = {
       val mask = Scan.buildMask(where)
@@ -950,13 +675,15 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
 
     // ---- frame construction --------------------------------------------
     val baseCtes = scala.collection.mutable.LinkedHashMap[String, String]() // cteName -> sql
+    // registers the view's base CTE on first use; only the registrations
+    // made before the CTE list is assembled are emitted
     def baseCteFor(v: MeasureView): String = {
       val name = s"__base${u}_${v.viewName.toLowerCase.replaceAll("\\W", "_")}"
       baseCtes.getOrElseUpdate(name, v.baseRelationSql)
       name
     }
 
-    val frames = scala.collection.mutable.LinkedHashMap[String, MergedFrame]() // context signature -> frame
+    val frames = scala.collection.mutable.LinkedHashMap[FrameKey, MergedFrame]()
     var frameCounter = -1
     val inlineAggs = scala.collection.mutable.LinkedHashMap[String, (String, String)]() // sig -> (col, aggExpr)
     var inlineCounter = -1
@@ -976,11 +703,7 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
         val baseName = baseCteFor(primaryView)
         val (rframes, spans) =
           buildRowFrames(u, baseName, primaryView, primaryAliases, allAliases, whereCalls)
-        def tokenToBase(tok: String): Option[String] = {
-          val stripped = Scan.stripQual(tok, allAliases)
-          if (stripped != tok) Some(stripped) else None
-        }
-        Some((rframes, renderWithReplacements(outerWhere.get, spans, tokenToBase)))
+        Some((rframes, renderWithReplacements(outerWhere.get, spans, tokenToBase(allAliases))))
       }
 
     // Multi-fact measure-predicate WHERE: split the outer WHERE into
@@ -1000,13 +723,7 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
       if (whereCalls.isEmpty || singleFact) (outerWhere, Nil)
       else {
         val w = outerWhere.get
-        def callsIn(c: String): List[AggCall] = {
-          val m = Scan.buildMask(c)
-          val explicit = AtParser.extractCalls(c, m, 0, c.length)
-          explicit ++ findSugarCalls(c, m, explicit.map(x => (x.start, x.end)), measureNames, allAliases)
-            .filter(_.modifiers.nonEmpty) // bare refs stay ordinary columns
-        }
-        val classified = splitTopAnd(w, Scan.buildMask(w)).map(p => (p, callsIn(p)))
+        val classified = splitTopAnd(w, Scan.buildMask(w)).map(p => (p, predicateCalls(p)))
         val plain = classified.collect { case (p, Nil) => p }
         val byView = scala.collection.mutable.LinkedHashMap[String, (MeasureView, Set[String], List[String])]()
         for ((p, cs) <- classified if cs.nonEmpty) {
@@ -1022,12 +739,7 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
             for (c <- cs; i <- c.start until math.min(c.end, sb.length)) sb.setCharAt(i, ' ')
             sb.toString
           }
-          val bm = Scan.buildMask(blanked)
-          val foreign = Scan.identifiers(blanked, bm, 0, blanked.length).filter { case (t, _, e) =>
-            var j = e
-            while (j < blanked.length && blanked.charAt(j).isWhitespace) j += 1
-            !(j < blanked.length && blanked.charAt(j) == '(') && !isSqlKeyword(t)
-          }.collect { case (t, _, _) if !tokenOwnedBy(t, pc.view, pc.viewAliases) => t }
+          val foreign = columnTokens(blanked).filterNot(tokenOwnedBy(_, pc.view, pc.viewAliases))
           if (foreign.nonEmpty)
             throw new GraftException(
               s"WHERE measure predicate `$p` on view ${pc.view.viewName} references " +
@@ -1043,13 +755,9 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
               s"WHERE measure predicates on self-joined view ${v.viewName} are not supported")
           val combined = conjuncts.mkString(" AND ")
           val (rframes, spans) = buildRowFrames(u, baseCteFor(v), v, valiases, allAliases,
-            callsIn(combined), tag = s"_v$idx")
-          def tokenToBase(tok: String): Option[String] = {
-            val stripped = Scan.stripQual(tok, allAliases)
-            if (stripped != tok) Some(stripped) else None
-          }
+            predicateCalls(combined), tag = s"_v$idx")
           ViewPredicate(v, valiases, s"__vbase${u}_v$idx", rframes,
-            renderWithReplacements(combined, spans, tokenToBase))
+            renderWithReplacements(combined, spans, tokenToBase(allAliases)))
         }.toList
         (if (plain.isEmpty) None else Some(plain.mkString(" AND ")), preds)
       }
@@ -1152,20 +860,13 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
         val dropped = conjuncts.flatMap { c =>
           val cm = Scan.buildMask(c)
           val ownsDim = Scan.identifiers(c, cm, 0, c.length).exists { case (tok, ts, e) =>
-            var j = e
-            while (j < c.length && c.charAt(j).isWhitespace) j += 1
-            val isCall = j < c.length && c.charAt(j) == '('
+            val isCall = Scan.isCallAt(c, e)
             // `DATE '2023-01-01'` — a type keyword directly followed by a
             // string literal is a typed literal, not a column named `date`;
             // `CAST(x AS DATE)` — a token right after AS is a cast target
             // type (reference pin-detection breadth, measures.rs:6984-7107)
-            val isTypedLiteral = j < c.length && c.charAt(j) == '\''
-            val isCastType = {
-              var k = ts - 1
-              while (k >= 0 && c.charAt(k).isWhitespace) k -= 1
-              k >= 1 && c.regionMatches(true, k - 1, "AS", 0, 2) &&
-                (k - 2 < 0 || !Scan.isIdentChar(c.charAt(k - 2)))
-            }
+            val isTypedLiteral = c.startsWith("'", Scan.skipWs(c, e))
+            val isCastType = Scan.followsAs(c, ts)
             // a qualifier naming another FROM table means the filter is on
             // that table's column, not this measure's dimension
             val dot = tok.indexOf('.')
@@ -1227,18 +928,16 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
         else vbaseForV.get
       val corrKeys = correlate.map(d => substToBase(d.queryExpr, v, allAliases))
       val innerKeys = corrKeys ++ setConds.map(_._1)
-      val sig = List(v.viewName.toLowerCase, baseCte,
-        innerKeys.map(Scan.norm).mkString("|"),
-        setConds.map(s => Scan.norm(s._2)).mkString("|"),
-        filterSql.map(Scan.norm).getOrElse(""), if (isWindow) "w" else "a").mkString("§")
-      val frame = frames.getOrElseUpdate(sig, {
+      val key = FrameKey(v.viewName.toLowerCase, baseCte, innerKeys.map(Scan.norm),
+        setConds.map(s => Scan.norm(s._2)), filterSql.map(Scan.norm), isWindow)
+      val frame = frames.getOrElseUpdate(key, {
         frameCounter += 1
         val fname = s"__f${u}_$frameCounter"
         val joinConds =
           corrKeys.indices.map(i => s"$outerName.${correlate(i).outName} <=> $fname.__k$i") ++
           setConds.zipWithIndex.map { case ((_, outerV), j) => s"$fname.__k${corrKeys.length + j} <=> ($outerV)" }
         val joinOn = if (innerKeys.isEmpty) None else Some(joinConds.mkString(" AND "))
-        new MergedFrame(fname, baseCte, innerKeys, filterSql, joinOn, isWindow)
+        new MergedFrame(fname, v, baseCte, innerKeys, setConds.nonEmpty, filterSql, joinOn, isWindow)
       })
       val col = frame.valueCol(aggExpr, if (isWindow) Some(meas.name) else None)
       s"${frame.cte}.$col"
@@ -1325,23 +1024,20 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     for ((name, sql) <- baseCtes) cteList += s"$name AS ($sql)"
     // measure-predicate WHERE: row frames + the filtered base come right
     // after the base CTEs they read
-    rowWhere.foreach { case (rframes, rendered) =>
+    def filteredBase(vbase: String, v: MeasureView, rframes: List[RowFrame], where: String): Unit = {
       for (f <- rframes) cteList += s"${f.cte} AS (${f.sql})"
-      val joins = rframes.map(f => f.joinOn match {
-        case Some(on) => s" LEFT JOIN ${f.cte} ON $on"
-        case None => s" LEFT JOIN ${f.cte} ON true"
-      }).mkString
-      val baseName = baseCteFor(primaryView)
-      cteList += s"$vbaseName AS (SELECT $baseName.* FROM $baseName$joins WHERE $rendered)"
+      val baseName = baseCteFor(v)
+      cteList += s"$vbase AS (SELECT $baseName.* FROM $baseName${leftJoins(rframes)} WHERE $where)"
     }
-    for (p <- viewPredicates) {
-      for (f <- p.rframes) cteList += s"${f.cte} AS (${f.sql})"
-      val joins = p.rframes.map(f => f.joinOn match {
-        case Some(on) => s" LEFT JOIN ${f.cte} ON $on"
-        case None => s" LEFT JOIN ${f.cte} ON true"
-      }).mkString
-      val baseName = baseCteFor(p.view)
-      cteList += s"${p.vbase} AS (SELECT $baseName.* FROM $baseName$joins WHERE ${p.rendered})"
+    rowWhere.foreach { case (rframes, rendered) => filteredBase(vbaseName, primaryView, rframes, rendered) }
+    for (p <- viewPredicates) filteredBase(p.vbase, p.view, p.rframes, p.rendered)
+
+    // the unfiltered, SET-free aggregate frames over v's own base — the
+    // visible-context frames the derivations below read instead of a rescan
+    def plainFrames(v: MeasureView): List[MergedFrame] = {
+      val base = baseCteFor(v)
+      frames.values.filter(f => f.view.viewName.equalsIgnoreCase(v.viewName) &&
+        f.baseCte == base && !f.isWindow && f.whereSql.isEmpty && !f.hasSets).toList
     }
 
     // Single-fact decomposable AT-frame derivation: an AT (ALL)/(ALL dim)
@@ -1359,7 +1055,6 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
           outerWhere.nonEmpty || groupWrapper.nonEmpty || clauses.having.nonEmpty ||
           clauses.distinct || dims.isEmpty) Map.empty
       else {
-        val primaryBase = s"__base${u}_${primaryView.viewName.toLowerCase.replaceAll("\\W", "_")}"
         val dimByNorm: Map[String, String] = dims.map(d =>
           Scan.norm(substToBase(d.queryExpr, primaryView, primaryAliases)) -> d.outName).toMap
         val headRe = "(?is)^\\s*(SUM|COUNT|MIN|MAX)\\s*\\((?!\\s*DISTINCT\\b)".r
@@ -1376,11 +1071,8 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
             case None => false
           }
         }
-        frames.toList.flatMap { case (sig, f) =>
-          val parts = sig.split("§", -1)
-          val eligible = !f.isWindow && f.whereSql.isEmpty &&
-            parts.lift(1).contains(primaryBase) && parts.lift(3).contains("") &&
-            f.innerKeys.forall(k => dimByNorm.contains(Scan.norm(k))) &&
+        plainFrames(primaryView).flatMap { f =>
+          val eligible = f.innerKeys.forall(k => dimByNorm.contains(Scan.norm(k))) &&
             f.values.forall { case (_, (expr, guard)) =>
               guard.isEmpty && wholeSingleAgg(expr) }
           if (!eligible) None
@@ -1425,13 +1117,10 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
           dims.nonEmpty &&
           (groupWrapper != "GROUPING SETS" ||
             dims.forall(d => SqlClauses.plainColumnName(d.queryExpr).isDefined))) {
-        val primaryBase = baseCteFor(primaryView)
         val dimNorms = dims.map(d =>
           Scan.norm(substToBase(d.queryExpr, primaryView, primaryAliases)))
-        frames.toList.flatMap { case (sig, f) =>
-          val noSets = sig.split("§", -1).lift(3).contains("")
-          if (f.isWindow || f.whereSql.nonEmpty || !noSets ||
-              f.baseCte != primaryBase || f.innerKeys.size != dims.size) None
+        plainFrames(primaryView).flatMap { f =>
+          if (f.innerKeys.size != dims.size) None
           else {
             val keyNorms = f.innerKeys.map(Scan.norm)
             val idx = dimNorms.map(keyNorms.indexOf)
@@ -1499,31 +1188,28 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
           None
         }
         else {
-          val refs = tableRefSpans(fromText).filter(r => catalog.contains(r.name))
+          // (item, name as written, view) per measure-view FROM item
+          val refs = SqlClauses.fromItems(fromText)
+            .flatMap(r => r.name.flatMap(n => catalog.get(n).map(v => (r, n, v))))
           if (refs.isEmpty) None
           else {
             val contexts = (dims.map(_.queryExpr) ++ multiPlainWhere.toList :+ fromText).mkString(" , ")
-            val cm = Scan.buildMask(contexts)
-            val toks = Scan.identifiers(contexts, cm, 0, contexts.length).filter { case (_, _, e) =>
-              var j = e
-              while (j < contexts.length && contexts.charAt(j).isWhitespace) j += 1
-              !(j < contexts.length && contexts.charAt(j) == '(')
-            }
-            def neededCols(r: TableRef, view: MeasureView): Seq[String] = {
+            val toks = Scan.columnRefs(contexts, Scan.buildMask(contexts), 0, contexts.length)
+            def neededCols(r: FromItem, name: String, view: MeasureView): Seq[String] = {
               val outputs = view.dimensionOrder.map(_.toLowerCase).toSet
               toks.flatMap { case (t, _, _) =>
                 val dot = t.indexOf('.')
                 if (dot > 0) {
                   val q = t.substring(0, dot).toLowerCase
-                  if (q == r.alias.toLowerCase || q == r.name.toLowerCase) Some(Scan.lastPart(t).toLowerCase)
+                  if (q == r.alias.toLowerCase || q == name.toLowerCase) Some(Scan.lastPart(t).toLowerCase)
                   else None
                 } else if (outputs.contains(t.toLowerCase)) Some(t.toLowerCase)
                 else None
               }.distinct.filterNot(view.measureNamesLower.contains)
             }
-            val repls = refs.flatMap { r =>
-              catalog.get(r.name).flatMap { v =>
-                val cols = neededCols(r, v)
+            val repls = refs.flatMap { case (r, name, v) =>
+              {
+                val cols = neededCols(r, name, v)
                 // guided error instead of an UNRESOLVED_COLUMN plan dump:
                 // a view exposes its dimensions and measures only — an
                 // alias-qualified reference to a non-exposed base column
@@ -1550,7 +1236,7 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
                     val proj = keep.map(c =>
                       v.dimensionExprs.get(c).map(e => s"$e AS $c").getOrElse(c))
                     val sub = s"(SELECT DISTINCT ${proj.mkString(", ")} FROM $vbase)"
-                    Some((r.nameStart, r.nameStart + r.name.length,
+                    Some((r.start, r.start + name.length,
                       if (r.hasAlias) sub else s"$sub ${r.alias}"))
                   case None =>
                     if (cols.isEmpty) None
@@ -1564,21 +1250,17 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
                       // partial aggregate ONCE for both the outer and the
                       // frame join — halving fact scans in the common
                       // multi-fact shape (measured 0.67 -> 0.4 s at sf0.1).
-                      val baseName = s"__base${u}_${v.viewName.toLowerCase.replaceAll("\\W", "_")}"
                       val targets = cols.map(c => Scan.norm(substToBase(c, v, allAliases)))
-                      val frameSub = frames.collectFirst { case (sig, f)
-                        if sig.startsWith(s"${v.viewName.toLowerCase}§$baseName§") &&
-                           !f.isWindow && f.whereSql.isEmpty &&
-                           sig.split("§", -1).lift(3).contains("") &&
-                           targets.forall(t => f.innerKeys.exists(k => Scan.norm(k) == t)) =>
+                      val frameSub = plainFrames(v).collectFirst { case f
+                        if targets.forall(t => f.innerKeys.exists(k => Scan.norm(k) == t)) =>
                         val proj = cols.zip(targets).map { case (c, t) =>
                           s"__k${f.innerKeys.indexWhere(k => Scan.norm(k) == t)} AS $c"
                         }
                         s"(SELECT DISTINCT ${proj.mkString(", ")} FROM ${f.cte})"
                       }
                       val sub = frameSub.getOrElse(
-                        s"(SELECT DISTINCT ${cols.mkString(", ")} FROM ${r.name})")
-                      Some((r.nameStart, r.nameStart + r.name.length,
+                        s"(SELECT DISTINCT ${cols.mkString(", ")} FROM $name)")
+                      Some((r.start, r.start + name.length,
                         if (r.hasAlias) sub else s"$sub ${r.alias}"))
                     }
                 }
@@ -1613,24 +1295,20 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
           "(?i)\\b(LEFT|RIGHT|FULL|CROSS)\\b".r.findFirstIn(fromText).isDefined)
         None
       else {
-        val refs = tableRefSpans(fromText)
-        val viewsOf = refs.map(r => r -> catalog.get(r.name))
+        // derived tables (no name) have no frame: bail
+        val refs = SqlClauses.fromItems(fromText)
+        val viewsOf = refs.map(r => r -> r.name.flatMap(catalog.get))
         if (refs.size < 2 || viewsOf.exists(_._2.isEmpty) ||
-            refs.map(_.name.toLowerCase).distinct.size != refs.size) None
+            refs.map(_.name.map(_.toLowerCase)).distinct.size != refs.size) None
         else {
           // each view needs exactly one unfiltered visible-context frame
           // (keyed on all its owned dims, no SETs/filters/window); any
           // other frame shape means an AT context is present — bail
-          case class RF(ref: TableRef, view: MeasureView, frame: MergedFrame, aliases: Set[String])
+          case class RF(ref: FromItem, view: MeasureView, frame: MergedFrame, aliases: Set[String])
           val rfs = viewsOf.flatMap { case (r, vOpt) =>
             val v = vOpt.get
-            val baseName = s"__base${u}_${v.viewName.toLowerCase.replaceAll("\\W", "_")}"
-            frames.collectFirst { case (sig, f)
-              if sig.startsWith(s"${v.viewName.toLowerCase}§$baseName§") &&
-                 !f.isWindow && f.whereSql.isEmpty && f.innerKeys.nonEmpty &&
-                 sig.split("§", -1).lift(3).contains("") =>
-              RF(r, v, f, Set(r.alias.toLowerCase, r.name.toLowerCase))
-            }
+            plainFrames(v).find(_.innerKeys.nonEmpty).map(f =>
+              RF(r, v, f, Set(r.alias.toLowerCase) ++ r.name.map(_.toLowerCase)))
           }
           if (rfs.size != refs.size || frames.size != refs.size) None
           else {
@@ -1653,8 +1331,8 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
               // must map to a frame key — anything unmappable bails to
               // the general path
               val sbf = new StringBuilder(fromText)
-              for (rf <- rfs.sortBy(-_.ref.nameStart))
-                sbf.replace(rf.ref.nameStart, rf.ref.refEnd, rf.frame.cte)
+              for (rf <- rfs.sortBy(-_.ref.start))
+                sbf.replace(rf.ref.start, rf.ref.end, rf.frame.cte)
               var ok = true
               val fromWords = Set("join", "inner", "on", "using")
               val mapped = mapTokens(sbf.toString, { tok =>
@@ -1767,6 +1445,7 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
         if (ns.forall(_.isDefined)) Some(ns.map(_.get)) else None
       }
 
+    val frameJoins = leftJoins(frames.values.filterNot(f => skeletonFromFrame.exists(_._1 eq f)))
     val inner = new StringBuilder
     inner.append("SELECT ")
     if (clauses.distinct) inner.append("DISTINCT ")
@@ -1789,14 +1468,7 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
         }
         directJoin match {
           case Some((fromSql, _)) => inner.append(s" FROM $fromSql")
-          case None =>
-            inner.append(s" FROM $outerName")
-            for ((_, f) <- frames if !skeletonFromFrame.exists(_._1 eq f)) {
-              f.joinOn match {
-                case Some(on) => inner.append(s" LEFT JOIN ${f.cte} ON $on")
-                case None => inner.append(s" LEFT JOIN ${f.cte} ON true")
-              }
-            }
+          case None => inner.append(s" FROM $outerName$frameJoins")
         }
         havingRendered.foreach(h => inner.append(s" WHERE $h"))
         sb.append(s" SELECT ${names.mkString(", ")} FROM ($inner) __sort$u")
@@ -1807,14 +1479,7 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
         sb.append(inner)
         directJoin match {
           case Some((fromSql, _)) => sb.append(s" FROM $fromSql")
-          case None =>
-            sb.append(s" FROM $outerName")
-            for ((_, f) <- frames if !skeletonFromFrame.exists(_._1 eq f)) {
-              f.joinOn match {
-                case Some(on) => sb.append(s" LEFT JOIN ${f.cte} ON $on")
-                case None => sb.append(s" LEFT JOIN ${f.cte} ON true")
-              }
-            }
+          case None => sb.append(s" FROM $outerName$frameJoins")
         }
         havingRendered.foreach(h => sb.append(s" WHERE $h"))
         orderRendered.foreach(o => sb.append(s" ORDER BY $o"))
@@ -1852,6 +1517,7 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     * correlated scalar subquery.)
     */
   private case class RowFrame(cte: String, sql: String, joinOn: Option[String], valueRef: String)
+    extends JoinedFrame
 
   /** Plan per-row measure frames for AGGREGATE calls appearing in a WHERE
     * clause: each call becomes a grouped frame keyed on its correlated
@@ -1864,7 +1530,8 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
                              calls: List[AggCall],
                              tag: String = ""): (List[RowFrame], List[(Int, Int, String)]) = {
     var fc = -1
-    val frames = scala.collection.mutable.LinkedHashMap[String, RowFrame]()
+    // merge key: (aggregate, correlated inner keys, residual filters), normalized
+    val frames = scala.collection.mutable.LinkedHashMap[(String, List[String], List[String]), RowFrame]()
 
     def planRowCall(c: AggCall): String = {
       val meas = v.measure(c.measureName)
@@ -1920,9 +1587,8 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
           throw new GraftException(
             "plain AGGREGATE / AT (VISIBLE) in a row-level WHERE is circular; use AT (WHERE ...) or AT (ALL)")
       }
-      val sig = List(Scan.norm(aggExpr), pairs.map(p => Scan.norm(p._1)).mkString("|"),
-        filters.map(Scan.norm).mkString("&")).mkString("§")
-      val f = frames.getOrElseUpdate(sig, {
+      val key = (Scan.norm(aggExpr), pairs.map(p => Scan.norm(p._1)), filters.map(Scan.norm))
+      val f = frames.getOrElseUpdate(key, {
         fc += 1
         val name = s"__rf$u${tag}_$fc"
         val whereSql = if (filters.isEmpty) "" else s" WHERE ${filters.mkString(" AND ")}"
@@ -1955,11 +1621,8 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     val baseName = s"__base$u"
     val w = clauses.where.get
     val (frames, spans) = buildRowFrames(u, baseName, v, valiases, allAliases, calls)
-    def tokenToBase(tok: String): Option[String] = {
-      val stripped = Scan.stripQual(tok, allAliases)
-      if (stripped != tok) Some(stripped) else None
-    }
-    val whereRendered = renderWithReplacements(w, spans, tokenToBase)
+    val toBase = tokenToBase(allAliases) _
+    val whereRendered = renderWithReplacements(w, spans, toBase)
     // `*` (or `alias.*` on the measure view) must project the BASE relation
     // only — a bare star over the joined shape would leak the row frames'
     // internal __k/__v columns into the output schema
@@ -1967,20 +1630,15 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
       val t = i.trim
       if (t == "*") s"$baseName.*"
       else if (t.endsWith(".*") && valiases.contains(t.dropRight(2).toLowerCase)) s"$baseName.*"
-      else mapTokens(i, tokenToBase)
+      else mapTokens(i, toBase)
     }.mkString(", ")
-    val orderRendered = clauses.orderBy.map(o => mapTokens(o, tokenToBase))
+    val orderRendered = clauses.orderBy.map(o => mapTokens(o, toBase))
 
     val sb = new StringBuilder
     sb.append(s"WITH $baseName AS (${v.baseRelationSql})")
     for (f <- frames) sb.append(s", ${f.cte} AS (${f.sql})")
     sb.append(s" SELECT ${if (clauses.distinct) "DISTINCT " else ""}$itemsRendered FROM $baseName")
-    for (f <- frames) {
-      f.joinOn match {
-        case Some(on) => sb.append(s" LEFT JOIN ${f.cte} ON $on")
-        case None => sb.append(s" LEFT JOIN ${f.cte} ON true")
-      }
-    }
+    sb.append(leftJoins(frames))
     sb.append(s" WHERE $whereRendered")
     orderRendered.foreach(o => sb.append(s" ORDER BY $o"))
     clauses.limitText.foreach(l => sb.append(s" $l"))

@@ -44,12 +44,7 @@ final case class AggCall(
 
 object AtParser {
   import ContextModifier._
-
-  private def skipWs(s: String, i0: Int): Int = {
-    var i = i0
-    while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    i
-  }
+  import Scan.{skipWs, wordAt}
 
   /** Parse an identifier (possibly qualified) optionally followed by a
     * balanced paren group (function-call dims like MONTH(date)).
@@ -65,10 +60,8 @@ object AtParser {
       i += 1
       while (i < s.length && Scan.isIdentChar(s.charAt(i))) i += 1
     }
-    val j = skipWs(s, i)
-    if (j < s.length && s.charAt(j) == '(') {
-      val mask = Scan.buildMask(s)
-      val close = Scan.matchParen(s, mask, j)
+    if (Scan.isCallAt(s, i)) {
+      val close = Scan.matchParen(s, Scan.buildMask(s), skipWs(s, i))
       if (close > 0) return (s.substring(start, close + 1), close + 1)
     }
     (s.substring(start, i), i)
@@ -81,10 +74,6 @@ object AtParser {
     rest.startsWith("SET ") || rest.startsWith("WHERE ") ||
     rest == "VISIBLE" || rest.startsWith("VISIBLE ")
   }
-
-  private def wordAt(s: String, i: Int, w: String): Boolean =
-    i + w.length <= s.length && s.regionMatches(true, i, w, 0, w.length) &&
-    (i + w.length == s.length || !Scan.isIdentChar(s.charAt(i + w.length)))
 
   /** Parse the content of one AT (...) clause into modifiers.
     * Mirrors at_modifiers_content (measures.rs:1137-1183) including its
@@ -155,34 +144,40 @@ object AtParser {
     while (i < until) {
       if (!mask(i) && wordAt(sql, i, "AGGREGATE") &&
           (i == 0 || !Scan.isIdentChar(sql.charAt(i - 1)))) {
-        var j = skipWs(sql, i + 9)
-        if (j < until && sql.charAt(j) == '(') {
-          val close = Scan.matchParen(sql, mask, j)
-          if (close > 0 && close < until) {
-            val measure = sql.substring(j + 1, close).trim
-            var end = close + 1
-            val mods = scala.collection.mutable.ListBuffer[ContextModifier]()
-            // chase chained AT (...) clauses
-            var chasing = true
-            while (chasing) {
-              val k = skipWs(sql, end)
-              if (k < until && wordAt(sql, k, "AT") && !mask(k)) {
-                val p = skipWs(sql, k + 2)
-                if (p < until && sql.charAt(p) == '(') {
-                  val pc = Scan.matchParen(sql, mask, p)
-                  if (pc > 0 && pc < until) {
-                    mods ++= parseModifiers(sql.substring(p + 1, pc))
-                    end = pc + 1
-                  } else chasing = false
-                } else chasing = false
-              } else chasing = false
-            }
-            out += AggCall(measure, mods.toList, i, end, paperDefault = false)
-            i = end
-          } else i += 9
+        val j = skipWs(sql, i + 9)
+        val close = if (sql.startsWith("(", j)) Scan.matchParen(sql, mask, j) else -1
+        if (close > 0 && close < until) {
+          val (mods, end) = chaseAt(sql, mask, close + 1, until)
+          out += AggCall(sql.substring(j + 1, close).trim, mods, i, end, paperDefault = false)
+          i = end
         } else i += 9
       } else i += 1
     }
     out.toList
+  }
+
+  /** The modifiers of the `AT (...)` clauses chained from offset `from`
+    * (flattened, in text order) and the end of the last clause — `from`
+    * itself when no clause follows.
+    */
+  def chaseAt(sql: String, mask: Array[Boolean], from: Int, until: Int)
+      : (List[ContextModifier], Int) = {
+    val mods = scala.collection.mutable.ListBuffer[ContextModifier]()
+    var end = from
+    var chasing = true
+    while (chasing) {
+      val k = skipWs(sql, end)
+      val p = skipWs(sql, k + 2)
+      val close =
+        if (k < until && wordAt(sql, k, "AT") && !mask(k) && p < until && sql.startsWith("(", p))
+          Scan.matchParen(sql, mask, p)
+        else -1
+      chasing = close > 0 && close < until
+      if (chasing) {
+        mods ++= parseModifiers(sql.substring(p + 1, close))
+        end = close + 1
+      }
+    }
+    (mods.toList, end)
   }
 }

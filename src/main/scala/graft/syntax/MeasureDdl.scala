@@ -98,17 +98,6 @@ object MeasureDdl {
     "quantile", "quantile_cont", "quantile_disc", "approx_count_distinct"
   )
 
-  /** Find function-call names appearing in expr (unmasked, followed by '('). */
-  private def callNames(expr: String): List[String] = {
-    val mask = Scan.buildMask(expr)
-    Scan.identifiers(expr, mask, 0, expr.length).flatMap { case (tok, _, e) =>
-      var j = e
-      while (j < expr.length && expr.charAt(j).isWhitespace) j += 1
-      if (j < expr.length && expr.charAt(j) == '(') Some(Scan.lastPart(tok).toLowerCase)
-      else None
-    }
-  }
-
   private def hasTopLevelOver(expr: String): Boolean = {
     val mask = Scan.buildMask(expr)
     Scan.findTopLevelWord(expr, mask, "OVER", 0, expr.length) >= 0
@@ -123,16 +112,10 @@ object MeasureDdl {
 
   def classify(expr: String, siblingMeasuresLower: Set[String]): MeasureKind = {
     if (hasTopLevelOver(expr)) return MeasureKind.Window
-    val calls = callNames(expr)
-    val refsSibling = {
-      val mask = Scan.buildMask(expr)
-      Scan.identifiers(expr, mask, 0, expr.length).exists { case (tok, _, e) =>
-        var j = e
-        while (j < expr.length && expr.charAt(j).isWhitespace) j += 1
-        val isCall = j < expr.length && expr.charAt(j) == '('
-        !isCall && siblingMeasuresLower.contains(Scan.lastPart(tok).toLowerCase)
-      }
-    }
+    val ids = Scan.identifiers(expr, Scan.buildMask(expr), 0, expr.length)
+    val calls = ids.collect { case (t, _, e) if Scan.isCallAt(expr, e) => Scan.lastPart(t).toLowerCase }
+    val refsSibling = Scan.columnRefs(expr, Scan.buildMask(expr), 0, expr.length)
+      .exists(t => siblingMeasuresLower.contains(Scan.lastPart(t._1).toLowerCase))
     if (refsSibling && !calls.exists(aggregateFns.contains)) MeasureKind.Derived
     else if (calls.exists(nonDecomposableFns.contains) || hasDistinctInsideCall(expr))
       MeasureKind.NonDecomposable
@@ -150,16 +133,13 @@ object MeasureDdl {
         val viewName = rawName.stripPrefix("\"").stripSuffix("\"")
           .stripPrefix("`").stripSuffix("`")
         // body may be parenthesized
-        var body = body0.trim
-        if (body.startsWith("(") ) {
-          val m = Scan.buildMask(body)
-          val close = Scan.matchParen(body, m, 0)
-          if (close == body.length - 1) body = body.substring(1, close).trim
-        }
+        val body1 = Scan.unwrapParens(body0).getOrElse(body0).trim
         // a leading CTE list stays attached to both the clean view and the
         // base relation (reference: CTE-bodied measure views)
-        val (ctePrefix, mainBody) = splitWithPrefix(body)
-        body = mainBody
+        val (ctePrefix, body) = SqlClauses.splitWith(body1) match {
+          case Some(w) => (body1.substring(0, w.mainStart).trim, body1.substring(w.mainStart).trim)
+          case None => ("", body1)
+        }
         val clausesOpt = SqlClauses.parse(body)
 
         // set-operation bodies take a branch-aware path: the reference
@@ -178,16 +158,9 @@ object MeasureDdl {
         val clauses = clausesOpt.getOrElse(return None)
 
         // collect measure names first (two-pass, for derived classification)
-        val rawItems = clauses.selectItems.map(parseMeasureItem)
-        val measureNames = rawItems.collect { case Some((_, name)) => name.toLowerCase }.toSet
+        val measureNames = measureNamesOf(clauses)
         if (measureNames.isEmpty) return None
-
-        val items: Seq[Either[String, ViewMeasure]] =
-          clauses.selectItems.zip(rawItems).map {
-            case (_, Some((expr, name))) =>
-              Right(ViewMeasure(name, expr.trim, classify(expr, measureNames - name.toLowerCase)))
-            case (item, None) => Left(item)
-          }
+        val items = classifyItems(clauses, measureNames)
 
         // base relation: SELECT * FROM <from> [WHERE <where>]
         // (set-op bodies returned above on the branch-aware path)
@@ -199,32 +172,7 @@ object MeasureDdl {
         }
 
         // dimension exprs: every non-measure select item alias -> expr
-        val dimPairs = items.collect { case Left(item) =>
-          val (expr, aliasOpt) = SqlClauses.splitAlias(item)
-          val name = aliasOpt.orElse(SqlClauses.plainColumnName(expr)).getOrElse(expr)
-          // quoted aliases arrive unquoted from splitAlias and are fine
-          // when identifier-safe; spaces/punctuation would break dim-token
-          // resolution through the whole query surface — same policy as
-          // measure names, failed loudly here instead of an
-          // unresolved-column error at query time
-          if (aliasOpt.exists(a => !a.forall(Scan.isIdentChar)))
-            throw new graft.planner.GraftException(
-              s"dimension alias '${aliasOpt.get}' is not a plain identifier; quoted dimension " +
-                "aliases with spaces or punctuation are not supported in measure views — use " +
-                "an identifier (e.g. return_flag)")
-          (name, expr)
-        }
-        val dimensionExprs = dimPairs.map { case (n, e) => n.toLowerCase -> e }.toMap
-        val dimensionOrder = dimPairs.map(_._1)
-
-        val groupByCols = clauses.groupBy
-          .map { g =>
-            val mask = Scan.buildMask(g)
-            Scan.splitTopLevel(g, mask, ',', 0, g.length)
-              .map { case (s, e) => g.substring(s, e).trim }
-              .filter(c => c.nonEmpty && !measureNames.contains(c.toLowerCase))
-          }
-          .getOrElse(Nil)
+        val dimPairs = items.collect { case Left(item) => dimNameAndExpr(item) }
 
         Some(ParsedMeasureView(
           viewName = viewName,
@@ -233,14 +181,55 @@ object MeasureDdl {
           clauses = clauses,
           items = items,
           baseRelationSql = baseRelationSql,
-          dimensionExprs = dimensionExprs,
-          dimensionOrder = dimensionOrder,
-          groupByCols = groupByCols,
+          dimensionExprs = dimPairs.map { case (n, e) => n.toLowerCase -> e }.toMap,
+          dimensionOrder = dimPairs.map(_._1),
+          groupByCols = groupByCols(clauses, measureNames),
           ctePrefix = ctePrefix
         ))
       case _ => None
     }
   }
+
+  /** Lowercased names of the AS MEASURE items of one SELECT. */
+  private def measureNamesOf(c: SelectClauses): Set[String] =
+    c.selectItems.flatMap(parseMeasureItem).map(_._2.toLowerCase).toSet
+
+  /** Select items in order as Left(dimText) | Right(measure); `allNames`
+    * (every measure name of the view) drives derived classification.
+    */
+  private def classifyItems(c: SelectClauses, allNames: Set[String])
+      : List[Either[String, ViewMeasure]] =
+    c.selectItems.map { item =>
+      parseMeasureItem(item) match {
+        case Some((expr, name)) =>
+          Right(ViewMeasure(name, expr.trim, classify(expr, allNames - name.toLowerCase)))
+        case None => Left(item)
+      }
+    }
+
+  /** (output name, expression) of a dimension select item. Quoted aliases
+    * arrive unquoted from splitAlias and are fine when identifier-safe;
+    * spaces/punctuation would break dim-token resolution through the whole
+    * query surface — same policy as measure names, failed loudly here
+    * instead of an unresolved-column error at query time.
+    */
+  private def dimNameAndExpr(item: String): (String, String) = {
+    val (expr, aliasOpt) = SqlClauses.splitAlias(item)
+    if (aliasOpt.exists(a => !a.forall(Scan.isIdentChar)))
+      throw new graft.planner.GraftException(
+        s"dimension alias '${aliasOpt.get}' is not a plain identifier; quoted dimension " +
+          "aliases with spaces or punctuation are not supported in measure views — use " +
+          "an identifier (e.g. return_flag)")
+    (aliasOpt.orElse(SqlClauses.plainColumnName(expr)).getOrElse(expr), expr)
+  }
+
+  /** GROUP BY columns of a view body, measure names excluded. */
+  private def groupByCols(c: SelectClauses, measureNames: Set[String]): List[String] =
+    c.groupBy.toList.flatMap { g =>
+      Scan.splitTopLevel(g, Scan.buildMask(g), ',', 0, g.length)
+        .map { case (s, e) => g.substring(s, e).trim }
+        .filter(c => c.nonEmpty && !measureNames.contains(c.toLowerCase))
+    }
 
   /** Parse a measure view whose body is a top-level set operation.
     *
@@ -262,57 +251,43 @@ object MeasureDdl {
   private def parseSetOpView(viewName: String, orReplace: Boolean,
                              temporary: Boolean, wholeClausesOpt: Option[SelectClauses],
                              body: String, ctePrefix: String): Option[ParsedMeasureView] = {
-    val raw0 = SqlClauses.splitSetOpBranches(body)
-    if (raw0.isEmpty) return None
     // Whole-set-op tail (r11 verdict task 4b): a top-level ORDER BY / LIMIT
-    // / OFFSET in the LAST branch always binds to the whole set operation
-    // (SQL grammar — a branch cannot own one without parens), so split it
-    // off before branch parsing and re-append it outside the branch renders.
-    val (raw, setOpTail) = {
-      val (lop, lbody) = raw0.last
-      val lm = Scan.buildMask(lbody)
-      val tailPos = Seq("ORDER", "LIMIT", "OFFSET")
-        .map(k => Scan.findTopLevelWord(lbody, lm, k, 0, lbody.length))
-        .filter(_ >= 0).sorted.headOption
-      tailPos match {
-        case Some(tp) =>
-          (raw0.init :+ (lop, lbody.substring(0, tp).trim), lbody.substring(tp).trim)
-        case None => (raw0, "")
-      }
-    }
+    // / OFFSET in the LAST branch always binds to the whole set operation,
+    // so it is split off before branch parsing and re-appended outside the
+    // branch renders.
+    val (raw, setOpTail) = SqlClauses.splitSetOp(body)
+    if (raw.isEmpty) return None
     // Parenthesized branches (r11 verdict task 4a): a branch that is one
     // fully parenthesized SELECT unwraps (the paren carries no precedence
     // information a single SELECT can lose, and renders re-wrap it). A paren
     // branch that nests its own set operation, or carries trailing text
     // after the group, stays unsupported — but with a GUIDED error naming
     // the limitation instead of Spark's raw AS MEASURE parse failure.
-    val unwrappedRaw = raw.map { case (op, b) =>
-      if (!b.startsWith("(")) (op, b, false)
-      else {
-        val (inner, ok) = unwrapParenBranch(b)
-        if (!ok)
+    val unwrapped = raw.map { case (op, b) =>
+      var inner = b
+      while (inner.startsWith("("))
+        inner = Scan.unwrapParens(inner).getOrElse(
           throw new graft.planner.GraftException(
             "a parenthesized branch of a set-operation measure view must wrap exactly one " +
               "SELECT — text trailing the closing paren, or an ORDER BY/LIMIT nested between " +
               "paren layers, is not supported; a whole-set-op ORDER BY/LIMIT goes after the " +
-              s"last branch (outside its parens). Branch: ${b.take(80)}")
-        val im = Scan.buildMask(inner)
-        if (SqlClauses.setOpSpans(inner, im).nonEmpty)
-          throw new graft.planner.GraftException(
-            "nested set operations inside a parenthesized branch of a measure view body are " +
-              "not supported — flatten the chain (UNION/EXCEPT associate left-to-right and " +
-              "INTERSECT binds tighter, so prefix parens are redundant) or move the inner " +
-              "set operation into a CTE and select from it")
-        (op, inner, true)
-      }
+              s"last branch (outside its parens). Branch: ${b.take(80)}")).trim
+      if (b.startsWith("(") && SqlClauses.setOpSpans(inner, Scan.buildMask(inner)).nonEmpty)
+        throw new graft.planner.GraftException(
+          "nested set operations inside a parenthesized branch of a measure view body are " +
+            "not supported — flatten the chain (UNION/EXCEPT associate left-to-right and " +
+            "INTERSECT binds tighter, so prefix parens are redundant) or move the inner " +
+            "set operation into a CTE and select from it")
+      (op, inner, b.startsWith("("))
     }
-    val parsed = unwrappedRaw.map { case (op, b, wrapped) =>
+    val parsed = unwrapped.map { case (op, b, wrapped) =>
       (op, SqlClauses.parse(b).getOrElse(return None), wrapped)
     }
-    val branchRaw = parsed.map { case (op, c, w) => (op, c, c.selectItems.map(parseMeasureItem), w) }
-    val allNames = branchRaw
-      .flatMap(_._3.collect { case Some((_, n)) => n.toLowerCase }).toSet
+    val allNames = parsed.flatMap(p => measureNamesOf(p._2)).toSet
     if (allNames.isEmpty) return None
+    val branches = parsed.map { case (op, c, wrapped) =>
+      SetOpBranch(op, c, classifyItems(c, allNames), parenWrapped = wrapped)
+    }
     // Measure-sorted row cut (r12 ADVICE): the base relation nulls every
     // measure slot, so a whole-set-op ORDER BY naming a measure sorts
     // CAST(NULL AS INT) there — with a LIMIT/OFFSET the base row cut is
@@ -331,8 +306,8 @@ object MeasureDdl {
         // bare positional ordinals resolve against the first branch's
         // select list — an ordinal landing on a measure slot is the same
         // NULL-sorted cut
-        val measureSlots = branchRaw.head._3.zipWithIndex
-          .collect { case (Some((_, n)), i) => (i + 1) -> n }.toMap
+        val measureSlots = branches.head.items.zipWithIndex
+          .collect { case (Right(m), i) => (i + 1) -> m.name }.toMap
         val ordinalHit = orderText.toUpperCase.stripPrefix("ORDER").trim
           .stripPrefix("BY").split(",").iterator.map(_.trim)
           .flatMap { seg =>
@@ -355,15 +330,6 @@ object MeasureDdl {
         }
       }
     }
-    val branches = branchRaw.map { case (op, c, rawItems, wrapped) =>
-      val items: Seq[Either[String, ViewMeasure]] =
-        c.selectItems.zip(rawItems).map {
-          case (_, Some((expr, name))) =>
-            Right(ViewMeasure(name, expr.trim, classify(expr, allNames - name.toLowerCase)))
-          case (item, None) => Left(item)
-        }
-      SetOpBranch(op, c, items, parenWrapped = wrapped)
-    }
 
     // catalog items: the first branch in full, plus later-branch measures
     // with names not already declared (first declaration wins)
@@ -377,17 +343,8 @@ object MeasureDdl {
     // dims: first branch's non-measure aliases, identity-mapped. A slot
     // whose name is declared AS MEASURE in a LATER branch (e.g. first
     // branch carries `NULL AS m`) is a measure slot, not a dimension.
-    val dimNames = branches.head.items.collect { case Left(item) =>
-      val (expr, aliasOpt) = SqlClauses.splitAlias(item)
-      val name = aliasOpt.orElse(SqlClauses.plainColumnName(expr)).getOrElse(expr)
-      if (aliasOpt.exists(a => !a.forall(Scan.isIdentChar)))
-        throw new graft.planner.GraftException(
-          s"dimension alias '${aliasOpt.get}' is not a plain identifier; quoted dimension " +
-            "aliases with spaces or punctuation are not supported in measure views — use " +
-            "an identifier (e.g. return_flag)")
-      name
-    }.filterNot(n => allNames.contains(n.toLowerCase))
-    val dimensionExprs = dimNames.map(n => n.toLowerCase -> n).toMap
+    val dimNames = branches.head.items.collect { case Left(item) => dimNameAndExpr(item)._1 }
+      .filterNot(n => allNames.contains(n.toLowerCase))
 
     val baseBody = branches.map { br =>
       val slotItems = br.items.map {
@@ -411,15 +368,6 @@ object MeasureDdl {
     val tailSql = if (setOpTail.isEmpty) "" else s" $setOpTail"
     val baseRelationSql = s"${pfx}SELECT * FROM ( $baseBody$tailSql ) __setop"
 
-    val groupByCols = branches.head.clauses.groupBy
-      .map { g =>
-        val mask = Scan.buildMask(g)
-        Scan.splitTopLevel(g, mask, ',', 0, g.length)
-          .map { case (s, e) => g.substring(s, e).trim }
-          .filter(c => c.nonEmpty && !allNames.contains(c.toLowerCase))
-      }
-      .getOrElse(Nil)
-
     Some(ParsedMeasureView(
       viewName = viewName,
       orReplace = orReplace,
@@ -430,31 +378,13 @@ object MeasureDdl {
       clauses = wholeClausesOpt.getOrElse(branches.head.clauses),
       items = items,
       baseRelationSql = baseRelationSql,
-      dimensionExprs = dimensionExprs,
+      dimensionExprs = dimNames.map(n => n.toLowerCase -> n).toMap,
       dimensionOrder = dimNames,
-      groupByCols = groupByCols,
+      groupByCols = groupByCols(branches.head.clauses, allNames),
       ctePrefix = ctePrefix,
       setOpBranches = branches,
       setOpTail = setOpTail
     ))
-  }
-
-  /** Strip the outer paren layer(s) of a fully parenthesized branch.
-    * Returns (inner, true) when every layer's matching close paren is the
-    * branch's last character; (original, false) when trailing text follows
-    * a close paren (not a plain wrapped SELECT).
-    */
-  private def unwrapParenBranch(branch: String): (String, Boolean) = {
-    var b = branch.trim
-    var stripped = false
-    while (b.startsWith("(")) {
-      val m = Scan.buildMask(b)
-      val close = Scan.matchParen(b, m, 0)
-      if (close != b.length - 1) return (branch, false)
-      b = b.substring(1, close).trim
-      stripped = true
-    }
-    (b, stripped)
   }
 
   /** Re-render one parsed SELECT with a replaced select list; clause order
@@ -477,47 +407,6 @@ object MeasureDdl {
     c.orderBy.foreach(o => sb.append(s" ORDER BY $o"))
     c.limitText.foreach(l => sb.append(s" $l"))
     sb.toString
-  }
-
-  /** Split a leading `WITH name [cols] AS (...) [, ...]` CTE list off a view
-    * body; returns ("", body) when there is none or it cannot be scanned.
-    */
-  private def splitWithPrefix(body: String): (String, String) = {
-    val mask = Scan.buildMask(body)
-    var i = 0
-    def skipWs(): Unit = { while (i < body.length && (body.charAt(i).isWhitespace || mask(i))) i += 1 }
-    skipWs()
-    if (!body.regionMatches(true, i, "WITH", 0, 4) ||
-        (i + 4 < body.length && Scan.isIdentChar(body.charAt(i + 4)))) return ("", body)
-    i += 4
-    skipWs()
-    if (body.regionMatches(true, i, "RECURSIVE", 0, 9)) { i += 9; skipWs() }
-    var ok = true
-    var parsing = true
-    while (parsing && ok) {
-      skipWs()
-      val ns = i
-      while (i < body.length && Scan.isIdentChar(body.charAt(i))) i += 1
-      if (i == ns) ok = false
-      else {
-        skipWs()
-        if (i < body.length && body.charAt(i) == '(') { // column list
-          val c = Scan.matchParen(body, mask, i)
-          if (c < 0) ok = false else { i = c + 1; skipWs() }
-        }
-        if (ok && body.regionMatches(true, i, "AS", 0, 2) &&
-            (i + 2 >= body.length || !Scan.isIdentChar(body.charAt(i + 2)))) { i += 2; skipWs() }
-        else ok = false
-        if (ok && i < body.length && body.charAt(i) == '(') {
-          val c = Scan.matchParen(body, mask, i)
-          if (c < 0) ok = false else { i = c + 1; skipWs() }
-        } else ok = false
-        if (ok) {
-          if (i < body.length && body.charAt(i) == ',') i += 1 else parsing = false
-        }
-      }
-    }
-    if (!ok) ("", body) else (body.substring(0, i).trim, body.substring(i).trim)
   }
 
   /** "expr AS MEASURE name" -> Some((expr, name)). */

@@ -87,6 +87,45 @@ object Scan {
   def isIdentChar(c: Char): Boolean =
     Character.isLetterOrDigit(c) || c == '_' || c == '$'
 
+  /** First index at or after `i` that is not whitespace. */
+  def skipWs(s: String, i: Int): Int = {
+    var j = i
+    while (j < s.length && s.charAt(j).isWhitespace) j += 1
+    j
+  }
+
+  /** True when keyword `w` starts at `i` (case-insensitive) and no
+    * identifier char follows it.
+    */
+  def wordAt(s: String, i: Int, w: String): Boolean =
+    i + w.length <= s.length && s.regionMatches(true, i, w, 0, w.length) &&
+    (i + w.length == s.length || !isIdentChar(s.charAt(i + w.length)))
+
+  /** True when the identifier ending at `end` names a call: the next
+    * non-whitespace char is '('.
+    */
+  def isCallAt(s: String, end: Int): Boolean = s.startsWith("(", skipWs(s, end))
+
+  /** True when the identifier starting at `start` directly follows an AS
+    * keyword — an alias or a cast target type, not a column reference.
+    */
+  def followsAs(s: String, start: Int): Boolean = {
+    var k = start - 1
+    while (k >= 0 && s.charAt(k).isWhitespace) k -= 1
+    k >= 1 && s.regionMatches(true, k - 1, "AS", 0, 2) &&
+      (k - 2 < 0 || !isIdentChar(s.charAt(k - 2)))
+  }
+
+  /** Inner text of `s` when it is one fully parenthesized group (outer
+    * whitespace ignored); None when it is not, e.g. `(a) b`.
+    */
+  def unwrapParens(s: String): Option[String] = {
+    val t = s.trim
+    if (t.startsWith("(") && matchParen(t, buildMask(t), 0) == t.length - 1)
+      Some(t.substring(1, t.length - 1))
+    else None
+  }
+
   /** Index of the matching ')' for the '(' at `open`; -1 if unbalanced. */
   def matchParen(sql: String, mask: Array[Boolean], open: Int): Int = {
     require(sql.charAt(open) == '(')
@@ -217,6 +256,11 @@ object Scan {
     out.toList
   }
 
+  /** identifiers() minus call names — the column-like tokens. */
+  def columnRefs(sql: String, mask: Array[Boolean], from: Int, until: Int)
+      : List[(String, Int, Int)] =
+    identifiers(sql, mask, from, until).filterNot(t => isCallAt(sql, t._3))
+
   /** Normalize an expression string for structural comparison: lowercase,
     * collapse whitespace, drop spaces around punctuation. String/identifier
     * literals (masked spans) are copied verbatim so 'A' vs 'a' stay distinct.
@@ -256,37 +300,21 @@ object Scan {
     else ident
   }
 
-  /** Replace identifier tokens per `f` (None = keep). Mask-aware. */
-  def mapIdentifiers(sql: String, f: String => Option[String]): String = {
-    val m = buildMask(sql)
-    val ids = identifiers(sql, m, 0, sql.length)
-    if (ids.isEmpty) return sql
-    val sb = new StringBuilder
-    var pos = 0
-    for ((tok, s, e) <- ids) {
-      sb.append(sql.substring(pos, s))
-      sb.append(f(tok).getOrElse(tok))
-      pos = e
-    }
-    sb.append(sql.substring(pos))
-    sb.toString
-  }
-
   /** Replace identifier tokens, but only when NOT immediately followed by
     * '(' (i.e. skip function-call names). Used for dimension substitution.
+    * `skipAliases` also keeps tokens right after AS (aliases, cast types).
     */
-  def mapColumnRefs(sql: String, f: String => Option[String]): String = {
+  def mapColumnRefs(sql: String, f: String => Option[String],
+                    skipAliases: Boolean = false): String = {
     val m = buildMask(sql)
     val ids = identifiers(sql, m, 0, sql.length)
     if (ids.isEmpty) return sql
     val sb = new StringBuilder
     var pos = 0
     for ((tok, s, e) <- ids) {
-      var j = e
-      while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-      val isCall = j < sql.length && sql.charAt(j) == '('
       sb.append(sql.substring(pos, s))
-      if (isCall) sb.append(tok) else sb.append(f(tok).getOrElse(tok))
+      if (isCallAt(sql, e) || (skipAliases && followsAs(sql, s))) sb.append(tok)
+      else sb.append(f(tok).getOrElse(tok))
       pos = e
     }
     sb.append(sql.substring(pos))

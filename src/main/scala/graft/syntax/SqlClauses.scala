@@ -23,6 +23,21 @@ final case class SelectClauses(
     hasSetOp: Boolean
 )
 
+/** One CTE of a WITH list: `header` is the name plus any column list, `raw`
+  * the whole `name [(cols)] AS (body)` text.
+  */
+final case class Cte(name: String, header: String, body: String, raw: String)
+
+/** A leading WITH list; the main query starts at offset `mainStart`. */
+final case class WithList(recursive: Boolean, ctes: List[Cte], mainStart: Int)
+
+/** One FROM item. `name` is None for a derived table; `alias` falls back to
+  * the name. [start, end) spans the name (or paren group) plus the alias
+  * when `hasAlias`.
+  */
+final case class FromItem(name: Option[String], alias: String, start: Int, end: Int,
+                          hasAlias: Boolean)
+
 object SqlClauses {
 
   /** Known clause starters after the select list, in order. */
@@ -37,9 +52,7 @@ object SqlClauses {
     val selPos = Scan.findTopLevelWord(sql, mask, "SELECT", 0, n)
     if (selPos < 0) return None
     // reject if anything substantive precedes SELECT (e.g. INSERT, CREATE)
-    val prefix = sql.substring(0, selPos)
-    if (prefix.exists(c => !c.isWhitespace) &&
-        !prefix.trim.equalsIgnoreCase("")) return None
+    if (sql.substring(0, selPos).exists(c => !c.isWhitespace)) return None
 
     val hasSetOp = setOpSpans(sql, mask).exists(_._1 >= selPos)
 
@@ -51,8 +64,7 @@ object SqlClauses {
       while (i < n && (sql.charAt(i).isWhitespace || mask(i))) i += 1
       i
     }
-    if (distPos + 8 <= n && sql.regionMatches(true, distPos, "DISTINCT", 0, 8) &&
-        (distPos + 8 >= n || !Scan.isIdentChar(sql.charAt(distPos + 8)))) {
+    if (Scan.wordAt(sql, distPos, "DISTINCT")) {
       distinct = true
       cursor = distPos + 8
     }
@@ -102,23 +114,30 @@ object SqlClauses {
     ))
   }
 
-  /** Split a statement at its top-level set operators. Returns (opText,
+  /** Split a statement at its top-level set operators into (opText,
     * branchSql) pairs — opText is "" for the first branch, else the
-    * operator with its optional ALL/DISTINCT modifier (original casing).
-    * Nil when no top-level set operator exists. A whole-statement trailing
-    * ORDER BY / LIMIT stays attached to the last branch (callers that
-    * reassemble branches in place preserve it).
+    * operator with its optional ALL/DISTINCT modifier (original casing) —
+    * and the whole-statement ORDER BY / LIMIT / OFFSET tail ("" when none).
+    * The tail sits in the last branch's text, but in an unparenthesized
+    * chain it always binds to the whole set operation, so it is split off.
+    * Nil branches when no top-level set operator exists.
     */
-  def splitSetOpBranches(stmt: String): List[(String, String)] = {
-    val mask = Scan.buildMask(stmt)
-    val sorted = setOpSpans(stmt, mask)
-    if (sorted.isEmpty) return Nil
+  def splitSetOp(stmt: String): (List[(String, String)], String) = {
+    val sorted = setOpSpans(stmt, Scan.buildMask(stmt))
+    if (sorted.isEmpty) return (Nil, "")
     val starts = 0 :: sorted.map(_._2)
     val ends = sorted.map(_._1) :+ stmt.length
     val texts = "" :: sorted.map(_._3)
-    texts.lazyZip(starts).lazyZip(ends).map { (t, s, e) =>
+    val branches = texts.lazyZip(starts).lazyZip(ends).map { (t, s, e) =>
       (t, stmt.substring(s, e).trim)
     }.toList
+    val (lastOp, last) = branches.last
+    val lm = Scan.buildMask(last)
+    Seq("ORDER", "LIMIT", "OFFSET").map(k => Scan.findTopLevelWord(last, lm, k, 0, last.length))
+      .filter(_ >= 0).sorted.headOption match {
+      case Some(p) => (branches.init :+ (lastOp -> last.substring(0, p).trim), last.substring(p).trim)
+      case None => (branches, "")
+    }
   }
 
   /** Top-level set operators of a statement as (start, end, text) spans in
@@ -137,15 +156,12 @@ object SqlClauses {
       var p = Scan.findTopLevelWord(stmt, mask, kw, from, stmt.length)
       while (p >= 0) {
         var e = p + kw.length
-        var j = e
-        while (j < stmt.length && stmt.charAt(j).isWhitespace) j += 1
+        val j = Scan.skipWs(stmt, e)
         var hasMod = false
-        for (mod <- Seq("ALL", "DISTINCT"))
-          if (stmt.regionMatches(true, j, mod, 0, mod.length) &&
-              (j + mod.length >= stmt.length || !Scan.isIdentChar(stmt.charAt(j + mod.length)))) {
-            e = j + mod.length
-            hasMod = true
-          }
+        for (mod <- Seq("ALL", "DISTINCT") if Scan.wordAt(stmt, j, mod)) {
+          e = j + mod.length
+          hasMod = true
+        }
         val selectListForm = kw == "EXCEPT" && !hasMod && isColumnListParen(stmt, mask, e)
         if (!selectListForm) ops += ((p, e, stmt.substring(p, e)))
         from = e
@@ -170,9 +186,108 @@ object SqlClauses {
     var k = j + 1
     while (k < stmt.length &&
            (mask(k) || stmt.charAt(k).isWhitespace || stmt.charAt(k) == '(')) k += 1
-    val starters = Seq("SELECT", "WITH", "VALUES", "TABLE", "FROM")
-    !starters.exists(w => stmt.regionMatches(true, k, w, 0, w.length) &&
-      (k + w.length >= stmt.length || !Scan.isIdentChar(stmt.charAt(k + w.length))))
+    !Seq("SELECT", "WITH", "VALUES", "TABLE", "FROM").exists(Scan.wordAt(stmt, k, _))
+  }
+
+  /** Split a leading `WITH [RECURSIVE] name [(cols)] AS (…), …` list off a
+    * statement. None when the statement does not start with WITH or the
+    * list does not scan. Names may be quoted; comments between tokens read
+    * as whitespace, while the returned texts keep them.
+    */
+  def splitWith(sql: String): Option[WithList] = {
+    val s = Scan.blankComments(sql) // same offsets as sql
+    val mask = Scan.buildMask(s)
+    var i = Scan.skipWs(s, 0)
+    if (!Scan.wordAt(s, i, "WITH")) return None
+    i = Scan.skipWs(s, i + 4)
+    val recursive = Scan.wordAt(s, i, "RECURSIVE")
+    if (recursive) i = Scan.skipWs(s, i + 9)
+    val ctes = scala.collection.mutable.ListBuffer[Cte]()
+    var more = true
+    while (more) {
+      val nameStart = i
+      // a quoted name is one masked span
+      if (i < s.length && mask(i)) { while (i < s.length && mask(i)) i += 1 }
+      else { while (i < s.length && Scan.isIdentChar(s.charAt(i))) i += 1 }
+      if (i == nameStart) return None
+      val name = sql.substring(nameStart, i)
+      var header = name
+      i = Scan.skipWs(s, i)
+      if (s.startsWith("(", i)) { // column list
+        val close = Scan.matchParen(s, mask, i)
+        if (close < 0) return None
+        header += " " + sql.substring(i, close + 1)
+        i = Scan.skipWs(s, close + 1)
+      }
+      if (!Scan.wordAt(s, i, "AS")) return None
+      i = Scan.skipWs(s, i + 2)
+      val close = if (s.startsWith("(", i)) Scan.matchParen(s, mask, i) else -1
+      if (close < 0) return None
+      ctes += Cte(name, header, sql.substring(i + 1, close), sql.substring(nameStart, close + 1))
+      i = Scan.skipWs(s, close + 1)
+      more = s.startsWith(",", i)
+      if (more) i = Scan.skipWs(s, i + 1)
+    }
+    Some(WithList(recursive, ctes.toList, i))
+  }
+
+  private val joinWords =
+    Set("join", "left", "right", "full", "inner", "cross", "outer", "semi", "anti", "lateral", "natural")
+  private val notAlias = joinWords ++ Set("on", "using", "where", "group", "order")
+
+  /** The items of a FROM clause in text order: each table (possibly
+    * qualified or quoted) or table function, and each derived table
+    * `(subquery) alias` (name None), with its optional `[AS] alias`.
+    */
+  def fromItems(from: String): List[FromItem] = {
+    val mask = Scan.buildMask(from)
+    val out = scala.collection.mutable.ListBuffer[FromItem]()
+    var i = 0
+    var depth = 0
+    var expectItem = true
+    // record an item whose name (or paren group) spans [s, e)
+    def item(name: Option[String], s: Int, e: Int): Unit = {
+      // a table function's argument list sits between name and alias
+      var j = Scan.skipWs(from, e)
+      if (name.isDefined && from.startsWith("(", j) && !mask(j)) {
+        val close = Scan.matchParen(from, mask, j)
+        j = Scan.skipWs(from, if (close < 0) from.length else close + 1)
+      }
+      val hasAs = Scan.wordAt(from, j, "AS")
+      if (hasAs) j = Scan.skipWs(from, j + 2)
+      var k = j
+      while (k < from.length && Scan.isIdentChar(from.charAt(k))) k += 1
+      val alias = from.substring(j, k)
+      val aliased = alias.nonEmpty && (hasAs || !notAlias(alias.toLowerCase))
+      out += (if (aliased) FromItem(name, alias, s, k, hasAlias = true)
+              else FromItem(name, name.getOrElse(""), s, e, hasAlias = false))
+      i = if (aliased) k else math.max(i, e)
+      expectItem = false
+    }
+    while (i < from.length) {
+      val c = from.charAt(i)
+      if (depth == 0 && expectItem && c == '(' && !mask(i)) {
+        val close = Scan.matchParen(from, mask, i)
+        if (close < 0) i = from.length else item(None, i, close + 1)
+      } else if (depth == 0 && expectItem && mask(i) && (c == '"' || c == '`')) {
+        var e = i
+        while (e < from.length && mask(e)) e += 1
+        item(Some(from.substring(i, e)), i, e)
+      } else if (mask(i)) i += 1
+      else if (c == '(') { depth += 1; i += 1 }
+      else if (c == ')') { depth = math.max(0, depth - 1); i += 1 }
+      else if (depth == 0 && c == ',') { expectItem = true; i += 1 }
+      else if (depth == 0 && (c.isLetter || c == '_')) {
+        val s = i
+        while (i < from.length && (Scan.isIdentChar(from.charAt(i)) ||
+               (from.charAt(i) == '.' && i + 1 < from.length && Scan.isIdentChar(from.charAt(i + 1))))) i += 1
+        val wl = from.substring(s, i).toLowerCase
+        if (wl == "join") expectItem = true
+        else if (wl == "on" || wl == "using") expectItem = false
+        else if (expectItem && !joinWords(wl)) item(Some(from.substring(s, i)), s, i)
+      } else i += 1
+    }
+    out.toList
   }
 
   /** Split "a AS b" / "a b" select item into (expr, aliasOpt).

@@ -649,6 +649,26 @@ class SemanticsSuite extends SparkSpec {
         |2023	20""".stripMargin)
   }
 
+  // expandSql and sql() share their statement preprocessing: a leading
+  // comment ahead of the SEMANTIC prefix expands in both
+  test("expandSql expands a commented SEMANTIC statement like sql() does") {
+    engine.sql(
+      """CREATE OR REPLACE TEMPORARY VIEW sc_sales AS
+        |SELECT * FROM VALUES (2022, 10.0), (2023, 20.0) AS t(yr, amount)""".stripMargin)
+    engine.sql("CREATE OR REPLACE VIEW sc_v AS SELECT yr, SUM(amount) AS MEASURE scm FROM sc_sales")
+    val q = "-- note\nSEMANTIC SELECT yr, AGGREGATE(scm) AS r FROM sc_v GROUP BY yr"
+    val expanded = engine.expandSql(q)
+    assert(!expanded.contains("AGGREGATE"), expanded)
+    checkGolden(spark.sql(expanded),
+      """2022	10
+        |2023	20""".stripMargin)
+  }
+
+  test("a prepared statement cannot run a prepared-statement command") {
+    val ex = intercept[GraftException](engine.sql("PREPARE p_self AS EXECUTE p_self; EXECUTE p_self"))
+    assert(ex.getMessage.contains("PREPARE p_self"), ex.getMessage)
+  }
+
   // round-11: measure VIEWS whose body is a set operation — the base
   // relation is the set-op OUTPUT wrapped whole (measures.rs:2645-2650)
   test("measure views over set-operation bases: context rows are the union output") {
