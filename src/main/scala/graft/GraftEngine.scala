@@ -49,56 +49,74 @@ final class GraftEngine(val spark: SparkSession) {
       }
     })
 
-  /** Warnings emitted by the last statement (reference: yardstick_warning
-    * wrapper, yardstick_extension.cpp:1152-1177). `warningsAsErrors`
-    * escalates them, matching `SET warnings_as_errors = true`.
+  /** Warnings emitted by the last statement run or expanded (reference:
+    * yardstick_warning wrapper, yardstick_extension.cpp:1152-1177).
+    * `warningsAsErrors` escalates them, matching `SET warnings_as_errors =
+    * true`.
     */
   @volatile var warningsAsErrors: Boolean = false
-  private val warningBuf = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def lastWarnings: Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    warningBuf.asScala.toSeq
-  }
+  @volatile private var publishedWarnings: Seq[String] = Nil
+  def lastWarnings: Seq[String] = publishedWarnings
 
-  // batch-scope state (reference batch invariants,
-  // yardstick_extension.cpp:1498-1754, semantics derived from the corpus):
-  //  - a temp measure view consumed by a MATERIALIZING statement (CTAS /
-  //    INSERT) is fine; referenced by a plain SELECT it is an error (the
-  //    reference defers SELECT execution past the temp view's lifetime)
-  //  - a leftover temp view never consumed at all is an error
-  //  - a shadowed permanent view is restored unless the batch dropped it
-  private val batchTempCreated = scala.collection.mutable.LinkedHashSet[String]()
-  // creation-time shadow per batch temp: what the name was bound to at the
-  // moment the TEMP was created (reference temporary_snapshots,
-  // yardstick_extension.cpp:1596-1631). The PRE-BATCH snapshot is the wrong
-  // restore source for a name whose permanent was dropped earlier in the
-  // same batch — restoring from it resurrects the dropped view (found by
-  // FuzzBatchSuite: DROP VIEW p; CREATE TEMP VIEW p; DROP VIEW p).
-  private val batchShadowed = scala.collection.mutable.HashMap[String, Option[MeasureView]]()
-  private val batchConsumedMat = scala.collection.mutable.Set[String]()
-  private val batchSelectRefs = scala.collection.mutable.Set[String]()
-  private val batchDropped = scala.collection.mutable.Set[String]()
-  // temps whose name a later PERMANENT re-create took over mid-batch: no
-  // longer live temps (no reveal, no unconsumed-temp error — same as a
-  // dropped temp), but the failure path still must restore their pre-batch
-  // Spark binding
-  private val batchTempReplaced = scala.collection.mutable.Set[String]()
-  // permanent views dropped via main.-qualified DROP in this batch: a later
-  // main.x read must error, and a later bare DROP of the temp shadow must
-  // NOT resurrect the permanent
-  private val permDroppedInBatch = scala.collection.mutable.Set[String]()
-  private var inBatch = false
-  // __graft_perm_* twins materialized this batch, cleaned up at batch end
-  private val batchHidden = scala.collection.mutable.Set[String]()
-  private var batchSnapshot: Map[String, MeasureView] = Map.empty
-  private var stmtMaterializing = false
+  // The catalog snapshot/restore, the prepared statements and the session's
+  // temp-view namespace are shared, so a batch is atomic only if no other
+  // batch interleaves with it: one engine runs its batches one at a time.
+  private val lock = new Object
 
-  private val expander = new QueryExpander(catalog, baseColsOf,
-    w => warningBuf.add(w), v => {
-      if (batchTempCreated.contains(v)) {
-        if (stmtMaterializing) batchConsumedMat += v else batchSelectRefs += v
+  /** State of one sql()/expandSql() call (reference batch invariants,
+    * yardstick_extension.cpp:1498-1754, semantics derived from the corpus):
+    *  - a temp measure view consumed by a MATERIALIZING statement (CTAS /
+    *    INSERT) is fine; referenced by a plain SELECT it is an error (the
+    *    reference defers SELECT execution past the temp view's lifetime)
+    *  - a leftover temp view never consumed at all is an error
+    *  - a shadowed permanent view is restored unless the batch dropped it
+    */
+  private final class Batch {
+    import scala.collection.mutable
+    val snapshot: Map[String, MeasureView] = catalog.snapshot()
+    val tempCreated = mutable.LinkedHashSet[String]()
+    // creation-time shadow per batch temp: what the name was bound to at the
+    // moment the TEMP was created (reference temporary_snapshots,
+    // yardstick_extension.cpp:1596-1631). The PRE-BATCH snapshot is the wrong
+    // restore source for a name whose permanent was dropped earlier in the
+    // same batch — restoring from it resurrects the dropped view (found by
+    // FuzzBatchSuite: DROP VIEW p; CREATE TEMP VIEW p; DROP VIEW p).
+    val shadowed = mutable.HashMap[String, Option[MeasureView]]()
+    val consumedMat = mutable.Set[String]()
+    val selectRefs = mutable.Set[String]()
+    // temps whose name a later PERMANENT re-create took over mid-batch: no
+    // longer live temps (no reveal, no unconsumed-temp error — same as a
+    // dropped temp), but the failure path still must restore their pre-batch
+    // Spark binding
+    val tempReplaced = mutable.Set[String]()
+    // permanent views dropped via main.-qualified DROP in this batch: a later
+    // main.x read must error, and a later bare DROP of the temp shadow must
+    // NOT resurrect the permanent
+    val permDropped = mutable.Set[String]()
+    // __graft_perm_* twins materialized this batch, cleaned up at batch end
+    val hidden = mutable.Set[String]()
+    // warnings of the running statement, published when it ends
+    val warnings = mutable.ArrayBuffer[String]()
+    var materializing = false
+    val expander = new QueryExpander(catalog, baseColsOf, warnings += _, v => {
+      if (tempCreated.contains(v)) {
+        if (materializing) consumedMat += v else selectRefs += v
       }
     })
+
+    /** Re-register the permanent view a batch temp shadowed AT ITS CREATION
+      * (see `shadowed`), unless this batch main.-dropped that permanent. The
+      * pre-batch binding differs when the batch dropped or changed the
+      * permanent before creating the temp.
+      */
+    def reveal(name: String): Unit =
+      shadowed.getOrElse(name, snapshot.get(name)) match {
+        case Some(prev) if !prev.temporary && !permDropped.contains(name) =>
+          catalog.register(prev)
+          if (prev.cleanViewSql.nonEmpty) spark.sql(prev.cleanViewSql)
+        case _ =>
+      }
+  }
 
   /** Execute one or more ';'-separated statements as one batch; returns the
     * last result. Batch semantics follow the reference:
@@ -109,36 +127,22 @@ final class GraftEngine(val spark: SparkSession) {
     *  - a TEMP measure view that is never consumed by an AGGREGATE() in the
     *    same batch is an error.
     */
-  def sql(text: String): DataFrame = {
+  def sql(text: String): DataFrame = lock.synchronized {
     val stmts = Scan.splitStatements(text)
-    val snap = catalog.snapshot()
-    batchSnapshot = snap
-    inBatch = true
-    batchTempCreated.clear()
-    batchShadowed.clear()
-    batchConsumedMat.clear()
-    batchSelectRefs.clear()
-    batchDropped.clear()
-    batchTempReplaced.clear()
-    permDroppedInBatch.clear()
+    val b = new Batch
     try {
       var last: DataFrame = spark.emptyDataFrame
-      for (s <- stmts) last = executeStatement(s)
-      val leftovers = batchTempCreated.filter(n => catalog.get(n).exists(_.temporary)).toList
+      for (s <- stmts) {
+        b.warnings.clear()
+        try last = executeStatement(b, s) finally publishedWarnings = b.warnings.toList
+      }
+      val leftovers = b.tempCreated.filter(n => catalog.get(n).exists(_.temporary)).toList
       for (name <- leftovers) {
         catalog.drop(name)
         try spark.catalog.dropTempView(name) catch { case _: Exception => }
-        // restore what the temp shadowed AT ITS CREATION, not the pre-batch
-        // binding — they differ when the batch dropped/changed the
-        // permanent before creating the temp
-        batchShadowed.getOrElse(name.toLowerCase, snap.get(name.toLowerCase)) match {
-          case Some(prev) if !prev.temporary && !batchDropped.contains(name) =>
-            catalog.register(prev)
-            if (prev.cleanViewSql.nonEmpty) spark.sql(prev.cleanViewSql)
-          case _ =>
-        }
+        b.reveal(name)
       }
-      val bad = batchSelectRefs.toList ++ leftovers.filterNot(batchConsumedMat.contains)
+      val bad = b.selectRefs.toList ++ leftovers.filterNot(b.consumedMat.contains)
       if (bad.nonEmpty)
         throw new GraftException(
           "TEMPORARY AS MEASURE views must be used in the same statement batch as AGGREGATE(): " +
@@ -150,25 +154,20 @@ final class GraftEngine(val spark: SparkSession) {
         // catalog rolls back, batch-created temp views are gone — but a
         // shadowed permanent view must get its Spark temp view back, or the
         // restored catalog would claim a view that no longer resolves
-        for (name <- batchTempCreated ++ batchTempReplaced) {
+        for (name <- b.tempCreated ++ b.tempReplaced) {
           try spark.catalog.dropTempView(name) catch { case _: Exception => }
-          snap.get(name.toLowerCase) match {
+          b.snapshot.get(name.toLowerCase) match {
             case Some(prev) if !prev.temporary && prev.cleanViewSql.nonEmpty =>
               try spark.sql(prev.cleanViewSql) catch { case _: Exception => }
             case _ =>
           }
         }
-        catalog.restore(snap)
+        catalog.restore(b.snapshot)
         throw e
     } finally {
       // hidden permanent twins are batch-scoped: a stale one would keep
       // serving a definition the user later replaces or drops
-      for (h <- batchHidden) {
-        catalog.drop(h)
-        try spark.catalog.dropTempView(h) catch { case _: Exception => }
-      }
-      batchHidden.clear()
-      inBatch = false
+      b.hidden.foreach(dropTwin)
     }
   }
 
@@ -178,23 +177,24 @@ final class GraftEngine(val spark: SparkSession) {
   /** Expand a measure query to the SQL actually executed (for inspection /
     * EXPLAIN); returns the input when it is not a measure query.
     */
-  def expandSql(text: String): String = {
+  def expandSql(text: String): String = lock.synchronized {
+    val b = new Batch
     // same preprocessing as sql(): main.-qualified names must resolve to the
     // hidden permanent twin here too, or the inspected SQL is not the
-    // executed one
-    val before = batchHidden.toSet
-    val stmt = resolveMainQualified(preprocess(text))
-    val out = expander.expand(stmt).getOrElse(stmt)
-    // inspection must not leak catalog state: outside a batch nobody cleans
-    // batchHidden until the NEXT sql() call, so drop what we materialized
-    if (!inBatch) {
-      for (h <- batchHidden.diff(before)) {
-        catalog.drop(h)
-        try spark.catalog.dropTempView(h) catch { case _: Exception => }
-        batchHidden -= h
-      }
+    // executed one; inspection must not leak that twin, so it is dropped
+    // at the end as a batch's would be
+    try {
+      val stmt = resolveMainQualified(b, preprocess(text))
+      b.expander.expand(stmt).getOrElse(stmt)
+    } finally {
+      publishedWarnings = b.warnings.toList
+      b.hidden.foreach(dropTwin)
     }
-    out
+  }
+
+  private def dropTwin(hidden: String): Unit = {
+    catalog.drop(hidden)
+    try spark.catalog.dropTempView(hidden) catch { case _: Exception => }
   }
 
   /** Statement text as the expander and Spark receive it: comments blanked
@@ -214,19 +214,25 @@ final class GraftEngine(val spark: SparkSession) {
   private val prepareRe = "(?is)^\\s*PREPARE\\s+([A-Za-z_]\\w*)\\s+AS\\s+(.*)$".r
   private val executeRe = "(?is)^\\s*EXECUTE\\s+([A-Za-z_]\\w*)\\s*;?\\s*$".r
   private val deallocRe = "(?is)^\\s*DEALLOCATE\\s+(?:PREPARE\\s+)?([A-Za-z_]\\w*)\\s*;?\\s*$".r
+  private val preparedCommandRe = "(?is)^\\s*(PREPARE|EXECUTE|DEALLOCATE)\\b.*".r
+  private val createViewRe =
+    "(?is)^\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?(TEMPORARY\\s+|TEMP\\s+)?VIEW\\s+([\\w.]+)".r
+  private val plainCreateViewRe = "(?is)^\\s*CREATE\\s+(OR\\s+REPLACE\\s+)?VIEW\\s+".r
+  private val graftWarningsRe = "(?i)\\bgraft_warnings\\b".r
+  private val mainQualifiedRe = "(?i)\\bmain\\s*\\.\\s*([A-Za-z_]\\w*)".r
   private val prepared = TrieMap.empty[String, String]
 
-  private def executeStatement(stmt0: String): DataFrame = {
+  private def executeStatement(b: Batch, stmt0: String): DataFrame = {
     val stmtShimmed0 = preprocess(stmt0)
 
     // warnings as a queryable relation: `SELECT * FROM graft_warnings()` (or
     // the bare name) reads the warnings of the most recent statement. The
     // reference surfaces warnings out-of-band (yardstick_extension.cpp
     // warning wrapper); a relation makes the same state SQL-visible and
-    // driver-verifiable. Materialized BEFORE this statement clears the
-    // buffer, so it always reflects the previous statement.
+    // driver-verifiable. Materialized BEFORE this statement publishes its
+    // own, so it always reflects the previous statement.
     val stmtShimmed =
-      if ("(?i)\\bgraft_warnings\\b".r.findFirstIn(stmtShimmed0).isEmpty) stmtShimmed0
+      if (graftWarningsRe.findFirstIn(stmtShimmed0).isEmpty) stmtShimmed0
       else {
         import scala.jdk.CollectionConverters._
         import org.apache.spark.sql.Row
@@ -249,28 +255,24 @@ final class GraftEngine(val spark: SparkSession) {
       case Some(name) if name.toLowerCase.startsWith("main.") =>
         val lname = Scan.lastPart(name).toLowerCase
         val shadowedPerm = catalog.get(lname).exists(_.temporary) &&
-          batchSnapshot.get(lname).exists(p => !p.temporary)
+          b.snapshot.get(lname).exists(p => !p.temporary)
         if (shadowedPerm) {
-          batchDropped += lname
-          permDroppedInBatch += lname
-          val hidden = hiddenNameOf(lname)
-          catalog.drop(hidden)
-          try spark.catalog.dropTempView(hidden) catch { case _: Exception => }
+          b.permDropped += lname
+          dropTwin(hiddenNameOf(lname))
           return spark.emptyDataFrame
         }
       // unshadowed: the qualifier is a no-op — fall through to the rewrite
       case _ =>
     }
 
-    val stmt = resolveMainQualified(stmtShimmed)
+    val stmt = resolveMainQualified(b, stmtShimmed)
 
     // re-creating a PERMANENT view x later in the batch revives main.x: a
     // qualified read now has a live permanent target again
-    "(?is)^\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?(TEMPORARY\\s+|TEMP\\s+)?VIEW\\s+([\\w.]+)".r
-      .findFirstMatchIn(stmt) match {
+    createViewRe.findFirstMatchIn(stmt) match {
       case Some(cm) if cm.group(1) == null =>
         val lname = Scan.lastPart(cm.group(2)).toLowerCase
-        permDroppedInBatch -= lname
+        b.permDropped -= lname
         // a PERMANENT re-create on a temp-shadowed name REPLACES the
         // permanent and ends the temp's life (as a bare DROP would): the
         // creation-time shadow must not survive, or a later DROP VIEW
@@ -282,9 +284,9 @@ final class GraftEngine(val spark: SparkSession) {
         // state to the batch-rollback list, while the temp snapshot from
         // :1596 still restores at drop); nothing in its corpus exercises
         // it, so we pin the consistent reading: last create wins.
-        if (batchTempCreated.remove(lname)) {
-          batchShadowed.remove(lname)
-          batchTempReplaced += lname
+        if (b.tempCreated.remove(lname)) {
+          b.shadowed.remove(lname)
+          b.tempReplaced += lname
         }
       case _ =>
     }
@@ -297,14 +299,14 @@ final class GraftEngine(val spark: SparkSession) {
         // parameterless prepared statements (reference corpus uses them for
         // deferred measure INSERTs); a body that is itself a prepared-
         // statement command could EXECUTE itself without bound
-        if ("(?is)^\\s*(PREPARE|EXECUTE|DEALLOCATE)\\b.*".r.matches(body))
+        if (preparedCommandRe.matches(body))
           throw new GraftException(s"PREPARE $name: the body cannot be PREPARE, EXECUTE or DEALLOCATE")
         prepared.put(name.toLowerCase, body.trim.stripSuffix(";"))
         return spark.emptyDataFrame
       case executeRe(name) =>
         val body = prepared.getOrElse(name.toLowerCase,
           throw new GraftException(s"Unknown prepared statement: $name"))
-        return executeStatement(body)
+        return executeStatement(b, body)
       case deallocRe(name) =>
         prepared.remove(name.toLowerCase)
         return spark.emptyDataFrame
@@ -320,32 +322,21 @@ final class GraftEngine(val spark: SparkSession) {
         val lname = Scan.lastPart(name).toLowerCase
         catalog.drop(name)
         baseColsCache.remove(name.toLowerCase)
-        batchDropped += lname
         // a dropped view's hidden permanent twin must not outlive it
-        catalog.drop(hiddenNameOf(lname))
-        try spark.catalog.dropTempView(hiddenNameOf(lname)) catch { case _: Exception => }
+        dropTwin(hiddenNameOf(lname))
         val res = spark.sql(stmt.replaceAll("(?is)\\s+(CASCADE|RESTRICT)\\s*;?\\s*$", ""))
         // mid-batch reveal: dropping a batch-created TEMP view un-shadows the
         // permanent view it replaced — later statements in the same batch
         // read the permanent again (reference batch semantics), UNLESS the
         // permanent itself was dropped via main.x earlier in this batch
-        if (batchTempCreated.remove(lname)) {
-          // reveal what the temp shadowed AT ITS CREATION (see batchShadowed)
-          batchShadowed.getOrElse(lname, batchSnapshot.get(lname)) match {
-            case Some(prev) if !prev.temporary && !permDroppedInBatch.contains(lname) =>
-              catalog.register(prev)
-              if (prev.cleanViewSql.nonEmpty) spark.sql(prev.cleanViewSql)
-              batchDropped -= lname
-            case _ =>
-          }
-        }
+        if (b.tempCreated.remove(lname)) b.reveal(lname)
         return res
       case None =>
     }
 
     if (MeasureDdl.hasAsMeasure(stmt)) {
       MeasureDdl.parse(stmt) match {
-        case Some(p) => return registerMeasureView(p)
+        case Some(p) => return registerMeasureView(b, p)
         case None => // fall through (AS MEASURE text in a comment/literal)
       }
     }
@@ -354,24 +345,22 @@ final class GraftEngine(val spark: SparkSession) {
     // (reference: CTAS/INSERT body location, measures.rs:2253-2617)
     wrapPrefix(stmt) match {
       case Some((prefix, body)) =>
-        warningBuf.clear()
-        stmtMaterializing = true
-        val expandedOpt = try expander.expand(body) finally { stmtMaterializing = false }
+        b.materializing = true
+        val expandedOpt = try b.expander.expand(body) finally { b.materializing = false }
         expandedOpt match {
           case Some(expanded) =>
-            if (warningsAsErrors && !warningBuf.isEmpty)
-              throw new GraftException("Warning escalated to error: " + lastWarnings.mkString("; "))
+            if (warningsAsErrors && b.warnings.nonEmpty)
+              throw new GraftException("Warning escalated to error: " + b.warnings.mkString("; "))
             return spark.sql(normalizeDdl(prefix) + " " + expanded)
           case None =>
         }
       case None =>
     }
 
-    warningBuf.clear()
-    expander.expand(stmt) match {
+    b.expander.expand(stmt) match {
       case Some(expanded) =>
-        if (warningsAsErrors && !warningBuf.isEmpty)
-          throw new GraftException("Warning escalated to error: " + lastWarnings.mkString("; "))
+        if (warningsAsErrors && b.warnings.nonEmpty)
+          throw new GraftException("Warning escalated to error: " + b.warnings.mkString("; "))
         spark.sql(expanded)
       case None => spark.sql(normalizeDdl(stmt))
     }
@@ -386,22 +375,21 @@ final class GraftEngine(val spark: SparkSession) {
     */
   private def hiddenNameOf(lname: String): String = "__graft_perm_" + lname
 
-  private def resolveMainQualified(stmt: String): String = {
-    val re = "(?i)\\bmain\\s*\\.\\s*([A-Za-z_]\\w*)".r
-    if (re.findFirstIn(stmt).isEmpty) return stmt
+  private def resolveMainQualified(b: Batch, stmt: String): String = {
+    if (mainQualifiedRe.findFirstIn(stmt).isEmpty) return stmt
     val mask = Scan.buildMask(stmt)
     val sb = new StringBuilder
     var pos = 0
-    for (m <- re.findAllMatchIn(stmt) if !mask(m.start) && m.start >= pos) {
+    for (m <- mainQualifiedRe.findAllMatchIn(stmt) if !mask(m.start) && m.start >= pos) {
       val bare = m.group(1)
       val lname = bare.toLowerCase
-      if (permDroppedInBatch.contains(lname))
+      if (b.permDropped.contains(lname))
         throw new GraftException(
           s"View main.$bare does not exist: the permanent view was dropped earlier in this batch")
       val repl =
         if (catalog.get(lname).exists(_.temporary))
-          batchSnapshot.get(lname).filter(p => !p.temporary)
-            .map(materializeHidden).getOrElse(bare)
+          b.snapshot.get(lname).filter(p => !p.temporary)
+            .map(materializeHidden(b, _)).getOrElse(bare)
         else bare
       sb.append(stmt.substring(pos, m.start)).append(repl)
       pos = m.end
@@ -410,7 +398,7 @@ final class GraftEngine(val spark: SparkSession) {
     sb.toString
   }
 
-  private def materializeHidden(perm: MeasureView): String = {
+  private def materializeHidden(b: Batch, perm: MeasureView): String = {
     val hidden = hiddenNameOf(perm.viewName.toLowerCase)
     // always re-materialize: the permanent definition may have been replaced
     // since a previous qualified read registered the hidden twin
@@ -419,7 +407,7 @@ final class GraftEngine(val spark: SparkSession) {
       "VIEW " + hidden)
     if (hiddenSql != perm.cleanViewSql && perm.cleanViewSql.nonEmpty) spark.sql(hiddenSql)
     catalog.register(perm.copy(viewName = hidden, cleanViewSql = hiddenSql))
-    batchHidden += hidden
+    b.hidden += hidden
     hidden
   }
 
@@ -467,7 +455,7 @@ final class GraftEngine(val spark: SparkSession) {
     * window measures stay materialized, with GROUP BY ALL appended when the
     * view had no GROUP BY (measures.rs:4552-4570).
     */
-  private def registerMeasureView(p: ParsedMeasureView): DataFrame = {
+  private def registerMeasureView(b: Batch, p: ParsedMeasureView): DataFrame = {
     val tempName = Scan.lastPart(p.viewName)
     // Measure view over a measure view (r12 verdict task 4): v1's clean
     // view exposes NULL placeholder columns for its measures, so v2 would
@@ -560,8 +548,8 @@ final class GraftEngine(val spark: SparkSession) {
         // first creation wins: a re-CREATE TEMP of the same live name keeps
         // the original shadow (the reference's snapshot chain nets out the
         // same way when restored in order)
-        if (!batchTempCreated.contains(lname)) batchShadowed(lname) = prev.get(lname)
-        batchTempCreated += lname
+        if (!b.tempCreated.contains(lname)) b.shadowed(lname) = prev.get(lname)
+        b.tempCreated += lname
       }
       res
     } catch {
@@ -580,15 +568,8 @@ final class GraftEngine(val spark: SparkSession) {
     * so that plain views and measure views live in the same (session)
     * namespace and DROP VIEW behaves uniformly.
     */
-  private def normalizeDdl(stmt: String): String = {
-    val re = "(?is)^\\s*CREATE\\s+(OR\\s+REPLACE\\s+)?VIEW\\s+".r
-    re.findFirstMatchIn(stmt) match {
-      case Some(_) =>
-        stmt.replaceFirst("(?is)^\\s*CREATE\\s+(OR\\s+REPLACE\\s+)?VIEW\\s+",
-          "CREATE OR REPLACE TEMPORARY VIEW ")
-      case None => stmt
-    }
-  }
+  private def normalizeDdl(stmt: String): String =
+    plainCreateViewRe.replaceFirstIn(stmt, "CREATE OR REPLACE TEMPORARY VIEW ")
 }
 
 object GraftEngine {

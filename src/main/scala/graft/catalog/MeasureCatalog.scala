@@ -56,9 +56,11 @@ final case class MeasureView(
   def measureNamesLower: Set[String] = measures.map(_.name.toLowerCase).toSet
 }
 
-/** Session-scoped catalog of measure views. Thread-safe; supports
-  * snapshot/restore for batch atomicity (reference: catalog snapshots,
-  * yardstick_extension.cpp:571-692, ffi.rs:140-199).
+/** Session-scoped catalog of measure views. Each call is thread-safe;
+  * snapshot/restore is what a failed batch rolls back with (reference:
+  * catalog snapshots, yardstick_extension.cpp:571-692, ffi.rs:140-199). A
+  * batch is atomic because the engine runs one batch at a time, not because
+  * of this class.
   */
 final class MeasureCatalog {
   private val views = TrieMap.empty[String, MeasureView]

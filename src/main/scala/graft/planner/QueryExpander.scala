@@ -37,6 +37,8 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
                           warningSink: String => Unit = _ => (),
                           usageSink: String => Unit = _ => ()) {
 
+  import QueryExpander.sqlKeywords
+
   private val uid = new AtomicInteger(0)
 
   private case class DimSpec(queryExpr: String, outName: String)
@@ -1645,13 +1647,6 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     sb.toString
   }
 
-  /** Non-column tokens Scan.identifiers can return inside a predicate. */
-  private val sqlKeywords: Set[String] = Set(
-    "and", "or", "not", "in", "is", "null", "like", "ilike", "rlike",
-    "between", "case", "when", "then", "else", "end", "true", "false",
-    "exists", "distinct", "cast", "as", "asc", "desc", "escape",
-    "interval", "date", "timestamp", "all", "any", "some")
-
   private def splitTopAnd(w: String, mask: Array[Boolean]): List[String] = {
     // SQL precedence: AND binds tighter than OR, so `a AND b OR c` is
     // (a AND b) OR c — with any top-level OR the expression is ONE
@@ -1682,4 +1677,13 @@ final class QueryExpander(catalog: MeasureCatalog, baseColumns: String => Set[St
     out += w.substring(start).trim
     out.toList.filter(_.nonEmpty)
   }
+}
+
+object QueryExpander {
+  /** Non-column tokens Scan.identifiers can return inside a predicate. */
+  private val sqlKeywords: Set[String] = Set(
+    "and", "or", "not", "in", "is", "null", "like", "ilike", "rlike",
+    "between", "case", "when", "then", "else", "end", "true", "false",
+    "exists", "distinct", "cast", "as", "asc", "desc", "escape",
+    "interval", "date", "timestamp", "all", "any", "some")
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{Callable, Executors, TimeUnit}
+
 import scala.util.Random
 
 /** Randomized batch scripts against the snapshot contract (round-9 verdict
@@ -348,5 +350,55 @@ class FuzzBatchSuite extends SparkSpec {
       runBatchCase(rnd, i, setOpAxis = true, windowAxis = true)
       i += 1
     }
+  }
+
+  // axis 12: one engine shared by 4 threads, 6 batches each. Every batch
+  // creates a TEMP measure view and consumes it with a CTAS. A serial
+  // replay fails no batch, gives every table its own thread's
+  // sums(k) * mult, and ends with the catalog key set it started with.
+  // `shared` gives every thread the same TEMP name, so a batch that
+  // interleaved with another would read the other thread's definition.
+  private def runConcurrent(shared: Boolean): Unit = {
+    engine.sql("CREATE OR REPLACE TEMPORARY VIEW fzbatch_src AS SELECT * FROM VALUES " +
+      baseRows.map { case (k, v) => s"($k, $v)" }.mkString(", ") + " AS t(k, v)")
+    val (threads, perThread) = (4, 6)
+    val rnd = new Random(20261017)
+    val mults = Array.fill(threads, perThread)(1 + rnd.nextInt(9))
+    def table(th: Int, i: Int): String = s"fzb_cc${if (shared) "s" else "d"}_out_${th}_$i"
+    for (th <- 0 until threads; i <- 0 until perThread)
+      spark.sql(s"DROP TABLE IF EXISTS ${table(th, i)}")
+    val before = engine.catalog.snapshot().keySet
+    val pool = Executors.newFixedThreadPool(threads)
+    val failures = try {
+      val futures = (0 until threads).map { th =>
+        pool.submit(new Callable[Seq[String]] {
+          def call(): Seq[String] = (0 until perThread).flatMap { i =>
+            val view = if (shared) "fzb_cct" else s"fzb_cct$th"
+            val batch = s"CREATE TEMPORARY VIEW $view AS ${body(mults(th)(i), 0)};\n" +
+              s"CREATE TABLE ${table(th, i)} AS SELECT k, AGGREGATE(mv) AS s FROM $view"
+            try { engine.sql(batch); None }
+            catch { case e: Exception => Some(s"thread $th batch $i: ${e.getMessage}") }
+          }
+        })
+      }
+      futures.flatMap(_.get(10, TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    assert(failures.isEmpty,
+      s"${failures.size} of ${threads * perThread} batches failed:\n" + failures.mkString("\n"))
+    for (th <- 0 until threads; i <- 0 until perThread) {
+      val got = rows(engine.sql(s"SELECT k, s FROM ${table(th, i)}"))
+      val want = sums.toSeq.map { case (k, s) => Seq(k.toString, (s * mults(th)(i)).toString) }
+        .sortBy(_.mkString(""))
+      assert(got == want, s"table ${table(th, i)}: got $got, want $want")
+    }
+    assert(engine.catalog.snapshot().keySet == before)
+  }
+
+  test("concurrent batches on one engine, one TEMP name per thread, match a serial replay") {
+    runConcurrent(shared = false)
+  }
+
+  test("concurrent batches on one engine, one TEMP name for all threads, match a serial replay") {
+    runConcurrent(shared = true)
   }
 }

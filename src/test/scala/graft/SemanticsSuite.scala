@@ -132,6 +132,9 @@ class SemanticsSuite extends SparkSpec {
         |FROM daily_orders_v WHERE YEAR(order_date) = 2023 GROUP BY MONTH(order_date)""".stripMargin)
       .collect()
     assert(engine.lastWarnings.nonEmpty, "expected a dropped-filter warning")
+    // every statement starts with no warnings, DDL included
+    engine.sql("DROP VIEW IF EXISTS warn_nothing_v")
+    assert(engine.lastWarnings.isEmpty, engine.lastWarnings.mkString("; "))
 
     engine.sql("SET warnings_as_errors = true")
     val e = intercept[GraftException] {
@@ -599,6 +602,22 @@ class SemanticsSuite extends SparkSpec {
     assert(engine.sql("SELECT * FROM graft_warnings()").collect().isEmpty)
   }
 
+  // expandSql runs as its own batch: a main.-DROP in an earlier batch must
+  // not make a later main.-qualified read fail (sx is rebound through Spark,
+  // so no sql() batch runs in between)
+  test("expandSql does not read the previous batch's state") {
+    engine.sql("CREATE OR REPLACE TEMPORARY VIEW sx_src AS SELECT * FROM VALUES (1, 10), (2, 20) AS t(k, v)")
+    spark.sql("DROP TABLE IF EXISTS sx_out")
+    engine.sql("CREATE VIEW sx AS SELECT k, SUM(v) AS MEASURE mv FROM sx_src")
+    engine.sql(
+      """CREATE TEMP VIEW sx AS SELECT k, SUM(v * 2) AS MEASURE mv FROM sx_src;
+        |DROP VIEW main.sx;
+        |CREATE TABLE sx_out AS SELECT k, AGGREGATE(mv) AS s FROM sx""".stripMargin)
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW sx AS SELECT k FROM sx_src")
+    assert(engine.expandSql("SELECT k FROM main.sx") == "SELECT k FROM sx")
+    assert(GraftEngine(spark).expandSql("SELECT k FROM main.sx") == "SELECT k FROM sx")
+  }
+
   // windowed moments must pass through untouched: the raw-moment CASE rewrite
   // is a composite of several aggregates and cannot carry one OVER clause
   test("kurtosis/skewness OVER a window are not rewritten") {
@@ -626,6 +645,27 @@ class SemanticsSuite extends SparkSpec {
         |CREATE OR REPLACE VIEW rv_v AS SELECT yr, SUM(amount * 3) AS MEASURE rvm FROM rv_sales;
         |CREATE TABLE rv_read AS SELECT yr, AGGREGATE(rvm) AS v FROM main.rv_v GROUP BY yr;""".stripMargin)
     checkGolden(engine.sql("SELECT yr, v FROM rv_read ORDER BY yr"),
+      """2022	30
+        |2023	60""".stripMargin)
+  }
+
+  // a permanent created after a bare DROP of the same name is the shadow a
+  // later TEMP restores at batch end: the earlier DROP does not veto it
+  test("a permanent view re-created after a DROP in the batch survives its TEMP shadow") {
+    engine.sql(
+      """CREATE OR REPLACE TEMPORARY VIEW rd_sales AS
+        |SELECT * FROM VALUES (2022, 10.0), (2023, 20.0) AS t(yr, amount)""".stripMargin)
+    engine.sql("CREATE OR REPLACE VIEW rd_v AS SELECT yr, SUM(amount) AS MEASURE rdm FROM rd_sales")
+    engine.sql("DROP TABLE IF EXISTS rd_read")
+    engine.sql(
+      """DROP VIEW rd_v;
+        |CREATE VIEW rd_v AS SELECT yr, SUM(amount * 3) AS MEASURE rdm FROM rd_sales;
+        |CREATE TEMP VIEW rd_v AS SELECT yr, SUM(amount * 2) AS MEASURE rdm FROM rd_sales;
+        |CREATE TABLE rd_read AS SELECT yr, AGGREGATE(rdm) AS v FROM rd_v GROUP BY yr""".stripMargin)
+    checkGolden(engine.sql("SELECT yr, v FROM rd_read ORDER BY yr"),
+      """2022	20
+        |2023	40""".stripMargin)
+    checkGolden(engine.sql("SELECT yr, AGGREGATE(rdm) AS v FROM rd_v GROUP BY yr ORDER BY yr"),
       """2022	30
         |2023	60""".stripMargin)
   }
