@@ -269,14 +269,14 @@ object Classifier {
       // null/absent text still contributes its terminator (concat of a
       // null array is null; coalesce restores the 1-element terminator)
       explode(coalesce(concat(toks(textCol), term), term)).as("token"))
-    val counts0 = stream.groupBy("token").agg(
-        sum(when(col("__pos"), 1L).otherwise(0L)).as("n_pos"),
-        sum(when(col("__pos"), 0L).otherwise(1L)).as("n_neg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize in one pass: the model plan reads this cache for the
+    // materialized in one pass (an eager checkpoint, so AQE sizes it from
+    // the data — see EagerCache): the model plan reads this cache for the
     // vocabulary totals broadcast AND the main scan, and the prior and
     // dispatch count() read it again — a cold cache would race
-    counts0.count()
+    val counts0 = EagerCache.build(stream.groupBy("token").agg(
+        sum(when(col("__pos"), 1L).otherwise(0L)).as("n_pos"),
+        sum(when(col("__pos"), 0L).otherwise(1L)).as("n_neg")))
+    var keep = false
     try {
       val counts = counts0.filter(col("token").isNotNull)
         .filter(col("n_pos") + col("n_neg") >= minCount)
@@ -291,18 +291,21 @@ object Classifier {
           .cast("bigint").as("w_micro"))
       // prior from the terminator group: n_pos/n_neg there are the
       // per-class DOCUMENT counts — same integers the composed path's
-      // label scan sums, through the same expression tree. Eagerly
-      // checkpointed (one 1-row job over the live cache) because the
-      // returned plan outlives the counts0 cache released in `finally` —
-      // a lazy subtree would silently re-run the corpus pass at execution.
-      val prior = counts0.filter(col("token").isNull)
+      // label scan sums, through the same expression tree. Collected (one
+      // 1-row job over the live cache) into a local 1-row frame because
+      // the returned plan outlives the cache.
+      val priorQ = counts0.filter(col("token").isNull)
         .select(round(log(
           (col("n_pos") + lit(1.0)) / (col("n_neg") + lit(1.0))) * lit(1e6))
           .cast("bigint").as("prior_micro"))
-        .localCheckpoint(eager = true)
+      val prior = spark.createDataFrame(
+        java.util.Arrays.asList(priorQ.collect(): _*), priorQ.schema)
+      // the broadcast scorer collects the model into its probe; the
+      // shuffle scorer reads it lazily, so its returned plan keeps the
+      // cache (see EagerCache.release)
       if (model.count() <= maxRows)
         scoreNaiveBayesBroadcastWithPrior(docs, model, prior, textCol, idCol)
-      else scoreNaiveBayesShuffleWithPrior(docs, model, prior, textCol, idCol)
-    } finally counts0.unpersist(false)
+      else { keep = true; scoreNaiveBayesShuffleWithPrior(docs, model, prior, textCol, idCol) }
+    } finally if (!keep) EagerCache.release(counts0)
   }
 }

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -21,24 +22,47 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** LSH exchange pin width (r14 session 2): the banded self-join and the
-    * candidate-attach exchanges carry payloads whose compressed size is far
-    * below raw (per-doc vectors repeated across band rows; id-only pair
-    * streams), so AQE's compressed-size partition coalescing over-packs
-    * reducers at scale — measured at the 1000x corpus as sort-merge heap
-    * death / multi-minute spill under a 16 GB driver. These exchanges are
-    * therefore issued as user repartitions (never coalesced) at the
-    * session's shuffle width, which the bench / production session already
-    * scales with input size. `graft.lsh.pinnedWidth`: unset = pin to
-    * spark.sql.shuffle.partitions (the scale-safe default), 0 = do not pin
-    * (planner exchanges + AQE coalescing), N > 0 = pin to N.
+  /** LSH exchange pin width. The banded self-join and the candidate-attach
+    * exchanges carry payloads whose compressed size is far below raw
+    * (per-doc vectors repeated across band rows; id-only pair streams), so
+    * AQE's compressed-size partition coalescing over-packs reducers at
+    * scale — measured at the 1000x corpus (r14) as sort-merge heap death /
+    * multi-minute spill under a 16 GB driver. Such exchanges are issued as
+    * user repartitions (never coalesced) at the session's shuffle width.
+    *
+    * `graft.lsh.pinnedWidth`:
+    *  - unset: pin to spark.sql.shuffle.partitions UNLESS `frame` — the
+    *    persisted frame the exchange carries, or its hash-build side — has
+    *    a materialized raw size within one advisory partition
+    *    (spark.sql.adaptive.advisoryPartitionSizeInBytes, 64 MB by
+    *    default). No reducer can hold more raw bytes than the whole frame,
+    *    so below that size the over-packing cannot happen, and the
+    *    exchange is left to the planner and sized by AQE from the data.
+    *    The size is the cache's own statistic: once a job has scanned
+    *    every row of a persisted frame, its InMemoryRelation reports the
+    *    exact row count and the uncompressed column bytes. A statistic
+    *    without a row count is an estimate (cache not fully loaded, or the
+    *    frame is not cached): pin.
+    *  - 0: never pin (planner exchanges + AQE coalescing).
+    *  - N > 0: repartition to N. The self-join honors N at any value. The
+    *    attach-join exchanges are the join's direct children, and Spark's
+    *    EnsureRequirements re-shuffles a join whose children are all
+    *    shuffles narrower than spark.sql.shuffle.partitions to that width,
+    *    so the attach joins run at max(N, spark.sql.shuffle.partitions)
+    *    (fenced in PipelineGatesSuite).
     */
-  private def lshPinWidth(df: DataFrame): Option[Int] =
-    df.sparkSession.conf.getOption("graft.lsh.pinnedWidth").map(_.toInt) match {
+  private[graft] def lshPinWidth(frame: DataFrame): Option[Int] = {
+    val spark = frame.sparkSession
+    spark.conf.getOption("graft.lsh.pinnedWidth").map(_.toInt) match {
       case Some(0) => None
       case Some(n) if n > 0 => Some(n)
-      case _ => Some(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+      case _ =>
+        val stats = frame.queryExecution.optimizedPlan.stats
+        val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+        if (stats.rowCount.isDefined && stats.sizeInBytes <= advisory) None
+        else Some(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     }
+  }
 
   private def pinned(d: DataFrame, w: Option[Int], cols: Column*): DataFrame =
     w.map(n => d.repartition(n, cols: _*)).getOrElse(d)
@@ -228,19 +252,21 @@ object Dedup {
       else {
         val capped = df.sparkSession.sparkContext.broadcast(
           graft.functions.CappedKeys.fromRows(cappedRows, bands))
-        // Explicit session-width repartition: the carried __kb vector
-        // repeats across a doc's 8 band rows, so this exchange compresses
-        // ~8x better than its raw size — AQE's compressed-size coalescing
-        // then packs tens of millions of raw rows into one reducer, whose
+        // Session-width repartition past one advisory partition of raw
+        // `slim` bytes (see lshPinWidth): the carried __kb vector repeats
+        // across a doc's 8 band rows, so this exchange compresses ~8x
+        // better than its raw size — AQE's compressed-size coalescing then
+        // packs tens of millions of raw rows into one reducer, whose
         // sort-merge sort OOMs (measured at the 1000x corpus: default AQE
         // dies at 16 GB heap; pinned width runs in 266 s vs the grouped
         // shape's 484 s). A user-specified repartition is never coalesced;
         // the width tracks spark.sql.shuffle.partitions, which the bench /
-        // production session already scales with input size. Both join
-        // sides read the ONE exchange (ReusedExchange).
+        // production session already scales with input size. With AQE off
+        // both join sides read the ONE exchange (ReusedExchange); under AQE
+        // each side plans its own.
         val sides = pinned(slim.filter(!graft.functions.FirstUncappedMatchExpr
           .cappedContains(col("band"), col("bucket"), capped)),
-          lshPinWidth(df), col("band"), col("bucket"))
+          lshPinWidth(slim), col("band"), col("bucket"))
         val a = sides.select(col("band"), col("bucket"),
           col("doc_id").as("doc_id_a"), col("__kb").as("__kb_a"))
         val b = sides.select(col("band"), col("bucket"),
@@ -257,13 +283,15 @@ object Dedup {
     // so the optimizer can never elect to broadcast it (measured: a 20 MB
     // broadcast threshold flips this join and costs ~1 s at sf0.1; at real
     // scale broadcasting the corpus is fatal). Both attach exchanges are
-    // pinned to the session width (r14 session 2): the candidate-id side
-    // compresses far below its raw size, so AQE's compressed-size
-    // coalescing over-packs reducers whose shuffled-hash builds then hold
-    // hundreds of MB of shingle arrays per task (measured at the 1000×
-    // corpus as heap-death / multi-minute spill; pinned width + pinned
-    // self-join = 1.8× the grouped shape end to end).
-    val pw = lshPinWidth(df)
+    // pinned to the session width (r14 session 2) once `shingled` — their
+    // hash-build side — outgrows one advisory partition of raw bytes (see
+    // lshPinWidth): the candidate-id side compresses far below its raw
+    // size, so AQE's compressed-size coalescing over-packs reducers whose
+    // shuffled-hash builds then hold hundreds of MB of shingle arrays per
+    // task (measured at the 1000× corpus as heap-death / multi-minute
+    // spill; pinned width + pinned self-join = 1.8× the grouped shape end
+    // to end).
+    val pw = lshPinWidth(shingled)
     val pairs = pinned(candidates, pw, col("doc_id_a"))
       .join(pinned(shingled.select(col("doc_id").as("doc_id_a"), col("__sh").as("__sh_a")),
         pw, col("doc_id_a")).hint("shuffle_hash"), "doc_id_a")
@@ -536,12 +564,13 @@ object Dedup {
       else {
         val capped = df.sparkSession.sparkContext.broadcast(
           graft.functions.CappedKeys.fromRows(cappedRows, 4))
-        // session-width user repartition: see minhashNearDuplicates — the
-        // carried signature repeats across a doc's 4 chunk rows, so AQE's
+        // session-width user repartition past one advisory partition of
+        // raw `banded` bytes: see minhashNearDuplicates — the carried
+        // signature repeats across a doc's 4 chunk rows, so AQE's
         // compressed-size coalescing over-packs reducers at scale
         val kept = pinned(banded.filter(!graft.functions.FirstUncappedMatchExpr
           .cappedContains(col("chunk"), col("key"), capped)),
-          lshPinWidth(df), col("chunk"), col("key"))
+          lshPinWidth(banded), col("chunk"), col("key"))
         val a = kept.select(col("chunk"), col("key"),
           col("doc_id").as("doc_id_a"), col("__sim").as("__sim_a"))
         val b = kept.select(col("chunk"), col("key"),
@@ -671,12 +700,13 @@ object Dedup {
       else {
         val capped = df.sparkSession.sparkContext.broadcast(
           graft.functions.CappedKeys.fromRows(cappedRows, 4))
-        // session-width user repartition: see minhashNearDuplicates — the
-        // carried signatures repeat across a doc's 4 chunk rows, so AQE's
+        // session-width user repartition past one advisory partition of
+        // raw `banded` bytes: see minhashNearDuplicates — the carried
+        // signatures repeat across a doc's 4 chunk rows, so AQE's
         // compressed-size coalescing over-packs reducers at scale
         val kept = pinned(banded.filter(!graft.functions.FirstUncappedMatchExpr
           .cappedContains(col("chunk"), col("key"), capped)),
-          lshPinWidth(df), col("chunk"), col("key"))
+          lshPinWidth(banded), col("chunk"), col("key"))
         val a = kept.select(col("chunk"), col("key"), col("doc_id").as("doc_id_a"),
           col("__sa").as("__sa_a"), col("__sb").as("__sb_a"))
         val b = kept.select(col("chunk"), col("key"), col("doc_id").as("doc_id_b"),
@@ -927,8 +957,9 @@ object Dedup {
     * Rounds needed = the cluster diameter, and near-dup graphs are
     * quasi-cliques (pairs come from a similarity threshold), so 2-4 rounds
     * is typical; `maxIter` bounds pathological chains. Convergence is
-    * detected with an any-label-changed existence probe (`limit(1).count`),
-    * a single scalar per round.
+    * detected inside each round's own checkpoint job: a label changes iff
+    * its neighbors' minimum is below it, so that flag is projected and
+    * counted with `Dataset.observe` — one job per round, no probe join.
     *
     * Each round's labels are eagerly `localCheckpoint()`ed, NOT merely
     * persisted: the label frame feeds twice into the next round (the
@@ -962,14 +993,16 @@ object Dedup {
     while (!converged && iter < maxIter) {
       val prop = edges.join(labels.withColumnRenamed("id", "__v2"), col("__v") === col("__v2"))
         .groupBy(col("__u").as("id")).agg(min(col("component")).as("__nc"))
+      val changed = Observation()
       val next = labels.join(prop, Seq("id"), "left")
         .select(col("id"),
-          least(col("component"), coalesce(col("__nc"), col("component"))).as("component"))
+          least(col("component"), coalesce(col("__nc"), col("component"))).as("__next"),
+          (col("__nc") < col("component")).as("__chg"))
+        .observe(changed, count_if(col("__chg")).as("n"))
+        .select(col("id"), col("__next").as("component"))
         .localCheckpoint()
-      val changed = next.join(labels.withColumnRenamed("component", "__old"), Seq("id"))
-        .filter(col("component") =!= col("__old")).limit(1).count() > 0
       labels = next
-      converged = !changed
+      converged = changed.get("n") == 0L
       iter += 1
     }
     edges.unpersist()

@@ -1,0 +1,35 @@
+package graft.ops
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** Eagerly materialized caches for the shuffled, vocabulary-sized count
+  * frames ([[LangModel.scoreBigramLmFused]]'s pair counts,
+  * [[Classifier.trainAndScoreNaiveBayes]]'s token counts) that an
+  * operator builds once and then reads several times.
+  *
+  * Why not `persist()`: Spark 4.1 keeps a persisted plan's output
+  * partitioning (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+  * defaults to false), so AQE may not coalesce the final shuffle of a
+  * cached aggregate — the cache holds `spark.sql.shuffle.partitions`
+  * partitions whatever its size, and every read of it runs that many
+  * tasks (a 5,000-group aggregate: 200 partitions at Spark's default). An
+  * eager `localCheckpoint` runs the same plan as an ordinary AQE query, so
+  * the cache lands in the partitions AQE sized from the data (that
+  * aggregate: 1). With AQE off it keeps the session width, as before.
+  */
+private[graft] object EagerCache {
+
+  /** Run `df` once and keep its rows (memory and disk, lineage cut). */
+  def build(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
+  /** Free the blocks of a frame made by [[build]]. A checkpoint has no
+    * lineage to recompute from, so call this only once no plan that is
+    * still to run reads the frame; otherwise leave the blocks to Spark's
+    * ContextCleaner, which frees them when the last reader is collected.
+    */
+  def release(cache: DataFrame): Unit = cache.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+}

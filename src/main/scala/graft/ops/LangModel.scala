@@ -254,34 +254,33 @@ object LangModel {
         array(struct(try_element_at(col("__t"), lit(-1)).as("w1"),
           lit(null).cast("string").as("w2"))))).as("pr"))
       .select(col("pr.w1").as("w1"), col("pr.w2").as("w2"))
-    // Cache at full shuffle width, THEN (r14, size-aware) read it through a
-    // narrow coalesce(1) only when the pair-type cardinality is known to be
-    // vocabulary-small. The r13 unconditional coalesce(1)-before-persist
-    // made the half-dozen downstream vocabulary-sized actions (model count,
-    // V, unigram/model collects) 1-task jobs instead of 64-reducer stage
-    // floors — but it also pinned the WHOLE pair-count cache in ONE
-    // partition before its size was known, which at web-corpus scale
-    // (billions of distinct bigram types) is a single-node OOM and a
-    // 1-task unigram stage. Persisting at full width first keeps the cache
-    // distributed; the count() below (needed anyway to build the cache in
-    // one pass) yields the exact cardinality for free, and only a frame
-    // under `graft.lm.coalesceMaxRows` is then READ single-task (narrow
-    // coalesce on top of the cache — the blocks stay where they were built).
-    // sf0.1/100x behavior is unchanged: the stage-floor win was always the
-    // 1-task downstream reads, not the cache layout.
-    val pairCountsCache = stream.groupBy("w1", "w2")
-      .agg(count(lit(1)).as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize the cache NOW, in one pass: the model plan references
-    // pairCounts four times (main scan + two unigram broadcasts + V), and
-    // broadcast-exchange jobs launch first and RACE to build a cold cache —
-    // measured as the corpus explode running 2-3x inside model.count()
+    // The pair-count cache is an eager localCheckpoint (EagerCache), not a
+    // persist(): Spark 4.1 keeps a persisted aggregate at its static
+    // spark.sql.shuffle.partitions width, because a cached plan may not
+    // change its output partitioning
+    // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning = false),
+    // so AQE cannot coalesce it — at Spark's default of 200, two 200-task
+    // stages built and counted the cache of a 1,000-document corpus. The
+    // checkpoint lands in the partitions AQE sizes from the data and stays
+    // distributed at web-corpus scale. It is then (r14, size-aware) read
+    // through a narrow coalesce(1) only when count() puts the pair-type
+    // cardinality under `graft.lm.coalesceMaxRows`: the half-dozen
+    // downstream vocabulary-sized actions (model count, V, unigram/model
+    // collects) become 1-task jobs, and a web-scale cache (billions of
+    // bigram types) is never pinned in one partition. It is built NOW, in
+    // one pass: the model plan references pairCounts four times (main scan
+    // + two unigram broadcasts + V), and broadcast-exchange jobs launch
+    // first and would RACE to build a cold cache — measured as the corpus
+    // explode running 2-3x inside model.count().
+    val pairCountsCache = EagerCache.build(stream.groupBy("w1", "w2")
+      .agg(count(lit(1)).as("c")))
     val nPairTypes = pairCountsCache.count()
     val coalesceMax = spark.conf.getOption("graft.lm.coalesceMaxRows")
       .map(_.toLong).getOrElse(8000000L)
     val pairCounts =
       if (nPairTypes <= coalesceMax) pairCountsCache.coalesce(1)
       else pairCountsCache
+    var keep = false
     try {
       val unigrams = pairCounts.groupBy("w1").agg(sum("c").as("c_uni"))
         .filter(col("c_uni") >= minCount)
@@ -296,10 +295,13 @@ object LangModel {
         .select(col("w1"), col("w2"), col("c_big"), col("c_uni"),
           round(log((col("c_big") + lit(1.0)) / (col("c_uni") + col("v"))) * lit(1e6))
             .cast("bigint").as("w_micro"))
+      // the broadcast scorer collects the model and vocabulary into its
+      // probe; the join scorer reads them lazily, so its returned plan
+      // keeps the cache (see EagerCache.release)
       if (model.count() <= maxRows)
         scoreBigramLmBroadcast(docs, model, unigrams, textCol, idCol)
-      else scoreBigramLm(docs, model, unigrams, textCol, idCol)
-    } finally pairCountsCache.unpersist(false)
+      else { keep = true; scoreBigramLm(docs, model, unigrams, textCol, idCol) }
+    } finally if (!keep) EagerCache.release(pairCountsCache)
   }
 
   /** Scorer dispatch: broadcast-probe when the pruned model fits the

@@ -143,6 +143,19 @@ class LangModelSuite extends SparkSpec {
     finally spark.conf.unset("graft.lm.coalesceMaxRows")
   }
 
+  test("fused pipeline: over-budget join fallback matches and stays readable") {
+    // the join scorer reads the pair-count cache lazily, so the fused path
+    // keeps the cache alive for the returned plan instead of releasing it
+    val uni = LangModel.unigramCounts(docs, minCount = 2)
+    val model = LangModel.trainBigramLm(docs, uni, minCount = 2)
+    val want = rows(LangModel.scoreBigramLm(docs, model, uni))
+    spark.conf.set("graft.lm.broadcastMaxRows", "0")
+    val scored = try LangModel.scoreBigramLmFused(docs)
+      finally spark.conf.unset("graft.lm.broadcastMaxRows")
+    assert(rows(scored) == want, "fallback fused scores diverged from composed")
+    assert(rows(scored) == want, "second read of the fallback result")
+  }
+
   test("auto dispatch: budget=0 falls back to the composed join path") {
     val uni = LangModel.unigramCounts(docs, minCount = 2)
     val model = LangModel.trainBigramLm(docs, uni, minCount = 2)

@@ -482,6 +482,83 @@ class PipelineGatesSuite extends SparkSpec {
     assert(w1 == w2, s"wide dispatch diverges: ${w1.length} vs ${w2.length}")
   }
 
+  /** Run `f` at shuffle width `width`, with `confs` set, restoring both. */
+  private def withConfs[T](width: Int, confs: (String, String)*)(f: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+
+  private def pins(ex: Seq[ExecProbe.Exchange]): Seq[Int] =
+    ex.filter(_.origin == "REPARTITION_BY_NUM").map(_.width).sorted
+
+  test("LSH pin rule: frames within one advisory partition run unpinned, forced pins keep the pairs") {
+    // the frames that size the LSH exchanges (minhash slim/shingled, the
+    // simhash banded frames) are well under 1 MB here: at the default
+    // 64 MB advisory size no LSH exchange is pinned, and an advisory size
+    // below the frame forces the session-width pin — same pair sets
+    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val width = 8
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhash" -> (() => Dedup.minhashNearDuplicates(corpus, threshold = 0.5)),
+      "simhash 16-bit" -> (() => Dedup.simhashNearDuplicates(corpus, maxHamming = 12,
+        wideFromDocs = 0)),
+      "simhash wide" -> (() => Dedup.simhashNearDuplicatesWide(corpus, maxHamming = 3)))
+    for ((name, f) <- cases) {
+      val (free, freeEx) = withConfs(width)(ExecProbe.exchanges(spark)(pairSet(f())))
+      val (pinned, pinEx) = withConfs(width,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")(
+        ExecProbe.exchanges(spark)(pairSet(f())))
+      info(s"$name: ${free.size} pairs, forced pins ${pins(pinEx)}")
+      assert(free.nonEmpty && free == pinned, s"$name: pinned pairs diverge")
+      assert(pins(freeEx).isEmpty, s"$name: pinned at the default advisory size: ${pins(freeEx)}")
+      assert(pins(pinEx).nonEmpty && pins(pinEx).forall(_ == width),
+        s"$name: forced pins are not at session width: ${pins(pinEx)}")
+    }
+  }
+
+  test("LSH pin rule: a frame without a materialized row count pins") {
+    withConfs(8) {
+      // a file scan's statistic is a size estimate only
+      val scan = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      assert(scan.queryExecution.optimizedPlan.stats.rowCount.isEmpty)
+      assert(Dedup.lshPinWidth(scan).contains(8))
+      // a persisted frame: an estimate until a job loads the cache, then
+      // the exact materialized size (a few KB). The first probe reads a
+      // derived frame, so `cached`'s own plan statistic is not memoized
+      // before the load.
+      val cached = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id").persist()
+      try {
+        assert(Dedup.lshPinWidth(cached.filter(lit(true))).contains(8))
+        cached.count()
+        assert(Dedup.lshPinWidth(cached).isEmpty)
+      } finally cached.unpersist()
+    }
+  }
+
+  test("graft.lsh.pinnedWidth=N: self-join at N, attach joins at max(N, session width)") {
+    // the attach exchanges are the join's direct children; Spark's
+    // EnsureRequirements re-shuffles a join whose children are all shuffles
+    // narrower than spark.sql.shuffle.partitions to that width, so an N
+    // below the session width narrows only the self-join
+    val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val width = 8
+    for (n <- Seq(3, 12)) {
+      val (_, ex) = withConfs(width, "graft.lsh.pinnedWidth" -> n.toString)(
+        ExecProbe.exchanges(spark)(pairSet(Dedup.minhashNearDuplicates(corpus, threshold = 0.5))))
+      val pinned = ex.filter(_.origin == "REPARTITION_BY_NUM")
+      info(s"pinnedWidth=$n: ${pinned.map(e => s"${e.keys.mkString(",")}@${e.width}")}")
+      val (selfJoin, attach) = pinned.partition(_.keys == Seq("band", "bucket"))
+      assert(selfJoin.nonEmpty && selfJoin.forall(_.width == n), s"self-join: $selfJoin")
+      assert(attach.size == 4 && attach.forall(_.width == math.max(n, width)), s"attach: $attach")
+    }
+  }
+
   test("chunkDedup: carry-chunk keeper agg equals the join-back formulation") {
     import graft.ops.Dedup
     import spark.implicits._
