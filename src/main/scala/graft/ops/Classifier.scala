@@ -272,8 +272,11 @@ object Classifier {
     // materialized in one pass (an eager checkpoint, so AQE sizes it from
     // the data — see EagerCache): the model plan reads this cache for the
     // vocabulary totals broadcast AND the main scan, and the prior and
-    // dispatch count() read it again — a cold cache would race
-    val counts0 = EagerCache.build(stream.groupBy("token").agg(
+    // model reads read it again — a cold cache would race. The build job
+    // also counts the cache's rows, which bound the model's (a filtered
+    // subset joined to one row), so the model is counted against
+    // `graft.nb.broadcastMaxRows` only when that bound does not fit.
+    val (counts0, nTokens) = EagerCache.build(stream.groupBy("token").agg(
         sum(when(col("__pos"), 1L).otherwise(0L)).as("n_pos"),
         sum(when(col("__pos"), 0L).otherwise(1L)).as("n_neg")))
     var keep = false
@@ -303,7 +306,7 @@ object Classifier {
       // the broadcast scorer collects the model into its probe; the
       // shuffle scorer reads it lazily, so its returned plan keeps the
       // cache (see EagerCache.release)
-      if (model.count() <= maxRows)
+      if (nTokens <= maxRows || model.count() <= maxRows)
         scoreNaiveBayesBroadcastWithPrior(docs, model, prior, textCol, idCol)
       else { keep = true; scoreNaiveBayesShuffleWithPrior(docs, model, prior, textCol, idCol) }
     } finally if (!keep) EagerCache.release(counts0)

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /** K-means clustering over embedding columns — the semantic-clustering
   * primitive behind corpus curation (topic balancing, diversity sampling,
@@ -23,7 +26,8 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB): each Lloyd round is one broadcast of k centroids
   * against a narrow scan (assignment — no shuffle of the corpus), plus one
   * (cluster, component)-keyed partial-aggregate shuffle whose volume is
-  * rows × dim longs, map-side combined down to k × dim. Initial centroids
+  * rows × dim longs, map-side combined down to the k × dim sums the driver
+  * collects and divides ([[lloydRound]]). Initial centroids
   * are the k smallest ids (at real scale: a seeded reservoir sample —
   * same broadcast shape). Empty clusters drop out of the update (standard
   * Lloyd behavior; both engines agree).
@@ -80,18 +84,32 @@ object Clustering {
       .agg(first("q").as("q"), min(struct(col("__d"), col("cidx"))).as("__m"))
       .select(col("vec_id"), col("q"), col("__m.cidx").as("cluster"))
 
-  /** Centroid update: per-(cluster, component) exact integer sums, one
-    * map-side-combined shuffle, rebuilt into ordered double arrays.
+  private val CentroidSchema = StructType(Seq(
+    StructField("cidx", IntegerType), StructField("cvec", ArrayType(DoubleType))))
+
+  /** One Lloyd round: assign `q` to `centroids`, then one collect of the
+    * exact integer per-(cluster, component) sums and counts (one
+    * map-side-combined shuffle, k × dim rows), divided once on the driver
+    * into ordered double arrays. A long → double conversion followed by a
+    * double divide is the same IEEE operation in Spark and here, so each
+    * component is the oracle's `CAST(s AS DOUBLE) / CAST(n AS DOUBLE)`.
+    * The centroids come back as a local relation: the next round reads
+    * them without a job, and no round's plan nests inside the next.
     */
-  private def update(assigned: DataFrame): DataFrame =
-    assigned.select(col("cluster"), posexplode(col("q")).as(Seq("pos", "v")))
+  private def lloydRound(q: DataFrame, centroids: DataFrame): DataFrame = {
+    val sums = assign(q, centroids)
+      .select(col("cluster"), posexplode(col("q")).as(Seq("pos", "v")))
       .groupBy("cluster", "pos")
       .agg(sum("v").as("s"), count(lit(1)).as("n"))
-      .groupBy("cluster")
-      .agg(array_sort(collect_list(struct(col("pos"), col("s"), col("n")))).as("__c"))
-      .select(col("cluster").as("cidx"),
-        transform(col("__c"), x =>
-          x.getField("s").cast("double") / x.getField("n").cast("double")).as("cvec"))
+      .collect()
+    val rows = sums.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (c, parts) =>
+      Row(c, parts.sortBy(_.getInt(1)).map { r =>
+        if (r.isNullAt(2)) null
+        else java.lang.Double.valueOf(r.getLong(2).toDouble / r.getLong(3).toDouble)
+      }.toSeq)
+    }
+    q.sparkSession.createDataFrame(rows.asJava, CentroidSchema)
+  }
 
   /** Lloyd k-means: `iters` update rounds, then a final assignment.
     * Returns (vec_id, cluster). `scale` controls quantization resolution
@@ -105,13 +123,7 @@ object Clustering {
     var centroids = q.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cidx"),
         transform(col("q"), x => x.cast("double")).as("cvec"))
-    var it = 0
-    while (it < iters) {
-      // each round's centroid frame is tiny (k x dim): materialize it so
-      // the lineage does not nest one broadcast-join plan per round
-      centroids = update(assign(q, centroids)).localCheckpoint(eager = true)
-      it += 1
-    }
+    for (_ <- 1 to iters) centroids = lloydRound(q, centroids)
     assign(q, centroids)
       .select(col("vec_id"), col("cluster").cast("int").as("cluster"))
   }
@@ -161,11 +173,7 @@ object Clustering {
     var coarse = q.filter(col("vec_id") < kSuper)
       .select(col("vec_id").cast("int").as("cidx"),
         transform(col("q"), x => x.cast("double")).as("cvec"))
-    var it = 0
-    while (it < iters) {
-      coarse = update(assign(q, coarse)).localCheckpoint(eager = true)
-      it += 1
-    }
+    for (_ <- 1 to iters) coarse = lloydRound(q, coarse)
     // cells reused by every inner round: cache the slim (id, q, super) frame
     val cells = assign(q, coarse).withColumnRenamed("cluster", "super").persist()
     // inner init: the kInner smallest ids per cell (same convention as the
@@ -284,11 +292,7 @@ object Clustering {
     var centroids = q.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cidx"),
         transform(col("q"), x => x.cast("double")).as("cvec"))
-    var it = 0
-    while (it < iters) {
-      centroids = update(assign(q, centroids)).localCheckpoint(eager = true)
-      it += 1
-    }
+    for (_ <- 1 to iters) centroids = lloydRound(q, centroids)
     q.crossJoin(broadcast(centroids))
       .withColumn("__d", sqDist(col("q"), col("cvec")))
       .groupBy("vec_id")

@@ -1,9 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.LongType
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -951,15 +956,113 @@ object Dedup {
     * replaces a node's label with the minimum label among its neighbors
     * until nothing changes. Returns one row per node that appears in a
     * pair: (id, component), component = the minimum node id reachable.
-    *
-    * Scale shape: each round is one shuffle join of the edge list with the
-    * label table plus a min-aggregate — no driver-side graph, no collect.
     * Rounds needed = the cluster diameter, and near-dup graphs are
     * quasi-cliques (pairs come from a similarity threshold), so 2-4 rounds
-    * is typical; `maxIter` bounds pathological chains. Convergence is
-    * detected inside each round's own checkpoint job: a label changes iff
-    * its neighbors' minimum is below it, so that flag is projected and
-    * counted with `Dataset.observe` — one job per round, no probe join.
+    * is typical; `maxIter` bounds pathological chains, and a graph that
+    * needs more rounds throws rather than return wrong labels.
+    *
+    * Scale shape: the pair list is read once with a bounded collect. The
+    * bound is `spark.sql.autoBroadcastJoinThreshold` / 16 bytes per pair
+    * (two 8-byte ids) — the budget Spark already uses to ship a relation
+    * to the driver and every executor; a threshold <= 0 turns the driver
+    * path off. A list that fits (LONG ids, no null) is solved on the
+    * driver by the same rounds ([[componentsLocal]]: same labels, round
+    * count and exception) and returned as a local relation: one bounded
+    * read (no job at all when `pairs` optimizes to a local relation)
+    * instead of one job per round. A larger list runs the rounds distributed
+    * ([[componentsDistributed]]); its pair columns are persisted before the
+    * bounded read, so the pair generator runs once whichever path follows.
+    */
+  def connectedComponents(pairs: DataFrame, aCol: String = "doc_id_a",
+                          bCol: String = "doc_id_b", maxIter: Int = 20): DataFrame = {
+    val ab = pairs.select(col(aCol).as("__a"), col(bCol).as("__b"))
+    val maxPairs = math.min(
+      pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold / 16, Int.MaxValue - 1L).toInt
+    // both directions from ONE pass over the pair columns (explode, not a
+    // union of two selects, which reads the pair list twice: uncached, the
+    // second branch re-ran the upstream pair generator — measured ~25 s of
+    // the 75 s cc_minhash cell at 100×)
+    val edges = ab.select(explode(array(
+        struct(col("__a").as("__u"), col("__b").as("__v")),
+        struct(col("__b").as("__u"), col("__a").as("__v")))).as("__e"))
+      .select(col("__e.__u").as("__u"), col("__e.__v").as("__v"))
+    val labels = edges.groupBy(col("__u").as("id"))
+      .agg(min(col("__v")).as("__mn"))
+      .select(col("id"), least(col("id"), col("__mn")).as("component"))
+    val driverOk = maxPairs > 0 && edges.schema("__u").dataType == LongType
+    // a pair list that optimizes to a local relation (rows already on the
+    // driver) is read without a job and costs nothing to re-read
+    val cached = !(driverOk && ab.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    if (cached) ab.persist()
+    try {
+      val read = if (driverOk) ab.limit(maxPairs + 1).collect() else Array.empty[Row]
+      if (driverOk && read.length <= maxPairs && !read.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+        val (ids, comps) = componentsLocal(read.map(_.getLong(0)), read.map(_.getLong(1)), maxIter)
+        pairs.sparkSession.createDataFrame(
+          ids.indices.map(i => Row(ids(i), comps(i))).asJava, labels.schema)
+      } else componentsDistributed(edges, labels, maxIter)
+    } finally if (cached) ab.unpersist()
+  }
+
+  private def notConverged(maxIter: Int) = new IllegalStateException(
+    s"connectedComponents did not reach a fixpoint within maxIter=$maxIter rounds — " +
+      "a cluster's diameter exceeds the bound and the labels would be silently wrong; " +
+      "raise maxIter (rounds needed = the largest cluster diameter)")
+
+  /** [[connectedComponents]]'s rounds on the driver over the undirected
+    * edges `a(i)`—`b(i)`: every node's next label is computed from the
+    * previous round's labels of all its neighbors (not updated in place),
+    * exactly as the distributed rounds do, so the labels, the round count
+    * and the `maxIter` exception are the same. Returns (ids, components).
+    */
+  private def componentsLocal(a: Array[Long], b: Array[Long],
+                              maxIter: Int): (Array[Long], Array[Long]) = {
+    val index = mutable.LongMap.empty[Int]
+    val idBuf = mutable.ArrayBuilder.make[Long]
+    def node(x: Long): Int = index.getOrElseUpdate(x, { idBuf += x; index.size })
+    val ea = a.map(node)
+    val eb = b.map(node)
+    val ids = idBuf.result()
+    val n = ids.length
+    // adjacency in CSR form: the neighbors of i are adj(start(i) until start(i + 1))
+    val start = new Array[Int](n + 1)
+    ea.foreach(i => start(i + 1) += 1)
+    eb.foreach(i => start(i + 1) += 1)
+    for (i <- 0 until n) start(i + 1) += start(i)
+    val fill = start.clone()
+    val adj = new Array[Int](start(n))
+    for (e <- ea.indices) {
+      adj(fill(ea(e))) = eb(e); fill(ea(e)) += 1
+      adj(fill(eb(e))) = ea(e); fill(eb(e)) += 1
+    }
+    def minOver(i: Int, of: Array[Long]): Long = {
+      var m = Long.MaxValue
+      var j = start(i)
+      while (j < start(i + 1)) { m = math.min(m, of(adj(j))); j += 1 }
+      m
+    }
+    var label = Array.tabulate(n)(i => math.min(ids(i), minOver(i, ids)))
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      var changed = 0
+      label = Array.tabulate(n) { i =>
+        val nc = minOver(i, label)
+        if (nc < label(i)) { changed += 1; nc } else label(i)
+      }
+      converged = changed == 0
+      iter += 1
+    }
+    if (!converged) throw notConverged(maxIter)
+    (ids, label)
+  }
+
+  /** [[connectedComponents]]'s rounds as Spark jobs: each round is one
+    * shuffle join of the edge list with the label table plus a
+    * min-aggregate. Convergence is detected inside each round's own
+    * checkpoint job: a label changes iff its neighbors' minimum is below
+    * it, so that flag is projected and counted with `Dataset.observe` —
+    * one job per round, no probe join.
     *
     * Each round's labels are eagerly `localCheckpoint()`ed, NOT merely
     * persisted: the label frame feeds twice into the next round (the
@@ -972,22 +1075,9 @@ object Dedup {
     * swap for reliable `checkpoint()` if executor loss mid-job must be
     * survivable (localCheckpoint trades that for zero HDFS I/O).
     */
-  def connectedComponents(pairs: DataFrame, aCol: String = "doc_id_a",
-                          bCol: String = "doc_id_b", maxIter: Int = 20): DataFrame = {
-    // both directions from ONE pass over `pairs` (explode, not a union of
-    // two selects): each union branch would re-execute the upstream pair
-    // generator — for the LSH pipeline that is a second full
-    // candidate+verify run before the persist materializes (measured
-    // ~25 s of the 75 s cc_minhash cell at 100×)
-    val edges = pairs.select(explode(array(
-        struct(col(aCol).as("__u"), col(bCol).as("__v")),
-        struct(col(bCol).as("__u"), col(aCol).as("__v")))).as("__e"))
-      .select(col("__e.__u").as("__u"), col("__e.__v").as("__v"))
-      .persist()
-    var labels = edges.groupBy(col("__u").as("id"))
-      .agg(min(col("__v")).as("__mn"))
-      .select(col("id"), least(col("id"), col("__mn")).as("component"))
-      .localCheckpoint()
+  private def componentsDistributed(edges: DataFrame, initial: DataFrame,
+                                    maxIter: Int): DataFrame = {
+    var labels = initial.localCheckpoint()
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -1005,12 +1095,7 @@ object Dedup {
       converged = changed.get("n") == 0L
       iter += 1
     }
-    edges.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not reach a fixpoint within maxIter=$maxIter rounds — " +
-          "a cluster's diameter exceeds the bound and the labels would be silently wrong; " +
-          "raise maxIter (rounds needed = the largest cluster diameter)")
+    if (!converged) throw notConverged(maxIter)
     // returned frame is a materialized local checkpoint — no lineage back
     // to the edge list, so consuming it never replays the iteration
     labels

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Eagerly materialized caches for the shuffled, vocabulary-sized count
   * frames ([[LangModel.scoreBigramLmFused]]'s pair counts,
@@ -20,8 +21,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 private[graft] object EagerCache {
 
-  /** Run `df` once and keep its rows (memory and disk, lineage cut). */
-  def build(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+  /** Run `df` once and keep its rows (memory and disk, lineage cut).
+    * Returns the cache and its row count, observed inside the build job
+    * (`Dataset.observe`), so a size decision needs no second pass.
+    */
+  def build(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val cache = df.observe(rows, count(lit(1)).as("n")).localCheckpoint(eager = true)
+    (cache, rows.get("n").asInstanceOf[Long])
+  }
 
   /** Free the blocks of a frame made by [[build]]. A checkpoint has no
     * lineage to recompute from, so call this only once no plan that is

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -161,30 +161,41 @@ object LangModel {
   def scoreBigramLmBroadcast(docs: DataFrame, model: DataFrame,
                              unigrams: DataFrame,
                              textCol: String = "text",
-                             idCol: String = "doc_id"): DataFrame = {
+                             idCol: String = "doc_id"): DataFrame =
+    scoreWithVocab(docs, model, vocabRows(unigrams), textCol, idCol)
+
+  /** The vocabulary side of the broadcast probe in ONE collect: per kept
+    * token its smoothing floor `round(ln(c_uni + V) * 1e6)`, with V (the
+    * vocabulary's row count, a window count over the whole frame) and the
+    * OOV floor `round(ln(V) * 1e6)` on every row — all SPARK-computed, so
+    * they are the composed path's values bit for bit. Rows are
+    * (token, v, oov, fl).
+    */
+  private def vocabRows(unigrams: DataFrame): Array[Row] =
+    unigrams.select(col("token"), col("c_uni"), count(lit(1)).over().as("v"))
+      .select(col("token"), col("v"),
+        round(log(col("v")) * lit(1e6)).cast("bigint").as("oov"),
+        round(log(col("c_uni") + col("v")) * lit(1e6)).cast("bigint").as("fl"))
+      .collect()
+
+  /** [[scoreBigramLmBroadcast]] over already-collected [[vocabRows]]. */
+  private def scoreWithVocab(docs: DataFrame, model: DataFrame, uniRows: Array[Row],
+                             textCol: String, idCol: String): DataFrame = {
     val spark = docs.sparkSession
-    // V and both floors are SPARK-computed (bit-identity with the composed
-    // path's round(log(..)*1e6) — see scaladoc); V >= 2 guard as in
-    // scoreBigramLm, raised driver-side since V is materialized here anyway
-    val vRow = unigrams.agg(count(lit(1)).as("v"))
-      .select(col("v"),
-        round(log(col("v")) * lit(1e6)).cast("bigint").as("oov"))
-      .collect()(0)
-    val v = vRow.getLong(0)
+    // V >= 2 guard as in scoreBigramLm, raised driver-side since V is
+    // materialized here anyway (an empty vocabulary has V = 0)
+    val v = if (uniRows.isEmpty) 0L else uniRows(0).getLong(1)
     if (v < 2) throw new IllegalArgumentException(
       s"scoreBigramLm: kept vocabulary size V = $v but the ln(V) " +
         "out-of-vocab floor needs V >= 2")
-    val oovMicro = vRow.getLong(1)
-    val uniRows = unigrams.select(col("token"),
-        round(log(col("c_uni") + lit(v)) * lit(1e6)).cast("bigint").as("fl"))
-      .collect()
+    val oovMicro = uniRows(0).getLong(2)
     val tokens = new Array[String](uniRows.length)
     val floors = new Array[Long](uniRows.length)
     val idOf = new java.util.HashMap[String, Int](uniRows.length * 2)
     var i = 0
     while (i < uniRows.length) {
       tokens(i) = uniRows(i).getString(0)
-      floors(i) = uniRows(i).getLong(1)
+      floors(i) = uniRows(i).getLong(3)
       idOf.put(tokens(i), i)
       i += 1
     }
@@ -262,19 +273,23 @@ object LangModel {
     // so AQE cannot coalesce it — at Spark's default of 200, two 200-task
     // stages built and counted the cache of a 1,000-document corpus. The
     // checkpoint lands in the partitions AQE sizes from the data and stays
-    // distributed at web-corpus scale. It is then (r14, size-aware) read
-    // through a narrow coalesce(1) only when count() puts the pair-type
-    // cardinality under `graft.lm.coalesceMaxRows`: the half-dozen
-    // downstream vocabulary-sized actions (model count, V, unigram/model
-    // collects) become 1-task jobs, and a web-scale cache (billions of
-    // bigram types) is never pinned in one partition. It is built NOW, in
-    // one pass: the model plan references pairCounts four times (main scan
-    // + two unigram broadcasts + V), and broadcast-exchange jobs launch
-    // first and would RACE to build a cold cache — measured as the corpus
-    // explode running 2-3x inside model.count().
-    val pairCountsCache = EagerCache.build(stream.groupBy("w1", "w2")
-      .agg(count(lit(1)).as("c")))
-    val nPairTypes = pairCountsCache.count()
+    // distributed at web-corpus scale. It is built NOW, in one pass: the
+    // model plan references pairCounts four times (main scan + two unigram
+    // broadcasts + V), and broadcast-exchange jobs launch first and would
+    // RACE to build a cold cache — measured as the corpus explode running
+    // 2-3x inside model.count(). The build job also observes the number of
+    // pair types, which decides two things with no further pass:
+    //  - (r14, size-aware) the cache is read through a narrow coalesce(1)
+    //    only when it holds at most `graft.lm.coalesceMaxRows` pair types,
+    //    so the downstream vocabulary-sized reads (vocabulary and model
+    //    collects) are 1-task jobs, while a web-scale cache (billions of
+    //    bigram types) is never pinned in one partition;
+    //  - the model is a subset of the pair types (each of its joins
+    //    matches at most one row), so that count bounds it, and the model
+    //    is counted against `graft.lm.broadcastMaxRows` only when the
+    //    bound does not already fit.
+    val (pairCountsCache, nPairTypes) = EagerCache.build(
+      stream.groupBy("w1", "w2").agg(count(lit(1)).as("c")))
     val coalesceMax = spark.conf.getOption("graft.lm.coalesceMaxRows")
       .map(_.toLong).getOrElse(8000000L)
     val pairCounts =
@@ -298,7 +313,7 @@ object LangModel {
       // the broadcast scorer collects the model and vocabulary into its
       // probe; the join scorer reads them lazily, so its returned plan
       // keeps the cache (see EagerCache.release)
-      if (model.count() <= maxRows)
+      if (nPairTypes <= maxRows || model.count() <= maxRows)
         scoreBigramLmBroadcast(docs, model, unigrams, textCol, idCol)
       else { keep = true; scoreBigramLm(docs, model, unigrams, textCol, idCol) }
     } finally if (!keep) EagerCache.release(pairCountsCache)
@@ -320,21 +335,17 @@ object LangModel {
       .map(_.toLong).getOrElse(8000000L)
     val uniP = unigrams.persist(StorageLevel.MEMORY_AND_DISK)
     val modelP = model.persist(StorageLevel.MEMORY_AND_DISK)
-    // build the unigram cache in one pass first — the model plan references
-    // it three times and its broadcast jobs would race a cold cache (same
-    // hazard as the fused path's pairCounts; see scoreBigramLmFused)
-    uniP.count()
-    val rows = modelP.count()
-    if (rows <= maxRows) {
-      try scoreBigramLmBroadcast(docs, modelP, uniP, textCol, idCol)
-      finally { modelP.unpersist(false); uniP.unpersist(false) }
-    } else {
-      // fallback = the composed path exactly as before (plus the one
-      // cardinality pass); drop the cache so an over-budget model's blocks
-      // don't pin executor memory across the scoring job
-      modelP.unpersist(false)
-      uniP.unpersist(false)
-      scoreBigramLm(docs, modelP, uniP, textCol, idCol)
-    }
+    try {
+      // the probe's vocabulary collect runs first and builds the unigram
+      // cache in one pass — the model plan references it three times and
+      // its broadcast jobs would race a cold cache (same hazard as the
+      // fused path's pairCounts; see scoreBigramLmFused)
+      val vocab = vocabRows(uniP)
+      if (modelP.count() <= maxRows) scoreWithVocab(docs, modelP, vocab, textCol, idCol)
+      // fallback = the composed path exactly as before (plus the vocabulary
+      // and cardinality passes); the caches are dropped so an over-budget
+      // model's blocks don't pin executor memory across the scoring job
+      else scoreBigramLm(docs, modelP, uniP, textCol, idCol)
+    } finally { modelP.unpersist(false); uniP.unpersist(false) }
   }
 }

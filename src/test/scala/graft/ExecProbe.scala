@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -15,7 +15,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** What a block of driver code made Spark run: the shuffle exchanges of
-  * every query it executed (final adaptive plans) and its task count.
+  * every query it executed (final adaptive plans), its task count and its
+  * job count.
   */
 object ExecProbe extends AdaptiveSparkPlanHelper {
 
@@ -47,10 +48,19 @@ object ExecProbe extends AdaptiveSparkPlanHelper {
     } finally spark.listenerManager.unregister(l)
   }
 
-  def tasks[T](spark: SparkSession)(f: => T): (T, Long) = {
+  def tasks[T](spark: SparkSession)(f: => T): (T, Long) = counted(spark, jobs = false)(f)
+
+  /** The Spark jobs `f` ran: each collect, count or eager checkpoint is
+    * at least one, and with AQE on every shuffle or broadcast stage is one
+    * more.
+    */
+  def jobs[T](spark: SparkSession)(f: => T): (T, Long) = counted(spark, jobs = true)(f)
+
+  private def counted[T](spark: SparkSession, jobs: Boolean)(f: => T): (T, Long) = {
     val n = new AtomicLong
     val l = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = n.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (!jobs) n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = if (jobs) n.incrementAndGet()
     }
     TestBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)

@@ -583,47 +583,72 @@ class PipelineGatesSuite extends SparkSpec {
       .unionByName(spark.sql("SELECT 7L AS doc_id, CAST(NULL AS STRING) AS text")), 3)
   }
 
-  test("connected components: chains, disjoint clusters, keeper selection") {
-    import spark.implicits._
-    val pairs = Seq((10L, 20L), (20L, 30L), (30L, 40L), (50L, 60L))
-      .toDF("doc_id_a", "doc_id_b")
-    val cc = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc == Map(10L -> 10L, 20L -> 10L, 30L -> 10L, 40L -> 10L,
-      50L -> 50L, 60L -> 50L), s"got $cc")
+  for ((suffix, setting) <- ccPaths) {
+    test("connected components: chains, disjoint clusters, keeper selection" + suffix) {
+      onCcPath(setting) {
+        import spark.implicits._
+        val pairs = Seq((10L, 20L), (20L, 30L), (30L, 40L), (50L, 60L))
+          .toDF("doc_id_a", "doc_id_b")
+        val cc = Dedup.connectedComponents(pairs).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(cc == Map(10L -> 10L, 20L -> 10L, 30L -> 10L, 40L -> 10L,
+          50L -> 50L, 60L -> 50L), s"got $cc")
 
-    val corpus = Seq(10L, 20L, 30L, 40L, 50L, 60L, 99L).toDF("doc_id")
-    val kept = Dedup.dedupByPairs(corpus, pairs).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    // one keeper per cluster (the min id) plus the untouched singleton
-    assert(kept == Set(10L, 50L, 99L), s"got $kept")
-  }
-
-  test("connected components fails loudly when maxIter is below the diameter") {
-    import spark.implicits._
-    // a 6-node chain has diameter 5 > maxIter=2
-    val pairs = (10L to 15L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("doc_id_a", "doc_id_b")
-    val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(pairs, maxIter = 2).collect()
+        val corpus = Seq(10L, 20L, 30L, 40L, 50L, 60L, 99L).toDF("doc_id")
+        val kept = Dedup.dedupByPairs(corpus, pairs).select("doc_id")
+          .collect().map(_.getLong(0)).toSet
+        // one keeper per cluster (the min id) plus the untouched singleton
+        assert(kept == Set(10L, 50L, 99L), s"got $kept")
+      }
     }
-    assert(e.getMessage.contains("maxIter"), e.getMessage)
+
+    test("connected components fails loudly when maxIter is below the diameter" + suffix) {
+      onCcPath(setting) {
+        import spark.implicits._
+        // a 6-node chain has diameter 5 > maxIter=2
+        val pairs = (10L to 15L).sliding(2).map(s => (s(0), s(1))).toSeq
+          .toDF("doc_id_a", "doc_id_b")
+        val e = intercept[IllegalStateException] {
+          Dedup.connectedComponents(pairs, maxIter = 2).collect()
+        }
+        assert(e.getMessage.contains("maxIter"), e.getMessage)
+      }
+    }
+
+    // Regression: the label frame feeds twice into each round, so without
+    // per-round lineage truncation the logical plan doubles per iteration
+    // (OOMed the test heap inside explainString at ~20 rounds in round 4).
+    // A 14-node chain needs >10 propagation rounds; the returned plan must
+    // still be a leaf (a checkpoint, or the driver path's local relation),
+    // not a 2^rounds tree.
+    test("connected components: plan size is O(1) in iteration count" + suffix) {
+      onCcPath(setting) {
+        import spark.implicits._
+        val pairs = (100L to 113L).sliding(2).map(s => (s(0), s(1))).toSeq
+          .toDF("doc_id_a", "doc_id_b")
+        val cc = Dedup.connectedComponents(pairs, maxIter = 30)
+        val planNodes = cc.queryExecution.logical.collect { case p => p }.size
+        assert(planNodes <= 3, s"lineage not truncated: $planNodes logical nodes")
+        val labels = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(labels == (100L to 113L).map(_ -> 100L).toMap, s"got $labels")
+      }
+    }
   }
 
-  // Regression: the label frame feeds twice into each round, so without
-  // per-round lineage truncation the logical plan doubles per iteration
-  // (OOMed the test heap inside explainString at ~20 rounds in round 4).
-  // A 14-node chain needs >10 propagation rounds; the returned plan must
-  // still be a checkpoint leaf, not a 2^rounds tree.
-  test("connected components: plan size is O(1) in iteration count") {
-    import spark.implicits._
-    val pairs = (100L to 113L).sliding(2).map(s => (s(0), s(1))).toSeq
-      .toDF("doc_id_a", "doc_id_b")
-    val cc = Dedup.connectedComponents(pairs, maxIter = 30)
-    val planNodes = cc.queryExecution.logical.collect { case p => p }.size
-    assert(planNodes <= 3, s"lineage not truncated: $planNodes logical nodes")
-    val labels = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels == (100L to 113L).map(_ -> 100L).toMap, s"got $labels")
+  test("connected components: driver and distributed rounds agree on the sf0.01 pair list") {
+    val pairs = Dedup.ngramJaccardPairs(docs, threshold = 0.7).localCheckpoint()
+    val local = Dedup.connectedComponents(pairs)
+    val distributed = onCcPath(Some("-1"))(Dedup.connectedComponents(pairs))
+    assert(local.queryExecution.logical.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation], "sf0.01 list fits the driver")
+    assert(!distributed.queryExecution.logical.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation], "threshold -1 keeps it distributed")
+    assert(local.schema == distributed.schema)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    val l = labels(local)
+    assert(l.nonEmpty && l.map(_._2).distinct.size < l.size, "the list has non-trivial components")
+    assert(l == labels(distributed))
   }
 
   test("connected components on the real sf0.01 exact pair list") {

@@ -82,29 +82,32 @@ class PropertySuite extends SparkSpec {
     }
   }
 
-  test("property: connectedComponents matches a local union-find oracle") {
-    import spark.implicits._
-    for (seed <- 1 to 5) {
-      val rnd = new Random(seed)
-      val n = 40
-      val edges = Seq.fill(30)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
-      // local union-find ground truth
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+  for ((suffix, setting) <- ccPaths)
+    test("property: connectedComponents matches a local union-find oracle" + suffix) {
+      import spark.implicits._
+      onCcPath(setting) {
+        for (seed <- 1 to 5) {
+          val rnd = new Random(seed)
+          val n = 40
+          val edges = Seq.fill(30)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+            .filter { case (a, b) => a != b }
+            .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+          // local union-find ground truth
+          val parent = Array.tabulate(n)(identity)
+          def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+          edges.foreach { case (a, b) =>
+            val (ra, rb) = (find(a.toInt), find(b.toInt))
+            if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          }
+          val nodesInEdges = edges.flatMap(e => Seq(e._1, e._2)).toSet
+          val expected = nodesInEdges.map(v => v -> find(v.toInt).toLong).toMap
+          val got = graft.ops.Dedup.connectedComponents(
+              edges.toDF("doc_id_a", "doc_id_b"))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          assert(got == expected, s"seed=$seed: got $got\nexpected $expected")
+        }
       }
-      val nodesInEdges = edges.flatMap(e => Seq(e._1, e._2)).toSet
-      val expected = nodesInEdges.map(v => v -> find(v.toInt).toLong).toMap
-      val got = graft.ops.Dedup.connectedComponents(
-          edges.toDF("doc_id_a", "doc_id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"seed=$seed: got $got\nexpected $expected")
     }
-  }
 
   test("property: sessionization invariants on random event streams") {
     import spark.implicits._

@@ -23,6 +23,31 @@ object SharedSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
 
+  /** Run `f` with the session conf `key` set to `value`, restoring what was
+    * there before (or unsetting it) afterwards.
+    */
+  def withConf[T](key: String, value: String)(f: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** The two paths of `Dedup.connectedComponents`, as (test-name suffix,
+    * setting): the driver-side rounds a small pair list takes by default,
+    * and the distributed rounds, forced by turning the broadcast threshold
+    * (its driver-side budget) off.
+    */
+  val ccPaths: Seq[(String, Option[String])] =
+    Seq("" -> None, " [distributed rounds]" -> Some("-1"))
+
+  def onCcPath[T](setting: Option[String])(f: => T): T = setting match {
+    case Some(v) => withConf("spark.sql.autoBroadcastJoinThreshold", v)(f)
+    case None => f
+  }
+
   /** Normalize a result set for golden comparison: rows as sorted lists of
     * string cells; doubles rounded to 6 decimals.
     */

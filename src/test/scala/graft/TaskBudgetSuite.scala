@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Classifier, Dedup, LangModel}
+import graft.ops.{Classifier, Clustering, Dedup, LangModel}
 
-/** Task-count and cache-release gates for the operators that size their own
-  * exchanges and caches: at Spark's default of 200 shuffle partitions (a
-  * library caller's session, AQE on), a ~200-document corpus must not pay
-  * 200-task stages, and the operators that release their caches must leave
-  * the persisted-RDD count as they found it.
+/** Task-count, job-count and cache-release gates for the operators that
+  * size their own exchanges and caches: at Spark's default of 200 shuffle
+  * partitions (a library caller's session, AQE on), a ~200-document corpus
+  * must not pay 200-task stages, the operators that release their caches
+  * must leave the persisted-RDD count as they found it, and the operators
+  * that decide a fixpoint or a size gate must not pay a job per decision.
   */
 class TaskBudgetSuite extends SparkSpec {
 
@@ -30,9 +31,7 @@ class TaskBudgetSuite extends SparkSpec {
     test(s"$name: under $MaxTasks tasks at 200 shuffle partitions" +
       (if (releases) ", caches released" else "")) {
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "200")
-      try {
+      withConf("spark.sql.shuffle.partitions", "200") {
         val before = spark.sparkContext.getPersistentRDDs.keySet
         val (rows, tasks) = ExecProbe.tasks(spark)(op().collect())
         info(s"${rows.length} rows, $tasks tasks")
@@ -41,6 +40,40 @@ class TaskBudgetSuite extends SparkSpec {
         // compared by id: Spark's ContextCleaner may free older RDDs meanwhile
         val left = spark.sparkContext.getPersistentRDDs.keySet -- before
         if (releases) assert(left.isEmpty, s"$name left RDDs ${left.mkString(", ")} persisted")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
+    }
+
+  // the embeddings table beside the documents table
+  private lazy val emb = spark.read.parquet(docs.inputFiles.head.replace("documents", "embeddings"))
+    .filter(col("vec_id") < 200)
+
+  // a candidate-pair list already on the driver, as perfbench's corpus pass
+  // and any caller that collected its pairs hands it over
+  private lazy val localPairs = {
+    val ps = Dedup.minhashNearDuplicates(docs, threshold = 0.7, bands = 8, rows = 4)
+      .select("doc_id_a", "doc_id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+    spark.createDataFrame(ps.toSeq).toDF("doc_id_a", "doc_id_b")
+  }
+
+  // in brackets: the jobs the same calls cost with one job per round or
+  // per size decision; each budget sits below it. Inputs are built first,
+  // so only the operator and the read of its result are counted
+  private val jobOps = Seq[(String, Int, () => DataFrame, DataFrame => DataFrame)](
+    ("connectedComponents", 1, () => localPairs, Dedup.connectedComponents(_)), // [8]
+    ("scoreBigramLmFused", 10, () => docs, LangModel.scoreBigramLmFused(_)), // [15]
+    ("kmeans(iters = 2)", 7, () => emb, Clustering.kmeans(_, k = 8, iters = 2)), // [10]
+    ("trainAndScoreNaiveBayes", 9, () => docs, // [12]
+      Classifier.trainAndScoreNaiveBayes(_, col("lang") === "en")))
+
+  for ((name, budget, input, op) <- jobOps)
+    test(s"$name: at most $budget jobs at 200 shuffle partitions") {
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      withConf("spark.sql.shuffle.partitions", "200") {
+        val in = input()
+        val (rows, jobs) = ExecProbe.jobs(spark)(op(in).collect())
+        info(s"${rows.length} rows, $jobs jobs")
+        assert(rows.nonEmpty)
+        assert(jobs <= budget, s"$name ran $jobs jobs")
+      }
     }
 }
