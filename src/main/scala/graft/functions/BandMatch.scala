@@ -82,14 +82,14 @@ object FirstMatchBandExpr {
   * carries its full per-doc key vector, NULL-free, and cap-awareness comes
   * from this set). Membership is exact (sorted-array binary search — no
   * hash-collision false positives, which would emit duplicate pairs).
-  * Callers gate on `graft.lsh.cappedMaxKeys` and fall back to the joined
-  * formulation when an adversarial corpus caps too many buckets to ship.
+  * `Dedup` collects the set under the broadcast threshold's budget and
+  * falls back to the kept-vector regroup when a corpus caps too many
+  * buckets to ship.
   */
 final class CappedKeys(perBand: Array[Array[Long]]) extends Serializable {
   def contains(band: Int, key: Long): Boolean =
     band >= 0 && band < perBand.length &&
       java.util.Arrays.binarySearch(perBand(band), key) >= 0
-  def totalKeys: Long = perBand.iterator.map(_.length.toLong).sum
 }
 
 object CappedKeys {

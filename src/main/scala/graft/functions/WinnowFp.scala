@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Fused winnowing fingerprints (Schleimer/Wilkerson/Aiken): char-k-gram
   * xxhash64 values of the normalized text, window-minimized, first-
   * occurrence-distinct — BIT-IDENTICAL (values AND order) to the composed
-  * formulation in `TextAnalysis.winnowFingerprintsComposed` (fenced in
-  * TextStatsSuite), in ONE pass:
+  * transform formulation (kept as the fence reference in TextStatsSuite),
+  * in ONE pass:
   *
   *  - every k-code-point gram of the normalized (trim/\s+-squeeze/lower)
   *    text is a byte-substring, so gram hashes are XXH64 over byte ranges
@@ -142,7 +142,7 @@ object WinnowFpExpr {
 
   /** Poly-hash variant: gram hash = the 53-bit polynomial fold over the
     * gram's CODE POINTS — bit-identical (values AND order) to the
-    * composed `TextAnalysis.winnowFingerprintsPolyComposed` (fenced in
+    * composed slice-fold formulation (kept as the fence reference in
     * TextStatsSuite) whose per-position `ascii(substr(i,1))` codes are
     * code points. Backs the cross-engine-replayable oracle twin at fused
     * speed.

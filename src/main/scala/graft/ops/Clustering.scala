@@ -37,7 +37,7 @@ object Clustering {
   /** Squared L2 distance between the quantized vector `q` (array<long>)
     * and a centroid vector `c` (array<double>), folded in index order.
     */
-  private def sqDist(q: Column, c: Column): Column =
+  private[graft] def sqDist(q: Column, c: Column): Column =
     // fused kernel, IEEE-identical to the zip_with/aggregate fold it
     // replaces (fenced in SimilaritySuite)
     graft.functions.VecOps.sqDistLongDouble(q, c)
@@ -48,10 +48,10 @@ object Clustering {
     * folded into a fused argmin PROJECTION
     * (functions.VecOps.argminSqDist): the corpus is never cross-joined,
     * grouped or sorted — assignment is a map over the scan. The joined
-    * formulation this replaces (r13, kept below as the fence reference)
-    * paid crossJoin × k plus a struct-min aggregation that falls to
-    * SortAggregate and drags every quantized vector through an exchange
-    * and two sorts. Distance fold and tie/null semantics are
+    * formulation this replaces (r13, kept in RelevanceClusteringSuite as
+    * the fence reference) paid crossJoin × k plus a struct-min
+    * aggregation that falls to SortAggregate and drags every quantized
+    * vector through an exchange and two sorts. Distance fold and tie/null semantics are
     * IEEE-identical (argminSqFold scaladoc; fenced in
     * RelevanceClusteringSuite); the coalesce preserves the joined path's
     * null-q behavior (all distances null → lowest cidx wins struct-min).
@@ -72,17 +72,6 @@ object Clustering {
           cents.map(_._1).toSeq, cents.map(_._2).toSeq),
         lit(cents.head._1)).as("cluster"))
   }
-
-  /** The crossJoin + struct-min formulation [[assign]] replaced —
-    * the equivalence-fence reference (RelevanceClusteringSuite).
-    */
-  private[graft] def assignJoined(q: DataFrame, centroids: DataFrame): DataFrame =
-    q.crossJoin(broadcast(centroids))
-      .withColumn("__d", sqDist(col("q"), col("cvec")))
-      .groupBy("vec_id")
-      // q is functionally determined by vec_id, so first() is deterministic
-      .agg(first("q").as("q"), min(struct(col("__d"), col("cidx"))).as("__m"))
-      .select(col("vec_id"), col("q"), col("__m.cidx").as("cluster"))
 
   private val CentroidSchema = StructType(Seq(
     StructField("cidx", IntegerType), StructField("cvec", ArrayType(DoubleType))))

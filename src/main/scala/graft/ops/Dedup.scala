@@ -3,12 +3,17 @@ package graft.ops
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
+
+import graft.functions.{CappedKeys, FirstMatchBandExpr, FirstUncappedMatchExpr,
+  FirstUncappedSim16Expr, FirstUncappedWideExpr}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -71,6 +76,119 @@ object Dedup {
 
   private def pinned(d: DataFrame, w: Option[Int], cols: Column*): DataFrame =
     w.map(n => d.repartition(n, cols: _*)).getOrElse(d)
+
+  /** Rows of two 8-byte values a relation may hold to be read on the
+    * driver: `spark.sql.autoBroadcastJoinThreshold` / 16 bytes, the budget
+    * Spark already uses to ship a relation to the driver and every
+    * executor. A threshold <= 0 gives 0: no driver-side path.
+    */
+  private def driverRows(spark: SparkSession): Int =
+    math.max(0L, math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / 16,
+      Int.MaxValue - 1L)).toInt
+
+  // ------------------------------------------------------- LSH band join
+
+  /** One LSH operator's cache lifecycle: `body` persists its frames through
+    * the `cache` it is handed and returns its verified pairs, which are
+    * eagerly `localCheckpoint`ed; then every cache is released, also when
+    * the body or the checkpoint throws. The returned frame owns its
+    * checkpoint blocks; Spark's ContextCleaner frees them with it.
+    */
+  private def checkpointed(body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val held = mutable.Buffer.empty[DataFrame]
+    try body { d => held += d.persist(); d }.localCheckpoint(eager = true)
+    finally held.foreach(_.unpersist())
+  }
+
+  /** The capped-set gate: the buckets of `sizes` (a `__bsz` count per
+    * bucket) holding more than `maxBucket` rows, as the exact set of their
+    * (band, key) values, broadcast ([[graft.functions.CappedKeys]]). Capped
+    * buckets are few by construction (each holds > maxBucket rows, so
+    * their count is < rows / (maxBucket + 1): boilerplate explosions, not
+    * the corpus), so the cap becomes a codegen filter instead of a join.
+    * They are collected under [[driverRows]]; None (too many to ship, or
+    * the broadcast threshold off) selects the kept-vector fallback.
+    */
+  private def cappedSet(sizes: DataFrame, band: Column, key: Column, bands: Int,
+                        maxBucket: Int): Option[Broadcast[CappedKeys]] = {
+    val budget = driverRows(sizes.sparkSession)
+    Some(budget).filter(_ > 0)
+      .map(b => sizes.filter(col("__bsz") > maxBucket).select(band, key).limit(b + 1).collect())
+      .filter(_.length <= budget)
+      .map(rows => sizes.sparkSession.sparkContext.broadcast(CappedKeys.fromRows(rows, bands)))
+  }
+
+  /** The banded self-join of minhash and both simhash widths: the candidate
+    * pairs of `banded` (doc_id, `band`, `key` and the `payload` columns;
+    * `bands` bands) with the buckets over `maxBucket` rows dropped, one row
+    * per pair: (band, key, doc_id_a, doc_id_b, and `<p>_a`, `<p>_b` for
+    * each payload column p), doc_id_a < doc_id_b.
+    *
+    * First-match emission (r14): a pair meeting in several bands is kept
+    * only at its first SURVIVING shared band, so pairs are unique by
+    * construction and no dropDuplicates exchange runs over every pair
+    * instance (measured at 100×: 176M instances hashed down to 27M pairs,
+    * 14 s of a 26 s run). With the capped set ([[cappedSet]]), each side
+    * carries its full per-doc keys in the payload, the cap is a codegen
+    * filter, and `firstUncapped` — the operator's first-match over the
+    * `_a`/`_b` payload columns and the set — skips capped bands: two docs
+    * agreeing on band j share band j's bucket, hence one capped-ness. That
+    * removes the cap join and the per-doc kept-vector regroup (a
+    * corpus-wide groupBy + map + re-explode, 37 s of the 1000× minhash
+    * wall). Otherwise [[keptVectors]] builds that regroup, persisted through
+    * `cache`, and the first match is taken over its NULL-able vectors.
+    *
+    * The capped-set sides are repartitioned to the session width once
+    * `banded` outgrows one advisory partition of raw bytes ([[lshPinWidth]]):
+    * the per-doc payload repeats across a doc's band rows, so the exchange
+    * compresses far below its raw size and AQE's compressed-size coalescing
+    * packs tens of millions of raw rows into one reducer, whose sort-merge
+    * sort OOMs (measured at the 1000× corpus: default AQE dies at 16 GB
+    * heap; pinned width runs in 266 s vs the kept-vector shape's 484 s).
+    * With AQE off both join sides read the one exchange (ReusedExchange).
+    */
+  private def bandJoin(banded: DataFrame, band: String, key: String, bands: Int,
+                       maxBucket: Int, payload: Seq[String],
+                       firstUncapped: Broadcast[CappedKeys] => Column,
+                       cache: DataFrame => DataFrame): DataFrame = {
+    // bucket sizes are corpus-order in the worst case (one bucket per doc)
+    val sizes = banded.groupBy(band, key).agg(count(lit(1)).as("__bsz"))
+    def selfJoin(sides: DataFrame, carried: Seq[String], firstMatch: Column): DataFrame = {
+      def side(s: String) = sides.select(Seq(col(band), col(key), col("doc_id").as(s"doc_id_$s")) ++
+        carried.map(p => col(p).as(s"${p}_$s")): _*)
+      side("a").join(side("b"), Seq(band, key))
+        .filter(col("doc_id_a") < col("doc_id_b"))
+        .filter(col(band) === firstMatch)
+    }
+    cappedSet(sizes, col(band), col(key), bands, maxBucket) match {
+      case Some(capped) =>
+        selfJoin(pinned(banded.filter(!FirstUncappedMatchExpr.cappedContains(col(band), col(key), capped)),
+          lshPinWidth(banded), col(band), col(key)), payload, firstUncapped(capped))
+      case None =>
+        selfJoin(cache(keptVectors(banded, sizes, band, key, bands, maxBucket, payload)),
+          payload :+ "__kv", FirstMatchBandExpr.firstMatchBand(col("__kv_a"), col("__kv_b")))
+    }
+  }
+
+  /** The kept-vector fallback of [[bandJoin]]: the rows of `banded` whose
+    * bucket is within the cap (a join against the size-filtered `sizes`),
+    * each carrying its doc's `payload` and kept-bucket vector `__kv` —
+    * slot j is the doc's band-j key, NULL when that bucket was capped away.
+    */
+  private def keptVectors(banded: DataFrame, sizes: DataFrame, band: String, key: String,
+                          bands: Int, maxBucket: Int, payload: Seq[String]): DataFrame = {
+    val carried = col("doc_id") +: payload.map(col)
+    banded.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"), Seq(band, key))
+      .groupBy("doc_id")
+      // payload is per doc, so first() is deterministic
+      .agg(map_from_entries(collect_list(struct(col(band), col(key)))).as("__m"),
+        payload.map(p => first(p).as(p)): _*)
+      // try_element_at: NULL for a missing band (plain element_at errors under ANSI)
+      .select(carried :+ transform(sequence(lit(0), lit(bands - 1)),
+        j => try_element_at(col("__m"), j)).as("__kv"): _*)
+      .select(carried :+ col("__kv") :+ posexplode(col("__kv")).as(Seq(band, key)): _*)
+      .filter(col(key).isNotNull)
+  }
 
 
   // ---------------------------------------------------------------- exact
@@ -186,12 +304,13 @@ object Dedup {
     * @param maxBucket  per-bucket cap: buckets larger than this (boilerplate
     *                   explosions) are dropped — at 100 TB a single hot
     *                   bucket would otherwise produce O(n²) pairs
-    * @return (doc_id_a, doc_id_b, jaccard) with doc_id_a < doc_id_b
+    * @return (doc_id_a, doc_id_b, jaccard) with doc_id_a < doc_id_b, an
+    *         eager checkpoint: the call runs the whole pipeline and releases
+    *         its caches before it returns
     */
   def minhashNearDuplicates(df: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                             threshold: Double = 0.7, bands: Int = 8, rows: Int = 4,
-                            maxBucket: Int = 1000): DataFrame = {
-    val k = bands * rows
+                            maxBucket: Int = 1000): DataFrame = checkpointed { cache =>
     // shingle sets are carried as 64-bit fingerprints, not strings: the
     // pair-verification stage intersects these arrays once per candidate
     // pair, and long compares are ~10x cheaper than string compares
@@ -203,11 +322,10 @@ object Dedup {
     // array_distinct(transform(shingles(text), xxhash64)) formulation
     // (fenced in PipelineGatesSuite), SORTED so pair verification below
     // runs as a linear merge
-    val shingled = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+    val shingled = cache(df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .withColumn("__sh", graft.functions.ShingleFpExpr.shingleFp(col("__text"), 3))
       .filter(size(col("__sh")) > 0)
-      .select(col("doc_id"), col("__sh"))
-      .persist()
+      .select(col("doc_id"), col("__sh")))
 
     // Signature + band buckets fused per row (functions.MinHashBandsExpr,
     // byte-identical hash chain to the explode + per-seed MIN + concat_ws
@@ -216,72 +334,18 @@ object Dedup {
     // k-column groupBy-min disappear. Each exploded row CARRIES its full
     // 8-slot band-key vector (r14 session 2) — the posexplode's Generate
     // boundary pins minhashBands to one evaluation per doc, and the
-    // self-join sides below need no per-doc kept-vector regroup.
-    // persisted: slim feeds the bucket-size aggregate AND both self-join
+    // capped-set self-join sides need no per-doc kept-vector regroup.
+    // cached: slim feeds the bucket-size aggregate AND both self-join
     // sides — without the cache the k-hash signature pass would run per
     // consumer.
-    val slim = shingled
+    val slim = cache(shingled
       .select(col("doc_id"),
         graft.functions.MinHashBandsExpr.minhashBands(col("__sh"), bands, rows).as("__kb"))
       .select(col("doc_id"), col("__kb"),
-        posexplode(col("__kb")).as(Seq("band", "bucket")))
-      .persist()
-    val bucketSizes = slim.groupBy("band", "bucket").agg(count(lit(1)).as("__bsz"))
-
-    // First-match candidate emission (r14): a pair meeting in several
-    // bands used to be deduplicated with dropDuplicates over every pair
-    // INSTANCE — measured at 100× as the pipeline's single biggest stage
-    // (176M instances hashed down to 27M pairs, 14 s of a 26 s run). Only
-    // the instance whose band equals the pair's first SURVIVING shared
-    // band is emitted — pairs are unique by construction, no dedup
-    // exchange. Cap-awareness (r14 session 2): buckets over the cap are
-    // FEW BY CONSTRUCTION (each holds > maxBucket rows, so their count is
-    // < bandedRows/(maxBucket+1) — boilerplate explosions, not the
-    // corpus), so "is (band, bucket) capped" is broadcastable knowledge:
-    // the capped keys are collected once and shipped as an exact sorted
-    // set ([[graft.functions.CappedKeys]]), the cap JOIN becomes a codegen
-    // filter, and the kept-vector regroup (a corpus-wide groupBy + map +
-    // re-explode, 37 s of the 1000× wall) disappears. An adversarial
-    // corpus capping more than `graft.lsh.cappedMaxKeys` buckets falls
-    // back to the joined+grouped formulation (kept below as the fence
-    // reference). Fenced set-identical in PipelineGatesSuite (incl. a
-    // capped earliest-shared-band case and a budget-0 forced fallback).
-    val cappedMax = df.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
-      .map(_.toLong).getOrElse(4000000L)
-    val collectLimit = math.min(cappedMax, Int.MaxValue - 2L).toInt + 1
-    val cappedRows = bucketSizes.filter(col("__bsz") > maxBucket)
-      .select(col("band"), col("bucket")).limit(collectLimit).collect()
-    val candidates =
-      if (cappedMax < 0 || cappedRows.length > cappedMax)
-        minhashCandidatesGrouped(slim, bucketSizes, bands, maxBucket)
-      else {
-        val capped = df.sparkSession.sparkContext.broadcast(
-          graft.functions.CappedKeys.fromRows(cappedRows, bands))
-        // Session-width repartition past one advisory partition of raw
-        // `slim` bytes (see lshPinWidth): the carried __kb vector repeats
-        // across a doc's 8 band rows, so this exchange compresses ~8x
-        // better than its raw size — AQE's compressed-size coalescing then
-        // packs tens of millions of raw rows into one reducer, whose
-        // sort-merge sort OOMs (measured at the 1000x corpus: default AQE
-        // dies at 16 GB heap; pinned width runs in 266 s vs the grouped
-        // shape's 484 s). A user-specified repartition is never coalesced;
-        // the width tracks spark.sql.shuffle.partitions, which the bench /
-        // production session already scales with input size. With AQE off
-        // both join sides read the ONE exchange (ReusedExchange); under AQE
-        // each side plans its own.
-        val sides = pinned(slim.filter(!graft.functions.FirstUncappedMatchExpr
-          .cappedContains(col("band"), col("bucket"), capped)),
-          lshPinWidth(slim), col("band"), col("bucket"))
-        val a = sides.select(col("band"), col("bucket"),
-          col("doc_id").as("doc_id_a"), col("__kb").as("__kb_a"))
-        val b = sides.select(col("band"), col("bucket"),
-          col("doc_id").as("doc_id_b"), col("__kb").as("__kb_b"))
-        a.join(b, Seq("band", "bucket"))
-          .filter(col("doc_id_a") < col("doc_id_b"))
-          .filter(col("band") === graft.functions.FirstUncappedMatchExpr
-            .firstUncappedMatch(col("__kb_a"), col("__kb_b"), capped))
-          .select("doc_id_a", "doc_id_b")
-      }
+        posexplode(col("__kb")).as(Seq("band", "bucket"))))
+    val candidates = bandJoin(slim, "band", "bucket", bands, maxBucket, Seq("__kb"),
+      FirstUncappedMatchExpr.firstUncappedMatch(col("__kb_a"), col("__kb_b"), _), cache)
+      .select("doc_id_a", "doc_id_b")
 
     // attach the shingle sets to the (already deduplicated) candidate pairs.
     // The shingle side is corpus-sized by definition — force a shuffle join
@@ -310,42 +374,6 @@ object Dedup {
         round(graft.functions.SortedJaccardExpr.sortedJaccard(col("__sh_a"), col("__sh_b")), 6))
       .filter(col("jaccard") >= threshold)
       .select("doc_id_a", "doc_id_b", "jaccard")
-  }
-
-  /** The kept-vector (joined + grouped) candidate formulation — the
-    * over-budget fallback of [[minhashNearDuplicates]] (an adversarial
-    * corpus capping more buckets than `graft.lsh.cappedMaxKeys` can ship
-    * as a broadcast set) and the equivalence-fence reference
-    * (PipelineGatesSuite): cap via join against the size-filtered bucket
-    * table, per-doc kept-bucket vectors via groupBy + map (NULL slot =
-    * capped away), first-match over the NULL-able vectors.
-    */
-  private[graft] def minhashCandidatesGrouped(slim: DataFrame, bucketSizes: DataFrame,
-                                              bands: Int, maxBucket: Int): DataFrame = {
-    val keptRows = slim.select("doc_id", "band", "bucket")
-      .join(bucketSizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
-        Seq("band", "bucket"))
-    val docKept = keptRows.groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col("band"), col("bucket")))).as("__m"))
-      .select(col("doc_id"),
-        // try_element_at: NULL for a band whose bucket was capped away
-        // (ANSI-safe; plain element_at errors on a missing map key)
-        transform(sequence(lit(0), lit(bands - 1)),
-          j => try_element_at(col("__m"), j)).as("__kb"))
-    val sides = docKept
-      .select(col("doc_id"), col("__kb"),
-        posexplode(col("__kb")).as(Seq("band", "bucket")))
-      .filter(col("bucket").isNotNull)
-      .persist()
-    val a = sides.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_id_a"), col("__kb").as("__kb_a"))
-    val b = sides.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_id_b"), col("__kb").as("__kb_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .filter(col("band") ===
-        graft.functions.FirstMatchBandExpr.firstMatchBand(col("__kb_a"), col("__kb_b")))
-      .select("doc_id_a", "doc_id_b")
   }
 
   /** EXACT n-gram Jaccard near-duplicates via an inverted shingle index:
@@ -528,103 +556,27 @@ object Dedup {
       case None     => graft.functions.SimHashExpr.simhash64(col("__text"), 2)
       case Some(fn) => simhash(col("__text"), hashFn = fn)
     }
-    val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-      .withColumn("__sim", simCol)
-    val banded = docs.select(col("doc_id"), col("__sim"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("__sim"), c * 16).bitwiseAND(0xFFFFL).as("key"))
-      }: _*)).as("__ck"))
-      .select(col("doc_id"), col("__sim"), col("__ck.chunk"), col("__ck.key"))
-      // persisted: feeds the bucket-size aggregate AND the cap join — the
-      // upstream simhash computation must run once, not per branch
-      .persist()
-    // bucket stats are corpus-order in the worst case (one bucket per doc)
-    // — never let a size estimate flip this join to broadcast
-    val sizes = banded.groupBy("chunk", "key").agg(count(lit(1)).as("__bsz"))
-    // First-match candidate emission (r14): only the instance whose chunk
-    // equals the pair's first SURVIVING shared chunk is emitted — pairs
-    // unique by construction, no dropDuplicates exchange. Cap-awareness
-    // (r14 session 2, same shape as minhashNearDuplicates): capped chunks
-    // are ≤ 4 × 65,536 keys EVER (the whole 16-bit band key space), so the
-    // capped set always broadcasts — the cap JOIN becomes a codegen filter
-    // and the per-doc kept-vector regroup (groupBy + map + re-explode)
-    // disappears; the self-join sides carry only the 8-byte signature and
-    // the first-match recomputes chunk keys from it. The budget gate and
-    // grouped fallback are kept for config parity with minhash (a budget
-    // below 262,144 forces the joined formulation, which doubles as the
-    // fence reference — PipelineGatesSuite).
-    val cappedMax = df.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
-      .map(_.toLong).getOrElse(4000000L)
-    val collectLimit = math.min(cappedMax, Int.MaxValue - 2L).toInt + 1
-    val cappedRows = sizes.filter(col("__bsz") > maxBucket)
-      .select(col("chunk"), col("key")).limit(collectLimit).collect()
-    // materialize the (small, post-verify) pair set eagerly so the banded
-    // cache can be released before returning — without this every call
-    // leaked its cached band partitions for the session (r9 ADVICE);
-    // try/finally so a failed join/checkpoint cannot leak it either
-    try {
-      if (cappedMax < 0 || cappedRows.length > cappedMax)
-        sim16PairsGrouped(banded, sizes, maxBucket, maxHamming)
-      else {
-        val capped = df.sparkSession.sparkContext.broadcast(
-          graft.functions.CappedKeys.fromRows(cappedRows, 4))
-        // session-width user repartition past one advisory partition of
-        // raw `banded` bytes: see minhashNearDuplicates — the carried
-        // signature repeats across a doc's 4 chunk rows, so AQE's
-        // compressed-size coalescing over-packs reducers at scale
-        val kept = pinned(banded.filter(!graft.functions.FirstUncappedMatchExpr
-          .cappedContains(col("chunk"), col("key"), capped)),
-          lshPinWidth(banded), col("chunk"), col("key"))
-        val a = kept.select(col("chunk"), col("key"),
-          col("doc_id").as("doc_id_a"), col("__sim").as("__sim_a"))
-        val b = kept.select(col("chunk"), col("key"),
-          col("doc_id").as("doc_id_b"), col("__sim").as("__sim_b"))
-        a.join(b, Seq("chunk", "key"))
-          .filter(col("doc_id_a") < col("doc_id_b"))
-          .filter(col("chunk") === graft.functions.FirstUncappedSim16Expr
-            .firstUncappedSim16(col("__sim_a"), col("__sim_b"), capped))
-          .withColumn("hamming", bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))))
-          .filter(col("hamming") <= maxHamming)
-          .select("doc_id_a", "doc_id_b", "hamming")
-          .localCheckpoint(eager = true)
-      }
-    } finally banded.unpersist()
-  }
-
-  /** The kept-vector (joined + grouped) 16-bit simhash pair formulation —
-    * over-budget fallback and fence reference (see
-    * [[minhashCandidatesGrouped]]). Returns the eagerly-checkpointed pair
-    * set; its own sides cache is released before returning.
-    */
-  private[graft] def sim16PairsGrouped(banded: DataFrame, sizes: DataFrame,
-                                       maxBucket: Int, maxHamming: Int): DataFrame = {
-    val keptRows = banded.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
-      Seq("chunk", "key"))
-    val sides = keptRows.groupBy("doc_id")
-      .agg(first("__sim").as("__sim"),
-        map_from_entries(collect_list(struct(col("chunk"), col("key")))).as("__m"))
-      .select(col("doc_id"), col("__sim"),
-        transform(sequence(lit(0), lit(3)),
-          j => try_element_at(col("__m"), j)).as("__kc"))
-      .select(col("doc_id"), col("__sim"), col("__kc"),
-        posexplode(col("__kc")).as(Seq("chunk", "key")))
-      .filter(col("key").isNotNull)
-      .persist()
-    val a = sides.select(col("chunk"), col("key"), col("doc_id").as("doc_id_a"),
-      col("__sim").as("__sim_a"), col("__kc").as("__kc_a"))
-    val b = sides.select(col("chunk"), col("key"), col("doc_id").as("doc_id_b"),
-      col("__sim").as("__sim_b"), col("__kc").as("__kc_b"))
-    try {
-      a.join(b, Seq("chunk", "key"))
-        .filter(col("doc_id_a") < col("doc_id_b"))
-        .filter(col("chunk") ===
-          graft.functions.FirstMatchBandExpr.firstMatchBand(col("__kc_a"), col("__kc_b")))
+    checkpointed { cache =>
+      val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+        .withColumn("__sim", simCol)
+      // cached: feeds the bucket-size aggregate AND the self-join sides —
+      // the upstream simhash computation must run once, not per branch
+      val banded = cache(docs.select(col("doc_id"), col("__sim"),
+        explode(array((0 until 4).map { c =>
+          struct(lit(c).as("chunk"),
+            shiftright(col("__sim"), c * 16).bitwiseAND(0xFFFFL).as("key"))
+        }: _*)).as("__ck"))
+        .select(col("doc_id"), col("__sim"), col("__ck.chunk"), col("__ck.key")))
+      // the self-join sides carry only the 8-byte signature; the first
+      // match recomputes the chunk keys from it. Capped chunks are at most
+      // 4 × 65,536 keys (the whole 16-bit band key space), under the
+      // capped-set budget at Spark's default broadcast threshold
+      bandJoin(banded, "chunk", "key", 4, maxBucket, Seq("__sim"),
+        FirstUncappedSim16Expr.firstUncappedSim16(col("__sim_a"), col("__sim_b"), _), cache)
         .withColumn("hamming", bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))))
         .filter(col("hamming") <= maxHamming)
         .select("doc_id_a", "doc_id_b", "hamming")
-        .localCheckpoint(eager = true)
-    } finally sides.unpersist()
+    }
   }
 
   /** Wide-band (126-bit) SimHash near-dups — the band-space scale path
@@ -651,124 +603,50 @@ object Dedup {
                                 idCol: String = "doc_id",
                                 maxHamming: Int = 3,
                                 maxBucket: Int = 1000,
-                                hashFns: Option[(Column => Column, Column => Column)] = None): DataFrame = {
-    val salt = 0x9E3779B97F4A7C15L // 2^64 / golden ratio
-    // None = the fused production path; Some((fa, fb)) = two composed hash
-    // families, for the oracle-replayable polynomial twin
-    // (d_simhash_wide_poly). The fused path (r14 session 2) emits the 4
-    // (chunk, key, sa, sb) band entries from ONE generator expression —
-    // the composed shape evaluated two SimHashExpr columns per row, each
-    // re-running the whole shingle fingerprint scan (the dominant per-row
-    // cost; a collapsed Project offers no evaluate-once protection), while
-    // the Generate boundary pins the fused expression to exactly one
-    // evaluation. Keys/signatures bit-identical (PipelineGatesSuite fence).
-    val banded = (hashFns match {
-      case None =>
-        df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-          .select(col("doc_id"),
-            explode(graft.functions.SimHashWideBandsExpr
-              .simhashWideBands(col("__text"), 2, salt)).as("__ck"))
-          .select(col("doc_id"), col("__ck.sa").as("__sa"),
-            col("__ck.sb").as("__sb"), col("__ck.chunk"), col("__ck.key"))
-      case Some((fa, fb)) =>
-        df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-          .withColumn("__sa", simhash(col("__text"), hashFn = fa))
-          .withColumn("__sb", simhash(col("__text"), hashFn = fb))
-          .select(col("doc_id"), col("__sa"), col("__sb"),
-            explode(array(
-              struct(lit(0).as("chunk"), col("__sa").bitwiseAND(0x7FFFFFFFL).as("key")),
-              struct(lit(1).as("chunk"), shiftright(col("__sa"), 31).as("key")),
-              struct(lit(2).as("chunk"), col("__sb").bitwiseAND(0x7FFFFFFFL).as("key")),
-              struct(lit(3).as("chunk"), shiftright(col("__sb"), 31).as("key")))).as("__ck"))
-          .select(col("doc_id"), col("__sa"), col("__sb"),
-            col("__ck.chunk"), col("__ck.key"))
-    }).persist()
-    val sizes = banded.groupBy("chunk", "key").agg(count(lit(1)).as("__bsz"))
-    // First-match candidate emission (r14) + capped-set cap (r14 session 2)
-    // — see simhashNearDuplicates: capped buckets are few by construction
-    // (< bandedRows/(maxBucket+1)), so the cap join becomes a broadcast-set
-    // codegen filter and the kept-vector regroup disappears; the self-join
-    // sides carry only the two 8-byte signatures and the first-match
-    // recomputes the 4 chunk keys from them. Over-budget corpora fall back
-    // to the joined+grouped formulation (the fence reference).
-    val cappedMax = df.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
-      .map(_.toLong).getOrElse(4000000L)
-    val collectLimit = math.min(cappedMax, Int.MaxValue - 2L).toInt + 1
-    val cappedRows = sizes.filter(col("__bsz") > maxBucket)
-      .select(col("chunk"), col("key")).limit(collectLimit).collect()
-    // same cache discipline as the 16-bit path: eager-materialize the small
-    // verified pair set, then release the caches before returning —
-    // exception-safe so a failed join/checkpoint cannot leak them
-    try {
-      if (cappedMax < 0 || cappedRows.length > cappedMax)
-        simWidePairsGrouped(banded, sizes, maxBucket, maxHamming)
-      else {
-        val capped = df.sparkSession.sparkContext.broadcast(
-          graft.functions.CappedKeys.fromRows(cappedRows, 4))
-        // session-width user repartition past one advisory partition of
-        // raw `banded` bytes: see minhashNearDuplicates — the carried
-        // signatures repeat across a doc's 4 chunk rows, so AQE's
-        // compressed-size coalescing over-packs reducers at scale
-        val kept = pinned(banded.filter(!graft.functions.FirstUncappedMatchExpr
-          .cappedContains(col("chunk"), col("key"), capped)),
-          lshPinWidth(banded), col("chunk"), col("key"))
-        val a = kept.select(col("chunk"), col("key"), col("doc_id").as("doc_id_a"),
-          col("__sa").as("__sa_a"), col("__sb").as("__sb_a"))
-        val b = kept.select(col("chunk"), col("key"), col("doc_id").as("doc_id_b"),
-          col("__sa").as("__sa_b"), col("__sb").as("__sb_b"))
-        a.join(b, Seq("chunk", "key"))
-          .filter(col("doc_id_a") < col("doc_id_b"))
-          .filter(col("chunk") === graft.functions.FirstUncappedWideExpr
-            .firstUncappedWide(col("__sa_a"), col("__sb_a"),
-              col("__sa_b"), col("__sb_b"), capped))
-          .withColumn("hamming",
-            (bit_count(col("__sa_a").bitwiseXOR(col("__sa_b"))) +
-              bit_count(col("__sb_a").bitwiseXOR(col("__sb_b")))).cast("int"))
-          .filter(col("hamming") <= maxHamming)
-          .select("doc_id_a", "doc_id_b", "hamming")
-          .localCheckpoint(eager = true)
-      }
-    } finally banded.unpersist()
-  }
-
-  /** The kept-vector (joined + grouped) wide-band pair formulation —
-    * over-budget fallback and fence reference (see
-    * [[minhashCandidatesGrouped]]). Returns the eagerly-checkpointed pair
-    * set; its own sides cache is released before returning.
-    */
-  private[graft] def simWidePairsGrouped(banded: DataFrame, sizes: DataFrame,
-                                         maxBucket: Int, maxHamming: Int): DataFrame = {
-    val keptRows = banded.join(
-      sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
-      Seq("chunk", "key"))
-    // key values are 31/32-bit non-negative, slot NULL = capped away
-    val sides = keptRows.groupBy("doc_id")
-      .agg(first("__sa").as("__sa"), first("__sb").as("__sb"),
-        map_from_entries(collect_list(struct(col("chunk"), col("key")))).as("__m"))
-      .select(col("doc_id"), col("__sa"), col("__sb"),
-        transform(sequence(lit(0), lit(3)),
-          j => try_element_at(col("__m"), j)).as("__kc"))
-      .select(col("doc_id"), col("__sa"), col("__sb"), col("__kc"),
-        posexplode(col("__kc")).as(Seq("chunk", "key")))
-      .filter(col("key").isNotNull)
-      .persist()
-    val a = sides.select(col("chunk"), col("key"), col("doc_id").as("doc_id_a"),
-      col("__sa").as("__sa_a"), col("__sb").as("__sb_a"), col("__kc").as("__kc_a"))
-    val b = sides.select(col("chunk"), col("key"), col("doc_id").as("doc_id_b"),
-      col("__sa").as("__sa_b"), col("__sb").as("__sb_b"), col("__kc").as("__kc_b"))
-    try {
-      a.join(b, Seq("chunk", "key"))
-        .filter(col("doc_id_a") < col("doc_id_b"))
-        .filter(col("chunk") ===
-          graft.functions.FirstMatchBandExpr.firstMatchBand(col("__kc_a"), col("__kc_b")))
+                                hashFns: Option[(Column => Column, Column => Column)] = None): DataFrame =
+    checkpointed { cache =>
+      val salt = 0x9E3779B97F4A7C15L // 2^64 / golden ratio
+      // None = the fused production path; Some((fa, fb)) = two composed hash
+      // families, for the oracle-replayable polynomial twin
+      // (d_simhash_wide_poly). The fused path (r14 session 2) emits the 4
+      // (chunk, key, sa, sb) band entries from ONE generator expression —
+      // the composed shape evaluated two SimHashExpr columns per row, each
+      // re-running the whole shingle fingerprint scan (the dominant per-row
+      // cost; a collapsed Project offers no evaluate-once protection), while
+      // the Generate boundary pins the fused expression to exactly one
+      // evaluation. Keys/signatures bit-identical (PipelineGatesSuite fence).
+      val banded = cache(hashFns match {
+        case None =>
+          df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+            .select(col("doc_id"),
+              explode(graft.functions.SimHashWideBandsExpr
+                .simhashWideBands(col("__text"), 2, salt)).as("__ck"))
+            .select(col("doc_id"), col("__ck.sa").as("__sa"),
+              col("__ck.sb").as("__sb"), col("__ck.chunk"), col("__ck.key"))
+        case Some((fa, fb)) =>
+          df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+            .withColumn("__sa", simhash(col("__text"), hashFn = fa))
+            .withColumn("__sb", simhash(col("__text"), hashFn = fb))
+            .select(col("doc_id"), col("__sa"), col("__sb"),
+              explode(array(
+                struct(lit(0).as("chunk"), col("__sa").bitwiseAND(0x7FFFFFFFL).as("key")),
+                struct(lit(1).as("chunk"), shiftright(col("__sa"), 31).as("key")),
+                struct(lit(2).as("chunk"), col("__sb").bitwiseAND(0x7FFFFFFFL).as("key")),
+                struct(lit(3).as("chunk"), shiftright(col("__sb"), 31).as("key")))).as("__ck"))
+            .select(col("doc_id"), col("__sa"), col("__sb"),
+              col("__ck.chunk"), col("__ck.key"))
+      })
+      // the self-join sides carry only the two 8-byte signatures; the first
+      // match recomputes the 4 chunk keys from them
+      bandJoin(banded, "chunk", "key", 4, maxBucket, Seq("__sa", "__sb"),
+        FirstUncappedWideExpr.firstUncappedWide(col("__sa_a"), col("__sb_a"),
+          col("__sa_b"), col("__sb_b"), _), cache)
         .withColumn("hamming",
           (bit_count(col("__sa_a").bitwiseXOR(col("__sa_b"))) +
             bit_count(col("__sb_a").bitwiseXOR(col("__sb_b")))).cast("int"))
         .filter(col("hamming") <= maxHamming)
         .select("doc_id_a", "doc_id_b", "hamming")
-        .localCheckpoint(eager = true)
-    } finally sides.unpersist()
-  }
+    }
 
   // ------------------------------------------------- embedding near-dup
 
@@ -801,27 +679,15 @@ object Dedup {
       .withColumn("__bucket", bucketExpr)
       .persist()
     val sizes = keyed.groupBy("__bucket").agg(count(lit(1)).as("__bsz"))
-    // capped-set cap (r14 session 2, same argument as minhashNearDuplicates):
-    // over-cap buckets number < rows/(maxBucket+1) by construction, so the
-    // cap join (a corpus-order shuffle-hash join — every keyed row's bucket
-    // exists in `sizes` by construction, making the join a pure cap filter)
-    // becomes a broadcast-set codegen filter; over-budget corpora keep the
-    // joined formulation
-    val cappedMax = df.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
-      .map(_.toLong).getOrElse(4000000L)
-    val collectLimit = math.min(cappedMax, Int.MaxValue - 2L).toInt + 1
-    val cappedRows = sizes.filter(col("__bsz") > maxBucket)
-      .select(lit(0).as("band"), col("__bucket")).limit(collectLimit).collect()
-    val capped =
-      if (cappedMax < 0 || cappedRows.length > cappedMax)
-        keyed.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
-          Seq("__bucket"))
-      else {
-        val cappedBc = df.sparkSession.sparkContext.broadcast(
-          graft.functions.CappedKeys.fromRows(cappedRows, 1))
-        keyed.filter(!graft.functions.FirstUncappedMatchExpr
-          .cappedContains(lit(0), col("__bucket"), cappedBc))
-      }
+    // the capped-set gate of the banded operators, with one band: over
+    // budget, the cap is a join against the size-filtered bucket table
+    // (every keyed row's bucket exists in `sizes`, so it is a pure filter)
+    val capped = cappedSet(sizes, lit(0), col("__bucket"), 1, maxBucket) match {
+      case Some(cappedBc) =>
+        keyed.filter(!FirstUncappedMatchExpr.cappedContains(lit(0), col("__bucket"), cappedBc))
+      case None =>
+        keyed.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"), Seq("__bucket"))
+    }
     val a = capped.select(col("__bucket"), col("vec_id").as("vec_id_a"), col("__v").as("__va"))
     val b = capped.select(col("__bucket"), col("vec_id").as("vec_id_b"), col("__v").as("__vb"))
     a.join(b, Seq("__bucket"))
@@ -880,9 +746,9 @@ object Dedup {
     // caller already persisted is used as-is (no double-persist warning,
     // and its cache stays the caller's to manage).
     val srcPinned = k <= 0 &&
-      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+      df.storageLevel == StorageLevel.NONE
     val src = if (srcPinned)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df
+      df.persist(StorageLevel.MEMORY_AND_DISK) else df
     try {
       val kEff =
         if (k > 0) k
@@ -976,8 +842,7 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_id_a",
                           bCol: String = "doc_id_b", maxIter: Int = 20): DataFrame = {
     val ab = pairs.select(col(aCol).as("__a"), col(bCol).as("__b"))
-    val maxPairs = math.min(
-      pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold / 16, Int.MaxValue - 1L).toInt
+    val maxPairs = driverRows(pairs.sparkSession)
     // both directions from ONE pass over the pair columns (explode, not a
     // union of two selects, which reads the pair list twice: uncached, the
     // second branch re-ran the upstream pair generator — measured ~25 s of
@@ -1161,38 +1026,6 @@ object Dedup {
       .select(col("kp").getField(idCol).as(idCol),
         col("kp").getField("pos").as("pos"),
         col("kp").getField("chunk").as("chunk"))
-    df.select(col(idCol),
-        size(graft.functions.ChunkWordsExpr.chunkWords(col(textCol), k))
-          .cast("bigint").as("n_chunks"))
-      .join(
-        kept.groupBy(idCol).agg(
-          count(lit(1)).as("n_kept"),
-          array_join(transform(array_sort(collect_list(struct(col("pos"), col("chunk")))),
-            x => x.getField("chunk")), " ").as("text_clean")),
-        Seq(idCol), "left")
-      .select(col(idCol), col("n_chunks"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("text_clean"), lit("")).as("text_clean"))
-  }
-
-  /** The join-back formulation [[chunkDedup]] replaced — the equivalence-
-    * fence reference (PipelineGatesSuite).
-    */
-  private[graft] def chunkDedupJoined(df: DataFrame, chunkWords: Int = 10,
-                                      textCol: String = "text",
-                                      idCol: String = "doc_id"): DataFrame = {
-    val k = chunkWords
-    val chunks = df.select(
-      col(idCol),
-      posexplode(graft.functions.ChunkWordsExpr.chunkWords(col(textCol), k))
-        .as(Seq("pos", "chunk")))
-    val withFp = chunks.withColumn("__cfp", xxhash64(col("chunk")))
-    val keepers = withFp.select(col("__cfp"), col(idCol), col("pos"))
-      .groupBy("__cfp")
-      .agg(min(struct(col(idCol), col("pos"))).as("kp"))
-      .select(col("__cfp"), col("kp").getField(idCol).as(idCol),
-        col("kp").getField("pos").as("pos"))
-    val kept = withFp.join(keepers, Seq("__cfp", idCol, "pos"))
     df.select(col(idCol),
         size(graft.functions.ChunkWordsExpr.chunkWords(col(textCol), k))
           .cast("bigint").as("n_chunks"))

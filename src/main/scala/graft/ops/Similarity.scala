@@ -26,14 +26,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSimExpr.cosineSim(a, b)
 
-  /** The HOF formulation, kept as the equivalence-fence reference. */
-  private[graft] def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
-    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0), (acc, x) => acc + x))
-    dot / (na * nb)
-  }
-
   /** Brute-force top-k cosine neighbors for each query vector.
     * Queries are expected to be a SMALL frame (broadcast); the corpus is
     * scanned exactly once. Returns (query_id, neighbor_id, cosine, rank).

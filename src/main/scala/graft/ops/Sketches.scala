@@ -39,7 +39,7 @@ object Sketches {
     * takes literal shift amounts), so any SQL engine's `//` + `% 2`
     * replays it.
     */
-  private def rhoOf(rest: Column, maxRho: Int): Column =
+  private[graft] def rhoOf(rest: Column, maxRho: Int): Column =
     least(
       coalesce(
         get(filter(sequence(lit(1), lit(46)),
@@ -57,7 +57,7 @@ object Sketches {
                    groupCols: Seq[String] = Nil, maxRho: Int = 40): DataFrame = {
     require(p >= 4 && p <= 14, s"p in [4,14]: $p")
     // fused one-pass (idx, rho) kernel — bit-identical to the composed
-    // HOF formulation below (fenced in SketchesSuite); the register fold
+    // HOF formulation (fenced in SketchesSuite); the register fold
     // was the one hot sketch kernel still running interpreted.
     // NULL values are excluded up front — COUNT(DISTINCT) ignores nulls,
     // and a null-keyed register would pollute the estimate's register count
@@ -68,23 +68,6 @@ object Sketches {
       .select((groupCols.map(col)
         :+ col("__ir.idx").as("idx") :+ col("__ir.rho").as("rho")): _*)
       .groupBy((groupCols :+ "idx").map(col): _*)
-      .agg(max("rho").as("rho"))
-  }
-
-  /** The composed higher-order-function formulation [[hllRegisters]] fuses:
-    * kept as the equivalence fence's reference (SketchesSuite asserts the
-    * two are row-identical) and as the oracle-readable spec of the
-    * arithmetic the DuckDB replay mirrors.
-    */
-  private[graft] def hllRegistersComposed(df: DataFrame, valueCol: String, p: Int = 8,
-                   groupCols: Seq[String] = Nil, maxRho: Int = 40): DataFrame = {
-    require(p >= 4 && p <= 14, s"p in [4,14]: $p")
-    val m = 1 << p
-    val h = Dedup.polyStringHash(col(valueCol).cast("string"))
-    val keyed = df.filter(col(valueCol).isNotNull).select(
-      (groupCols.map(col) :+ pmod(h, lit(m.toLong)).as("idx")
-        :+ rhoOf(floor(h / lit(m.toLong)), maxRho).cast("long").as("rho")): _*)
-    keyed.groupBy((groupCols :+ "idx").map(col): _*)
       .agg(max("rho").as("rho"))
   }
 
@@ -133,7 +116,7 @@ object Sketches {
   private val cmsA = Seq(31L, 37L, 41L, 43L)
   private val cmsB = Seq(7L, 11L, 13L, 17L)
 
-  private def cmsIdx(h: Column, r: Int, width: Int): Column =
+  private[graft] def cmsIdx(h: Column, r: Int, width: Int): Column =
     pmod(pmod(h * lit(cmsA(r)) + lit(cmsB(r)), lit(P)), lit(width.toLong))
 
   /** Count-min sketch of key frequencies: `depth` rows × `width` cells;
@@ -176,20 +159,6 @@ object Sketches {
         struct(lit(r).as("r"), cmsIdx(col("__h"), r, width).as("idx"))): _*)).as("cell"))
       .groupBy(col("cell.r").as("r"), col("cell.idx").as("idx"))
       .agg(sum("__w").as("cnt"))
-  }
-
-  /** Composed-HOF twin of [[cmsSketch]] — the fence reference and the
-    * oracle-readable spec of the hash arithmetic.
-    */
-  private[graft] def cmsSketchComposed(df: DataFrame, keyCol: String, depth: Int = 3,
-                width: Int = 512): DataFrame = {
-    require(depth >= 1 && depth <= cmsA.size, s"depth in [1,${cmsA.size}]: $depth")
-    val h = Dedup.polyStringHash(col(keyCol).cast("string"))
-    val cells = explode(array((0 until depth).map(r =>
-      struct(lit(r).as("r"), cmsIdx(h, r, width).as("idx"))): _*)).as("cell")
-    df.select(cells)
-      .groupBy(col("cell.r").as("r"), col("cell.idx").as("idx"))
-      .agg(count(lit(1)).as("cnt"))
   }
 
   /** Point-estimate frequencies for `keys` from a sketch: est(k) =

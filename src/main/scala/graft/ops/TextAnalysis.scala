@@ -184,16 +184,13 @@ object TextAnalysis {
 
   /** Deterministic 64-bit document fingerprint (content hash over
     * whitespace-normalized lowercase text) — the exact-dedup key. The
-    * fused codegen expression is bit-identical to [[fingerprintComposed]]
-    * (fenced in TextStatsSuite) without the regex NFA and the three
+    * fused codegen expression is bit-identical to the composed
+    * `xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))` (fenced
+    * in TextStatsSuite) without the regex NFA and the three
     * intermediate strings per row.
     */
   def fingerprint(text: Column): Column =
     graft.functions.NormFingerprintExpr.normFingerprint(text)
-
-  /** The composed formulation, kept as the equivalence-fence reference. */
-  private[graft] def fingerprintComposed(text: Column): Column =
-    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
 
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken): hash every char
     * k-gram of the normalized text (O(k) per position here — xxhash64 of the
@@ -209,23 +206,9 @@ object TextAnalysis {
     */
   def winnowFingerprints(text: Column, k: Int = 8, window: Int = 4): Column =
     // fused one-pass expression — bit-identical values AND order to
-    // [[winnowFingerprintsComposed]] (fenced in TextStatsSuite) without
+    // the composed transform formulation (fenced in TextStatsSuite) without
     // the per-position substr/hash through interpreted transforms
     graft.functions.WinnowFpExpr.winnowFp(text, k, window)
-
-  /** The composed formulation, kept as the equivalence-fence reference. */
-  private[graft] def winnowFingerprintsComposed(text: Column, k: Int = 8, window: Int = 4): Column =
-    // normalized text and gram-hash array each bound via Cols.bindOnce —
-    // as plain subtrees the normalization would re-run per gram and the
-    // gram array per window position (O(positions^2 x length) per row,
-    // measured ~1 s/doc on 300-char docs)
-    Cols.bindOnce(lower(regexp_replace(trim(text), "\\s+", " "))) { norm =>
-      // k-gram hashes at positions 1..n-k+1
-      val grams = transform(
-        sequence(lit(1), greatest(length(norm) - (k - 1), lit(1))),
-        i => xxhash64(norm.substr(i, lit(k))))
-      winnowFromGrams(norm, grams, k, window)
-    }
 
   /** Winnowing with a cross-engine-replayable polynomial gram hash instead
     * of xxhash64: hash(g) = fold(acc * 31 + codepoint) mod P over the k
@@ -238,31 +221,16 @@ object TextAnalysis {
     */
   def winnowFingerprintsPoly(text: Column, k: Int = 8, window: Int = 4): Column =
     // fused one-pass twin — bit-identical values AND order to
-    // [[winnowFingerprintsPolyComposed]] (fenced in TextStatsSuite); the
+    // the composed slice-fold formulation (fenced in TextStatsSuite); the
     // composed formulation's per-position slice-fold cost ~190 s on the
     // 100x corpus where the fused pass costs seconds
     graft.functions.WinnowPolyFpExpr.winnowPolyFp(text, k, window)
-
-  private[graft] def winnowFingerprintsPolyComposed(text: Column, k: Int = 8, window: Int = 4): Column = {
-    val P = 9007199254740881L
-    Cols.bindOnce(lower(regexp_replace(trim(text), "\\s+", " "))) { norm =>
-      Cols.bindOnce(transform(
-        sequence(lit(1), greatest(length(norm), lit(1))),
-        i => ascii(norm.substr(i, lit(1))).cast("long"))) { codes =>
-        val grams = transform(
-          sequence(lit(1), greatest(length(norm) - (k - 1), lit(1))),
-          i => aggregate(slice(codes, i, lit(k)), lit(0L),
-            (acc, c) => (acc * 31L + c) % P))
-        winnowFromGrams(norm, grams, k, window)
-      }
-    }
-  }
 
   /** Shared winnowing tail: min hash of each sliding window of `window`
     * consecutive gram hashes, distinct; text shorter than k yields an
     * EMPTY set (never a padded pseudo-gram).
     */
-  private def winnowFromGrams(norm: Column, grams: Column, k: Int, window: Int): Column =
+  private[graft] def winnowFromGrams(norm: Column, grams: Column, k: Int, window: Int): Column =
     Cols.bindOnce(grams) { gs =>
       when(length(norm) < k, array().cast("array<bigint>")).otherwise(
         array_distinct(transform(

@@ -64,7 +64,8 @@ object ProbeTime {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF="k=v;k=v" — arbitrary session confs for A/B probes
-    // (e.g. graft.lsh.cappedMaxKeys=0 forces the joined+grouped LSH path)
+    // (e.g. spark.sql.autoBroadcastJoinThreshold=-1 forces the kept-vector
+    // LSH fallback and the distributed connected-components rounds)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -448,10 +448,11 @@ class PipelineGatesSuite extends SparkSpec {
     import graft.ops.Dedup
     import spark.implicits._
     // r14 session 2: the cap join + kept-vector regroup were replaced by a
-    // broadcast capped-key set; graft.lsh.cappedMaxKeys = 0 forces the old
-    // joined+grouped formulation whenever any bucket is capped — both
-    // dispatches must be row-identical on corpora WITH capped buckets
-    // (tight caps + near-dup families, the engineered cases above).
+    // broadcast capped-key set, collected under the broadcast threshold's
+    // budget; a threshold of -1 turns the budget off and forces the
+    // joined+grouped (kept-vector) formulation — both dispatches must be
+    // row-identical on corpora WITH capped buckets (tight caps + near-dup
+    // families, the engineered cases above).
     val words = (1 to 30).map(i => s"w$i").mkString(" ")
     val fam = Seq(
       (1L, words), (2L, words),
@@ -461,11 +462,10 @@ class PipelineGatesSuite extends SparkSpec {
       .toDF("doc_id", "text")
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id_a", "doc_id_b").collect().toSeq
+      df.orderBy(df.columns(0), df.columns(1)).collect().toSeq
     def ab(f: => org.apache.spark.sql.DataFrame): (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
       val fast = rows(f)
-      spark.conf.set("graft.lsh.cappedMaxKeys", "0")
-      val grouped = try rows(f) finally spark.conf.unset("graft.lsh.cappedMaxKeys")
+      val grouped = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(rows(f))
       (fast, grouped)
     }
     val (m1, m2) = ab(Dedup.minhashNearDuplicates(fam, threshold = 0.0,
@@ -480,6 +480,15 @@ class PipelineGatesSuite extends SparkSpec {
     val (w1, w2) = ab(Dedup.simhashNearDuplicatesWide(fam, maxHamming = 40,
       maxBucket = 2))
     assert(w1 == w2, s"wide dispatch diverges: ${w1.length} vs ${w2.length}")
+    // one band: over budget the cap is a join against the bucket sizes;
+    // the cap of 30 drops pairs, so some bucket is capped
+    val (e1, e2) = ab(Dedup.embeddingNearDuplicates(emb, minCosine = 0.3, planes = 4,
+      maxBucket = 30))
+    val uncapped = Dedup.embeddingNearDuplicates(emb, minCosine = 0.3, planes = 4,
+      maxBucket = Int.MaxValue).count()
+    info(s"embedding: ${e1.length} of $uncapped pairs under the cap")
+    assert(e1.nonEmpty && e1.length < uncapped, s"${e1.length} of $uncapped pairs under the cap")
+    assert(e1 == e2, s"embedding dispatch diverges: ${e1.length} vs ${e2.length}")
   }
 
   /** Run `f` at shuffle width `width`, with `confs` set, restoring both. */
@@ -559,6 +568,34 @@ class PipelineGatesSuite extends SparkSpec {
     }
   }
 
+  /** The join-back formulation `Dedup.chunkDedup` replaced: the
+    * equivalence fence's reference.
+    */
+  private def chunkDedupJoined(df: org.apache.spark.sql.DataFrame,
+                               chunkWords: Int): org.apache.spark.sql.DataFrame = {
+    val chunks = df.select(col("doc_id"),
+      posexplode(graft.functions.ChunkWordsExpr.chunkWords(col("text"), chunkWords))
+        .as(Seq("pos", "chunk")))
+    val withFp = chunks.withColumn("__cfp", xxhash64(col("chunk")))
+    val keepers = withFp.select(col("__cfp"), col("doc_id"), col("pos"))
+      .groupBy("__cfp")
+      .agg(min(struct(col("doc_id"), col("pos"))).as("kp"))
+      .select(col("__cfp"), col("kp.doc_id").as("doc_id"), col("kp.pos").as("pos"))
+    val kept = withFp.join(keepers, Seq("__cfp", "doc_id", "pos"))
+    df.select(col("doc_id"),
+        size(graft.functions.ChunkWordsExpr.chunkWords(col("text"), chunkWords))
+          .cast("bigint").as("n_chunks"))
+      .join(
+        kept.groupBy("doc_id").agg(
+          count(lit(1)).as("n_kept"),
+          array_join(transform(array_sort(collect_list(struct(col("pos"), col("chunk")))),
+            x => x.getField("chunk")), " ").as("text_clean")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_chunks"),
+        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+        coalesce(col("text_clean"), lit("")).as("text_clean"))
+  }
+
   test("chunkDedup: carry-chunk keeper agg equals the join-back formulation") {
     import graft.ops.Dedup
     import spark.implicits._
@@ -569,7 +606,7 @@ class PipelineGatesSuite extends SparkSpec {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def cmp(df: org.apache.spark.sql.DataFrame, k: Int): Unit = {
       val a = Dedup.chunkDedup(df, chunkWords = k).orderBy("doc_id").collect()
-      val b = Dedup.chunkDedupJoined(df, chunkWords = k).orderBy("doc_id").collect()
+      val b = chunkDedupJoined(df, chunkWords = k).orderBy("doc_id").collect()
       assert(a.sameElements(b), "carry-chunk keeper != join-back keeper")
     }
     cmp(corpus, 10)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Clustering, GraphRank, Relevance}
@@ -58,6 +59,17 @@ class RelevanceClusteringSuite extends SparkSpec {
   // element in q (every distance null → lowest cidx via struct nulls-first),
   // and a length-mismatched centroid (its null distance sorts smallest and
   // WINS — preserved, not "fixed")
+  /** The crossJoin + struct-min formulation `Clustering.assign` replaced:
+    * the equivalence fence's reference.
+    */
+  private def assignJoined(q: DataFrame, centroids: DataFrame): DataFrame =
+    q.crossJoin(broadcast(centroids))
+      .withColumn("__d", Clustering.sqDist(col("q"), col("cvec")))
+      .groupBy("vec_id")
+      // q is functionally determined by vec_id, so first() is deterministic
+      .agg(first("q").as("q"), min(struct(col("__d"), col("cidx"))).as("__m"))
+      .select(col("vec_id"), col("q"), col("__m.cidx").as("cluster"))
+
   test("kmeans assign: fused argmin projection equals crossJoin struct-min") {
     def q(rows: Seq[(Long, Seq[java.lang.Long])]) =
       rows.toDF("vec_id", "q")
@@ -71,7 +83,7 @@ class RelevanceClusteringSuite extends SparkSpec {
         transform(col("q"), x => x.cast("double")).as("cvec"))
     def cmp(qdf: org.apache.spark.sql.DataFrame, cdf: org.apache.spark.sql.DataFrame): Unit = {
       val a = Clustering.assign(qdf, cdf).select("vec_id", "cluster")
-      val b = Clustering.assignJoined(qdf, cdf).select("vec_id", "cluster")
+      val b = assignJoined(qdf, cdf).select("vec_id", "cluster")
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         "fused argmin != joined struct-min")
     }

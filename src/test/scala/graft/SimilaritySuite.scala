@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -26,10 +26,20 @@ class SimilaritySuite extends SparkSpec {
       spark.sparkContext.parallelize(pairs.map { case (a, b) => Row(a, b) }, 2),
       schema)
 
+  /** The zip_with/aggregate formulation `Similarity.cosine` fuses: the
+    * equivalence fence's reference.
+    */
+  private def cosineHof(a: Column, b: Column): Column = {
+    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
+    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0), (acc, x) => acc + x))
+    dot / (na * nb)
+  }
+
   private def bitCompare(df: org.apache.spark.sql.DataFrame): Unit = {
     val out = df.select(
       Similarity.cosine(col("a"), col("b")).as("fused"),
-      Similarity.cosineHof(col("a"), col("b")).as("hof")).collect()
+      cosineHof(col("a"), col("b")).as("hof")).collect()
     out.zipWithIndex.foreach { case (r, i) =>
       val f = if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0))
       val h = if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Sketches, TextAnalysis}
+import graft.ops.{Dedup, Sketches, TextAnalysis}
 
 class SketchesSuite extends SparkSpec {
   import spark.implicits._
@@ -22,6 +23,21 @@ class SketchesSuite extends SparkSpec {
     assert(diff.count() == 0, "max-merged half-sketches must equal the whole sketch")
   }
 
+  /** The composed higher-order-function formulation `Sketches.hllRegisters`
+    * fuses: the equivalence fence's reference and the oracle-readable spec
+    * of the arithmetic the DuckDB replay mirrors.
+    */
+  private def hllRegistersComposed(df: DataFrame, valueCol: String, p: Int = 8,
+                                   maxRho: Int = 40): DataFrame = {
+    val m = 1 << p
+    val h = Dedup.polyStringHash(col(valueCol).cast("string"))
+    df.filter(col(valueCol).isNotNull)
+      .select(pmod(h, lit(m.toLong)).as("idx"),
+        Sketches.rhoOf(floor(h / lit(m.toLong)), maxRho).cast("long").as("rho"))
+      .groupBy("idx")
+      .agg(max("rho").as("rho"))
+  }
+
   // equivalence fence for the fused (idx, rho) kernel: the one-pass
   // HllIdxRhoExpr must be row-identical to the composed HOF formulation
   // on integer keys, free text (incl. multi-byte), empty strings, and
@@ -30,7 +46,7 @@ class SketchesSuite extends SparkSpec {
     for ((df, c) <- Seq((li, "l_orderkey"), (docs, "text"))) {
       for ((p, mr) <- Seq((8, 40), (4, 40), (12, 6))) {
         val fused = Sketches.hllRegisters(df, c, p = p, maxRho = mr)
-        val composed = Sketches.hllRegistersComposed(df, c, p = p, maxRho = mr)
+        val composed = hllRegistersComposed(df, c, p = p, maxRho = mr)
         val diff = fused.join(composed, Seq("idx"), "full")
           .filter(coalesce(fused("rho"), lit(-1L)) =!= coalesce(composed("rho"), lit(-1L)))
         assert(diff.count() == 0, s"fused != composed for $c p=$p maxRho=$mr")
@@ -41,7 +57,7 @@ class SketchesSuite extends SparkSpec {
     val edge = Seq("", " ", "a", "héllo wörld", "日本語テキスト", "x😀y", "0", "999999")
       .toDF("v").union(spark.sql("SELECT CAST(NULL AS STRING) AS v"))
     val f = Sketches.hllRegisters(edge, "v", p = 6, maxRho = 40)
-    val g = Sketches.hllRegistersComposed(edge, "v", p = 6, maxRho = 40)
+    val g = hllRegistersComposed(edge, "v", p = 6, maxRho = 40)
     val d = f.join(g, Seq("idx"), "full")
       .filter(coalesce(f("rho"), lit(-1L)) =!= coalesce(g("rho"), lit(-1L)))
     assert(d.count() == 0, "fused != composed on edge strings")
@@ -81,19 +97,31 @@ class SketchesSuite extends SparkSpec {
         lower(regexp_replace(trim($"text"), "\\s+", " ")), " ")).as("tok"))
       .filter(length($"tok") >= 1)
 
+  /** The composed twin of `Sketches.cmsSketch`: the fence reference and the
+    * oracle-readable spec of the hash arithmetic.
+    */
+  private def cmsSketchComposed(df: DataFrame, keyCol: String, depth: Int = 3,
+                                width: Int = 512): DataFrame = {
+    val h = Dedup.polyStringHash(col(keyCol).cast("string"))
+    df.select(explode(array((0 until depth).map(r =>
+        struct(lit(r).as("r"), Sketches.cmsIdx(h, r, width).as("idx"))): _*)).as("cell"))
+      .groupBy(col("cell.r").as("r"), col("cell.idx").as("idx"))
+      .agg(count(lit(1)).as("cnt"))
+  }
+
   // equivalence fence for the fused poly_hash kernel inside cmsSketch:
   // row-identical cells to the composed Dedup.polyStringHash formulation,
   // including multi-byte tokens and empty strings
   test("fused cms sketch is bit-identical to the composed formulation") {
     val toks = tokens(docs)
     val fused = Sketches.cmsSketch(toks, "tok")
-    val composed = Sketches.cmsSketchComposed(toks, "tok")
+    val composed = cmsSketchComposed(toks, "tok")
     val diff = fused.join(composed, Seq("r", "idx"), "full")
       .filter(coalesce(fused("cnt"), lit(-1L)) =!= coalesce(composed("cnt"), lit(-1L)))
     assert(diff.count() == 0, "fused cms != composed cms")
     val edge = Seq("", " ", "héllo", "日本語", "x😀y", "tok").toDF("tok")
     val f = Sketches.cmsSketch(edge, "tok")
-    val g = Sketches.cmsSketchComposed(edge, "tok")
+    val g = cmsSketchComposed(edge, "tok")
     val d = f.join(g, Seq("r", "idx"), "full")
       .filter(coalesce(f("cnt"), lit(-1L)) =!= coalesce(g("cnt"), lit(-1L)))
     assert(d.count() == 0, "fused cms != composed cms on edge strings")

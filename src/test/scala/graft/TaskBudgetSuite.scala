@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.{Classifier, Clustering, Dedup, LangModel}
 
@@ -41,6 +42,32 @@ class TaskBudgetSuite extends SparkSpec {
         val left = spark.sparkContext.getPersistentRDDs.keySet -- before
         if (releases) assert(left.isEmpty, s"$name left RDDs ${left.mkString(", ")} persisted")
       }
+    }
+
+  // The LSH operators return an eager checkpoint of their pairs: the
+  // result owns its checkpoint blocks (freed by Spark's ContextCleaner),
+  // so the persisted-RDD count above cannot tell a released cache from a
+  // result. Their caches are counted in the cache manager instead, on both
+  // dispatches (capped set, and the kept-vector fallback the broadcast
+  // threshold's -1 forces), with a caller's cache of the input in place.
+  private val lshOps = Seq[(String, DataFrame => DataFrame)](
+    ("minhashNearDuplicates", Dedup.minhashNearDuplicates(_, threshold = 0.5, maxBucket = 3)),
+    ("simhashNearDuplicates", Dedup.simhashNearDuplicates(_, maxHamming = 12, maxBucket = 3)),
+    ("simhashNearDuplicatesWide", Dedup.simhashNearDuplicatesWide(_, maxHamming = 40, maxBucket = 3)))
+
+  for ((name, op) <- lshOps; (dispatch, threshold) <- Seq(
+      "capped set" -> None, "kept-vector fallback" -> Some("-1")))
+    test(s"$name [$dispatch]: cache manager left as found") {
+      spark.catalog.clearCache()
+      val input = docs.persist()
+      try {
+        val rows = threshold.fold(op(input).collect())(t =>
+          withConf("spark.sql.autoBroadcastJoinThreshold", t)(op(input).collect()))
+        info(s"${rows.length} rows")
+        assert(rows.nonEmpty)
+        assert(input.storageLevel != StorageLevel.NONE, s"$name dropped the caller's cache")
+      } finally input.unpersist()
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left cache manager entries")
     }
 
   // the embeddings table beside the documents table

@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.functions.TextStatsExpr
-import graft.ops.TextAnalysis
+import graft.ops.{Cols, TextAnalysis}
 
 /** Property fence for the fused `text_stats` expression: every field must
   * be BIT-IDENTICAL to the original Spark SQL formulation it replaced
@@ -167,6 +167,40 @@ class TextStatsSuite extends SparkSpec {
     assert(projects <= 3, s"unexpected project explosion:\n$optimized")
   }
 
+  // The composed formulations the fused text kernels replaced, kept as the
+  // equivalence fences' references.
+
+  private def fingerprintComposed(text: Column): Column =
+    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
+
+  private def winnowFingerprintsComposed(text: Column, k: Int = 8, window: Int = 4): Column =
+    // normalized text and gram-hash array each bound via Cols.bindOnce —
+    // as plain subtrees the normalization would re-run per gram and the
+    // gram array per window position (O(positions^2 x length) per row,
+    // measured ~1 s/doc on 300-char docs)
+    Cols.bindOnce(lower(regexp_replace(trim(text), "\\s+", " "))) { norm =>
+      // k-gram hashes at positions 1..n-k+1
+      val grams = transform(
+        sequence(lit(1), greatest(length(norm) - (k - 1), lit(1))),
+        i => xxhash64(norm.substr(i, lit(k))))
+      TextAnalysis.winnowFromGrams(norm, grams, k, window)
+    }
+
+  private def winnowFingerprintsPolyComposed(text: Column, k: Int = 8, window: Int = 4): Column = {
+    val P = 9007199254740881L
+    Cols.bindOnce(lower(regexp_replace(trim(text), "\\s+", " "))) { norm =>
+      Cols.bindOnce(transform(
+        sequence(lit(1), greatest(length(norm), lit(1))),
+        i => ascii(norm.substr(i, lit(1))).cast("long"))) { codes =>
+        val grams = transform(
+          sequence(lit(1), greatest(length(norm) - (k - 1), lit(1))),
+          i => aggregate(slice(codes, i, lit(k)), lit(0L),
+            (acc, c) => (acc * 31L + c) % P))
+        TextAnalysis.winnowFromGrams(norm, grams, k, window)
+      }
+    }
+  }
+
   test("norm_fingerprint: bit-identical to the composed xxhash64 formulation") {
     import spark.implicits._
     // adversarial strings: ws runs,control chars, unicode case, surrogates,
@@ -180,7 +214,7 @@ class TextStatsSuite extends SparkSpec {
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("text")
     val out = df.select(
       graft.ops.TextAnalysis.fingerprint(col("text")).as("fused"),
-      graft.ops.TextAnalysis.fingerprintComposed(col("text")).as("composed")).collect()
+      fingerprintComposed(col("text")).as("composed")).collect()
     out.zipWithIndex.foreach { case (r, i) =>
       assert(r.getLong(0) == r.getLong(1), s"row $i: fused=${r.getLong(0)} composed=${r.getLong(1)}")
     }
@@ -197,7 +231,7 @@ class TextStatsSuite extends SparkSpec {
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("text").limit(200)
     val out = df.select(
       graft.ops.TextAnalysis.winnowFingerprints(col("text")).as("fused"),
-      graft.ops.TextAnalysis.winnowFingerprintsComposed(col("text")).as("ref")).collect()
+      winnowFingerprintsComposed(col("text")).as("ref")).collect()
     out.zipWithIndex.foreach { case (r, i) =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1),
         s"row $i: fused=${r.getSeq[Long](0).take(4)} ref=${r.getSeq[Long](1).take(4)}")
@@ -215,7 +249,7 @@ class TextStatsSuite extends SparkSpec {
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("text").limit(200)
     val out = df.select(
       graft.ops.TextAnalysis.winnowFingerprintsPoly(col("text")).as("fused"),
-      graft.ops.TextAnalysis.winnowFingerprintsPolyComposed(col("text")).as("ref")).collect()
+      winnowFingerprintsPolyComposed(col("text")).as("ref")).collect()
     out.zipWithIndex.foreach { case (r, i) =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1),
         s"row $i: fused=${r.getSeq[Long](0).take(4)} ref=${r.getSeq[Long](1).take(4)}")
