@@ -241,11 +241,15 @@ object Bench {
     */
   final case class BenchSession(spark: SparkSession, bigInput: Boolean, envNote: String)
 
+  /** Local master width of Bench and the probe mains: `SPARK_GRAFT_CPUS`,
+    * default 32. It also floors the bucketed layout's bucket count.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
   /** Builds the Bench session for `sfDir`. DumpPlans builds its session
     * here too, so a dumped plan is the plan Bench times.
     */
   def session(sfDir: String): BenchSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Config tracks input size (measured on the 100x crossover dataset):
     //  - small inputs (sf0.1, 11 MB lineitem): AQE's stage-by-stage
     //    replanning costs whole scheduling rounds, which dominates

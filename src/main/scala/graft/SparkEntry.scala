@@ -178,16 +178,42 @@ object SparkEntry {
   // the bucketed->plain toggle restore the user's own setting
   private val savedCoPartGate = TrieMap.empty[String, String]
 
-  /** Dir-derived suffix for bucketed table names: the warehouse is shared
+  /** Name of a bucketed table: `<base>_<dirhash>_b<buckets>`. The dir
+    * hash keeps layouts of different sfDirs apart: the warehouse is shared
     * across sfDirs while the engine cache is keyed by (session, dir), so a
     * bare name like `events_tbkt` written for one dir would be silently
     * reused for another — temporal queries would read stale-scale data
     * with no error (r12 ADVICE). String.hashCode is stable across JVMs, so
-    * re-runs against the same dir still reuse the ingested table.
+    * re-runs against the same dir still reuse the ingested table. The
+    * bucket count keeps layouts sized for different hosts apart: a
+    * warehouse reused at another core count writes its own tables, and a
+    * lineitem table never pairs with an orders table of another count
+    * (Spark elides the orderkey exchange only when the counts match).
     */
-  private def bktSuffix(dir: String): String =
-    "_" + java.lang.Integer.toHexString(
-      new java.io.File(dir).getAbsolutePath.hashCode & 0x7fffffff)
+  private def bucketedTable(base: String, dir: String, buckets: Int): String =
+    base + "_" + java.lang.Integer.toHexString(
+      new java.io.File(dir).getAbsolutePath.hashCode & 0x7fffffff) + "_b" + buckets
+
+  /** Bucket count of an ingested table of `bytes` on disk: ~8 MB per
+    * bucket, floor the session's parallelism so a scan keeps every core
+    * busy in one wave, cap 128 so small-file overhead stays bounded.
+    */
+  private[graft] def bucketCount(spark: SparkSession, bytes: Long): Int =
+    math.min(128L, math.max(spark.sparkContext.defaultParallelism.toLong,
+      bytes / (8L * 1024 * 1024))).toInt
+
+  private def parquetBytes(dir: String, table: String): Long = {
+    val f = new java.io.File(s"$dir/$table.parquet")
+    if (f.isDirectory) f.listFiles().map(_.length()).sum else f.length()
+  }
+
+  /** The user_id-bucketed events table of `dir` for this session, and its
+    * bucket count.
+    */
+  private def eventsBucketed(spark: SparkSession, dir: String): (String, Int) = {
+    val buckets = bucketCount(spark, parquetBytes(dir, "events"))
+    (bucketedTable("events_tbkt", dir, buckets), buckets)
+  }
 
   /** Ingest-or-repoint the bucketed fact tables: write any missing
     * `<fact>_bkt` bucketed table (untimed, like a deployment's write path)
@@ -196,16 +222,11 @@ object SparkEntry {
   private def ensureBucketedFacts(spark: SparkSession, dir: String): Unit = {
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
     // ONE bucket count for both fact tables — Spark only elides the
-    // exchange on both sides of a join when the bucket counts match.
-    // Sized from the biggest table (~8 MB/bucket), floor 32 to keep all
-    // cores busy, cap 128 so small-file overhead stays bounded locally.
-    val liBytes = {
-      val f = new java.io.File(s"$dir/lineitem.parquet")
-      if (f.isDirectory) f.listFiles().map(_.length()).sum else f.length()
-    }
-    val buckets = math.min(128L, math.max(32L, liBytes / (8L * 1024 * 1024))).toInt
+    // exchange on both sides of a join when the bucket counts match —
+    // sized from the biggest table
+    val buckets = bucketCount(spark, parquetBytes(dir, "lineitem"))
     for ((t, key) <- Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey")) {
-      val tbl = t + "_bkt" + bktSuffix(dir)
+      val tbl = bucketedTable(t + "_bkt", dir, buckets)
       if (!spark.catalog.tableExists(tbl))
         graft.ops.ScaleLayout.writeBucketed(
           spark.read.parquet(s"$dir/$t.parquet"), tbl, buckets, key)
@@ -218,12 +239,8 @@ object SparkEntry {
     // change SELECT * shapes); eventsWithTus routes to this table when the
     // bucketed layout is on. The probe:
     // `git show bbeb2bc:src/main/scala/graft/tools/ProbeRangeLayout.scala`
-    if (!spark.catalog.tableExists("events_tbkt" + bktSuffix(dir))) {
-      val evBytes = {
-        val f = new java.io.File(s"$dir/events.parquet")
-        if (f.isDirectory) f.listFiles().map(_.length()).sum else f.length()
-      }
-      val evBuckets = math.min(128L, math.max(32L, evBytes / (8L * 1024 * 1024))).toInt
+    val (events, evBuckets) = eventsBucketed(spark, dir)
+    if (!spark.catalog.tableExists(events)) {
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val tus = raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => expr("ts div 1000")
@@ -233,7 +250,7 @@ object SparkEntry {
         .repartition(evBuckets, col("user_id"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(evBuckets, "user_id").sortBy("user_id", "tus")
-        .saveAsTable("events_tbkt" + bktSuffix(dir))
+        .saveAsTable(events)
     }
   }
 
@@ -310,7 +327,8 @@ object SparkEntry {
     engineFor(s, dir)
     val bucketed = s.conf.getOption("graft.layout.bucketed")
       .orElse(sys.env.get("SPARK_GRAFT_BUCKETED")).exists(_.toBoolean)
-    if (bucketed && s.catalog.tableExists("events_tbkt" + bktSuffix(dir))) {
+    lazy val events = eventsBucketed(s, dir)._1
+    if (bucketed && s.catalog.tableExists(events)) {
       // The user_id-bucketed layout pre-partitions every temporal operator's
       // shuffle key. Join subset-key elision is additionally gated by
       // requireAllClusterKeysForCoPartition (default TRUE since Spark 3.3 —
@@ -321,7 +339,7 @@ object SparkEntry {
       // 3.17 -> 1.34 s with both (user_id, __bin) exchanges elided;
       // e_asof 0.51x, e_sessions 0.55x (ProbeRangeLayout:
       // `git show bbeb2bc:src/main/scala/graft/tools/ProbeRangeLayout.scala`).
-      s.table("events_tbkt" + bktSuffix(dir)).drop("ts")
+      s.table(events).drop("ts")
     } else {
       val e = s.table("events")
       val tus = e.schema("ts").dataType match {

@@ -658,10 +658,13 @@ object Dedup {
     * verification step sees all pairs — only usable when the corpus (or a
     * pre-blocked partition of it) is small enough for the all-pairs join, but
     * it makes the operator oracle-checkable against exact pairwise cosine.
+    *
+    * The verified pairs are an eager checkpoint ([[checkpointed]]): the
+    * keyed vector cache is released before the call returns.
     */
   def embeddingNearDuplicates(df: DataFrame, vecCol: String = "embedding", idCol: String = "vec_id",
                               minCosine: Double = 0.95, planes: Int = 12,
-                              seed: Long = 42L, maxBucket: Int = 2000): DataFrame = {
+                              seed: Long = 42L, maxBucket: Int = 2000): DataFrame = checkpointed { cache =>
     val rng = new scala.util.Random(seed)
     lazy val dim = df.select(size(col(vecCol))).limit(1).collect().headOption
       .getOrElse(throw new graft.planner.GraftException("embeddingNearDuplicates: empty corpus — nothing to index"))
@@ -675,9 +678,8 @@ object Dedup {
       if (planes == 0) lit(0L)
       else (0 until planes).map(p => when(dotLit(col("__v"), hyper(p)) >= 0, 1L << p).otherwise(0L))
         .reduce((a, b) => a.bitwiseOR(b))
-    val keyed = df.select(col(idCol).as("vec_id"), col(vecCol).as("__v"))
-      .withColumn("__bucket", bucketExpr)
-      .persist()
+    val keyed = cache(df.select(col(idCol).as("vec_id"), col(vecCol).as("__v"))
+      .withColumn("__bucket", bucketExpr))
     val sizes = keyed.groupBy("__bucket").agg(count(lit(1)).as("__bsz"))
     // the capped-set gate of the banded operators, with one band: over
     // budget, the cap is a join against the size-filtered bucket table

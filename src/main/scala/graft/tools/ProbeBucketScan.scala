@@ -10,7 +10,8 @@ import graft.SparkEntry
   * (q_join_agg), plain vs bucketed, same JVM, interleaved runs.
   *
   * Usage: runMain graft.tools.ProbeBucketScan [sfDir] [interleaveRounds]
-  * (rounds default 2; pass 1 at 1000× so the probe stays ~20 min)
+  * (rounds default 2; pass 1 at 1000× so the probe stays ~20 min).
+  * The session runs on [[graft.Bench.cpus]] cores, as Bench does.
   */
 object ProbeBucketScan {
   def main(args: Array[String]): Unit = {
@@ -19,7 +20,7 @@ object ProbeBucketScan {
     val spark = SparkSession.builder()
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .master("local[32]")
+      .master(s"local[${graft.Bench.cpus}]")
       // static width must scale with data (AQE merges below it but cannot
       // split a hash-agg): 128 is right at 100×; at 1000× pass 512 via env
       // (128 OOMed a 4.7M-rows/task aggregate on the default heap)

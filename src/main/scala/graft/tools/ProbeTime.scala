@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Dev probe: time the named SparkEntry queries (args after the first) on
   * `args(0)` in a fresh JVM with a noop sink, one `TIME` line per cell.
   * With no names it runs the full-inventory 100x sweep ([[sweep]]).
+  * The session runs on [[graft.Bench.cpus]] cores, as Bench does.
   *
   * Usage: runMain graft.tools.ProbeTime [sfDir] [entry...]
   */
@@ -49,7 +50,7 @@ object ProbeTime {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/bench_sf10")
     val names = if (args.length > 1) args.drop(1).toSeq else sweep
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SparkSession.builder().master(s"local[${graft.Bench.cpus}]")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       // default 64 keeps continuity with the r8/r9 sweep tables; at 1000x

@@ -62,6 +62,47 @@ class ScaleLayoutSuite extends SparkSpec {
     }
   }
 
+  // The bucket count floors at the session's parallelism, not at a fixed
+  // host width: under local[4] at sf0.01 (1 MB of lineitem, far below
+  // 8 MB per bucket) each bucketed table holds 4 buckets, so a bucketed
+  // scan runs one wave of 4 tasks. Lineitem and orders must agree, or the
+  // orderkey join shuffles again.
+  test("engineFor sizes the bucketed layout to the session's parallelism") {
+    val dir = "/root/testdata/sf0.01"
+    // a session of its own: engineFor registers the fact views per session,
+    // and the other tests here hold this session's views on sf0.001
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (20L * 1024 * 1024).toString)
+    s.conf.set("graft.layout.bucketed", "true")
+    // the catalog tables a frame reads, as the session catalog records them
+    def tablesRead(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.catalogTable
+      }.flatten.map(t => s.sessionState.catalog.getTableMetadata(t.identifier))
+    assert(s.sparkContext.defaultParallelism == 4)
+    SparkEntry.engineFor(s, dir)
+    for (fact <- Seq("lineitem", "orders")) {
+      val Seq(t) = tablesRead(s.table(fact))
+      assert(t.bucketSpec.map(_.numBuckets).contains(4), s"${t.identifier}: ${t.bucketSpec}")
+      assert(t.identifier.table.startsWith(fact + "_bkt_") && t.identifier.table.endsWith("_b4"),
+        s"$fact reads ${t.identifier}")
+    }
+    val q = SparkEntry.queries("q_join_agg")(s, dir)
+    val plan = q.queryExecution.executedPlan.toString()
+    assert("Exchange hashpartitioning\\((l_orderkey|o_orderkey)".r.findAllIn(plan).isEmpty,
+      s"bucketed fact join still shuffles on orderkey:\n$plan")
+    assert(q.count() > 0)
+    val range = SparkEntry.queries("e_range")(s, dir)
+    val events = tablesRead(range).filter(_.identifier.table.startsWith("events_tbkt_"))
+    assert(events.nonEmpty, s"e_range reads no events_tbkt table:\n${range.queryExecution.analyzed}")
+    for (t <- events)
+      assert(t.bucketSpec.map(_.numBuckets).contains(4), s"${t.identifier}: ${t.bucketSpec}")
+    val rangePlan = range.queryExecution.executedPlan.toString()
+    assert("Exchange hashpartitioning\\(user_id".r.findAllIn(rangePlan).isEmpty,
+      s"bucketed range join still shuffles on (user_id, __bin):\n$rangePlan")
+    assert(range.count() > 0)
+  }
+
   // engineFor caches per (session, dir, mode) but view registration is a
   // session side effect: toggling BACK to an already-seen mode must repoint
   // the fact views, not just return the cached engine. Before the r11 fix

@@ -50,16 +50,20 @@ class TaskBudgetSuite extends SparkSpec {
   // result. Their caches are counted in the cache manager instead, on both
   // dispatches (capped set, and the kept-vector fallback the broadcast
   // threshold's -1 forces), with a caller's cache of the input in place.
-  private val lshOps = Seq[(String, DataFrame => DataFrame)](
-    ("minhashNearDuplicates", Dedup.minhashNearDuplicates(_, threshold = 0.5, maxBucket = 3)),
-    ("simhashNearDuplicates", Dedup.simhashNearDuplicates(_, maxHamming = 12, maxBucket = 3)),
-    ("simhashNearDuplicatesWide", Dedup.simhashNearDuplicatesWide(_, maxHamming = 40, maxBucket = 3)))
+  private val lshOps = Seq[(String, () => DataFrame, DataFrame => DataFrame)](
+    ("minhashNearDuplicates", () => docs, Dedup.minhashNearDuplicates(_, threshold = 0.5, maxBucket = 3)),
+    ("simhashNearDuplicates", () => docs, Dedup.simhashNearDuplicates(_, maxHamming = 12, maxBucket = 3)),
+    ("simhashNearDuplicatesWide", () => docs,
+      Dedup.simhashNearDuplicatesWide(_, maxHamming = 40, maxBucket = 3)),
+    // one band: the fallback is the join against the bucket sizes
+    ("embeddingNearDuplicates", () => emb,
+      Dedup.embeddingNearDuplicates(_, minCosine = 0.3, planes = 4, maxBucket = 8)))
 
-  for ((name, op) <- lshOps; (dispatch, threshold) <- Seq(
+  for ((name, in, op) <- lshOps; (dispatch, threshold) <- Seq(
       "capped set" -> None, "kept-vector fallback" -> Some("-1")))
     test(s"$name [$dispatch]: cache manager left as found") {
       spark.catalog.clearCache()
-      val input = docs.persist()
+      val input = in().persist()
       try {
         val rows = threshold.fold(op(input).collect())(t =>
           withConf("spark.sql.autoBroadcastJoinThreshold", t)(op(input).collect()))
