@@ -18,8 +18,12 @@
 #
 # Prints one line per run while it goes, then for every end-to-end metric
 # of BENCHMARK.json: each side's median and q1–q3, the change/parent ratio
-# of the medians, and in how many pairs the change was ahead. Every run's
-# JSON line is kept in $PERF_PAIRS_DIR/runs.jsonl.
+# of the medians, in how many pairs the change was ahead, the gain (the
+# gap between the medians, positive when the change is better), the
+# parent's spread (q3 - q1) and whether gain > spread. A claimed gain
+# holds when the change is ahead in at least 9 of 10 pairs and its gain
+# exceeds the parent's spread. Every run's JSON line is kept in
+# $PERF_PAIRS_DIR/runs.jsonl.
 set -euo pipefail
 
 if [ "$#" -lt 3 ]; then
@@ -75,7 +79,8 @@ for side in ("parent", "change"):
     failed = sum(by[(side, s)]["failed"] for s in seeds)
     attempted = sum(by[(side, s)]["attempted"] for s in seeds)
     print(f"{side}: {failed} failed ops of {attempted}")
-print(f"{'metric':<18} {'parent median [q1-q3]':>30} {'change median [q1-q3]':>30} {'ratio':>6}  ahead")
+print(f"{'metric':<18} {'parent median [q1-q3]':>30} {'change median [q1-q3]':>30} {'ratio':>6}  {'ahead':>5}"
+      f" {'gain':>9} {'spread':>9}  gain>spread")
 for m in metrics:
     name, lower = m["name"], m["better"] == "lower"
     vals = {side: [by[(side, s)]["metrics"][name]["value"] for s in seeds] for side in ("parent", "change")}
@@ -83,10 +88,11 @@ for m in metrics:
         print(f"{name:<18} missing on some run")
         continue
     ahead = sum((c < p) if lower else (c > p) for p, c in zip(vals["parent"], vals["change"]))
-    cols = []
-    for side in ("parent", "change"):
-        q1, q2, q3 = quartiles(vals[side])
-        cols.append(f"{q2:.4g} [{q1:.4g}-{q3:.4g}]")
-    ratio = statistics.median(vals["change"]) / statistics.median(vals["parent"])
-    print(f"{name:<18} {cols[0]:>30} {cols[1]:>30} {ratio:>6.3f}  {ahead}/{len(seeds)}")
+    q = {side: quartiles(vals[side]) for side in ("parent", "change")}
+    cols = [f"{q[side][1]:.4g} [{q[side][0]:.4g}-{q[side][2]:.4g}]" for side in ("parent", "change")]
+    ratio = q["change"][1] / q["parent"][1]
+    gain = (q["parent"][1] - q["change"][1]) if lower else (q["change"][1] - q["parent"][1])
+    spread = q["parent"][2] - q["parent"][0]
+    print(f"{name:<18} {cols[0]:>30} {cols[1]:>30} {ratio:>6.3f}  {f'{ahead}/{len(seeds)}':>5}"
+          f" {gain:>9.4g} {spread:>9.4g}  {'yes' if gain > spread else 'no'}")
 EOF

@@ -19,13 +19,35 @@ object SparkEntry {
   // ------------------------------------------------------------ engine setup
 
   private val engines = TrieMap.empty[String, GraftEngine]
-  // which layout mode the session's fact views currently point at, per
-  // (session, dir) — lets a cache hit repoint ONLY on an actual toggle
+  // the (dir, layout mode) each session's fact views point at. The views
+  // are session-wide while the engine cache is per (session, dir, mode), so
+  // a cache hit repoints them whenever they point elsewhere — and ONLY then
   // (repointing on every hit would re-read parquet footers inside Bench's
   // timed per-query path)
-  private val registeredMode = TrieMap.empty[String, Boolean]
+  private val registered = TrieMap.empty[String, (String, Boolean)]
+  // the shuffle width engineFor set, per session: a width that still holds
+  // this value is graft's to re-size, any other set width is the caller's
+  private val sizedWidth = TrieMap.empty[String, String]
 
-  /** Register parquet temp views + measure views once per (session, sfDir). */
+  private val ShuffleWidth = "spark.sql.shuffle.partitions"
+
+  /** The engine over `dir`'s parquet tables and measure views, created once
+    * per (session, dir, layout mode); every call points the session's temp
+    * views at `dir` in the current mode (`graft.layout.bucketed`).
+    *
+    * Session confs it sets, and when:
+    *  - `spark.sql.legacy.parquet.nanosAsLong=true` whenever it points the
+    *    views at a dir (events.parquet carries TIMESTAMP(NANOS)).
+    *  - `spark.sql.shuffle.partitions` whenever it points the views at a
+    *    dir, unless the caller set it: min(the width in force,
+    *    `dataWidth` of lineitem's bytes). It only narrows Spark's default
+    *    (200), never widens it; a width engineFor set for another dir is
+    *    re-sized, one the caller set is never touched.
+    *  - `spark.sql.sources.bucketing.autoBucketedScan.enabled=true` on
+    *    entry to bucketed mode.
+    *  - `spark.sql.requireAllClusterKeysForCoPartition=false` while in
+    *    bucketed mode; the caller's value comes back on the toggle to plain.
+    */
   def engineFor(spark: SparkSession, dir: String): GraftEngine = {
     // layout-aware mode (`graft.layout.bucketed`): the big fact tables are
     // ingested ONCE as bucketed tables on their join key, so every later
@@ -35,21 +57,38 @@ object SparkEntry {
     // `git show bbeb2bc:src/main/scala/graft/tools/ProbeBucketed100x.scala`)
     val bucketed = spark.conf.getOption("graft.layout.bucketed")
       .orElse(sys.env.get("SPARK_GRAFT_BUCKETED")).exists(_.toBoolean)
-    val cacheKey = System.identityHashCode(spark) + "|" + dir + "|" + bucketed
-    // Temp-view registration is a SIDE EFFECT on the shared session, but the
-    // engine cache only runs it on first insertion — so toggling the layout
-    // mode BACK to a previously-seen key must repoint the fact views itself,
-    // or the session keeps the other mode's views (this exact staleness made
-    // ProbeBucketScan's interleaved A/B measure plain-vs-plain, ratio 1.0).
-    val cached = engines.contains(cacheKey)
-    val engine = engines.getOrElseUpdate(cacheKey, {
-      // events.parquet carries TIMESTAMP(NANOS) which vanilla Spark rejects;
-      // read nanos as long (driver oracle queries avoid the ts column)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      for (t <- Seq("region", "nation", "customer", "supplier", "part",
-                    "orders", "lineitem", "events", "documents", "embeddings"))
-        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-      if (bucketed) ensureBucketedFacts(spark, dir)
+    val sessKey = System.identityHashCode(spark).toString
+    // Temp-view registration is a SIDE EFFECT on the shared session, which
+    // the engine cache below knows nothing of: a cached engine for this dir
+    // and mode says nothing about where the views point now.
+    registered.get(sessKey) match {
+      case Some((`dir`, `bucketed`)) =>
+      case Some((`dir`, _)) =>
+        // a layout TOGGLE on this dir: only the two fact views differ
+        // between the modes (this exact staleness made ProbeBucketScan's
+        // interleaved A/B measure plain-vs-plain, ratio 1.0). Repoint them
+        // (cheap — the measure views resolve these names late, at query
+        // time, so nothing else needs re-creation). Do NOT trust the cache
+        // key that the _bkt tables still exist (r11 ADVICE: an external DROP
+        // or a cleaned warehouse dir would turn the repoint into a bare
+        // TABLE_OR_VIEW_NOT_FOUND from inside engineFor) — the ingest helper
+        // re-creates any missing table.
+        if (bucketed) ensureBucketedFacts(spark, dir)
+        else for (t <- Seq("lineitem", "orders"))
+          spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+      case _ =>
+        // first call on this session, or its views point at ANOTHER dir: a
+        // cache hit for this dir would otherwise leave them there, and
+        // plain-mode queries would read the other dir's data with no error
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        for (t <- Seq("region", "nation", "customer", "supplier", "part",
+                      "orders", "lineitem", "events", "documents", "embeddings"))
+          spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+        if (bucketed) ensureBucketedFacts(spark, dir)
+        sizeShuffleWidth(spark, sessKey, dir)
+    }
+    registered.put(sessKey, (dir, bucketed))
+    val engine = engines.getOrElseUpdate(sessKey + "|" + dir + "|" + bucketed, {
       val e = GraftEngine(spark)
       e.sql(
         """CREATE VIEW li_v AS
@@ -140,21 +179,6 @@ object SparkEntry {
           |FROM lineitem""".stripMargin)
       e
     })
-    val modeKey = System.identityHashCode(spark) + "|" + dir
-    if (cached && !registeredMode.get(modeKey).contains(bucketed)) {
-      // Cache hit after a mode TOGGLE: the block above did not run, so the
-      // session's fact views still point at the OTHER mode's tables.
-      // Repoint them (cheap — the measure views resolve these names late,
-      // at query time, so nothing else needs re-creation). Do NOT trust the
-      // cache key that the _bkt tables still exist (r11 ADVICE: an external
-      // DROP or a cleaned warehouse dir would turn the repoint into a bare
-      // TABLE_OR_VIEW_NOT_FOUND from inside engineFor) — the ingest helper
-      // re-creates any missing table.
-      if (bucketed) ensureBucketedFacts(spark, dir)
-      else for (t <- Seq("lineitem", "orders"))
-        spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-    }
-    registeredMode.put(modeKey, bucketed)
     // Join subset-key elision gate (r12 ADVICE): the bucketed temporal
     // layout needs `requireAllClusterKeysForCoPartition=false` (a
     // user_id-bucketed scan satisfies ClusteredDistribution for a
@@ -163,7 +187,6 @@ object SparkEntry {
     // first temporal query: set on entry to bucketed mode, restore the
     // pre-bucketed value on the toggle back, so plain-arm A/B timings and
     // later co-partition-eligible joins run under the session's own config.
-    val sessKey = System.identityHashCode(spark).toString
     if (bucketed) {
       if (!savedCoPartGate.contains(sessKey))
         savedCoPartGate.put(sessKey, spark.conf.getOption(
@@ -194,13 +217,44 @@ object SparkEntry {
     base + "_" + java.lang.Integer.toHexString(
       new java.io.File(dir).getAbsolutePath.hashCode & 0x7fffffff) + "_b" + buckets
 
-  /** Bucket count of an ingested table of `bytes` on disk: ~8 MB per
-    * bucket, floor the session's parallelism so a scan keeps every core
-    * busy in one wave, cap 128 so small-file overhead stays bounded.
+  /** Partitions a table of `bytes` on disk warrants: ~8 MB each, floored
+    * at the session's parallelism so a scan or a shuffle keeps every core
+    * busy in one wave.
+    */
+  private[graft] def dataWidth(spark: SparkSession, bytes: Long): Int =
+    math.max(spark.sparkContext.defaultParallelism.toLong, bytes / (8L * 1024 * 1024)).toInt
+
+  /** Bucket count of an ingested table of `bytes`: its `dataWidth`, capped
+    * at 128 so small-file overhead stays bounded.
     */
   private[graft] def bucketCount(spark: SparkSession, bytes: Long): Int =
-    math.min(128L, math.max(spark.sparkContext.defaultParallelism.toLong,
-      bytes / (8L * 1024 * 1024))).toInt
+    math.min(128, dataWidth(spark, bytes))
+
+  /** The session's shuffle width narrowed to a fact table of `bytes`:
+    * min(the width in force, its `dataWidth`) — 4 for sf0.01 under
+    * local[4], where Spark's default 200 has every map task write 200
+    * blocks for AQE to merge back; a 10 GB table keeps 200.
+    */
+  private[graft] def shuffleWidth(spark: SparkSession, bytes: Long): Int =
+    math.min(spark.conf.get(ShuffleWidth).toInt, dataWidth(spark, bytes))
+
+  /** Size the shuffle width to `dir`'s lineitem unless the caller set it
+    * (`sessionState.conf.contains` tells a set width from Spark's default).
+    * A width engineFor set earlier is unset first, so a later, larger dir
+    * is sized from the default again rather than from the smaller dir.
+    */
+  private def sizeShuffleWidth(spark: SparkSession, sessKey: String, dir: String): Unit = {
+    val conf = spark.sessionState.conf
+    if (conf.contains(ShuffleWidth) &&
+        !sizedWidth.get(sessKey).contains(conf.getConfString(ShuffleWidth)))
+      sizedWidth.remove(sessKey)
+    else {
+      spark.conf.unset(ShuffleWidth)
+      val width = shuffleWidth(spark, parquetBytes(dir, "lineitem")).toString
+      spark.conf.set(ShuffleWidth, width)
+      sizedWidth.put(sessKey, width)
+    }
+  }
 
   private def parquetBytes(dir: String, table: String): Long = {
     val f = new java.io.File(s"$dir/$table.parquet")

@@ -55,9 +55,9 @@ class ScaleLayoutSuite extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.conf.set("graft.layout.bucketed", "false")
       // restore plain fact views THROUGH engineFor so the mode tracker stays
-      // in sync with the session (r11 ADVICE: a manual repoint leaves
-      // registeredMode at bucketed=true — the exact staleness the toggle
-      // test below guards against)
+      // in sync with the session (r11 ADVICE: a manual repoint leaves the
+      // tracker at bucketed=true — the exact staleness the toggle test
+      // below guards against)
       SparkEntry.engineFor(spark, "/root/testdata/sf0.001")
     }
   }
@@ -171,6 +171,62 @@ class ScaleLayoutSuite extends SparkSpec {
       // re-sync tracker + views in one call (see the first test's teardown)
       SparkEntry.engineFor(spark, dir)
     }
+  }
+
+  // the two scales the registration tests below move a session between
+  private val (small, large) = ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+
+  // The fact views are session-wide while the engine cache is per
+  // (session, dir, mode): returning to a dir already seen must repoint the
+  // views, or plain-mode queries read the other dir's data with no error.
+  test("engineFor repoints the fact views when a session returns to an earlier dir") {
+    val s = spark.newSession()
+    s.conf.set("graft.layout.bucketed", "false")
+    val want = s.read.parquet(s"$small/lineitem.parquet").count()
+    assert(want != s.read.parquet(s"$large/lineitem.parquet").count())
+    SparkEntry.engineFor(s, small)
+    SparkEntry.engineFor(s, large)
+    SparkEntry.engineFor(s, small) // a cache hit — must still repoint
+    assert(s.table("lineitem").count() == want, "lineitem still reads the other dir")
+    assert(s.sql("SELECT count(*) FROM orders").head().getLong(0) ==
+      s.read.parquet(s"$small/orders.parquet").count(), "orders still reads the other dir")
+  }
+
+  // engineFor sizes the shuffle width to the data it registers: sf0.01's
+  // 1 MB lineitem under local[4] gets 4 partitions, not Spark's 200.
+  test("engineFor narrows an unset shuffle width to the data") {
+    val s = spark.newSession()
+    s.conf.set("graft.layout.bucketed", "false")
+    s.conf.unset("spark.sql.shuffle.partitions")
+    assert(!s.sessionState.conf.contains("spark.sql.shuffle.partitions"))
+    SparkEntry.engineFor(s, large)
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    // a width the caller sets afterwards is the caller's from then on
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    SparkEntry.engineFor(s, small)
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "16")
+  }
+
+  test("engineFor keeps a shuffle width the caller set, across a layout toggle") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "64")
+    for (mode <- Seq("false", "true", "false")) {
+      s.conf.set("graft.layout.bucketed", mode)
+      SparkEntry.engineFor(s, large)
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "64", s"bucketed=$mode")
+    }
+  }
+
+  test("shuffleWidth only narrows: a 10 GB table keeps a width of 200") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "200")
+    val tenGb = 10L << 30
+    assert(SparkEntry.dataWidth(s, tenGb) == 1280)
+    assert(SparkEntry.shuffleWidth(s, tenGb) == 200)
+    assert(SparkEntry.bucketCount(s, tenGb) == 128)
+    // below 8 MB a partition the session's parallelism decides
+    assert(SparkEntry.shuffleWidth(s, 1L << 20) == 4)
+    assert(SparkEntry.shuffleWidth(s, 1100L << 20) == 137)
   }
 
   test("salted join splits a hot key and preserves results") {
