@@ -25,14 +25,20 @@ import graft.syntax.{MeasureDdl, ParsedMeasureView, Scan}
   */
 final class GraftEngine(val spark: SparkSession) {
 
-  // session-wide optimizer extension: eager aggregation (group-by pushdown
-  // through inner equi-joins). Stats-gated, so it is inert below
-  // graft.eagerAgg.minBytes and kicks in exactly where it pays — large
-  // fact-side scans at 100 TB. Idempotent across engine instances.
-  if (!spark.experimental.extraOptimizations.contains(graft.plans.EagerAggregation))
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.EagerAggregation)
-  if (!spark.experimental.extraOptimizations.contains(graft.plans.EagerGroupingSets))
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.EagerGroupingSets)
+  // session-wide optimizer extensions, each installed once per session
+  // however many engines share it:
+  //  - EagerAggregation: group-by pushdown through inner/outer equi-joins,
+  //    size-gated by graft.eagerAgg.minBytes, so it is inert below that and
+  //    fires where it pays (large fact-side scans);
+  //  - EagerGroupingSets: the same pre-aggregate below a CUBE/ROLLUP/
+  //    GROUPING SETS Expand, under the same gate;
+  //  - SplitHolisticDistinct: a MEDIAN-style aggregate next to one
+  //    COUNT(DISTINCT) group is split off into its own aggregate over the
+  //    same scan and joined back on the keys (no gate).
+  for (rule <- Seq(graft.plans.EagerAggregation, graft.plans.EagerGroupingSets,
+      graft.plans.SplitHolisticDistinct))
+    if (!spark.experimental.extraOptimizations.contains(rule))
+      spark.experimental.extraOptimizations ++= Seq(rule)
 
   val catalog = new MeasureCatalog
 

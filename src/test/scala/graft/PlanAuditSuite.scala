@@ -168,4 +168,25 @@ class PlanAuditSuite extends SparkSpec {
     assert(p.contains("partial_count") || p.contains("Partial"),
       s"expected map-side partial aggregation for the session stats:\n$p")
   }
+
+  test("DISTINCT + MEDIAN read: no percentile buffer is keyed on the distinct column") {
+    // graft inlines both measures into one aggregate; Spark's single-
+    // distinct plan would group on (keys, l_partkey) and carry a
+    // percentile buffer per group. SplitHolisticDistinct moves the MEDIAN
+    // into its own aggregate keyed on the grouping keys alone.
+    val df = engine.sql(
+      "SELECT ship_year, l_linestatus, AGGREGATE(parts), AGGREGATE(med_qty) FROM li_v GROUP BY 1, 2")
+    df.collect()
+    val aggs = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+      }
+    val percentileOnPartkey = aggs.filter { a =>
+      a.groupingExpressions.exists(_.name == "l_partkey") &&
+        a.aggregateExpressions.exists(_.aggregateFunction
+          .isInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate.Percentile])
+    }
+    assert(aggs.nonEmpty && percentileOnPartkey.isEmpty,
+      s"percentile buffers keyed on l_partkey:\n${percentileOnPartkey.mkString("\n")}")
+  }
 }
