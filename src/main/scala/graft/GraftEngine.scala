@@ -34,7 +34,8 @@ final class GraftEngine(val spark: SparkSession) {
   //    GROUPING SETS Expand, under the same gate;
   //  - SplitHolisticDistinct: a MEDIAN-style aggregate next to one
   //    COUNT(DISTINCT) group is split off into its own aggregate over the
-  //    same scan and joined back on the keys (no gate).
+  //    same scan and joined back on the keys; past 1 MB of input the
+  //    shared shuffle also keys on the distinct value.
   for (rule <- Seq(graft.plans.EagerAggregation, graft.plans.EagerGroupingSets,
       graft.plans.SplitHolisticDistinct))
     if (!spark.experimental.extraOptimizations.contains(rule))

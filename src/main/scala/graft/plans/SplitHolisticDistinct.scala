@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, HintInfo, Join, JoinHint, LeafNode, LogicalPlan, Project, RepartitionByExpression, SHUFFLE_HASH}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.GraftSqlBridge.normalizeFloats
 
 /** Keep holistic aggregates out of a COUNT(DISTINCT)-style aggregate.
@@ -23,26 +24,50 @@ import org.apache.spark.sql.GraftSqlBridge.normalizeFloats
   *
   *   Project(out, Aggregate(K, distinct aggs, shared)
   *                  ⋈ Aggregate(K, every other agg, shared))
-  *   shared = Repartition(K, Project(inputs ++ K, child))
+  *   shared = Repartition(K [++ distinct value], Project(inputs ++ K, child))
   *
   * K holds each non-nullable key as is and each nullable key as
   * (coalesce(k, default), isnull(k)): that groups the same rows, is never
-  * NULL, and lets both sides join with `=` on attributes they are already
-  * hash-partitioned on. Both repartitions are one exchange (Spark reuses
-  * it), and each side's aggregates and the shuffled hash join run in the
-  * stage that reads it: one scan and two jobs per read, against the mixed
-  * plan's one scan and three jobs. The join is hinted shuffle-hash so the
-  * planner does not broadcast a side it has just co-partitioned.
+  * NULL, and lets both sides join with `=` on attributes hash-partitioned
+  * on K. Both repartitions are one exchange (Spark reuses it), so the
+  * child is scanned once. The join is hinted shuffle-hash so the planner
+  * does not broadcast a side that is already co-partitioned.
   *
-  * Measured on perfbench `modeling` (sf0.01, `local[4]`, width 4, AQE
-  * on, traced seed 101, without → with this rule, PERF.md §0r): the 8
-  * DISTINCT + MEDIAN reads took 4.94 s in place of 6.53 s,
-  * `exec.task_cpu_ms` fell 12.4 → 8.1 s and `exec.jobs` 94 → 88. Two
-  * other join shapes saved task time but added jobs: each side with its
-  * own scan and exchanges, joined by broadcast (5 jobs a read) or by a
-  * co-partitioned shuffle-hash join (4). Spark's own
-  * `RewriteDistinctAggregates` Expand shape measured slower than the
-  * mixed plan in a warm probe.
+  * How `shared` is partitioned follows the child's estimated size:
+  *  - at most AQE's minimum partition size
+  *    (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, 1 MB):
+  *    on K alone. AQE runs such a reduce side as one task however it is
+  *    partitioned, and on K each side aggregates and the join runs in the
+  *    stage that reads the exchange: one scan stage and one final stage,
+  *    against the mixed plan's three stages;
+  *  - larger: on K and the distinct value. On K alone every row would go
+  *    to at most one reduce task per group of K (2 for `l_linestatus`),
+  *    where the mixed plan's first exchange, on (K, a), spreads its rows
+  *    over every task. On (K, a) the distinct side runs Spark's own
+  *    (K, a) merge in place and the other side its partial aggregation,
+  *    each over every reduce task, and both then shuffle small buffers on
+  *    K for the final aggregate and the join. Neither shape keeps the
+  *    mixed plan's map-side partial aggregation, which on (K, a) with a
+  *    percentile buffer per group is the cost this rule removes.
+  *
+  * Measured (PERF.md §0r): warm reads on `local[4]` under AQE, perfbench's
+  * bucketed layout, median of 5–7 alternating runs, mixed → split on K →
+  * split on (K, a), over lineitem at sf0.01 (width 4), 10× (sf0.1,
+  * width 4) and 100× (`GenScaled` of sf0.01, 6M rows, width 11):
+  *  - COUNT(DISTINCT l_partkey) + MEDIAN(l_quantity) by (ship_year,
+  *    l_linestatus): 415 → 263 → 314 ms; 1,316 → 607 → 645 ms;
+  *    4,749 → 2,382 → 2,446 ms;
+  *  - COUNT(DISTINCT l_orderkey) + MEDIAN(l_extendedprice) by
+  *    l_linestatus (2 groups): 246 → 255 → 248 ms; 1,753 → 1,749 →
+  *    1,215 ms; 7,517 → 5,390 → 3,558 ms.
+  * Of 8 such reads, each split beat the mixed plan at 10× and 100× in
+  * both shapes, and (K, a) was the faster shape there for every read by
+  * `l_linestatus` alone; at sf0.01 (a child estimated at 0.2–0.5 MB) K
+  * alone was 10–16 % faster than (K, a) on the three reads by two
+  * `li_v` dimensions and within 8 % on the rest. In perfbench `modeling`
+  * (sf0.01, traced seed 101) the 8 DISTINCT + MEDIAN reads took 4.94 s in
+  * place of 6.53 s. Spark's own `RewriteDistinctAggregates` Expand shape
+  * measured slower than the mixed plan in a warm probe.
   *
   * Gates:
   *  - exactly one distinct group (the same non-foldable child set) and no
@@ -61,12 +86,9 @@ import org.apache.spark.sql.GraftSqlBridge.normalizeFloats
   * Float and double key columns are normalized where K is computed (the
   * rule runs after Spark's `NormalizeFloatingNumbers`), so -0.0, 0.0 and
   * NaN hash, group and pair as the mixed plan grouped them. A global
-  * aggregate has no K: its two sides read the child as is and cross-join
-  * 1×1, so empty input still gives one row. No size gate: the split has
-  * been measured at sf0.01 only, where it wins. What it gives up is the
-  * distinct side's map-side partial aggregation, and its reduce side runs
-  * at most one task per key group, as the mixed plan's final percentile
-  * merge already did.
+  * aggregate has no K: its two sides read the child as is, each with its
+  * own partial aggregation, and cross-join 1×1, so empty input still
+  * gives one row.
   */
 object SplitHolisticDistinct extends Rule[LogicalPlan] {
 
@@ -109,12 +131,20 @@ object SplitHolisticDistinct extends Rule[LogicalPlan] {
       aliased.values.toSeq.partition(_.child.asInstanceOf[AggregateExpression].isDistinct)
 
     // the key columns are computed once, below one repartition that both
-    // sides share, so the two exchanges are one (Spark reuses it) and each
-    // side aggregates with no exchange of its own
+    // sides share, so the two exchanges are one (Spark reuses it). Input
+    // that AQE runs as one reduce task anyway is partitioned on K alone,
+    // and each side aggregates with no exchange of its own; larger input
+    // on K and the distinct value, so its rows spread over every reduce
+    // task however few groups K has, and each side shuffles its partial
+    // buffers on K once more
     val keyCols = columns.map(Alias(_, "__graft_key")())
     val grouping = keyCols.map(_.toAttribute)
     val inputs = AttributeSet(aliased.values.flatMap(_.child.references))
-    val shared = if (columns.isEmpty) agg.child else RepartitionByExpression(grouping,
+    val spread = if (agg.child.stats.sizeInBytes <=
+        conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)) Nil
+      else distinctAggs.head.child.asInstanceOf[AggregateExpression]
+        .aggregateFunction.children.filter(!_.foldable)
+    val shared = if (columns.isEmpty) agg.child else RepartitionByExpression(grouping ++ spread,
       Project(agg.child.output.filter(inputs.contains) ++ keyCols, agg.child), None, None)
     def side(aggs: Seq[Alias]): (Seq[Alias], Aggregate) = {
       val keys = grouping.map(Alias(_, "__graft_key")())

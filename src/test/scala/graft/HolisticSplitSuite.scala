@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, RepartitionByExpression}
 import org.apache.spark.sql.functions.{col, count_distinct, expr}
 
 import graft.plans.SplitHolisticDistinct
@@ -104,10 +105,39 @@ class HolisticSplitSuite extends SparkSpec {
       "SELECT k, COUNT(DISTINCT a) AS n, array_sort(collect_list(x)) AS xs FROM hs_t GROUP BY k")
   }
 
-  test("ROLLUP: the Expand under the Aggregate is duplicated") {
+  test("ROLLUP: the Expand under the Aggregate feeds the shared repartition") {
     assertSplitEqual(
       "SELECT k, a % 2 AS p, GROUPING(k) AS g, COUNT(DISTINCT a) AS n, MEDIAN(x) AS med " +
         "FROM hs_t GROUP BY ROLLUP(k, a % 2)")
+  }
+
+  /** The names of the columns the split's shared repartition is keyed on. */
+  private def sharedKeys(sql: String): Seq[String] =
+    withRule.sql(sql).queryExecution.optimizedPlan.collectFirst {
+      case r: RepartitionByExpression => r.partitionExpressions.map { case a: Attribute => a.name }
+    }.getOrElse(fail(s"no shared repartition:\n$sql"))
+
+  test("input past AQE's minimum partition size is also partitioned on the distinct value") {
+    val grouped = "SELECT k, COUNT(DISTINCT a) AS n, MEDIAN(x) AS med FROM hs_t GROUP BY k"
+    // hs_t is estimated far below the 1 MB default: the keys alone
+    assert(sharedKeys(grouped).forall(_ == "__graft_key"), sharedKeys(grouped))
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1") {
+      assert(sharedKeys(grouped).last == "a", sharedKeys(grouped))
+      assertSplitEqual(grouped)
+      assertSplitEqual(
+        "SELECT k, COUNT(DISTINCT a) AS n, SUM(DISTINCT a) AS sd, mode(a, true) AS m, " +
+          "SUM(x) FILTER (WHERE f) AS sf FROM hs_t GROUP BY k")
+      assertSplitEqual(
+        "SELECT k, a % 2 AS p, GROUPING(k) AS g, COUNT(DISTINCT a) AS n, MEDIAN(x) AS med " +
+          "FROM hs_t GROUP BY ROLLUP(k, a % 2)")
+      withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+        // a DOUBLE key, and a DOUBLE distinct value, holding -0.0, 0.0 and NaN
+        val byD = assertSplitEqual(
+          "SELECT d, COUNT(DISTINCT a) AS n, MEDIAN(x) AS med FROM hs_t GROUP BY d")
+        assert(byD.size == 3, s"-0.0/0.0, NaN and NULL are three groups: $byD")
+        assertSplitEqual("SELECT k, COUNT(DISTINCT d) AS n, MEDIAN(x) AS med FROM hs_t GROUP BY k")
+      }
+    }
   }
 
   test("the rule leaves ineligible shapes alone") {
