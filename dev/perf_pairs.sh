@@ -23,7 +23,11 @@
 # parent's spread (q3 - q1) and whether gain > spread. A claimed gain
 # holds when the change is ahead in at least 9 of 10 pairs and its gain
 # exceeds the parent's spread. Every run's JSON line is kept in
-# $PERF_PAIRS_DIR/runs.jsonl.
+# $PERF_PAIRS_DIR/runs.jsonl, with the path of the artifact that run wrote
+# (run.py names it on stderr; its stderr goes to $PERF_PAIRS_DIR/<side>-seed<N>.log).
+# Last, for every seed, the ops whose (rows, digest) differ between the
+# parent's and the change's run: a change that must not move any output
+# shows "all equal" on every seed.
 set -euo pipefail
 
 if [ "$#" -lt 3 ]; then
@@ -45,10 +49,16 @@ runs="$work/runs.jsonl"
 echo "perf_pairs: parent $rev in $parent, change $root, results $runs" >&2
 
 run() { # side tree seed
-  local line
-  line="$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
-    --seconds "$seconds" --trace 0 | tail -n 1)"
-  printf '{"side": "%s", "seed": %s, "result": %s}\n' "$1" "$3" "$line" >> "$runs"
+  local line log art
+  log="$work/$1-seed$3.log"
+  if ! line="$(cd "$2" && python3 perfbench/run.py --workload "$workload" --seed "$3" \
+      --seconds "$seconds" --trace 0 2> "$log" | tail -n 1)"; then
+    cat "$log" >&2
+    exit 1
+  fi
+  art="$(sed -n 's/^perfbench: artifact //p' "$log" | tail -n 1)"
+  printf '{"side": "%s", "seed": %s, "artifact": "%s", "result": %s}\n' \
+    "$1" "$3" "${art:+$2/$art}" "$line" >> "$runs"
   echo "perf_pairs: $1 seed $3: $line" >&2
 }
 
@@ -95,4 +105,20 @@ for m in metrics:
     spread = q["parent"][2] - q["parent"][0]
     print(f"{name:<18} {cols[0]:>30} {cols[1]:>30} {ratio:>6.3f}  {f'{ahead}/{len(seeds)}':>5}"
           f" {gain:>9.4g} {spread:>9.4g}  {'yes' if gain > spread else 'no'}")
+
+print("outputs: ops whose (rows, digest) differ between parent and change")
+arts = {(r["side"], r["seed"]): r.get("artifact") for r in runs}
+for s in seeds:
+    paths = {side: arts.get((side, s)) for side in ("parent", "change")}
+    if not all(paths.values()):
+        print(f"seed {s}: no artifact for {[side for side, p in paths.items() if not p]}")
+        continue
+    ops = {side: {(o["op"], o["pass"]): (o["rows"], o["digest"]) for o in json.load(open(p))["ops"]}
+           for side, p in paths.items()}
+    diff = sorted(k for k in ops["parent"].keys() | ops["change"].keys()
+                  if ops["parent"].get(k) != ops["change"].get(k))
+    print(f"seed {s}: {len(ops['change'])} ops, " +
+          ("all equal" if not diff else f"{len(diff)} differ: " + ", ".join(
+              f"{op} pass {p} {ops['parent'].get((op, p))} -> {ops['change'].get((op, p))}"
+              for op, p in diff)))
 EOF

@@ -27,11 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Bit-identity with the composed path is load-bearing (the driver oracle
   * replays the composed arithmetic): every micronat constant inside
-  * [[LmProbe]] is computed BY SPARK with the identical expression tree
-  * (`round(log(...) * 1e6) cast bigint`) during probe construction —
-  * Scala never rounds — and the per-pair case analysis (model hit /
-  * in-vocab backoff floor / out-of-vocab floor) mirrors the composed
-  * CASE WHEN exactly. Fenced in LangModelSuite.
+  * [[LmProbe]] is either computed BY SPARK with the identical expression
+  * tree (`round(log(...) * 1e6) cast bigint`) during probe construction,
+  * or — the fused scorer's driver-trained path — by the same operations
+  * Spark runs for that tree (`StrictMath.log`, `BigDecimal` HALF_UP
+  * rounding of the double, long → double operands); and the per-pair case
+  * analysis (model hit / in-vocab backoff floor / out-of-vocab floor)
+  * mirrors the composed CASE WHEN exactly. Fenced in LangModelSuite.
   *
   * The model rides a [[Broadcast]] handle, not the serialized plan: tasks
   * ship bytes-small expressions and each executor materializes the probe

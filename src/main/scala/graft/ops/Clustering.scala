@@ -1,10 +1,14 @@
 package graft.ops
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+
+import graft.functions.VecOps
 
 /** K-means clustering over embedding columns — the semantic-clustering
   * primitive behind corpus curation (topic balancing, diversity sampling,
@@ -30,7 +34,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructFie
   * collects and divides ([[lloydRound]]). Initial centroids
   * are the k smallest ids (at real scale: a seeded reservoir sample —
   * same broadcast shape). Empty clusters drop out of the update (standard
-  * Lloyd behavior; both engines agree).
+  * Lloyd behavior; both engines agree). Vectors whose estimated size fits
+  * the driver budget ([[DriverBudget]]) skip all of that: [[kmeans]] reads
+  * them once and runs the same rounds on the driver.
   */
 object Clustering {
 
@@ -40,7 +46,7 @@ object Clustering {
   private[graft] def sqDist(q: Column, c: Column): Column =
     // fused kernel, IEEE-identical to the zip_with/aggregate fold it
     // replaces (fenced in SimilaritySuite)
-    graft.functions.VecOps.sqDistLongDouble(q, c)
+    VecOps.sqDistLongDouble(q, c)
 
   /** One assignment pass: nearest centroid per vector, ties to the lowest
     * centroid index. The centroid table (k rows — bounded by construction:
@@ -103,18 +109,94 @@ object Clustering {
   /** Lloyd k-means: `iters` update rounds, then a final assignment.
     * Returns (vec_id, cluster). `scale` controls quantization resolution
     * (1000 keeps 3 decimal digits; unit-norm embeddings lose < 0.1%).
+    *
+    * Dispatch: quantized vectors that fit the driver budget run every round
+    * on the driver and come back as a local relation ([[kmeansLocal]]: one
+    * bounded read instead of a job per round); larger ones run the rounds
+    * distributed ([[lloydRound]], [[assign]]). Both give the same rows
+    * (fenced in RelevanceClusteringSuite).
     */
   def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 1, scale: Int = 1000,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k > 0 && iters >= 0, "kmeans: k and iters must be positive")
     val q = embeddings.select(col(idCol).cast("long").as("vec_id"),
       transform(col(vecCol), x => round(x.cast("double") * scale).cast("long")).as("q"))
-    var centroids = q.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("cidx"),
-        transform(col("q"), x => x.cast("double")).as("cvec"))
-    for (_ <- 1 to iters) centroids = lloydRound(q, centroids)
-    assign(q, centroids)
-      .select(col("vec_id"), col("cluster").cast("int").as("cluster"))
+    kmeansLocal(q, k, iters).getOrElse {
+      var centroids = q.filter(col("vec_id") < k)
+        .select(col("vec_id").cast("int").as("cidx"),
+          transform(col("q"), x => x.cast("double")).as("cvec"))
+      for (_ <- 1 to iters) centroids = lloydRound(q, centroids)
+      assign(q, centroids)
+        .select(col("vec_id"), col("cluster").cast("int").as("cluster"))
+    }
+  }
+
+  /** [[kmeans]] on the driver, when the quantized vectors `q` fit the
+    * driver budget ([[DriverBudget]]); None otherwise. The gate is the
+    * optimizer's size estimate of `q`, so no pass over the data decides
+    * it. The vectors are then read once with a bounded collect: at most
+    * the rows of the budget at 8 bytes per id and per component of the
+    * first vector, and their whole payload at that rate must fit it too,
+    * so an estimate that was wrong falls back after one bounded read.
+    *
+    * The same rounds as the distributed path, on the same values: the
+    * quantization is Spark's (`q` is collected, not recomputed); the
+    * initial centroids are the vectors with id < k in read order, sorted
+    * by index; every assignment calls [[VecOps.argminSqFold]], the kernel
+    * the fused argmin projection runs, and a NULL vector takes the lowest
+    * index; each update sums exact LONGs per (cluster, component) and
+    * divides once (long → double), a NULL component sum counts as 0.0 (a
+    * collected NULL `cvec` element unboxes to 0.0 in [[assign]]), and a
+    * cluster with no component left drops out. Inputs on which the
+    * distributed path fails — an initial vector that is NULL or an id < k
+    * out of INT range — take that path, so they fail the same way.
+    * Returns a local relation, as `Dedup.connectedComponents` does.
+    */
+  private def kmeansLocal(q: DataFrame, k: Int, iters: Int): Option[DataFrame] = {
+    val spark = q.sparkSession
+    if (!DriverBudget.fitsEstimate(q)) return None
+    def len(r: Row): Int = if (r.isNullAt(1)) 0 else r.getSeq[Any](1).length
+    val width = 8L * (1 + math.max(q.head(1).headOption.map(len).getOrElse(0), 1))
+    val maxRows = DriverBudget.rows(spark, width)
+    val read = q.limit(maxRows + 1).collect()
+    if (read.length > maxRows || read.map(r => 8L * (1 + len(r))).sum > DriverBudget.bytes(spark))
+      return None
+    val vecs = read.map(r => if (r.isNullAt(1)) null
+      else new GenericArrayData(r.getSeq[Any](1).toArray): ArrayData)
+    val init = read.indices.filter(i => !read(i).isNullAt(0) && read(i).getLong(0) < k)
+    if (init.exists(i => vecs(i) == null || read(i).getLong(0) < Int.MinValue)) return None
+    val sorted = init.sortBy(read(_).getLong(0))
+    var cidx = sorted.map(read(_).getLong(0).toInt).toArray
+    var cents = sorted.map { i =>
+      Array.tabulate(vecs(i).numElements())(p =>
+        if (vecs(i).isNullAt(p)) 0.0 else vecs(i).getLong(p).toDouble)
+    }.toArray
+    def nearest(i: Int): Int =
+      if (vecs(i) == null) cidx(0) else VecOps.argminSqFold(vecs(i), cidx, cents)
+    val dim = vecs.iterator.filter(_ != null).map(_.numElements()).maxOption.getOrElse(0)
+    for (_ <- 1 to iters if cidx.nonEmpty) {
+      // per cluster and component: the sum, the count and whether any value was non-NULL
+      val sums = mutable.HashMap.empty[Int, (Array[Long], Array[Long], Array[Boolean])]
+      for (i <- vecs.indices if vecs(i) != null && vecs(i).numElements() > 0) {
+        val (s, n, seen) = sums.getOrElseUpdate(nearest(i),
+          (new Array[Long](dim), new Array[Long](dim), new Array[Boolean](dim)))
+        val v = vecs(i)
+        for (p <- 0 until v.numElements()) {
+          n(p) += 1
+          if (!v.isNullAt(p)) { s(p) = Math.addExact(s(p), v.getLong(p)); seen(p) = true }
+        }
+      }
+      val next = sums.toArray.sortBy(_._1)
+      cidx = next.map(_._1)
+      cents = next.map { case (_, (s, n, seen)) =>
+        Array.tabulate(n.lastIndexWhere(_ > 0) + 1)(p =>
+          if (seen(p)) s(p).toDouble / n(p).toDouble else 0.0)
+      }
+    }
+    val out = if (cidx.isEmpty) Seq.empty[Row]
+      else read.indices.map(i => Row(read(i).get(0), nearest(i)))
+    Some(spark.createDataFrame(out.asJava, StructType(Seq(
+      q.schema("vec_id"), StructField("cluster", IntegerType, nullable = false)))))
   }
 
   /** Two-level Lloyd k-means for LARGE k (the SemDeDup k ∝ corpus-size

@@ -77,15 +77,6 @@ object Dedup {
   private def pinned(d: DataFrame, w: Option[Int], cols: Column*): DataFrame =
     w.map(n => d.repartition(n, cols: _*)).getOrElse(d)
 
-  /** Rows of two 8-byte values a relation may hold to be read on the
-    * driver: `spark.sql.autoBroadcastJoinThreshold` / 16 bytes, the budget
-    * Spark already uses to ship a relation to the driver and every
-    * executor. A threshold <= 0 gives 0: no driver-side path.
-    */
-  private def driverRows(spark: SparkSession): Int =
-    math.max(0L, math.min(spark.sessionState.conf.autoBroadcastJoinThreshold / 16,
-      Int.MaxValue - 1L)).toInt
-
   // ------------------------------------------------------- LSH band join
 
   /** One LSH operator's cache lifecycle: `body` persists its frames through
@@ -106,12 +97,13 @@ object Dedup {
     * buckets are few by construction (each holds > maxBucket rows, so
     * their count is < rows / (maxBucket + 1): boilerplate explosions, not
     * the corpus), so the cap becomes a codegen filter instead of a join.
-    * They are collected under [[driverRows]]; None (too many to ship, or
-    * the broadcast threshold off) selects the kept-vector fallback.
+    * They are collected under [[DriverBudget]] at 16 bytes a key; None
+    * (too many to ship, or the broadcast threshold off) selects the
+    * kept-vector fallback.
     */
   private def cappedSet(sizes: DataFrame, band: Column, key: Column, bands: Int,
                         maxBucket: Int): Option[Broadcast[CappedKeys]] = {
-    val budget = driverRows(sizes.sparkSession)
+    val budget = DriverBudget.rows(sizes.sparkSession, 16)
     Some(budget).filter(_ > 0)
       .map(b => sizes.filter(col("__bsz") > maxBucket).select(band, key).limit(b + 1).collect())
       .filter(_.length <= budget)
@@ -831,9 +823,9 @@ object Dedup {
     *
     * Scale shape: the pair list is read once with a bounded collect. The
     * bound is `spark.sql.autoBroadcastJoinThreshold` / 16 bytes per pair
-    * (two 8-byte ids) — the budget Spark already uses to ship a relation
-    * to the driver and every executor; a threshold <= 0 turns the driver
-    * path off. A list that fits (LONG ids, no null) is solved on the
+    * (two 8-byte ids) — [[DriverBudget]], the budget Spark already uses
+    * to ship a relation to the driver and every executor; a threshold
+    * <= 0 turns the driver path off. A list that fits (LONG ids, no null) is solved on the
     * driver by the same rounds ([[componentsLocal]]: same labels, round
     * count and exception) and returned as a local relation: one bounded
     * read (no job at all when `pairs` optimizes to a local relation)
@@ -844,7 +836,7 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_id_a",
                           bCol: String = "doc_id_b", maxIter: Int = 20): DataFrame = {
     val ab = pairs.select(col(aCol).as("__a"), col(bCol).as("__b"))
-    val maxPairs = driverRows(pairs.sparkSession)
+    val maxPairs = DriverBudget.rows(pairs.sparkSession, 16)
     // both directions from ONE pass over the pair columns (explode, not a
     // union of two selects, which reads the pair list twice: uncached, the
     // second branch re-ran the upstream pair generator — measured ~25 s of

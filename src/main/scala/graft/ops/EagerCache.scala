@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions.{count, lit}
   * eager `localCheckpoint` runs the same plan as an ordinary AQE query, so
   * the cache lands in the partitions AQE sized from the data (that
   * aggregate: 1). With AQE off it keeps the session width, as before.
+  *
+  * The row count [[build]] observes is what sizes the reads that follow.
+  * The LM's pair counts are read back to the driver in one collect when
+  * that count fits [[DriverBudget]] (`LangModel.scoreBigramLmFused`
+  * trains on the driver and releases the cache before it returns); above
+  * it, and for the Naive Bayes token counts, Spark plans read the cache.
   */
 private[graft] object EagerCache {
 

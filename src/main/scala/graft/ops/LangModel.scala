@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -31,7 +32,8 @@ import graft.functions.{BigramNllExpr, LmProbe}
   * it must never be elected the build side of a broadcast by stale stats)
   * and against the minCount-pruned unigram vocabulary by broadcast (a
   * Zipf-pruned vocabulary is millions of rows and fits every executor).
-  * No corpus-sized side ever broadcasts; no driver-side loops.
+  * No corpus-sized side ever broadcasts; the driver only ever holds the
+  * vocabulary-sized model, and trains it itself only under [[DriverBudget]].
   */
 object LangModel {
 
@@ -178,16 +180,19 @@ object LangModel {
         round(log(col("c_uni") + col("v")) * lit(1e6)).cast("bigint").as("fl"))
       .collect()
 
-  /** [[scoreBigramLmBroadcast]] over already-collected [[vocabRows]]. */
-  private def scoreWithVocab(docs: DataFrame, model: DataFrame, uniRows: Array[Row],
-                             textCol: String, idCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    // V >= 2 guard as in scoreBigramLm, raised driver-side since V is
-    // materialized here anyway (an empty vocabulary has V = 0)
-    val v = if (uniRows.isEmpty) 0L else uniRows(0).getLong(1)
+  /** The V >= 2 guard of [[scoreBigramLm]], raised on the driver where V
+    * is already known (an empty vocabulary has V = 0).
+    */
+  private def requireVocab(v: Long): Unit =
     if (v < 2) throw new IllegalArgumentException(
       s"scoreBigramLm: kept vocabulary size V = $v but the ln(V) " +
         "out-of-vocab floor needs V >= 2")
+
+  /** [[scoreBigramLmBroadcast]] over already-collected [[vocabRows]]. */
+  private def scoreWithVocab(docs: DataFrame, model: DataFrame, uniRows: Array[Row],
+                             textCol: String, idCol: String): DataFrame = {
+    val v = if (uniRows.isEmpty) 0L else uniRows(0).getLong(1)
+    requireVocab(v)
     val oovMicro = uniRows(0).getLong(2)
     val tokens = new Array[String](uniRows.length)
     val floors = new Array[Long](uniRows.length)
@@ -212,16 +217,66 @@ object LangModel {
       contribs(i) = modelRows(i).getLong(2)
       i += 1
     }
-    val probe = spark.sparkContext.broadcast(
-      LmProbe(tokens, floors, oovMicro, bigramIds, contribs))
+    scoreWithProbe(docs, LmProbe(tokens, floors, oovMicro, bigramIds, contribs),
+      textCol, idCol)
+  }
+
+  /** Every document's score in one projection probing a broadcast `probe`. */
+  private def scoreWithProbe(docs: DataFrame, probe: LmProbe,
+                             textCol: String, idCol: String): DataFrame = {
+    val bc = docs.sparkSession.sparkContext.broadcast(probe)
     docs.select(col(idCol).as("__id"),
-        BigramNllExpr.bigramNll(toks(textCol), probe).as("s"))
+        BigramNllExpr.bigramNll(toks(textCol), bc).as("s"))
       .select(
         col("__id").as(idCol),
         coalesce(col("s.n_bigrams"), lit(0L)).as("n_bigrams"),
         coalesce(col("s.nll_micro"), lit(0L)).as("nll_micro"),
         when(col("s.n_bigrams") > 0L,
           expr("s.nll_micro div s.n_bigrams")).as("avg_nll_micro"))
+  }
+
+  /** Spark's `round(log(x) * 1e6).cast("bigint")` on the driver: `Log` is
+    * `StrictMath.log` (NULL for x <= 0, which V >= 2 rules out), `Round`
+    * on a double is `BigDecimal(d).setScale(0, HALF_UP)` of its decimal
+    * string, and the cast of an integral double in LONG range is exact.
+    */
+  private def micro(x: Double): Long =
+    BigDecimal(StrictMath.log(x) * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP)
+      .toDouble.toLong
+
+  /** The [[LmProbe]] of [[scoreBigramLmFused]]'s Spark path, built on the
+    * driver from the collected pair counts (w1, w2, c) with the same
+    * arithmetic: exact LONG unigram sums over each w1 slot, the same
+    * `minCount` filters and joins, V as the kept-vocabulary count, and
+    * every micronat constant through [[micro]] of the same double: a LONG
+    * sum `c_uni + V` converted once, and `(c_big + 1.0) / (c_uni + V)`.
+    */
+  private def probeFromPairCounts(pairs: Array[Row], minCount: Int): LmProbe = {
+    val uni = new java.util.HashMap[String, java.lang.Long]()
+    for (r <- pairs) {
+      val c = uni.get(r.getString(0))
+      uni.put(r.getString(0), if (c == null) r.getLong(2) else Math.addExact(c.longValue, r.getLong(2)))
+    }
+    uni.values.removeIf(_.longValue < minCount)
+    val v = uni.size.toLong
+    requireVocab(v)
+    val tokens = new Array[String](uni.size)
+    val floors = new Array[Long](uni.size)
+    val idOf = new java.util.HashMap[String, Int](uni.size * 2)
+    var i = 0
+    uni.forEach { (t, c) =>
+      tokens(i) = t
+      floors(i) = micro(Math.addExact(c.longValue, v).toDouble)
+      idOf.put(t, i)
+      i += 1
+    }
+    // the joins on w1 and w2 drop NULL keys
+    val model = pairs.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && r.getLong(2) >= minCount &&
+      idOf.containsKey(r.getString(0)) && idOf.containsKey(r.getString(1)))
+    LmProbe(tokens, floors, micro(v.toDouble),
+      model.map(r => (idOf.get(r.getString(0)), idOf.get(r.getString(1)))),
+      model.map(r => -micro((r.getLong(2).toDouble + 1.0) /
+        Math.addExact(uni.get(r.getString(0)).longValue, v).toDouble)))
   }
 
   /** One-shuffle trainer + zero-exchange scorer (r13): the whole
@@ -239,18 +294,27 @@ object LangModel {
     * and the broadcast probe all derive from it without touching the
     * corpus again. Scoring is the [[scoreBigramLmBroadcast]] projection.
     *
+    * Dispatch, on the pair-type count the cache build observes (no extra
+    * pass): a cache that fits [[DriverBudget]] at Spark's estimated width
+    * of its (string, string, bigint) rows — 56 bytes, so ~187k pair types
+    * at the default 10 MB threshold — is read in one job, released, and
+    * the vocabulary, V, the floors and the model are computed on the
+    * driver ([[probeFromPairCounts]]) in Spark's arithmetic, where Spark
+    * plans would cost a job per vocabulary, model and broadcast read.
+    * Above the budget (or with the threshold <= 0) they are Spark plans
+    * over the cache ([[scoreFromCache]]).
+    *
     * Bit-identity: unigram counts are the same exact integers (sum of
     * disjoint position counts), the model formula is literally
     * [[trainBigramLm]]'s, and the scorer is the fenced broadcast path —
     * LangModelSuite fences this end-to-end against the composed
-    * unigramCounts + trainBigramLm + scoreBigramLm chain.
+    * unigramCounts + trainBigramLm + scoreBigramLm chain, and the driver-
+    * trained probe against the Spark-trained one, cell for cell.
     */
   def scoreBigramLmFused(docs: DataFrame, textCol: String = "text",
                          idCol: String = "doc_id",
                          minCount: Int = 2): DataFrame = {
     val spark = docs.sparkSession
-    val maxRows = spark.conf.getOption("graft.lm.broadcastMaxRows")
-      .map(_.toLong).getOrElse(8000000L)
     // Token array PRE-PROJECTED under the Generate: inlining `toks` into
     // the generator expression re-evaluates the regex split per reference
     // (5x per row measured — ProbeLmPlan; the optimizer does not collapse
@@ -278,7 +342,11 @@ object LangModel {
     // broadcasts + V), and broadcast-exchange jobs launch first and would
     // RACE to build a cold cache — measured as the corpus explode running
     // 2-3x inside model.count(). The build job also observes the number of
-    // pair types, which decides two things with no further pass:
+    // pair types, which decides three things with no further pass:
+    //  - a cache that fits the driver budget ([[DriverBudget]], at Spark's
+    //    estimated width of a (string, string, bigint) row) is read once,
+    //    released, and trained on the driver ([[probeFromPairCounts]]):
+    //    one job instead of the vocabulary, model and broadcast jobs below;
     //  - (r14, size-aware) the cache is read through a narrow coalesce(1)
     //    only when it holds at most `graft.lm.coalesceMaxRows` pair types,
     //    so the downstream vocabulary-sized reads (vocabulary and model
@@ -290,6 +358,22 @@ object LangModel {
     //    bound does not already fit.
     val (pairCountsCache, nPairTypes) = EagerCache.build(
       stream.groupBy("w1", "w2").agg(count(lit(1)).as("c")))
+    val driverMax = DriverBudget.rows(spark,
+      EstimationUtils.getSizePerRow(pairCountsCache.queryExecution.analyzed.output).toLong)
+    if (driverMax > 0 && nPairTypes <= driverMax) {
+      val pairs = try pairCountsCache.collect() finally EagerCache.release(pairCountsCache)
+      scoreWithProbe(docs, probeFromPairCounts(pairs, minCount), textCol, idCol)
+    } else scoreFromCache(docs, pairCountsCache, nPairTypes, textCol, idCol, minCount)
+  }
+
+  /** [[scoreBigramLmFused]] over a pair-count cache above the driver
+    * budget: vocabulary, model and probe are Spark plans over the cache.
+    */
+  private def scoreFromCache(docs: DataFrame, pairCountsCache: DataFrame, nPairTypes: Long,
+                             textCol: String, idCol: String, minCount: Int): DataFrame = {
+    val spark = docs.sparkSession
+    val maxRows = spark.conf.getOption("graft.lm.broadcastMaxRows")
+      .map(_.toLong).getOrElse(8000000L)
     val coalesceMax = spark.conf.getOption("graft.lm.coalesceMaxRows")
       .map(_.toLong).getOrElse(8000000L)
     val pairCounts =

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.LangModel
@@ -16,6 +17,11 @@ class LangModelSuite extends SparkSpec {
   import spark.implicits._
 
   private lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+  // the fused scorer's Spark-trained path: the broadcast threshold off
+  // turns its driver-trained path off
+  private def onSparkPath[T](f: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(f)
 
   // halves round away from zero, as in Spark round() / DuckDB ROUND —
   // Java math.round would disagree on negative *.5 micronat values
@@ -138,7 +144,7 @@ class LangModelSuite extends SparkSpec {
     val model = LangModel.trainBigramLm(docs, uni, minCount = 2)
     val want = rows(LangModel.scoreBigramLm(docs, model, uni))
     spark.conf.set("graft.lm.coalesceMaxRows", "0")
-    try assert(rows(LangModel.scoreBigramLmFused(docs)) == want,
+    try assert(rows(onSparkPath(LangModel.scoreBigramLmFused(docs))) == want,
       "wide-cache fused scores diverged from composed")
     finally spark.conf.unset("graft.lm.coalesceMaxRows")
   }
@@ -150,7 +156,7 @@ class LangModelSuite extends SparkSpec {
     val model = LangModel.trainBigramLm(docs, uni, minCount = 2)
     val want = rows(LangModel.scoreBigramLm(docs, model, uni))
     spark.conf.set("graft.lm.broadcastMaxRows", "0")
-    val scored = try LangModel.scoreBigramLmFused(docs)
+    val scored = try onSparkPath(LangModel.scoreBigramLmFused(docs))
       finally spark.conf.unset("graft.lm.broadcastMaxRows")
     assert(rows(scored) == want, "fallback fused scores diverged from composed")
     assert(rows(scored) == want, "second read of the fallback result")
@@ -185,5 +191,46 @@ class LangModelSuite extends SparkSpec {
     assert(rows(a) == rows(b), "repartition must not change a single cell")
     assert(a.filter(col("nll_micro") < 0L).count() == 0L,
       "per-doc NLL sums are sums of non-negative micronats")
+  }
+
+  // the fused scorer's two trainers: on the driver from the collected pair
+  // counts (default threshold) and in Spark (threshold off); every cell of
+  // every document must agree, and the build of each must take its path
+  private def fusedBothPaths(d: DataFrame, minCount: Int): Unit = {
+    def exact(df: DataFrame) = df.collect().toSeq.map(_.toSeq).sortBy(_.head.toString)
+    val (driver, driverJobs) = ExecProbe.jobs(spark)(LangModel.scoreBigramLmFused(d, minCount = minCount))
+    val (inSpark, sparkJobs) = onSparkPath(
+      ExecProbe.jobs(spark)(LangModel.scoreBigramLmFused(d, minCount = minCount)))
+    assert(driverJobs < sparkJobs,
+      s"driver path built in $driverJobs jobs, Spark path in $sparkJobs")
+    val (a, b) = (exact(driver), exact(inSpark))
+    assert(a.nonEmpty && a == b, s"minCount $minCount: driver-trained scores diverged")
+  }
+
+  // null text, empty and whitespace-only text, one-token documents and
+  // documents whose every token is out of the kept vocabulary (each used
+  // once, below minCount 2 and 3)
+  private def withEdges(d: DataFrame): DataFrame = d.select(col("doc_id"), col("text"))
+    .union(Seq[(java.lang.Long, String)](
+      (-1L, null), (-2L, ""), (-3L, "   "), (-4L, "solo"), (-5L, "the"),
+      (-6L, "qqzz1 qqzz2 qqzz3 qqzz4"), (-7L, "qqzz5\u000Bqqzz6 qqzz7"),
+      (-8L, "the the the of of a")).toDF("doc_id", "text"))
+
+  for (sf <- Seq("sf0.001", "sf0.01"); minCount <- Seq(1, 2, 3))
+    test(s"fused pipeline: driver-trained scores equal Spark-trained ones ($sf, minCount $minCount)") {
+      fusedBothPaths(withEdges(
+        spark.read.parquet(docs.inputFiles.head.replace("sf0.001", sf))), minCount)
+    }
+
+  test("fused pipeline: V < 2 raises the same error on both paths") {
+    for ((d, minCount) <- Seq(Seq((1L, "a a a")).toDF("doc_id", "text") -> 1, // V = 1
+        Seq((1L, "a b"), (2L, "c")).toDF("doc_id", "text") -> 2)) { // V = 0
+      val driver = intercept[IllegalArgumentException](
+        LangModel.scoreBigramLmFused(d, minCount = minCount).collect())
+      val inSpark = intercept[IllegalArgumentException](
+        onSparkPath(LangModel.scoreBigramLmFused(d, minCount = minCount).collect()))
+      assert(driver.getMessage.contains("V >= 2"))
+      assert(driver.getMessage == inSpark.getMessage)
+    }
   }
 }

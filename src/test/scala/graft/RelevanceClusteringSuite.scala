@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Clustering, GraphRank, Relevance}
@@ -117,6 +118,67 @@ class RelevanceClusteringSuite extends SparkSpec {
     val i0 = total(0)
     val i2 = total(2)
     assert(i2 <= i0, s"inertia rose: $i0 -> $i2")
+  }
+
+  // k-means on the driver (the default threshold: the result is a local
+  // relation) against the distributed rounds (threshold off), row for row
+  private def kmeansBothPaths(df: DataFrame, k: Int, iters: Int): Seq[(Option[Long], Int)] = {
+    def run(): (Boolean, Seq[(Option[Long], Int)]) = {
+      val out = Clustering.kmeans(df, k = k, iters = iters)
+      (out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        out.collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getInt(1)))
+          .toSeq.sorted)
+    }
+    val (onDriver, driver) = run()
+    val (offDriver, distributed) = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run())
+    assert(onDriver && !offDriver, s"k=$k iters=$iters: paths not taken as expected")
+    assert(driver == distributed, s"k=$k iters=$iters: driver k-means diverged\n$driver\nvs\n$distributed")
+    driver
+  }
+
+  test("kmeans: driver rounds equal the distributed rounds (corpus, iters 0-2)") {
+    for (sf <- Seq("sf0.001", "sf0.01"); iters <- 0 to 2) {
+      val out = kmeansBothPaths(spark.read.parquet(emb.inputFiles.head.replace("sf0.001", sf)),
+        k = 8, iters = iters)
+      assert(out.map(_._2).toSet.size > 1, s"$sf iters=$iters: one cluster")
+    }
+  }
+
+  test("kmeans: driver rounds equal the distributed rounds (edge vectors)") {
+    // two partitions: a local relation would make both results local
+    def vecs(rows: (java.lang.Long, Seq[java.lang.Double])*): DataFrame =
+      rows.toDF("vec_id", "embedding").repartition(2)
+    val n: java.lang.Double = null
+    // k above the row count: every vector is an initial centroid
+    val few = vecs((0L, Seq(0.1, 0.2)), (1L, Seq(0.9, 0.1)), (2L, Seq(0.5, 0.5)))
+    // ids 0 and 1 are the same vector: every distance to centroid 1 ties
+    // centroid 0's, so centroid 1 loses every member; null vectors, a NULL
+    // component, a short and an empty vector (all distances NULL: lowest
+    // index) and a NULL id ride along
+    val edges = vecs((0L, Seq(0.0, 0.0)), (1L, Seq(0.0, 0.0)), (2L, Seq(5.0, 5.0)),
+      (3L, Seq(5.0, 5.1)), (4L, Seq(9.0, 1.0)), (5L, null), (6L, Seq(4.0, n)),
+      (7L, Seq(1.0)), (8L, Seq()), (null, Seq(2.0, 2.0)), (9L, Seq(5.0, 5.0)), (10L, null))
+    // an initial centroid with a NULL component
+    val nullInit = vecs((0L, Seq(1.0, n)), (1L, Seq(3.0, 3.0)), (2L, Seq(1.0, 1.0)),
+      (3L, Seq(3.0, 2.5)), (4L, Seq(0.5, 0.5)))
+    for (iters <- 0 to 2) {
+      val f = kmeansBothPaths(few, k = 10, iters = iters)
+      assert(f.map(_._2) == Seq(0, 1, 2), s"iters=$iters: k > rows")
+      val e = kmeansBothPaths(edges, k = 4, iters = iters)
+      assert(e.length == 12 && !e.exists(_._2 == 1), s"iters=$iters: centroid 1 kept members")
+      kmeansBothPaths(nullInit, k = 2, iters = iters)
+    }
+  }
+
+  test("semanticDedup: same rows with k-means on the driver or distributed") {
+    import graft.ops.Dedup
+    for (k <- Seq(8, 0)) {
+      val run = () => rows(Dedup.semanticDedup(emb, k = k, iters = 1, minCosine = 0.3))
+      val driver = run()
+      assert(driver.length == emb.count())
+      assert(driver == withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run()),
+        s"k=$k: semanticDedup rows moved")
+    }
   }
 
   test("kmeansTwoLevel: kSuper=1 degenerates to flat kmeans, bit for bit") {

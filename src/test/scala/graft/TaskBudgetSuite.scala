@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.ops.{Classifier, Clustering, Dedup, LangModel}
+import graft.ops.{Classifier, Clustering, Dedup, DriverBudget, LangModel}
 
 /** Task-count, job-count and cache-release gates for the operators that
   * size their own exchanges and caches: at Spark's default of 200 shuffle
@@ -87,12 +87,13 @@ class TaskBudgetSuite extends SparkSpec {
   }
 
   // in brackets: the jobs the same calls cost with one job per round or
-  // per size decision; each budget sits below it. Inputs are built first,
-  // so only the operator and the read of its result are counted
+  // per size decision, then (LM, k-means) the budget they had while they
+  // trained in Spark at this size; each budget sits below them. Inputs are
+  // built first, so only the operator and the read of its result are counted
   private val jobOps = Seq[(String, Int, () => DataFrame, DataFrame => DataFrame)](
     ("connectedComponents", 1, () => localPairs, Dedup.connectedComponents(_)), // [8]
-    ("scoreBigramLmFused", 10, () => docs, LangModel.scoreBigramLmFused(_)), // [15]
-    ("kmeans(iters = 2)", 7, () => emb, Clustering.kmeans(_, k = 8, iters = 2)), // [10]
+    ("scoreBigramLmFused", 4, () => docs, LangModel.scoreBigramLmFused(_)), // [15, 10]
+    ("kmeans(iters = 2)", 2, () => emb, Clustering.kmeans(_, k = 8, iters = 2)), // [10, 7]
     ("trainAndScoreNaiveBayes", 9, () => docs, // [12]
       Classifier.trainAndScoreNaiveBayes(_, col("lang") === "en")))
 
@@ -107,4 +108,41 @@ class TaskBudgetSuite extends SparkSpec {
         assert(jobs <= budget, s"$name ran $jobs jobs")
       }
     }
+
+  // the driver paths of the LM trainer and k-means at the default broadcast
+  // threshold: the LM's pair-count cache is released before the scorer
+  // returns, and k-means leaves nothing cached
+  private val driverOps = Seq[(String, () => DataFrame)](
+    ("scoreBigramLmFused", () => LangModel.scoreBigramLmFused(docs)),
+    ("kmeans(iters = 2)", () => Clustering.kmeans(emb, k = 8, iters = 2)))
+
+  for ((name, op) <- driverOps)
+    test(s"$name [driver path]: persisted RDDs and cache manager left as found") {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val rows = op().collect()
+      info(s"${rows.length} rows")
+      assert(rows.nonEmpty)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name left RDDs ${left.mkString(", ")} persisted")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left cache manager entries")
+    }
+
+  test("DriverBudget: rows of a width, none with the threshold off, below Int.MaxValue") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    withConf(key, "1600") {
+      assert(DriverBudget.rows(spark, 16) == 100)
+      assert(DriverBudget.rows(spark, 56) == 28)
+      assert(DriverBudget.rows(spark, 1601) == 0)
+    }
+    for (off <- Seq("-1", "0")) withConf(key, off) {
+      assert(DriverBudget.rows(spark, 16) == 0, s"threshold $off")
+      assert(!DriverBudget.fitsEstimate(emb), s"threshold $off")
+    }
+    withConf(key, Long.MaxValue.toString) {
+      assert(DriverBudget.rows(spark, 1) == Int.MaxValue - 1)
+      assert(DriverBudget.rows(spark, 16) == Int.MaxValue - 1)
+    }
+    intercept[IllegalArgumentException](DriverBudget.rows(spark, 0))
+  }
 }
