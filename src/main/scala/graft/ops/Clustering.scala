@@ -65,7 +65,11 @@ object Clustering {
     */
   private[graft] def assign(q: DataFrame, centroids: DataFrame): DataFrame = {
     val cents = centroids.select(col("cidx"), col("cvec")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1)
+      .map { r =>
+        // only an initial centroid can be NULL: a round's centroids are sums
+        if (r.isNullAt(1)) throw nullInitialVector(r.getInt(0))
+        (r.getInt(0), r.getSeq[Double](1))
+      }.sortBy(_._1)
     // empty centroid table: the joined formulation returned an empty frame
     // (crossJoin with nothing); `cents.head` below would throw instead —
     // bounded today (k >= 1 by construction) but guarded all the same
@@ -78,6 +82,12 @@ object Clustering {
           cents.map(_._1).toSeq, cents.map(_._2).toSeq),
         lit(cents.head._1)).as("cluster"))
   }
+
+  /** The error of [[kmeans]] on a NULL vector whose id is below k: it would
+    * be an initial centroid, and a NULL centroid has no distance to rank.
+    */
+  private def nullInitialVector(id: Long) = new IllegalArgumentException(
+    s"kmeans: the vector of vec_id $id is NULL, and ids below k are the initial centroids")
 
   private val CentroidSchema = StructType(Seq(
     StructField("cidx", IntegerType), StructField("cvec", ArrayType(DoubleType))))
@@ -147,9 +157,9 @@ object Clustering {
     * index; each update sums exact LONGs per (cluster, component) and
     * divides once (long → double), a NULL component sum counts as 0.0 (a
     * collected NULL `cvec` element unboxes to 0.0 in [[assign]]), and a
-    * cluster with no component left drops out. Inputs on which the
-    * distributed path fails — an initial vector that is NULL or an id < k
-    * out of INT range — take that path, so they fail the same way.
+    * cluster with no component left drops out. A NULL initial vector
+    * raises the distributed path's error; an id < k out of INT range takes
+    * that path, so it fails the same way.
     * Returns a local relation, as `Dedup.connectedComponents` does.
     */
   private def kmeansLocal(q: DataFrame, k: Int, iters: Int): Option[DataFrame] = {
@@ -164,7 +174,8 @@ object Clustering {
     val vecs = read.map(r => if (r.isNullAt(1)) null
       else new GenericArrayData(r.getSeq[Any](1).toArray): ArrayData)
     val init = read.indices.filter(i => !read(i).isNullAt(0) && read(i).getLong(0) < k)
-    if (init.exists(i => vecs(i) == null || read(i).getLong(0) < Int.MinValue)) return None
+    init.find(vecs(_) == null).foreach(i => throw nullInitialVector(read(i).getLong(0)))
+    if (init.exists(read(_).getLong(0) < Int.MinValue)) return None
     val sorted = init.sortBy(read(_).getLong(0))
     var cidx = sorted.map(read(_).getLong(0).toInt).toArray
     var cents = sorted.map { i =>

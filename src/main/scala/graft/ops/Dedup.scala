@@ -4,16 +4,18 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{CappedKeys, FirstMatchBandExpr, FirstUncappedMatchExpr,
-  FirstUncappedSim16Expr, FirstUncappedWideExpr}
+  FirstUncappedSim16Expr, FirstUncappedWideExpr, SortedJaccardExpr}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -105,7 +107,9 @@ object Dedup {
                         maxBucket: Int): Option[Broadcast[CappedKeys]] = {
     val budget = DriverBudget.rows(sizes.sparkSession, 16)
     Some(budget).filter(_ > 0)
-      .map(b => sizes.filter(col("__bsz") > maxBucket).select(band, key).limit(b + 1).collect())
+      // a NULL key shares no bucket, so its rows are never capped
+      .map(b => sizes.filter(col("__bsz") > maxBucket && key.isNotNull)
+        .select(band, key).limit(b + 1).collect())
       .filter(_.length <= budget)
       .map(rows => sizes.sparkSession.sparkContext.broadcast(CappedKeys.fromRows(rows, bands)))
   }
@@ -170,16 +174,102 @@ object Dedup {
   private def keptVectors(banded: DataFrame, sizes: DataFrame, band: String, key: String,
                           bands: Int, maxBucket: Int, payload: Seq[String]): DataFrame = {
     val carried = col("doc_id") +: payload.map(col)
+    // payload is per doc, so first() is deterministic; a payload column
+    // that cannot be NULL stays so, as on the capped-set path, so the
+    // result's schema does not depend on the dispatch
+    def perDoc(p: String): Column =
+      if (banded.schema(p).nullable) first(p)
+      else GraftSqlBridge.column(KnownNotNull(GraftSqlBridge.expression(first(p))))
     banded.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"), Seq(band, key))
       .groupBy("doc_id")
-      // payload is per doc, so first() is deterministic
       .agg(map_from_entries(collect_list(struct(col(band), col(key)))).as("__m"),
-        payload.map(p => first(p).as(p)): _*)
+        payload.map(p => perDoc(p).as(p)): _*)
       // try_element_at: NULL for a missing band (plain element_at errors under ANSI)
       .select(carried :+ transform(sequence(lit(0), lit(bands - 1)),
         j => try_element_at(col("__m"), j)).as("__kv"): _*)
       .select(carried :+ col("__kv") :+ posexplode(col("__kv")).as(Seq(band, key)): _*)
       .filter(col(key).isNotNull)
+  }
+
+  // ------------------------------------------------ LSH band join, driver
+
+  /** One bounded read of an LSH operator's per-doc signatures
+    * ([[readSignatures]]): `rows` in read order, `complete` when they are
+    * every row of the frame read.
+    */
+  private final case class SignatureRead(rows: Array[InternalRow], complete: Boolean, fits: Boolean)
+
+  /** The driver gate of the LSH operators, after `Clustering.kmeans`:
+    * None when `sigs` (doc_id and the per-doc signature columns) has a
+    * non-LONG id or an optimizer size estimate over [[DriverBudget]], so an
+    * input at scale decides without a job. Otherwise one job reads the
+    * rows, and each partition stops after the row that takes its summed
+    * `payload` bytes past an even share of the budget, so the driver
+    * receives at most the budget and one row a partition however wrong the
+    * estimate was. The read `fits` when every partition stayed within its
+    * share (a skewed input may fall back although its total fits) and no
+    * id is NULL; otherwise the caller falls back after that one read.
+    */
+  private def readSignatures(sigs: DataFrame, payload: InternalRow => Long): Option[SignatureRead] = {
+    val spark = sigs.sparkSession
+    if (sigs.schema("doc_id").dataType != LongType || !DriverBudget.fitsEstimate(sigs)) return None
+    val rdd = sigs.queryExecution.toRdd
+    val share = DriverBudget.bytes(spark) / math.max(1, rdd.getNumPartitions)
+    val parts = spark.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
+      val rows = mutable.ArrayBuffer.empty[InternalRow]
+      var bytes = 0L
+      while (bytes <= share && it.hasNext) {
+        val r = it.next().copy()
+        bytes += payload(r)
+        rows += r
+      }
+      (rows.toArray, bytes <= share, !it.hasNext)
+    })
+    val rows = parts.flatMap(_._1)
+    Some(SignatureRead(rows, parts.forall(_._3), parts.forall(_._2) && !rows.exists(_.isNullAt(0))))
+  }
+
+  /** The driver paths' pair budget: rows of a result pair (two ids and a
+    * score, 24 bytes) that fit [[DriverBudget]].
+    */
+  private def maxLocalPairs(spark: SparkSession): Long = DriverBudget.rows(spark, 24)
+
+  /** [[bandJoin]] on the driver: the candidate pairs of one signature read
+    * as row-index pairs (i, j), `ids(i)` < `ids(j)`, sorted by id. Row i's
+    * band keys are `keys(i)`, null for a NULL signature, which shares no
+    * bucket. As in the self-join, a bucket's size counts its rows, buckets
+    * over `maxBucket` rows are skipped, and a pair is emitted once, at its
+    * first shared band whose bucket is within the cap. None, before any
+    * pair is built, when the uncapped buckets' pair instances (the sum of
+    * C(size, 2), what the loop visits) exceed `maxPairs`: a saturated band
+    * space or many duplicate families grow them with the square of the
+    * input, and the self-join spreads those over the executors instead.
+    */
+  private def bandJoinLocal(ids: Array[Long], keys: Array[Array[Long]], bands: Int,
+                            maxBucket: Int, maxPairs: Long): Option[Array[(Int, Int)]] = {
+    val buckets = Array.fill(bands)(mutable.LongMap.empty[mutable.ArrayBuffer[Int]])
+    for (i <- keys.indices if keys(i) != null; b <- 0 until bands)
+      buckets(b).getOrElseUpdate(keys(i)(b), mutable.ArrayBuffer.empty[Int]) += i
+    val instances = buckets.iterator.flatMap(_.valuesIterator).map(_.length.toLong)
+      .filter(_ <= maxBucket).map(s => s * (s - 1) / 2).sum
+    Option.when(instances <= maxPairs) {
+      def firstMatch(x: Int, y: Int): Int = (0 until bands).indexWhere(b =>
+        keys(x)(b) == keys(y)(b) && buckets(b)(keys(x)(b)).length <= maxBucket)
+      val out = for (b <- 0 until bands; members <- buckets(b).values if members.length <= maxBucket;
+                     x <- members; y <- members if ids(x) < ids(y) && firstMatch(x, y) == b)
+        yield (x, y)
+      out.sortBy { case (x, y) => (ids(x), ids(y)) }.toArray
+    }
+  }
+
+  /** An LSH operator's driver-path result: `rows` as a local relation with
+    * the distributed path's columns (doc_id_a, doc_id_b carry the type and
+    * nullability of the signature frame `sigs`' id column).
+    */
+  private def localPairs(sigs: DataFrame, rows: Seq[Row], score: StructField): DataFrame = {
+    val id = sigs.schema("doc_id")
+    sigs.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      id.copy(name = "doc_id_a"), id.copy(name = "doc_id_b"), score)))
   }
 
 
@@ -296,13 +386,15 @@ object Dedup {
     * @param maxBucket  per-bucket cap: buckets larger than this (boilerplate
     *                   explosions) are dropped — at 100 TB a single hot
     *                   bucket would otherwise produce O(n²) pairs
-    * @return (doc_id_a, doc_id_b, jaccard) with doc_id_a < doc_id_b, an
-    *         eager checkpoint: the call runs the whole pipeline and releases
-    *         its caches before it returns
+    * @return (doc_id_a, doc_id_b, jaccard) with doc_id_a < doc_id_b: a
+    *         local relation when the per-doc signatures fit the driver
+    *         budget ([[minhashLocal]]), an eager checkpoint otherwise; either
+    *         way the call runs the whole pipeline and holds no cache when it
+    *         returns
     */
   def minhashNearDuplicates(df: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                             threshold: Double = 0.7, bands: Int = 8, rows: Int = 4,
-                            maxBucket: Int = 1000): DataFrame = checkpointed { cache =>
+                            maxBucket: Int = 1000): DataFrame = {
     // shingle sets are carried as 64-bit fingerprints, not strings: the
     // pair-verification stage intersects these arrays once per candidate
     // pair, and long compares are ~10x cheaper than string compares
@@ -314,58 +406,97 @@ object Dedup {
     // array_distinct(transform(shingles(text), xxhash64)) formulation
     // (fenced in PipelineGatesSuite), SORTED so pair verification below
     // runs as a linear merge
-    val shingled = cache(df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+    val shingles = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .withColumn("__sh", graft.functions.ShingleFpExpr.shingleFp(col("__text"), 3))
       .filter(size(col("__sh")) > 0)
-      .select(col("doc_id"), col("__sh")))
+      .select(col("doc_id"), col("__sh"))
+    val bandKeys = graft.functions.MinHashBandsExpr.minhashBands(col("__sh"), bands, rows)
+    minhashLocal(shingles.select(col("doc_id"), col("__sh"), bandKeys.as("__kb")),
+      threshold, bands, maxBucket).getOrElse(checkpointed { cache =>
+      val shingled = cache(shingles)
 
-    // Signature + band buckets fused per row (functions.MinHashBandsExpr,
-    // byte-identical hash chain to the explode + per-seed MIN + concat_ws
-    // formulation it replaces — fenced in PipelineGatesSuite): the
-    // signature never leaves its row, so the 100M-row explode and the
-    // k-column groupBy-min disappear. Each exploded row CARRIES its full
-    // 8-slot band-key vector (r14 session 2) — the posexplode's Generate
-    // boundary pins minhashBands to one evaluation per doc, and the
-    // capped-set self-join sides need no per-doc kept-vector regroup.
-    // cached: slim feeds the bucket-size aggregate AND both self-join
-    // sides — without the cache the k-hash signature pass would run per
-    // consumer.
-    val slim = cache(shingled
-      .select(col("doc_id"),
-        graft.functions.MinHashBandsExpr.minhashBands(col("__sh"), bands, rows).as("__kb"))
-      .select(col("doc_id"), col("__kb"),
-        posexplode(col("__kb")).as(Seq("band", "bucket"))))
-    val candidates = bandJoin(slim, "band", "bucket", bands, maxBucket, Seq("__kb"),
-      FirstUncappedMatchExpr.firstUncappedMatch(col("__kb_a"), col("__kb_b"), _), cache)
-      .select("doc_id_a", "doc_id_b")
+      // Signature + band buckets fused per row (functions.MinHashBandsExpr,
+      // byte-identical hash chain to the explode + per-seed MIN + concat_ws
+      // formulation it replaces — fenced in PipelineGatesSuite): the
+      // signature never leaves its row, so the 100M-row explode and the
+      // k-column groupBy-min disappear. Each exploded row CARRIES its full
+      // 8-slot band-key vector (r14 session 2) — the posexplode's Generate
+      // boundary pins minhashBands to one evaluation per doc, and the
+      // capped-set self-join sides need no per-doc kept-vector regroup.
+      // cached: slim feeds the bucket-size aggregate AND both self-join
+      // sides — without the cache the k-hash signature pass would run per
+      // consumer.
+      val slim = cache(shingled
+        .select(col("doc_id"), bandKeys.as("__kb"))
+        .select(col("doc_id"), col("__kb"),
+          posexplode(col("__kb")).as(Seq("band", "bucket"))))
+      val candidates = bandJoin(slim, "band", "bucket", bands, maxBucket, Seq("__kb"),
+        FirstUncappedMatchExpr.firstUncappedMatch(col("__kb_a"), col("__kb_b"), _), cache)
+        .select("doc_id_a", "doc_id_b")
 
-    // attach the shingle sets to the (already deduplicated) candidate pairs.
-    // The shingle side is corpus-sized by definition — force a shuffle join
-    // so the optimizer can never elect to broadcast it (measured: a 20 MB
-    // broadcast threshold flips this join and costs ~1 s at sf0.1; at real
-    // scale broadcasting the corpus is fatal). Both attach exchanges are
-    // pinned to the session width (r14 session 2) once `shingled` — their
-    // hash-build side — outgrows one advisory partition of raw bytes (see
-    // lshPinWidth): the candidate-id side compresses far below its raw
-    // size, so AQE's compressed-size coalescing over-packs reducers whose
-    // shuffled-hash builds then hold hundreds of MB of shingle arrays per
-    // task (measured at the 1000× corpus as heap-death / multi-minute
-    // spill; pinned width + pinned self-join = 1.8× the grouped shape end
-    // to end).
-    val pw = lshPinWidth(shingled)
-    val pairs = pinned(candidates, pw, col("doc_id_a"))
-      .join(pinned(shingled.select(col("doc_id").as("doc_id_a"), col("__sh").as("__sh_a")),
-        pw, col("doc_id_a")).hint("shuffle_hash"), "doc_id_a")
-    val pairsB = pinned(pairs, pw, col("doc_id_b"))
-      .join(pinned(shingled.select(col("doc_id").as("doc_id_b"), col("__sh").as("__sh_b")),
-        pw, col("doc_id_b")).hint("shuffle_hash"), "doc_id_b")
+      // attach the shingle sets to the (already deduplicated) candidate pairs.
+      // The shingle side is corpus-sized by definition — force a shuffle join
+      // so the optimizer can never elect to broadcast it (measured: a 20 MB
+      // broadcast threshold flips this join and costs ~1 s at sf0.1; at real
+      // scale broadcasting the corpus is fatal). Both attach exchanges are
+      // pinned to the session width (r14 session 2) once `shingled` — their
+      // hash-build side — outgrows one advisory partition of raw bytes (see
+      // lshPinWidth): the candidate-id side compresses far below its raw
+      // size, so AQE's compressed-size coalescing over-packs reducers whose
+      // shuffled-hash builds then hold hundreds of MB of shingle arrays per
+      // task (measured at the 1000× corpus as heap-death / multi-minute
+      // spill; pinned width + pinned self-join = 1.8× the grouped shape end
+      // to end).
+      val pw = lshPinWidth(shingled)
+      val pairs = pinned(candidates, pw, col("doc_id_a"))
+        .join(pinned(shingled.select(col("doc_id").as("doc_id_a"), col("__sh").as("__sh_a")),
+          pw, col("doc_id_a")).hint("shuffle_hash"), "doc_id_a")
+      val pairsB = pinned(pairs, pw, col("doc_id_b"))
+        .join(pinned(shingled.select(col("doc_id").as("doc_id_b"), col("__sh").as("__sh_b")),
+          pw, col("doc_id_b")).hint("shuffle_hash"), "doc_id_b")
 
-    // sorted-merge jaccard: same value as size(intersect)/size(union) on
-    // the sorted-distinct fingerprint arrays, with no per-pair hash set
-    pairsB.withColumn("jaccard",
-        round(graft.functions.SortedJaccardExpr.sortedJaccard(col("__sh_a"), col("__sh_b")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_id_a", "doc_id_b", "jaccard")
+      // sorted-merge jaccard: same value as size(intersect)/size(union) on
+      // the sorted-distinct fingerprint arrays, with no per-pair hash set
+      pairsB.withColumn("jaccard",
+          round(graft.functions.SortedJaccardExpr.sortedJaccard(col("__sh_a"), col("__sh_b")), 6))
+        .filter(col("jaccard") >= threshold)
+        .select("doc_id_a", "doc_id_b", "jaccard")
+    })
+  }
+
+  /** [[minhashNearDuplicates]] on the driver, when the per-doc signatures
+    * `sigs` (doc_id, the sorted shingle fingerprints `__sh` and the band
+    * keys `__kb`, all as Spark evaluated them) fit the driver budget
+    * ([[readSignatures]]: 8 bytes per id, per band key and per shingle)
+    * and their candidate pairs fit it too; None otherwise. The band join
+    * is [[bandJoinLocal]] over `__kb`. Each candidate pair is attached to
+    * every row of its two ids, as the attach joins do, and verified with
+    * the kernel of the distributed Jaccard ([[SortedJaccardExpr]]), then
+    * Spark's `round(_, 6)` of a double (`BigDecimal` HALF_UP of its
+    * decimal string) and the threshold.
+    */
+  private def minhashLocal(sigs: DataFrame, threshold: Double, bands: Int,
+                           maxBucket: Int): Option[DataFrame] = {
+    val maxPairs = maxLocalPairs(sigs.sparkSession)
+    val payload = (r: InternalRow) => 8L * (1 + r.getArray(1).numElements + bands)
+    readSignatures(sigs, payload).filter(_.fits).flatMap { read =>
+      val rows = read.rows
+      val ids = rows.map(_.getLong(0))
+      val byId = ids.indices.groupBy(ids(_))
+      def round6(d: java.lang.Double): Double =
+        BigDecimal(d.doubleValue).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      bandJoinLocal(ids, rows.map(_.getArray(2).toLongArray), bands, maxBucket, maxPairs)
+        // a repeated id multiplies its candidates, as in the attach joins
+        .filter(_.iterator.map { case (x, y) => byId(ids(x)).length.toLong * byId(ids(y)).length }
+          .sum <= maxPairs)
+        .map { candidates =>
+          val out = for ((x, y) <- candidates; a <- byId(ids(x)); b <- byId(ids(y));
+                         j <- Option(SortedJaccardExpr.compute(rows(a).getArray(1), rows(b).getArray(1)))
+                           .map(round6) if j >= threshold)
+            yield Row(ids(x), ids(y), j)
+          localPairs(sigs, out.toSeq, StructField("jaccard", DoubleType))
+        }
+    }
   }
 
   /** EXACT n-gram Jaccard near-duplicates via an inverted shingle index:
@@ -390,22 +521,25 @@ object Dedup {
     * minhashNearDuplicates: that is the probabilistic index (k hashes per
     * doc regardless of length); this is the exact one (work proportional to
     * shared-token fan-out).
+    *
+    * @return (doc_id_a, doc_id_b, jaccard) with doc_id_a < doc_id_b, an
+    *         eager checkpoint: the call runs the whole pipeline and releases
+    *         its caches before it returns
     */
   def ngramJaccardPairs(df: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                         threshold: Double = 0.5, w: Int = 3,
-                        maxDocFreq: Int = 1000): DataFrame = {
-    // sh persisted: tok feeds both the doc-frequency count and the join,
-    // and without the cache the shingle computation runs per consumer.
-    // Both caches are process-lifetime (LRU-evicted) — batch callers may
-    // spark.catalog.clearCache() between corpora. The index tokens are the
-    // fused 64-bit shingle FINGERPRINTS (one-pass, fenced bit-identical to
-    // hashing the shingle strings), so the inverted-index shuffle carries
-    // 8-byte keys, never shingle text — jaccard counts are identical
-    // absent a 64-bit collision inside one pair's union.
-    val sh = df.select(col(idCol).as("doc_id"),
+                        maxDocFreq: Int = 1000): DataFrame = checkpointed { cache =>
+    // sh cached: tok feeds both the doc-frequency count and the join, and
+    // without the cache the shingle computation runs per consumer. Both
+    // caches are released before the call returns ([[checkpointed]]). The
+    // index tokens are the fused 64-bit shingle FINGERPRINTS (one-pass,
+    // fenced bit-identical to hashing the shingle strings), so the
+    // inverted-index shuffle carries 8-byte keys, never shingle text —
+    // jaccard counts are identical absent a 64-bit collision inside one
+    // pair's union.
+    val sh = cache(df.select(col(idCol).as("doc_id"),
         graft.functions.ShingleFpExpr.shingleFp(col(textCol), w).as("__sh"))
-      .filter(size(col("__sh")) > 0)
-      .persist()
+      .filter(size(col("__sh")) > 0))
     val tok = sh.select(col("doc_id"), explode(col("__sh")).as("__s"))
     // freq and sizes are corpus-order relations (distinct shingles / one row
     // per doc) — shuffle-hash hints keep the optimizer from ever electing to
@@ -414,7 +548,7 @@ object Dedup {
       .filter(col("__df") <= maxDocFreq).select("__s")
     // sizes measured over the SAME capped universe as the intersection —
     // mismatched universes would silently underestimate jaccard
-    val tokF = tok.join(freq.hint("shuffle_hash"), "__s").persist()
+    val tokF = cache(tok.join(freq.hint("shuffle_hash"), "__s"))
     val sizes = tokF.groupBy("doc_id").agg(count(lit(1)).as("__n")).hint("shuffle_hash")
     val common = tokF.select(col("__s"), col("doc_id").as("doc_id_a"))
       .join(tokF.select(col("__s"), col("doc_id").as("doc_id_b")), Seq("__s"))
@@ -501,18 +635,39 @@ object Dedup {
     * at the handoff `maxHamming` is rescaled by ceil(126/64) so the
     * caller's threshold keeps its proportional selectivity. Pass
     * `wideFromDocs = 0` to pin the 16-bit banding at any size.
+    *
+    * @return (doc_id_a, doc_id_b, hamming) with doc_id_a < doc_id_b: a
+    *         local relation when the per-doc signatures fit the driver
+    *         budget ([[simhashLocal]]), an eager checkpoint otherwise; either
+    *         way the call runs the whole pipeline and holds no cache when it
+    *         returns
     */
   def simhashNearDuplicates(df: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                             maxHamming: Int = 3, maxBucket: Int = 1000,
                             hashFn: Option[Column => Column] = None,
                             wideFromDocs: Long = 1000000L): DataFrame = {
+    // default (None = xxhash64) path: the fused one-pass SimHashExpr,
+    // bit-identical to the composed simhash() fold (fenced in
+    // PipelineGatesSuite); an explicit hashFn (e.g. the oracle-replayable
+    // polynomial twin) keeps the composed formulation
+    val simCol = hashFn match {
+      case None     => graft.functions.SimHashExpr.simhash64(col("__text"), 2)
+      case Some(fn) => simhash(col("__text"), hashFn = fn)
+    }
+    val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+      .withColumn("__sim", simCol)
+    // the driver path's one bounded read (16 bytes a row: id and signature)
+    val sigs = docs.select(col("doc_id"), col("__sim"))
+    val read = readSignatures(sigs, _ => 16)
     // Auto-scale escape (round 10, mirroring the semanticDedup auto-k
     // discipline): past ~1M docs the 4 x 16-bit band space SATURATES —
     // candidate volume grows ~n²/65k regardless of duplicate structure
     // (measured, PERF.md §0i: the default path OOMs at 5M docs) — so the
-    // DEFAULT entry point hands off to [[simhashNearDuplicatesWide]] when a
-    // bounded limit+count probe (stops scanning at wideFromDocs + 1 rows,
-    // cost independent of corpus size) crosses the documented threshold.
+    // DEFAULT entry point hands off to [[simhashNearDuplicatesWide]] when
+    // the document count crosses the documented threshold. The signature
+    // read above decides it when it held every row or more rows than the
+    // threshold; otherwise a bounded limit+count probe (stops scanning at
+    // wideFromDocs + 1 rows, cost independent of corpus size) does.
     // Explicit hashFn callers (the oracle-replayable polynomial twins) and
     // wideFromDocs = 0 keep the 16-bit path unconditionally. Memory note
     // (PERF.md §0i envelope): past the threshold the wide path's
@@ -526,8 +681,16 @@ object Dedup {
       // FULL row and re-read the corpus once per call — a measured +30%
       // at sf0.1); clamp the limit so thresholds >= Int.MaxValue cannot
       // overflow into a negative limit() (r10 ADVICE).
-      val probeLimit = math.min(wideFromDocs, Int.MaxValue - 1L).toInt + 1
-      if (df.select(col(idCol)).limit(probeLimit).count() > wideFromDocs) {
+      def probe: Boolean = {
+        val probeLimit = math.min(wideFromDocs, Int.MaxValue - 1L).toInt + 1
+        df.select(col(idCol)).limit(probeLimit).count() > wideFromDocs
+      }
+      val wide = read match {
+        case Some(r) if r.rows.length > wideFromDocs => true
+        case Some(r) if r.complete => false
+        case _ => probe
+      }
+      if (wide) {
         // The wide path's `hamming` is over the combined 126-bit signature,
         // so the caller's 64-bit-scale threshold is rescaled proportionally
         // (ceil(maxHamming * 126 / 64)) to preserve its selectivity MEANING
@@ -540,17 +703,12 @@ object Dedup {
         return simhashNearDuplicatesWide(df, textCol, idCol, wideHamming, maxBucket)
       }
     }
-    // default (None = xxhash64) path: the fused one-pass SimHashExpr,
-    // bit-identical to the composed simhash() fold (fenced in
-    // PipelineGatesSuite); an explicit hashFn (e.g. the oracle-replayable
-    // polynomial twin) keeps the composed formulation
-    val simCol = hashFn match {
-      case None     => graft.functions.SimHashExpr.simhash64(col("__text"), 2)
-      case Some(fn) => simhash(col("__text"), hashFn = fn)
-    }
-    checkpointed { cache =>
-      val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-        .withColumn("__sim", simCol)
+    read.filter(_.fits).flatMap { r =>
+      simhashLocal(sigs, r, maxHamming, maxBucket, s => {
+        val sim = s.getLong(1)
+        Array.tabulate(4)(c => (sim >>> (16 * c)) & 0xFFFFL)
+      }, (a, b) => java.lang.Long.bitCount(a.getLong(1) ^ b.getLong(1)))
+    }.getOrElse(checkpointed { cache =>
       // cached: feeds the bucket-size aggregate AND the self-join sides —
       // the upstream simhash computation must run once, not per branch
       val banded = cache(docs.select(col("doc_id"), col("__sim"),
@@ -568,6 +726,30 @@ object Dedup {
         .withColumn("hamming", bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))))
         .filter(col("hamming") <= maxHamming)
         .select("doc_id_a", "doc_id_b", "hamming")
+    })
+  }
+
+  /** The simhash operators on the driver, over one signature read `read`
+    * of `sigs` (doc_id, then the signature columns as Spark evaluated
+    * them): a row with a NULL signature shares no bucket; any other row's
+    * 4 band keys are `keys(row)`, recomputed from its signatures as the
+    * first-match expressions do. The band join is [[bandJoinLocal]], and
+    * each candidate pair is kept when `hamming(a, b)` — `Long.bitCount` of
+    * the XOR, what Spark's `bit_count` calls — is at most `maxHamming`.
+    * None when the candidate pairs do not fit the driver budget.
+    */
+  private def simhashLocal(sigs: DataFrame, read: SignatureRead, maxHamming: Int, maxBucket: Int,
+                           keys: InternalRow => Array[Long],
+                           hamming: (InternalRow, InternalRow) => Int): Option[DataFrame] = {
+    val rows = read.rows
+    val ids = rows.map(_.getLong(0))
+    val sigCols = 1 until sigs.schema.length
+    bandJoinLocal(ids, rows.map(r => if (sigCols.exists(r.isNullAt)) null else keys(r)), 4, maxBucket,
+      maxLocalPairs(sigs.sparkSession)).map { candidates =>
+      val out = for ((x, y) <- candidates; h = hamming(rows(x), rows(y)) if h <= maxHamming)
+        yield Row(ids(x), ids(y), h)
+      localPairs(sigs, out.toSeq,
+        StructField("hamming", IntegerType, nullable = sigs.schema.tail.exists(_.nullable)))
     }
   }
 
@@ -590,44 +772,60 @@ object Dedup {
     * (more bits flipped => less similar => a miss is acceptable). Callers
     * needing guaranteed recall at larger d must raise the band count, not
     * this parameter.
+    *
+    * @return (doc_id_a, doc_id_b, hamming) with doc_id_a < doc_id_b: a
+    *         local relation when the per-doc signatures fit the driver
+    *         budget ([[simhashLocal]]), an eager checkpoint otherwise; either
+    *         way the call runs the whole pipeline and holds no cache when it
+    *         returns
     */
   def simhashNearDuplicatesWide(df: DataFrame, textCol: String = "text",
                                 idCol: String = "doc_id",
                                 maxHamming: Int = 3,
                                 maxBucket: Int = 1000,
-                                hashFns: Option[(Column => Column, Column => Column)] = None): DataFrame =
-    checkpointed { cache =>
-      val salt = 0x9E3779B97F4A7C15L // 2^64 / golden ratio
-      // None = the fused production path; Some((fa, fb)) = two composed hash
-      // families, for the oracle-replayable polynomial twin
-      // (d_simhash_wide_poly). The fused path (r14 session 2) emits the 4
-      // (chunk, key, sa, sb) band entries from ONE generator expression —
-      // the composed shape evaluated two SimHashExpr columns per row, each
-      // re-running the whole shingle fingerprint scan (the dominant per-row
-      // cost; a collapsed Project offers no evaluate-once protection), while
-      // the Generate boundary pins the fused expression to exactly one
-      // evaluation. Keys/signatures bit-identical (PipelineGatesSuite fence).
-      val banded = cache(hashFns match {
-        case None =>
-          df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-            .select(col("doc_id"),
-              explode(graft.functions.SimHashWideBandsExpr
-                .simhashWideBands(col("__text"), 2, salt)).as("__ck"))
-            .select(col("doc_id"), col("__ck.sa").as("__sa"),
-              col("__ck.sb").as("__sb"), col("__ck.chunk"), col("__ck.key"))
-        case Some((fa, fb)) =>
-          df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-            .withColumn("__sa", simhash(col("__text"), hashFn = fa))
-            .withColumn("__sb", simhash(col("__text"), hashFn = fb))
-            .select(col("doc_id"), col("__sa"), col("__sb"),
-              explode(array(
-                struct(lit(0).as("chunk"), col("__sa").bitwiseAND(0x7FFFFFFFL).as("key")),
-                struct(lit(1).as("chunk"), shiftright(col("__sa"), 31).as("key")),
-                struct(lit(2).as("chunk"), col("__sb").bitwiseAND(0x7FFFFFFFL).as("key")),
-                struct(lit(3).as("chunk"), shiftright(col("__sb"), 31).as("key")))).as("__ck"))
-            .select(col("doc_id"), col("__sa"), col("__sb"),
-              col("__ck.chunk"), col("__ck.key"))
-      })
+                                hashFns: Option[(Column => Column, Column => Column)] = None): DataFrame = {
+    val salt = 0x9E3779B97F4A7C15L // 2^64 / golden ratio
+    // None = the fused production path; Some((fa, fb)) = two composed hash
+    // families, for the oracle-replayable polynomial twin
+    // (d_simhash_wide_poly). The fused path (r14 session 2) emits the 4
+    // (chunk, key, sa, sb) band entries from ONE generator expression —
+    // the composed shape evaluated two SimHashExpr columns per row, each
+    // re-running the whole shingle fingerprint scan (the dominant per-row
+    // cost; a collapsed Project offers no evaluate-once protection), while
+    // the Generate boundary pins the fused expression to exactly one
+    // evaluation. Keys/signatures bit-identical (PipelineGatesSuite fence).
+    val bands = hashFns match {
+      case None =>
+        df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+          .select(col("doc_id"),
+            explode(graft.functions.SimHashWideBandsExpr
+              .simhashWideBands(col("__text"), 2, salt)).as("__ck"))
+          .select(col("doc_id"), col("__ck.sa").as("__sa"),
+            col("__ck.sb").as("__sb"), col("__ck.chunk"), col("__ck.key"))
+      case Some((fa, fb)) =>
+        df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+          .withColumn("__sa", simhash(col("__text"), hashFn = fa))
+          .withColumn("__sb", simhash(col("__text"), hashFn = fb))
+          .select(col("doc_id"), col("__sa"), col("__sb"),
+            explode(array(
+              struct(lit(0).as("chunk"), col("__sa").bitwiseAND(0x7FFFFFFFL).as("key")),
+              struct(lit(1).as("chunk"), shiftright(col("__sa"), 31).as("key")),
+              struct(lit(2).as("chunk"), col("__sb").bitwiseAND(0x7FFFFFFFL).as("key")),
+              struct(lit(3).as("chunk"), shiftright(col("__sb"), 31).as("key")))).as("__ck"))
+          .select(col("doc_id"), col("__sa"), col("__sb"),
+            col("__ck.chunk"), col("__ck.key"))
+    }
+    // the driver path reads one row per doc (chunk 0; 24 bytes: id and the
+    // two signatures), the generator still evaluated once per doc
+    val sigs = bands.filter(col("chunk") === 0).select(col("doc_id"), col("__sa"), col("__sb"))
+    readSignatures(sigs, _ => 24).filter(_.fits).flatMap { r =>
+      simhashLocal(sigs, r, maxHamming, maxBucket, s => {
+        val (sa, sb) = (s.getLong(1), s.getLong(2))
+        Array(sa & 0x7FFFFFFFL, sa >> 31, sb & 0x7FFFFFFFL, sb >> 31)
+      }, (a, b) => java.lang.Long.bitCount(a.getLong(1) ^ b.getLong(1)) +
+        java.lang.Long.bitCount(a.getLong(2) ^ b.getLong(2)))
+    }.getOrElse(checkpointed { cache =>
+      val banded = cache(bands)
       // the self-join sides carry only the two 8-byte signatures; the first
       // match recomputes the 4 chunk keys from them
       bandJoin(banded, "chunk", "key", 4, maxBucket, Seq("__sa", "__sb"),
@@ -638,7 +836,8 @@ object Dedup {
             bit_count(col("__sb_a").bitwiseXOR(col("__sb_b")))).cast("int"))
         .filter(col("hamming") <= maxHamming)
         .select("doc_id_a", "doc_id_b", "hamming")
-    }
+    })
+  }
 
   // ------------------------------------------------- embedding near-dup
 

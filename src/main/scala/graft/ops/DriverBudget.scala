@@ -13,7 +13,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `LangModel.scoreBigramLmFused`'s pair counts;
   *   - 8 bytes per id and per component: `Clustering.kmeans`' quantized
   *     vectors, which are first gated on the optimizer's size estimate
-  *     ([[fitsEstimate]]).
+  *     ([[fitsEstimate]]);
+  *   - the LSH operators' per-doc signatures, gated the same way and read
+  *     in bytes (each partition stops at its share of the budget):
+  *     `Dedup.minhashNearDuplicates` at 8 bytes per id, per band key and
+  *     per shingle fingerprint, `Dedup.simhashNearDuplicates` at 16 bytes
+  *     (id and signature) and `Dedup.simhashNearDuplicatesWide` at 24 (id
+  *     and two signatures); then their candidate pairs at 24 bytes (two
+  *     ids and a score), counted from the bucket sizes before any is built.
   * A threshold <= 0 (Spark's "never broadcast") turns every driver path off.
   */
 private[graft] object DriverBudget {

@@ -56,6 +56,30 @@ object ExecProbe extends AdaptiveSparkPlanHelper {
     */
   def jobs[T](spark: SparkSession)(f: => T): (T, Long) = counted(spark, jobs = true)(f)
 
+  /** The bytes each job `f` ran sent the driver as task results, in job
+    * order.
+    */
+  def resultBytes[T](spark: SparkSession)(f: => T): (T, Seq[Long]) = {
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val bytes = new java.util.concurrent.ConcurrentHashMap[Int, AtomicLong]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        bytes.put(e.jobId, new AtomicLong)
+        e.stageIds.foreach(stageJob.put(_, e.jobId))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (m <- Option(e.taskMetrics) if stageJob.containsKey(e.stageId))
+          bytes.get(stageJob.get(e.stageId)).addAndGet(m.resultSize)
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      TestBus.drain(spark.sparkContext)
+      (r, bytes.asScala.toSeq.sortBy(_._1).map(_._2.get))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   private def counted[T](spark: SparkSession, jobs: Boolean)(f: => T): (T, Long) = {
     val n = new AtomicLong
     val l = new SparkListener {

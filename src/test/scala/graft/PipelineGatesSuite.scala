@@ -88,12 +88,21 @@ class PipelineGatesSuite extends SparkSpec {
     // RESCALES the caller's 64-bit threshold to the wide path's 126-bit
     // hamming scale: ceil(3 * 126 / 64) = 6 (r10 ADVICE — an unchanged
     // pass-through silently tightened the threshold's meaning).
-    val wide = pairSet(Dedup.simhashNearDuplicatesWide(docs, maxHamming = 6))
-    val auto = pairSet(Dedup.simhashNearDuplicates(docs, maxHamming = 3, wideFromDocs = 10))
+    // A broadcast threshold of 16 bytes keeps every call on its
+    // distributed path with the probe: it admits one 16-byte capped key
+    // (these calls cap none) but no signature read, whose size estimate
+    // exceeds it, so the limit+count probe decides the handoff
+    def probed(f: => org.apache.spark.sql.DataFrame) = {
+      val out = withConf("spark.sql.autoBroadcastJoinThreshold", "16")(f)
+      assert(out.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+      pairSet(out)
+    }
+    val wide = probed(Dedup.simhashNearDuplicatesWide(docs, maxHamming = 6))
+    val auto = probed(Dedup.simhashNearDuplicates(docs, maxHamming = 3, wideFromDocs = 10))
     assert(auto == wide, "above the threshold the default must equal the wide path at the rescaled threshold")
     // below the threshold (and with wideFromDocs = 0) the 16-bit path is pinned
-    val narrow = pairSet(Dedup.simhashNearDuplicates(docs, maxHamming = 3, wideFromDocs = 0))
-    val under = pairSet(Dedup.simhashNearDuplicates(docs, maxHamming = 3,
+    val narrow = probed(Dedup.simhashNearDuplicates(docs, maxHamming = 3, wideFromDocs = 0))
+    val under = probed(Dedup.simhashNearDuplicates(docs, maxHamming = 3,
       wideFromDocs = 1000000))
     assert(under == narrow, "below the threshold the default must stay 16-bit")
   }
@@ -325,8 +334,8 @@ class PipelineGatesSuite extends SparkSpec {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def cmp16(df: org.apache.spark.sql.DataFrame, maxHamming: Int, maxBucket: Int): Unit = {
       // wideFromDocs = 0 pins the 16-bit path under test
-      val got = Dedup.simhashNearDuplicates(df, maxHamming = maxHamming,
-          maxBucket = maxBucket, wideFromDocs = 0)
+      val got = distributedLsh(df, 16)(Dedup.simhashNearDuplicates(df, maxHamming = maxHamming,
+          maxBucket = maxBucket, wideFromDocs = 0))
         .orderBy("doc_id_a", "doc_id_b").collect()
       val want = ref16(df, maxHamming, maxBucket, None)
         .orderBy("doc_id_a", "doc_id_b").collect()
@@ -365,8 +374,8 @@ class PipelineGatesSuite extends SparkSpec {
         .select("doc_id_a", "doc_id_b", "hamming")
     }
     def cmpWide(df: org.apache.spark.sql.DataFrame, maxHamming: Int, maxBucket: Int): Unit = {
-      val got = Dedup.simhashNearDuplicatesWide(df, maxHamming = maxHamming,
-          maxBucket = maxBucket)
+      val got = distributedLsh(df, 24)(Dedup.simhashNearDuplicatesWide(df, maxHamming = maxHamming,
+          maxBucket = maxBucket))
         .orderBy("doc_id_a", "doc_id_b").collect()
       val want = refWide(df, maxHamming, maxBucket)
         .orderBy("doc_id_a", "doc_id_b").collect()
@@ -417,8 +426,8 @@ class PipelineGatesSuite extends SparkSpec {
     }
     def cmp(df: org.apache.spark.sql.DataFrame, threshold: Double,
             bands: Int, rows: Int, maxBucket: Int): Unit = {
-      val got = Dedup.minhashNearDuplicates(df, threshold = threshold,
-          bands = bands, rows = rows, maxBucket = maxBucket)
+      val got = distributedLsh(df, 8 * (bands + 2))(Dedup.minhashNearDuplicates(df,
+          threshold = threshold, bands = bands, rows = rows, maxBucket = maxBucket))
         .orderBy("doc_id_a", "doc_id_b").collect()
       val want = ref(df, threshold, bands, rows, maxBucket)
         .orderBy("doc_id_a", "doc_id_b").collect()
@@ -463,32 +472,214 @@ class PipelineGatesSuite extends SparkSpec {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy(df.columns(0), df.columns(1)).collect().toSeq
-    def ab(f: => org.apache.spark.sql.DataFrame): (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
-      val fast = rows(f)
+    // width > 0: the least payload of a driver-path read row, kept off with
+    // distributedLsh; 0: an operator with no driver path
+    def ab(in: org.apache.spark.sql.DataFrame, width: Int)(
+        f: => org.apache.spark.sql.DataFrame): (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
+      val fast = rows(if (width > 0) distributedLsh(in, width)(f) else f)
       val grouped = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(rows(f))
       (fast, grouped)
     }
-    val (m1, m2) = ab(Dedup.minhashNearDuplicates(fam, threshold = 0.0,
+    val (m1, m2) = ab(fam, 80)(Dedup.minhashNearDuplicates(fam, threshold = 0.0,
       bands = 8, rows = 2, maxBucket = 2))
     assert(m1 == m2, s"minhash dispatch diverges: ${m1.length} vs ${m2.length}")
-    val (mc1, mc2) = ab(Dedup.minhashNearDuplicates(corpus, threshold = 0.5,
+    val (mc1, mc2) = ab(corpus, 80)(Dedup.minhashNearDuplicates(corpus, threshold = 0.5,
       bands = 8, rows = 4, maxBucket = 3))
     assert(mc1 == mc2, s"minhash corpus dispatch diverges: ${mc1.length} vs ${mc2.length}")
-    val (s1, s2) = ab(Dedup.simhashNearDuplicates(fam, maxHamming = 20,
+    val (s1, s2) = ab(fam, 16)(Dedup.simhashNearDuplicates(fam, maxHamming = 20,
       maxBucket = 2, wideFromDocs = 0))
     assert(s1 == s2, s"sim16 dispatch diverges: ${s1.length} vs ${s2.length}")
-    val (w1, w2) = ab(Dedup.simhashNearDuplicatesWide(fam, maxHamming = 40,
+    val (w1, w2) = ab(fam, 24)(Dedup.simhashNearDuplicatesWide(fam, maxHamming = 40,
       maxBucket = 2))
     assert(w1 == w2, s"wide dispatch diverges: ${w1.length} vs ${w2.length}")
     // one band: over budget the cap is a join against the bucket sizes;
     // the cap of 30 drops pairs, so some bucket is capped
-    val (e1, e2) = ab(Dedup.embeddingNearDuplicates(emb, minCosine = 0.3, planes = 4,
+    val (e1, e2) = ab(emb, 0)(Dedup.embeddingNearDuplicates(emb, minCosine = 0.3, planes = 4,
       maxBucket = 30))
     val uncapped = Dedup.embeddingNearDuplicates(emb, minCosine = 0.3, planes = 4,
       maxBucket = Int.MaxValue).count()
     info(s"embedding: ${e1.length} of $uncapped pairs under the cap")
     assert(e1.nonEmpty && e1.length < uncapped, s"${e1.length} of $uncapped pairs under the cap")
     assert(e1 == e2, s"embedding dispatch diverges: ${e1.length} vs ${e2.length}")
+  }
+
+  /** Run the LSH operator `f` over `in` on its distributed path with the
+    * capped set, and check it took that path. `width` is the least payload
+    * a row of the operator's driver-path signature read counts (minhash
+    * 8 × (bands + 2), at one shingle; simhash 16, wide 24). The broadcast
+    * threshold is `width` bytes for every row of `in` but one: the signature reads of
+    * these fences do not fit it, while the 16-byte capped set keeps room
+    * for width / 16 keys per row but one, more than their corpora cap.
+    */
+  private def distributedLsh(in: org.apache.spark.sql.DataFrame, width: Int)(
+      f: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val threshold = width.toLong * (in.count() - 1)
+    val out = withConf("spark.sql.autoBroadcastJoinThreshold", threshold.toString)(f)
+    assert(out.queryExecution.optimizedPlan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      s"threshold $threshold: not the distributed path")
+    out
+  }
+
+  /** An LSH operator's driver path (the default broadcast threshold; the
+    * result is a local relation) against its distributed path (threshold
+    * -1; the eager checkpoint's LogicalRDD), in rows and in schema. With
+    * `driver = false` the input must take the distributed path both times.
+    * Returns the sorted rows.
+    */
+  private def lshBothPaths(f: => org.apache.spark.sql.DataFrame,
+                           driver: Boolean = true): Seq[org.apache.spark.sql.Row] = {
+    def run() = {
+      val out = f
+      (out.queryExecution.optimizedPlan, out.schema,
+        out.orderBy(out.columns.map(col): _*).collect().toSeq)
+    }
+    val (onPlan, onSchema, on) = run()
+    val (offPlan, offSchema, off) = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run())
+    assert(onPlan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] == driver,
+      s"driver path expected: $driver, plan:\n$onPlan")
+    assert(offPlan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD], s"plan:\n$offPlan")
+    assert(onSchema == offSchema, s"schema $onSchema vs $offSchema")
+    assert(on == off, s"rows diverge: ${on.length} vs ${off.length}\n${on.take(10)}\nvs\n${off.take(10)}")
+    on
+  }
+
+  test("LSH band join on the driver equals the distributed band join (corpus)") {
+    val poly = Some(Dedup.polyStringHash(_: org.apache.spark.sql.Column))
+    val polyPair = Some((Dedup.polyStringHash(_: org.apache.spark.sql.Column),
+      Dedup.polyStringHash(_: org.apache.spark.sql.Column, 37L)))
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val corpus = spark.read.parquet(docs.inputFiles.head.replace("sf0.01", sf))
+      val counts = Seq(
+        "minhash 0.5" -> lshBothPaths(Dedup.minhashNearDuplicates(corpus, threshold = 0.5)),
+        "minhash 0.7" -> lshBothPaths(Dedup.minhashNearDuplicates(corpus, threshold = 0.7)),
+        "simhash xxhash64" -> lshBothPaths(Dedup.simhashNearDuplicates(corpus, maxHamming = 12)),
+        "simhash poly" -> lshBothPaths(Dedup.simhashNearDuplicates(corpus, maxHamming = 12,
+          hashFn = poly)),
+        "wide fused" -> lshBothPaths(Dedup.simhashNearDuplicatesWide(corpus, maxHamming = 3)),
+        "wide poly" -> lshBothPaths(Dedup.simhashNearDuplicatesWide(corpus, maxHamming = 3,
+          hashFns = polyPair))).map { case (n, r) => s"$n ${r.length}" }
+      info(s"$sf: ${counts.mkString(", ")}")
+    }
+  }
+
+  test("LSH band join on the driver equals the distributed band join (crafted inputs)") {
+    import spark.implicits._
+    val words = (1 to 30).map(i => s"w$i").mkString(" ")
+    // near-dup families over a cap of 2: many buckets hold 3+ docs, so a
+    // pair's first shared band is often capped and it must surface at its
+    // first uncapped one; 1/2 and 5/6 are exact duplicates sharing every
+    // band; NULL, empty and 1-word texts, more of each than the cap
+    val fam = Seq[(java.lang.Long, String)](
+      (1L, words), (2L, words),
+      (3L, words.replace("w30", "zz")), (4L, words.replace("w29", "qq")),
+      (5L, "completely different text about other things entirely here now"),
+      (6L, "completely different text about other things entirely here now"),
+      (7L, words + " tail"), (8L, null), (9L, null), (10L, null), (11L, ""), (12L, ""), (13L, ""),
+      (14L, "one"), (15L, "one"), (16L, "one"), (17L, "two"))
+      .toDF("doc_id", "text").repartition(2)
+    for (cap <- Seq(2, 1000)) {
+      lshBothPaths(Dedup.minhashNearDuplicates(fam, threshold = 0.0, bands = 8, rows = 2, maxBucket = cap))
+      lshBothPaths(Dedup.minhashNearDuplicates(fam, threshold = 0.7, maxBucket = cap))
+      lshBothPaths(Dedup.simhashNearDuplicates(fam, maxHamming = 20, maxBucket = cap))
+      lshBothPaths(Dedup.simhashNearDuplicates(fam, maxHamming = 20, maxBucket = cap,
+        hashFn = Some(Dedup.polyStringHash(_))))
+      lshBothPaths(Dedup.simhashNearDuplicatesWide(fam, maxHamming = 40, maxBucket = cap))
+      lshBothPaths(Dedup.simhashNearDuplicatesWide(fam, maxHamming = 40, maxBucket = cap,
+        hashFns = Some((Dedup.polyStringHash(_), Dedup.polyStringHash(_, 37L)))))
+    }
+    // 2 of 3 shingles shared: Jaccard 0.666666…, which only its rounding
+    // to 6 places (0.666667) puts on the threshold
+    val third = Seq((1L, "a b c d"), (2L, "a b c d e")).toDF("doc_id", "text")
+    val onIt = lshBothPaths(Dedup.minhashNearDuplicates(third, threshold = 0.666667,
+      bands = 16, rows = 1))
+    assert(onIt.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) == Seq((1L, 2L, 0.666667)))
+    // a repeated id: the kept-vector fallback cannot group it (its map of
+    // band keys gets a duplicate key), so the driver path is held to the
+    // capped-set band join, whose attach joins pair it with both rows
+    val twice = fam.union(Seq[(java.lang.Long, String)]((7L, words.replace("w1 ", "x1 ")))
+      .toDF("doc_id", "text"))
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.orderBy(df.columns.map(col): _*).collect().toSeq
+    val withSeven = for ((width, op) <- Seq[(Int, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        80 -> (Dedup.minhashNearDuplicates(_, threshold = 0.0, bands = 8, rows = 2)),
+        16 -> (Dedup.simhashNearDuplicates(_, maxHamming = 20)),
+        24 -> (Dedup.simhashNearDuplicatesWide(_, maxHamming = 40)))) yield {
+      val local = op(twice)
+      assert(local.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      val on = sorted(local)
+      assert(on == sorted(distributedLsh(twice, width)(op(twice))))
+      on.count(r => r.getLong(0) == 7L || r.getLong(1) == 7L)
+    }
+    assert(withSeven.sum >= 2, s"pairs of id 7 per operator: $withSeven")
+    // ids the driver path does not take: not LONG, or NULL
+    val intIds = fam.select(col("doc_id").cast("int").as("doc_id"), col("text"))
+    val nullId = fam.union(Seq[(java.lang.Long, String)]((null, words)).toDF("doc_id", "text"))
+    for (in <- Seq(intIds, nullId)) {
+      lshBothPaths(Dedup.minhashNearDuplicates(in, threshold = 0.0, bands = 8, rows = 2,
+        maxBucket = 2), driver = false)
+      lshBothPaths(Dedup.simhashNearDuplicates(in, maxHamming = 20, maxBucket = 2), driver = false)
+      lshBothPaths(Dedup.simhashNearDuplicatesWide(in, maxHamming = 40, maxBucket = 2),
+        driver = false)
+    }
+  }
+
+  test("simhash wideFromDocs handoff on the driver path: decided by the signature read") {
+    val corpus = spark.read.parquet(docs.inputFiles.head.replace("sf0.01", "sf0.001"))
+    val wide = lshBothPaths(Dedup.simhashNearDuplicatesWide(corpus, maxHamming = 6))
+    val auto = lshBothPaths(Dedup.simhashNearDuplicates(corpus, maxHamming = 3, wideFromDocs = 10))
+    assert(auto == wide, "above wideFromDocs the default must equal the wide path")
+    // the 16-bit signature read and the wide one; no limit+count probe
+    val (_, jobs) = ExecProbe.jobs(spark)(
+      Dedup.simhashNearDuplicates(corpus, maxHamming = 3, wideFromDocs = 10))
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("LSH driver path falls back when its candidate pairs outgrow the driver budget") {
+    import spark.implicits._
+    // 100 families of 10 exact duplicates at a cap of 10: every family
+    // fills one uncapped bucket per band, 45 pair instances each. At a
+    // 200 kB threshold each operator's signature read fits (minhash about
+    // 104 bytes a doc, simhash 16, wide 24, 1,000 docs), but its pair
+    // instances (minhash 8 bands x 4,500, simhash 4 x 4,500) do not fit
+    // 200 kB / 24 = 8,333 pairs; at the default threshold they do
+    val fam = (0 until 1000).map(i => (i.toLong, {
+      val f = i / 10
+      s"family $f alpha$f beta$f gamma$f delta$f"
+    })).toDF("doc_id", "text").repartition(2)
+    val ops = Seq[() => org.apache.spark.sql.DataFrame](
+      () => Dedup.minhashNearDuplicates(fam, threshold = 0.7, maxBucket = 10),
+      () => Dedup.simhashNearDuplicates(fam, maxHamming = 3, maxBucket = 10),
+      () => Dedup.simhashNearDuplicatesWide(fam, maxHamming = 3, maxBucket = 10))
+    for (op <- ops) {
+      val local = lshBothPaths(op())
+      assert(local.length == 4500, s"${local.length} pairs")
+      val fellBack = withConf("spark.sql.autoBroadcastJoinThreshold", "200000")(
+        lshBothPaths(op(), driver = false))
+      assert(fellBack == local)
+    }
+  }
+
+  test("LSH signature read is bounded in bytes when the size estimate undercounts") {
+    import spark.implicits._
+    // 20 documents of 2,000 words: about 16 kB of shingle fingerprints
+    // each, 320 kB in all, while the optimizer sizes a string at 20 bytes
+    // and an array at 8, so the estimate fits a 100 kB threshold. Each of
+    // the 2 partitions stops after the row that takes it past 50 kB, so
+    // no job sends the driver more than the budget and one row a
+    // partition, and the operator falls back to its distributed path
+    val long = (0 until 20).map(d => (d.toLong,
+      (0 until 2000).map(i => if (i % 100 == d) s"x$d" else s"w$i").mkString(" ")))
+      .toDF("doc_id", "text").repartition(2)
+    def op() = Dedup.minhashNearDuplicates(long, threshold = 0.5)
+    val local = lshBothPaths(op())
+    assert(local.nonEmpty)
+    val budget = 100000L
+    val (fellBack, perJob) = withConf("spark.sql.autoBroadcastJoinThreshold", budget.toString)(
+      ExecProbe.resultBytes(spark)(lshBothPaths(op(), driver = false)))
+    assert(fellBack == local)
+    val row = 8L * (1 + 1998 + 8 + 8)
+    assert(perJob.max <= budget + 2 * row + 16384 && perJob.max < 20 * row,
+      s"a job sent ${perJob.max} bytes to the driver (jobs: $perJob)")
   }
 
   /** Run `f` at shuffle width `width`, with `confs` set, restoring both. */
@@ -513,10 +704,12 @@ class PipelineGatesSuite extends SparkSpec {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val width = 8
     val cases = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      "minhash" -> (() => Dedup.minhashNearDuplicates(corpus, threshold = 0.5)),
-      "simhash 16-bit" -> (() => Dedup.simhashNearDuplicates(corpus, maxHamming = 12,
-        wideFromDocs = 0)),
-      "simhash wide" -> (() => Dedup.simhashNearDuplicatesWide(corpus, maxHamming = 3)))
+      "minhash" -> (() => distributedLsh(corpus, 80)(Dedup.minhashNearDuplicates(corpus,
+        threshold = 0.5))),
+      "simhash 16-bit" -> (() => distributedLsh(corpus, 16)(Dedup.simhashNearDuplicates(corpus,
+        maxHamming = 12, wideFromDocs = 0))),
+      "simhash wide" -> (() => distributedLsh(corpus, 24)(Dedup.simhashNearDuplicatesWide(corpus,
+        maxHamming = 3))))
     for ((name, f) <- cases) {
       val (free, freeEx) = withConfs(width)(ExecProbe.exchanges(spark)(pairSet(f())))
       val (pinned, pinEx) = withConfs(width,
@@ -559,7 +752,8 @@ class PipelineGatesSuite extends SparkSpec {
     val width = 8
     for (n <- Seq(3, 12)) {
       val (_, ex) = withConfs(width, "graft.lsh.pinnedWidth" -> n.toString)(
-        ExecProbe.exchanges(spark)(pairSet(Dedup.minhashNearDuplicates(corpus, threshold = 0.5))))
+        ExecProbe.exchanges(spark)(pairSet(distributedLsh(corpus, 80)(
+          Dedup.minhashNearDuplicates(corpus, threshold = 0.5)))))
       val pinned = ex.filter(_.origin == "REPARTITION_BY_NUM")
       info(s"pinnedWidth=$n: ${pinned.map(e => s"${e.keys.mkString(",")}@${e.width}")}")
       val (selfJoin, attach) = pinned.partition(_.keys == Seq("band", "bucket"))

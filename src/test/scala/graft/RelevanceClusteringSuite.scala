@@ -170,6 +170,20 @@ class RelevanceClusteringSuite extends SparkSpec {
     }
   }
 
+  test("kmeans: a NULL vector among the initial centroids is an argument error on both paths") {
+    val in = Seq[(java.lang.Long, Seq[java.lang.Double])](
+        (0L, null), (1L, Seq(1.0, 2.0)), (2L, Seq(3.0, 4.0)))
+      .toDF("vec_id", "embedding").repartition(2)
+    for (threshold <- Seq(None, Some("-1"))) {
+      val e = intercept[IllegalArgumentException](threshold.fold(
+        Clustering.kmeans(in, k = 2, iters = 1).collect())(t =>
+        withConf("spark.sql.autoBroadcastJoinThreshold", t)(
+          Clustering.kmeans(in, k = 2, iters = 1).collect())))
+      assert(e.getMessage.contains("kmeans") && e.getMessage.contains("vec_id 0"),
+        s"threshold $threshold: ${e.getMessage}")
+    }
+  }
+
   test("semanticDedup: same rows with k-means on the driver or distributed") {
     import graft.ops.Dedup
     for (k <- Seq(8, 0)) {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -44,35 +46,69 @@ class TaskBudgetSuite extends SparkSpec {
       }
     }
 
-  // The LSH operators return an eager checkpoint of their pairs: the
-  // result owns its checkpoint blocks (freed by Spark's ContextCleaner),
-  // so the persisted-RDD count above cannot tell a released cache from a
-  // result. Their caches are counted in the cache manager instead, on both
-  // dispatches (capped set, and the kept-vector fallback the broadcast
-  // threshold's -1 forces), with a caller's cache of the input in place.
-  private val lshOps = Seq[(String, () => DataFrame, DataFrame => DataFrame)](
-    ("minhashNearDuplicates", () => docs, Dedup.minhashNearDuplicates(_, threshold = 0.5, maxBucket = 3)),
-    ("simhashNearDuplicates", () => docs, Dedup.simhashNearDuplicates(_, maxHamming = 12, maxBucket = 3)),
-    ("simhashNearDuplicatesWide", () => docs,
+  // The LSH operators return an eager checkpoint of their pairs when they
+  // run distributed: the result owns its checkpoint blocks (freed by
+  // Spark's ContextCleaner), so the persisted-RDD count above cannot tell a
+  // released cache from a result. Their caches are counted in the cache
+  // manager instead, on every dispatch (the capped set; the kept-vector
+  // fallback the broadcast threshold's -1 forces; the driver path, which
+  // also leaves the persisted RDDs as found), with a caller's cache of the
+  // input in place. The second field is the operator's driver-path read
+  // width (0: no driver path): the capped-set case sets the threshold to
+  // that many bytes for every input row but one, which the signature read
+  // cannot fit but the 16-byte capped set of these calls does.
+  private val lshOps = Seq[(String, Int, () => DataFrame, DataFrame => DataFrame)](
+    ("minhashNearDuplicates", 80, () => docs,
+      Dedup.minhashNearDuplicates(_, threshold = 0.5, maxBucket = 3)),
+    ("simhashNearDuplicates", 16, () => docs,
+      Dedup.simhashNearDuplicates(_, maxHamming = 12, maxBucket = 3)),
+    ("simhashNearDuplicatesWide", 24, () => docs,
       Dedup.simhashNearDuplicatesWide(_, maxHamming = 40, maxBucket = 3)),
     // one band: the fallback is the join against the bucket sizes
-    ("embeddingNearDuplicates", () => emb,
+    ("embeddingNearDuplicates", 0, () => emb,
       Dedup.embeddingNearDuplicates(_, minCosine = 0.3, planes = 4, maxBucket = 8)))
 
-  for ((name, in, op) <- lshOps; (dispatch, threshold) <- Seq(
-      "capped set" -> None, "kept-vector fallback" -> Some("-1")))
+  for ((name, width, in, op) <- lshOps;
+       dispatch <- Seq("capped set", "kept-vector fallback", "driver path")
+       if dispatch != "driver path" || width > 0)
     test(s"$name [$dispatch]: cache manager left as found") {
+      val threshold = dispatch match {
+        case "capped set" if width > 0 => Some((width.toLong * (in().count() - 1)).toString)
+        case "kept-vector fallback" => Some("-1")
+        case _ => None
+      }
       spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val input = in().persist()
-      try {
-        val rows = threshold.fold(op(input).collect())(t =>
-          withConf("spark.sql.autoBroadcastJoinThreshold", t)(op(input).collect()))
+      val out = try {
+        val out = threshold.fold(op(input))(t =>
+          withConf("spark.sql.autoBroadcastJoinThreshold", t)(op(input)))
+        val rows = out.collect()
         info(s"${rows.length} rows")
         assert(rows.nonEmpty)
         assert(input.storageLevel != StorageLevel.NONE, s"$name dropped the caller's cache")
+        out
       } finally input.unpersist()
       assert(spark.sharedState.cacheManager.isEmpty, s"$name left cache manager entries")
+      val plan = out.queryExecution.optimizedPlan
+      if (dispatch == "driver path") {
+        assert(plan.isInstanceOf[LocalRelation], s"$name ran distributed")
+        val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(left.isEmpty, s"$name left RDDs ${left.mkString(", ")} persisted")
+      } else if (width > 0) assert(plan.isInstanceOf[LogicalRDD], s"$name ran on the driver")
     }
+
+  test("ngramJaccardPairs: cache manager left as found") {
+    spark.catalog.clearCache()
+    val input = docs.persist()
+    try {
+      val rows = Dedup.ngramJaccardPairs(input, threshold = 0.5).collect()
+      info(s"${rows.length} rows")
+      assert(rows.nonEmpty)
+      assert(input.storageLevel != StorageLevel.NONE, "ngramJaccardPairs dropped the caller's cache")
+    } finally input.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty, "ngramJaccardPairs left cache manager entries")
+  }
 
   // the embeddings table beside the documents table
   private lazy val emb = spark.read.parquet(docs.inputFiles.head.replace("documents", "embeddings"))
@@ -88,9 +124,13 @@ class TaskBudgetSuite extends SparkSpec {
 
   // in brackets: the jobs the same calls cost with one job per round or
   // per size decision, then (LM, k-means) the budget they had while they
-  // trained in Spark at this size; each budget sits below them. Inputs are
+  // trained in Spark at this size, and (minhash, simhash) what their
+  // distributed band join costs here; each budget sits below them. Inputs are
   // built first, so only the operator and the read of its result are counted
   private val jobOps = Seq[(String, Int, () => DataFrame, DataFrame => DataFrame)](
+    ("minhashNearDuplicates", 1, () => docs,
+      Dedup.minhashNearDuplicates(_, threshold = 0.7, bands = 8, rows = 4)), // [11]
+    ("simhashNearDuplicates", 1, () => docs, Dedup.simhashNearDuplicates(_, maxHamming = 6)), // [9]
     ("connectedComponents", 1, () => localPairs, Dedup.connectedComponents(_)), // [8]
     ("scoreBigramLmFused", 4, () => docs, LangModel.scoreBigramLmFused(_)), // [15, 10]
     ("kmeans(iters = 2)", 2, () => emb, Clustering.kmeans(_, k = 8, iters = 2)), // [10, 7]
