@@ -1099,7 +1099,7 @@ object SparkEntry {
       // carries the class prior out of its own pass (per-doc NULL-token
       // terminator), so the pipeline is ONE training corpus pass + ONE
       // zero-exchange scoring projection — fenced bit-identical against
-      // the composed trainNaiveBayes + scoreNaiveBayesAuto chain
+      // the composed trainNaiveBayes + scoreNaiveBayes chain
       Classifier.trainAndScoreNaiveBayes(docs(s, dir), col("lang") === "en",
           minCount = 2)
         .orderBy("doc_id")),

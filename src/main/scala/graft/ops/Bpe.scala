@@ -62,16 +62,14 @@ object Bpe {
     // rounds in BpeSuite, incl. tie and supplementary-codepoint cases.
     // The corpus-sized work (word count) stays in Spark either way; the
     // distributed rounds remain for a configured vocabulary past the
-    // collect budget (graft.bpe.localMaxWords).
-    // Default MEASURED, not guessed (r14, ProbeBpeHeap): the collected
-    // vocab (freq + per-codepoint symbol arrays) retains ~68 MB at 100k
-    // words and ~642 MB at 1M, and the 10 single-core merge passes take
-    // ~4 s / ~10 s respectively. 200k (~130 MB, ~5 s) keeps the driver
-    // comfortable; raise the conf on a fat-driver deployment. The probe:
+    // driver budget ([[DriverBudget]]) at 650 bytes a word: MEASURED, not
+    // guessed (r14, ProbeBpeHeap), the collected vocab (freq + per-codepoint
+    // symbol arrays) retains ~68 MB at 100k words and ~642 MB at 1M, and
+    // the 10 single-core merge passes take ~4 s / ~10 s respectively —
+    // ~16k words at the default 10 MB threshold. The probe:
     // `git show bbeb2bc:src/main/scala/graft/tools/ProbeBpeHeap.scala`
-    val localMax = spark.conf.getOption("graft.bpe.localMaxWords")
-      .map(_.toLong).getOrElse(200000L)
-    if (topWords <= localMax) return learnMergesLocal(spark, words, nMerges)
+    val localMax = DriverBudget.rows(spark, 650)
+    if (localMax > 0 && topWords <= localMax) return learnMergesLocal(spark, words, nMerges)
     var vocab: Dataset[(String, Long, Seq[String])] = words
       .select(col("word"), col("freq"),
         // split('') leaves a trailing empty match in Spark (limit -1) —

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{NbProbe, NbTokenSumExpr}
 
@@ -122,13 +121,13 @@ object Classifier {
     * Zipf-head-sized, not corpus-sized — and ships once per executor as a
     * broadcast. The corpus is touched once for the prior (column-pruned
     * label scan) and once for scoring, with zero scoring-side shuffles.
-    * Callers gate on model cardinality ([[scoreNaiveBayesAuto]]); the
-    * composed join path remains the fallback above the broadcast budget.
+    * [[trainAndScoreNaiveBayes]] takes it only when the model fits
+    * [[DriverBudget]]; a shuffle join remains the fallback above it.
     */
-  def scoreNaiveBayesBroadcast(docs: DataFrame, model: DataFrame,
-                               isPositive: Column,
-                               textCol: String = "text",
-                               idCol: String = "doc_id"): DataFrame = {
+  private[graft] def scoreNaiveBayesBroadcast(docs: DataFrame, model: DataFrame,
+                                              isPositive: Column,
+                                              textCol: String = "text",
+                                              idCol: String = "doc_id"): DataFrame = {
     // prior computed BY SPARK with the composed path's exact expression
     // tree (bit-identity discipline — Scala never rounds). It rides the
     // scoring action as a broadcast subtree (the shuffle path's own
@@ -172,50 +171,13 @@ object Classifier {
       .withColumn("pred", col("score_micro") > 0L)
   }
 
-  /** Scorer dispatch: broadcast-probe when the pruned model fits the
-    * broadcast budget (`graft.nb.broadcastMaxRows`, default 8M tokens —
-    * comfortably under a production executor's broadcast headroom),
-    * composed join path otherwise. The model frame is persisted across
-    * the cardinality check and probe collect so its corpus-sized training
-    * pass runs once (same discipline as LangModel.scoreBigramLmAuto).
-    */
-  def scoreNaiveBayesAuto(docs: DataFrame, model: DataFrame, isPositive: Column,
-                          textCol: String = "text",
-                          idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    val maxRows = spark.conf.getOption("graft.nb.broadcastMaxRows")
-      .map(_.toLong).getOrElse(8000000L)
-    val modelP = model.persist(StorageLevel.MEMORY_AND_DISK)
-    val rows = modelP.count()
-    if (rows <= maxRows) {
-      try scoreNaiveBayesBroadcast(docs, modelP, isPositive, textCol, idCol)
-      finally modelP.unpersist(false)
-    } else {
-      // over-budget vocabulary: the composed path's broadcast(model) hint
-      // would be equally unsafe, so route through a shuffle join instead —
-      // drop the cache so a corpus-scale model's blocks don't pin memory
-      modelP.unpersist(false)
-      scoreNaiveBayesShuffle(docs, modelP, isPositive, textCol, idCol)
-    }
-  }
-
-  /** Composed scorer with a shuffle_hash model join — the over-budget
-    * fallback of [[scoreNaiveBayesAuto]] (identical arithmetic to
+  /** The composed scorer with a shuffle_hash model join and a
+    * caller-supplied prior: the over-budget path of
+    * [[trainAndScoreNaiveBayes]] (identical arithmetic to
     * [[scoreNaiveBayes]]; only the join strategy differs, because a model
     * past the broadcast budget must never be elected a broadcast side).
     */
   private def scoreNaiveBayesShuffle(docs: DataFrame, model: DataFrame,
-                                     isPositive: Column, textCol: String,
-                                     idCol: String): DataFrame = {
-    val prior = docs.agg(
-      round(log(
-        (sum(when(isPositive, 1L).otherwise(0L)) + lit(1.0)) /
-          (sum(when(isPositive, 0L).otherwise(1L)) + lit(1.0))) * lit(1e6))
-        .cast("bigint").as("prior_micro"))
-    scoreNaiveBayesShuffleWithPrior(docs, model, prior, textCol, idCol)
-  }
-
-  private def scoreNaiveBayesShuffleWithPrior(docs: DataFrame, model: DataFrame,
                                               prior: DataFrame, textCol: String,
                                               idCol: String): DataFrame = {
     val tokSums = docs
@@ -236,7 +198,7 @@ object Classifier {
   /** Fused trainer + scorer (r14): the whole train-and-score pipeline with
     * ONE training-side corpus pass and ONE scoring-side corpus pass.
     *
-    * The composed formulation (trainNaiveBayes + scoreNaiveBayesAuto) scans
+    * The composed formulation (trainNaiveBayes + scoreNaiveBayes) scans
     * the corpus THREE times: the token-keyed training explode, the
     * column-pruned label scan for the class prior, and the scoring scan.
     * Here the training explode carries the prior out of its own pass with
@@ -254,16 +216,16 @@ object Classifier {
     * Scale shape (100 TB): identical to the composed path's training
     * shuffle (one token-keyed exchange, map-side combined; the terminator
     * adds one row per document, ~1% of token volume) — minus one full
-    * corpus scan. Scorer dispatch is [[scoreNaiveBayesAuto]]'s: broadcast
-    * probe under `graft.nb.broadcastMaxRows`, shuffle join above it.
+    * corpus scan. Scorer dispatch: the broadcast probe when the model's
+    * (token, w_micro) rows fit [[DriverBudget]] at Spark's estimated width
+    * of that row (36 bytes: ~291k tokens at the default 10 MB threshold),
+    * a shuffle join above it or with the threshold <= 0.
     */
   def trainAndScoreNaiveBayes(docs: DataFrame, isPositive: Column,
                               textCol: String = "text",
                               idCol: String = "doc_id",
                               minCount: Int = 2): DataFrame = {
     val spark = docs.sparkSession
-    val maxRows = spark.conf.getOption("graft.nb.broadcastMaxRows")
-      .map(_.toLong).getOrElse(8000000L)
     val term = array(lit(null).cast("string"))
     val stream = docs.select(isPositive.as("__pos"),
       // null/absent text still contributes its terminator (concat of a
@@ -274,8 +236,8 @@ object Classifier {
     // vocabulary totals broadcast AND the main scan, and the prior and
     // model reads read it again — a cold cache would race. The build job
     // also counts the cache's rows, which bound the model's (a filtered
-    // subset joined to one row), so the model is counted against
-    // `graft.nb.broadcastMaxRows` only when that bound does not fit.
+    // subset joined to one row), so the model is counted against the
+    // driver budget only when that bound does not fit.
     val (counts0, nTokens) = EagerCache.build(stream.groupBy("token").agg(
         sum(when(col("__pos"), 1L).otherwise(0L)).as("n_pos"),
         sum(when(col("__pos"), 0L).otherwise(1L)).as("n_neg")))
@@ -303,12 +265,13 @@ object Classifier {
           .cast("bigint").as("prior_micro"))
       val prior = spark.createDataFrame(
         java.util.Arrays.asList(priorQ.collect(): _*), priorQ.schema)
+      val maxRows = DriverBudget.rows(model.select(col("token"), col("w_micro")))
       // the broadcast scorer collects the model into its probe; the
       // shuffle scorer reads it lazily, so its returned plan keeps the
       // cache (see EagerCache.release)
-      if (nTokens <= maxRows || model.count() <= maxRows)
+      if (maxRows > 0 && (nTokens <= maxRows || model.count() <= maxRows))
         scoreNaiveBayesBroadcastWithPrior(docs, model, prior, textCol, idCol)
-      else { keep = true; scoreNaiveBayesShuffleWithPrior(docs, model, prior, textCol, idCol) }
+      else { keep = true; scoreNaiveBayesShuffle(docs, model, prior, textCol, idCol) }
     } finally if (!keep) EagerCache.release(counts0)
   }
 }

@@ -101,7 +101,7 @@ object Clustering {
     * The centroids come back as a local relation: the next round reads
     * them without a job, and no round's plan nests inside the next.
     */
-  private def lloydRound(q: DataFrame, centroids: DataFrame): DataFrame = {
+  private[graft] def lloydRound(q: DataFrame, centroids: DataFrame): DataFrame = {
     val sums = assign(q, centroids)
       .select(col("cluster"), posexplode(col("q")).as(Seq("pos", "v")))
       .groupBy("cluster", "pos")
@@ -266,21 +266,21 @@ object Clustering {
       .select(col("super"), (col("__rn") - 1).cast("int").as("iidx"),
         transform(col("q"), x => x.cast("double")).as("cvec"))
     // Inner assignment dispatch (r14): the centroid table is bounded by
-    // kSuper * kInner BY CONSTRUCTION, so when that bound fits the
-    // broadcast budget (`graft.kmeans.innerBroadcastMaxRows`, default 1M
-    // rows — rows, not bytes: lower it for high-dim embeddings) the
+    // kSuper * kInner BY CONSTRUCTION, so when that bound fits the driver
+    // budget ([[DriverBudget]], at 8 bytes for the cell, the index and each
+    // of the `dim` components, dim read from the level-1 centroids: at
+    // most kSuper rows, a local relation after a Lloyd round) the
     // assignment runs as ONE fused argmin projection probing a broadcast
     // super→centroids table (functions.ArgminSqDistGroupedExpr) — no
     // shuffle-hash join, no struct-min SortAggregate, no exchange + two
     // sorts per inner Lloyd round. Past the budget (k in the millions at
     // high dim) the joined formulation below remains the path — that is
-    // the two-level design's whole point, so the gate is static and free.
-    // Fenced cell-identical in RelevanceClusteringSuite (ties, null q,
-    // empty cells).
-    val innerBroadcastMax = embeddings.sparkSession.conf
-      .getOption("graft.kmeans.innerBroadcastMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
-    val innerFused = kSuper.toLong * kInner <= innerBroadcastMax
+    // the two-level design's whole point. Fenced cell-identical in
+    // RelevanceClusteringSuite (ties, null q, empty cells).
+    val dim = coarse.collect().iterator
+      .map(r => if (r.isNullAt(1)) 0 else r.getSeq[Double](1).length).maxOption.getOrElse(0)
+    val innerFused = kSuper.toLong * kInner <=
+      DriverBudget.rows(embeddings.sparkSession, 8L * (2 + dim))
     // fused probe over any (vec_id, super, q) frame; rows whose cell has
     // no centroids drop, matching the joined path's inner join
     def assignCellFused(points: DataFrame, cent: DataFrame): DataFrame = {
@@ -362,24 +362,5 @@ object Clustering {
     }).localCheckpoint(eager = true)
     cells.unpersist()
     out
-  }
-
-  /** Per-cluster inertia (sum of squared distances to the assigned
-    * centroid) and sizes — the convergence/quality diagnostic.
-    */
-  def inertia(embeddings: DataFrame, k: Int = 8, iters: Int = 1, scale: Int = 1000,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = embeddings.select(col(idCol).cast("long").as("vec_id"),
-      transform(col(vecCol), x => round(x.cast("double") * scale).cast("long")).as("q"))
-    var centroids = q.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("cidx"),
-        transform(col("q"), x => x.cast("double")).as("cvec"))
-    for (_ <- 1 to iters) centroids = lloydRound(q, centroids)
-    q.crossJoin(broadcast(centroids))
-      .withColumn("__d", sqDist(col("q"), col("cvec")))
-      .groupBy("vec_id")
-      .agg(min(struct(col("__d"), col("cidx"))).as("__m"))
-      .groupBy(col("__m.cidx").as("cluster"))
-      .agg(count(lit(1)).as("n"), sum(col("__m.__d")).as("inertia"))
   }
 }

@@ -4,9 +4,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,9 +80,10 @@ object Dedup {
 
   // ------------------------------------------------------- LSH band join
 
-  /** One LSH operator's cache lifecycle: `body` persists its frames through
-    * the `cache` it is handed and returns its verified pairs, which are
-    * eagerly `localCheckpoint`ed; then every cache is released, also when
+  /** One operator's cache lifecycle: `body` persists its frames through
+    * the `cache` it is handed and returns its result (an LSH operator's
+    * verified pairs, [[semanticDedup]]'s rows), which is eagerly
+    * `localCheckpoint`ed; then every cache is released, also when
     * the body or the checkpoint throws. The returned frame owns its
     * checkpoint blocks; Spark's ContextCleaner frees them with it.
     */
@@ -168,25 +168,23 @@ object Dedup {
 
   /** The kept-vector fallback of [[bandJoin]]: the rows of `banded` whose
     * bucket is within the cap (a join against the size-filtered `sizes`),
-    * each carrying its doc's `payload` and kept-bucket vector `__kv` —
-    * slot j is the doc's band-j key, NULL when that bucket was capped away.
+    * each carrying its row's `payload` and kept-bucket vector `__kv` —
+    * slot j is the row's band-j key, NULL when that bucket was capped away.
+    * The payload determines a row's band keys, so the rows are regrouped
+    * on (doc_id, payload): a repeated doc_id keeps one vector per distinct
+    * row, as the capped-set join pairs each of them, and n equal rows list
+    * each kept entry n times and come back n times.
     */
   private def keptVectors(banded: DataFrame, sizes: DataFrame, band: String, key: String,
                           bands: Int, maxBucket: Int, payload: Seq[String]): DataFrame = {
     val carried = col("doc_id") +: payload.map(col)
-    // payload is per doc, so first() is deterministic; a payload column
-    // that cannot be NULL stays so, as on the capped-set path, so the
-    // result's schema does not depend on the dispatch
-    def perDoc(p: String): Column =
-      if (banded.schema(p).nullable) first(p)
-      else GraftSqlBridge.column(KnownNotNull(GraftSqlBridge.expression(first(p))))
+    val entries = array_distinct(collect_list(struct(col(band), col(key))))
     banded.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"), Seq(band, key))
-      .groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col(band), col(key)))).as("__m"),
-        payload.map(p => perDoc(p).as(p)): _*)
+      .groupBy(carried: _*)
+      .agg(map_from_entries(entries).as("__m"), (count(lit(1)) / size(entries)).cast("int").as("__n"))
       // try_element_at: NULL for a missing band (plain element_at errors under ANSI)
-      .select(carried :+ transform(sequence(lit(0), lit(bands - 1)),
-        j => try_element_at(col("__m"), j)).as("__kv"): _*)
+      .select(carried :+ explode(array_repeat(transform(sequence(lit(0), lit(bands - 1)),
+        j => try_element_at(col("__m"), j)), col("__n"))).as("__kv"): _*)
       .select(carried :+ col("__kv") :+ posexplode(col("__kv")).as(Seq(band, key)): _*)
       .filter(col(key).isNotNull)
   }
@@ -912,15 +910,18 @@ object Dedup {
     * `k <= 0` (the default) AUTO-SCALES the cluster count to
     * `max(8, ceil(n / targetClusterSize))` from one count() pass over a
     * cache of the input (so an expensive upstream is computed once, not
-    * once for the count plus once per k-means round; the cache is
-    * released as soon as the slim cluster-edge frame materializes),
-    * which is what actually enforces the
+    * once for the count plus once per k-means round), which is what
+    * actually enforces the
     * "k grows with the corpus" requirement above: with k pinned, cluster
     * populations grow linearly with the corpus and the in-cluster
     * pairwise step grows quadratically (measured: pinned k=8 took 584 s
     * on the 100x corpus; auto-k is re-measured in PERF.md §0f). Pass an
     * explicit k to pin it (the oracle entry does, so its replay is
     * untouched).
+    *
+    * The result is an eager checkpoint ([[checkpointed]]): the input cache
+    * and the slim clustered-vector cache are released before the call
+    * returns, also when it throws.
     */
   def semanticDedup(df: DataFrame, vecCol: String = "embedding",
                     idCol: String = "vec_id", k: Int = 0, iters: Int = 1,
@@ -928,83 +929,69 @@ object Dedup {
                     maxCluster: Int = 100000,
                     targetClusterSize: Int = 4096,
                     twoLevelFromK: Int = 65536,
-                    twoLevelSoft: Boolean = true): DataFrame = {
+                    twoLevelSoft: Boolean = true): DataFrame = checkpointed { cache =>
     // Auto-k mode caches the input before counting it: the count action
     // fully materializes the cache, so an expensive un-cached upstream
     // (an LSH chain, a filter pipeline) is computed ONCE and the k-means
-    // rounds + edge build below read the cached copy. Released as soon as
-    // `e` (the slim persisted projection) is materialized — and on ANY
-    // exception in between (r9 ADVICE: a k-means failure used to leave the
-    // input pinned in MEMORY_AND_DISK for the session). An input the
-    // caller already persisted is used as-is (no double-persist warning,
-    // and its cache stays the caller's to manage).
-    val srcPinned = k <= 0 &&
-      df.storageLevel == StorageLevel.NONE
-    val src = if (srcPinned)
-      df.persist(StorageLevel.MEMORY_AND_DISK) else df
-    try {
-      val kEff =
-        if (k > 0) k
-        else math.max(8L, (src.count() + targetClusterSize - 1) / targetClusterSize).toInt
-      // Large-k ceiling (documented recipe: k ∝ n means millions of clusters
-      // at 100 TB): past `twoLevelFromK`, flat Lloyd's k-row broadcast per
-      // round stops being "small" — switch to the two-level variant whose
-      // big centroid table is cell-id-joined, never broadcast. The default
-      // threshold keeps every current caller (and the oracle, which pins
-      // k = 8) on the flat path. NOTE the two-level effective k rounds UP
-      // to kSuper * kInner >= kEff (cluster ids then span that larger
-      // range); empty inner cells drop out as in standard Lloyd.
-      val twoLevel = kEff >= twoLevelFromK
-      val assigned =
-        if (!twoLevel)
-          Clustering.kmeans(src, k = kEff, iters = iters, idCol = idCol, vecCol = vecCol)
-        else {
-          val kSuper = math.ceil(math.sqrt(kEff.toDouble)).toInt
-          val kInner = (kEff + kSuper - 1) / kSuper
-          // softCandidates: the round-10 recall mitigation for the
-          // documented +7% two-level kept-count drift — each vector also
-          // shops in its 2nd-nearest coarse cell DURING CANDIDATE
-          // GENERATION (the output cluster stays the primary), so a
-          // duplicate group split across a coarse boundary still meets in
-          // one bucket. Measured at 100x / k=512 in PERF.md.
-          Clustering.kmeansTwoLevel(src, kSuper = kSuper, kInner = kInner,
-            iters = iters, idCol = idCol, vecCol = vecCol,
-            softCandidates = twoLevelSoft)
-        }
-      val e = src.select(col(idCol).as("vec_id"), col(vecCol).as("__v"))
-        .join(assigned.select(col("vec_id"), col("cluster")), Seq("vec_id"))
-        .persist()
-      if (srcPinned) { e.count(); src.unpersist() }
-      // candidate membership: primary cluster, plus the soft second cell on
-      // the two-level path (≤ 2 rows per vector; the pairwise step below
-      // dedups ids, so a pair sharing both cells is still counted once)
-      val member =
-        if (twoLevel && twoLevelSoft)
-          e.select(col("vec_id"), col("__v"))
-            .join(assigned.select(col("vec_id"),
-              explode(array_distinct(array(col("cluster"),
-                coalesce(col("cluster2"), col("cluster"))))).as("cluster")), Seq("vec_id"))
-        else e
-      // cap on PRIMARY sizes (e, not member): soft members must not push a
-      // borderline cluster over maxCluster and knock it out of candidate
-      // generation entirely — cap semantics stay identical to hard mode,
-      // and soft can at most double the work inside an admitted cluster
-      val sizes = e.groupBy("cluster").agg(count(lit(1)).as("__csz"))
-      val capped = member.join(sizes.filter(col("__csz") <= maxCluster).hint("shuffle_hash"),
-        Seq("cluster"))
-      val a = capped.select(col("cluster"), col("vec_id").as("id_a"), col("__v").as("__va"))
-      val b = capped.select(col("cluster"), col("vec_id").as("id_b"), col("__v").as("__vb"))
-      val dups = a.join(b, Seq("cluster"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(round(Similarity.cosine(col("__va"), col("__vb")), 6) >= minCosine)
-        .select(col("id_b").as("vec_id")).distinct()
-      e.join(dups.withColumn("__dup", lit(true)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cluster"), col("__dup").isNull.as("kept"))
-    } catch {
-      case t: Throwable =>
-        if (srcPinned) src.unpersist()
-        throw t
-    }
+    // rounds + edge build below read the cached copy. An input the caller
+    // already persisted is used as-is (no double-persist warning, and its
+    // cache stays the caller's to manage).
+    val src = if (k <= 0 && df.storageLevel == StorageLevel.NONE) cache(df) else df
+    val kEff =
+      if (k > 0) k
+      else math.max(8L, (src.count() + targetClusterSize - 1) / targetClusterSize).toInt
+    // Large-k ceiling (documented recipe: k ∝ n means millions of clusters
+    // at 100 TB): past `twoLevelFromK`, flat Lloyd's k-row broadcast per
+    // round stops being "small" — switch to the two-level variant whose
+    // big centroid table is cell-id-joined, never broadcast. The default
+    // threshold keeps every current caller (and the oracle, which pins
+    // k = 8) on the flat path. NOTE the two-level effective k rounds UP
+    // to kSuper * kInner >= kEff (cluster ids then span that larger
+    // range); empty inner cells drop out as in standard Lloyd.
+    val twoLevel = kEff >= twoLevelFromK
+    val assigned =
+      if (!twoLevel)
+        Clustering.kmeans(src, k = kEff, iters = iters, idCol = idCol, vecCol = vecCol)
+      else {
+        val kSuper = math.ceil(math.sqrt(kEff.toDouble)).toInt
+        val kInner = (kEff + kSuper - 1) / kSuper
+        // softCandidates: the round-10 recall mitigation for the
+        // documented +7% two-level kept-count drift — each vector also
+        // shops in its 2nd-nearest coarse cell DURING CANDIDATE
+        // GENERATION (the output cluster stays the primary), so a
+        // duplicate group split across a coarse boundary still meets in
+        // one bucket. Measured at 100x / k=512 in PERF.md.
+        Clustering.kmeansTwoLevel(src, kSuper = kSuper, kInner = kInner,
+          iters = iters, idCol = idCol, vecCol = vecCol,
+          softCandidates = twoLevelSoft)
+      }
+    val e = cache(src.select(col(idCol).as("vec_id"), col(vecCol).as("__v"))
+      .join(assigned.select(col("vec_id"), col("cluster")), Seq("vec_id")))
+    // candidate membership: primary cluster, plus the soft second cell on
+    // the two-level path (≤ 2 rows per vector; the pairwise step below
+    // dedups ids, so a pair sharing both cells is still counted once)
+    val member =
+      if (twoLevel && twoLevelSoft)
+        e.select(col("vec_id"), col("__v"))
+          .join(assigned.select(col("vec_id"),
+            explode(array_distinct(array(col("cluster"),
+              coalesce(col("cluster2"), col("cluster"))))).as("cluster")), Seq("vec_id"))
+      else e
+    // cap on PRIMARY sizes (e, not member): soft members must not push a
+    // borderline cluster over maxCluster and knock it out of candidate
+    // generation entirely — cap semantics stay identical to hard mode,
+    // and soft can at most double the work inside an admitted cluster
+    val sizes = e.groupBy("cluster").agg(count(lit(1)).as("__csz"))
+    val capped = member.join(sizes.filter(col("__csz") <= maxCluster).hint("shuffle_hash"),
+      Seq("cluster"))
+    val a = capped.select(col("cluster"), col("vec_id").as("id_a"), col("__v").as("__va"))
+    val b = capped.select(col("cluster"), col("vec_id").as("id_b"), col("__v").as("__vb"))
+    val dups = a.join(b, Seq("cluster"))
+      .filter(col("id_a") < col("id_b"))
+      .filter(round(Similarity.cosine(col("__va"), col("__vb")), 6) >= minCosine)
+      .select(col("id_b").as("vec_id")).distinct()
+    e.join(dups.withColumn("__dup", lit(true)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cluster"), col("__dup").isNull.as("kept"))
   }
 
   // ------------------------------------------------------------- clusters

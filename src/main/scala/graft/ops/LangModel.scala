@@ -1,9 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{BigramNllExpr, LmProbe}
 
@@ -155,42 +153,16 @@ object LangModel {
     *
     * Scale shape (100 TB): the pruned model is the Zipf head — vocabulary-
     * not corpus-sized — and ships once per executor as a broadcast. The
-    * corpus is touched exactly once, with zero shuffles. Callers gate on
-    * model cardinality ([[scoreBigramLmAuto]]) because a pathological
-    * vocabulary could exceed the broadcast budget; the composed join path
-    * remains the fallback there.
+    * corpus is touched exactly once, with zero shuffles. A pathological
+    * vocabulary could exceed the broadcast budget, so [[scoreFromCache]]
+    * takes it only when the model fits [[DriverBudget]]; the composed join
+    * path remains the fallback there.
     */
-  def scoreBigramLmBroadcast(docs: DataFrame, model: DataFrame,
-                             unigrams: DataFrame,
-                             textCol: String = "text",
-                             idCol: String = "doc_id"): DataFrame =
-    scoreWithVocab(docs, model, vocabRows(unigrams), textCol, idCol)
-
-  /** The vocabulary side of the broadcast probe in ONE collect: per kept
-    * token its smoothing floor `round(ln(c_uni + V) * 1e6)`, with V (the
-    * vocabulary's row count, a window count over the whole frame) and the
-    * OOV floor `round(ln(V) * 1e6)` on every row — all SPARK-computed, so
-    * they are the composed path's values bit for bit. Rows are
-    * (token, v, oov, fl).
-    */
-  private def vocabRows(unigrams: DataFrame): Array[Row] =
-    unigrams.select(col("token"), col("c_uni"), count(lit(1)).over().as("v"))
-      .select(col("token"), col("v"),
-        round(log(col("v")) * lit(1e6)).cast("bigint").as("oov"),
-        round(log(col("c_uni") + col("v")) * lit(1e6)).cast("bigint").as("fl"))
-      .collect()
-
-  /** The V >= 2 guard of [[scoreBigramLm]], raised on the driver where V
-    * is already known (an empty vocabulary has V = 0).
-    */
-  private def requireVocab(v: Long): Unit =
-    if (v < 2) throw new IllegalArgumentException(
-      s"scoreBigramLm: kept vocabulary size V = $v but the ln(V) " +
-        "out-of-vocab floor needs V >= 2")
-
-  /** [[scoreBigramLmBroadcast]] over already-collected [[vocabRows]]. */
-  private def scoreWithVocab(docs: DataFrame, model: DataFrame, uniRows: Array[Row],
-                             textCol: String, idCol: String): DataFrame = {
+  private[graft] def scoreBigramLmBroadcast(docs: DataFrame, model: DataFrame,
+                                            unigrams: DataFrame,
+                                            textCol: String = "text",
+                                            idCol: String = "doc_id"): DataFrame = {
+    val uniRows = vocabRows(unigrams)
     val v = if (uniRows.isEmpty) 0L else uniRows(0).getLong(1)
     requireVocab(v)
     val oovMicro = uniRows(0).getLong(2)
@@ -220,6 +192,28 @@ object LangModel {
     scoreWithProbe(docs, LmProbe(tokens, floors, oovMicro, bigramIds, contribs),
       textCol, idCol)
   }
+
+  /** The vocabulary side of the broadcast probe in ONE collect: per kept
+    * token its smoothing floor `round(ln(c_uni + V) * 1e6)`, with V (the
+    * vocabulary's row count, a window count over the whole frame) and the
+    * OOV floor `round(ln(V) * 1e6)` on every row — all SPARK-computed, so
+    * they are the composed path's values bit for bit. Rows are
+    * (token, v, oov, fl).
+    */
+  private def vocabRows(unigrams: DataFrame): Array[Row] =
+    unigrams.select(col("token"), col("c_uni"), count(lit(1)).over().as("v"))
+      .select(col("token"), col("v"),
+        round(log(col("v")) * lit(1e6)).cast("bigint").as("oov"),
+        round(log(col("c_uni") + col("v")) * lit(1e6)).cast("bigint").as("fl"))
+      .collect()
+
+  /** The V >= 2 guard of [[scoreBigramLm]], raised on the driver where V
+    * is already known (an empty vocabulary has V = 0).
+    */
+  private def requireVocab(v: Long): Unit =
+    if (v < 2) throw new IllegalArgumentException(
+      s"scoreBigramLm: kept vocabulary size V = $v but the ln(V) " +
+        "out-of-vocab floor needs V >= 2")
 
   /** Every document's score in one projection probing a broadcast `probe`. */
   private def scoreWithProbe(docs: DataFrame, probe: LmProbe,
@@ -314,7 +308,6 @@ object LangModel {
   def scoreBigramLmFused(docs: DataFrame, textCol: String = "text",
                          idCol: String = "doc_id",
                          minCount: Int = 2): DataFrame = {
-    val spark = docs.sparkSession
     // Token array PRE-PROJECTED under the Generate: inlining `toks` into
     // the generator expression re-evaluates the regex split per reference
     // (5x per row measured — ProbeLmPlan; the optimizer does not collapse
@@ -342,43 +335,30 @@ object LangModel {
     // broadcasts + V), and broadcast-exchange jobs launch first and would
     // RACE to build a cold cache — measured as the corpus explode running
     // 2-3x inside model.count(). The build job also observes the number of
-    // pair types, which decides three things with no further pass:
-    //  - a cache that fits the driver budget ([[DriverBudget]], at Spark's
-    //    estimated width of a (string, string, bigint) row) is read once,
-    //    released, and trained on the driver ([[probeFromPairCounts]]):
-    //    one job instead of the vocabulary, model and broadcast jobs below;
-    //  - (r14, size-aware) the cache is read through a narrow coalesce(1)
-    //    only when it holds at most `graft.lm.coalesceMaxRows` pair types,
-    //    so the downstream vocabulary-sized reads (vocabulary and model
-    //    collects) are 1-task jobs, while a web-scale cache (billions of
-    //    bigram types) is never pinned in one partition;
-    //  - the model is a subset of the pair types (each of its joins
-    //    matches at most one row), so that count bounds it, and the model
-    //    is counted against `graft.lm.broadcastMaxRows` only when the
-    //    bound does not already fit.
+    // pair types, which decides with no further pass: a cache that fits
+    // the driver budget ([[DriverBudget]], at Spark's estimated width of a
+    // (string, string, bigint) row) is read once, released, and trained on
+    // the driver ([[probeFromPairCounts]]): one job instead of the
+    // vocabulary, model and broadcast jobs of [[scoreFromCache]].
     val (pairCountsCache, nPairTypes) = EagerCache.build(
       stream.groupBy("w1", "w2").agg(count(lit(1)).as("c")))
-    val driverMax = DriverBudget.rows(spark,
-      EstimationUtils.getSizePerRow(pairCountsCache.queryExecution.analyzed.output).toLong)
+    val driverMax = DriverBudget.rows(pairCountsCache)
     if (driverMax > 0 && nPairTypes <= driverMax) {
       val pairs = try pairCountsCache.collect() finally EagerCache.release(pairCountsCache)
       scoreWithProbe(docs, probeFromPairCounts(pairs, minCount), textCol, idCol)
-    } else scoreFromCache(docs, pairCountsCache, nPairTypes, textCol, idCol, minCount)
+    } else scoreFromCache(docs, pairCountsCache, textCol, idCol, minCount)
   }
 
   /** [[scoreBigramLmFused]] over a pair-count cache above the driver
-    * budget: vocabulary, model and probe are Spark plans over the cache.
+    * budget (or with the threshold <= 0): vocabulary and model are Spark
+    * plans over the cache. The model is scored by the broadcast probe when
+    * its rows fit [[DriverBudget]] at Spark's estimated width of the
+    * (w1, w2, w_micro) rows the probe collects, and by the join scorer
+    * otherwise. The pair-type count that sent the cache here bounds the
+    * model but, at that same width, never fits, so the model is counted.
     */
-  private def scoreFromCache(docs: DataFrame, pairCountsCache: DataFrame, nPairTypes: Long,
+  private def scoreFromCache(docs: DataFrame, pairCounts: DataFrame,
                              textCol: String, idCol: String, minCount: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val maxRows = spark.conf.getOption("graft.lm.broadcastMaxRows")
-      .map(_.toLong).getOrElse(8000000L)
-    val coalesceMax = spark.conf.getOption("graft.lm.coalesceMaxRows")
-      .map(_.toLong).getOrElse(8000000L)
-    val pairCounts =
-      if (nPairTypes <= coalesceMax) pairCountsCache.coalesce(1)
-      else pairCountsCache
     var keep = false
     try {
       val unigrams = pairCounts.groupBy("w1").agg(sum("c").as("c_uni"))
@@ -394,42 +374,13 @@ object LangModel {
         .select(col("w1"), col("w2"), col("c_big"), col("c_uni"),
           round(log((col("c_big") + lit(1.0)) / (col("c_uni") + col("v"))) * lit(1e6))
             .cast("bigint").as("w_micro"))
+      val maxRows = DriverBudget.rows(model.select(col("w1"), col("w2"), col("w_micro")))
       // the broadcast scorer collects the model and vocabulary into its
       // probe; the join scorer reads them lazily, so its returned plan
       // keeps the cache (see EagerCache.release)
-      if (nPairTypes <= maxRows || model.count() <= maxRows)
+      if (maxRows > 0 && model.count() <= maxRows)
         scoreBigramLmBroadcast(docs, model, unigrams, textCol, idCol)
       else { keep = true; scoreBigramLm(docs, model, unigrams, textCol, idCol) }
-    } finally if (!keep) EagerCache.release(pairCountsCache)
-  }
-
-  /** Scorer dispatch: broadcast-probe when the pruned model fits the
-    * broadcast budget (`graft.lm.broadcastMaxRows`, default 8M bigrams —
-    * ~256 MB of probe tables at load 0.5, well under a production
-    * executor's broadcast headroom), composed join path otherwise. The
-    * model and vocabulary frames are persisted across the cardinality
-    * check and probe build so the corpus-sized training passes run once.
-    */
-  def scoreBigramLmAuto(docs: DataFrame, model: DataFrame,
-                        unigrams: DataFrame,
-                        textCol: String = "text",
-                        idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    val maxRows = spark.conf.getOption("graft.lm.broadcastMaxRows")
-      .map(_.toLong).getOrElse(8000000L)
-    val uniP = unigrams.persist(StorageLevel.MEMORY_AND_DISK)
-    val modelP = model.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the probe's vocabulary collect runs first and builds the unigram
-      // cache in one pass — the model plan references it three times and
-      // its broadcast jobs would race a cold cache (same hazard as the
-      // fused path's pairCounts; see scoreBigramLmFused)
-      val vocab = vocabRows(uniP)
-      if (modelP.count() <= maxRows) scoreWithVocab(docs, modelP, vocab, textCol, idCol)
-      // fallback = the composed path exactly as before (plus the vocabulary
-      // and cardinality passes); the caches are dropped so an over-budget
-      // model's blocks don't pin executor memory across the scoring job
-      else scoreBigramLm(docs, modelP, uniP, textCol, idCol)
-    } finally { modelP.unpersist(false); uniP.unpersist(false) }
+    } finally if (!keep) EagerCache.release(pairCounts)
   }
 }

@@ -53,15 +53,14 @@ class BpeSuite extends SparkSpec {
 
   test("local merge rounds are cell-identical to the distributed rounds") {
     // r13 fence: learnMerges defaults to driver-side rounds over the
-    // collected capped vocabulary; graft.bpe.localMaxWords=0 forces the
+    // collected capped vocabulary; the broadcast threshold off forces the
     // distributed path. Same corpus, both paths, every cell equal.
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def run(): Seq[(Long, String, String, Long)] =
       Bpe.learnMerges(d, nMerges = 10).orderBy("step")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     val local = run()
-    spark.conf.set("graft.bpe.localMaxWords", "0")
-    val distributed = try run() finally spark.conf.unset("graft.bpe.localMaxWords")
+    val distributed = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run())
     assert(local == distributed, "driver-side BPE rounds diverge from distributed rounds")
   }
 
@@ -74,8 +73,7 @@ class BpeSuite extends SparkSpec {
       Bpe.learnMerges(docs, nMerges = 3).orderBy("step")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     val local = run()
-    spark.conf.set("graft.bpe.localMaxWords", "0")
-    val distributed = try run() finally spark.conf.unset("graft.bpe.localMaxWords")
+    val distributed = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run())
     assert(local == distributed,
       s"tie/codepoint divergence: local=$local distributed=$distributed")
   }

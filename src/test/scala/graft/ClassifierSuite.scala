@@ -104,21 +104,6 @@ class ClassifierSuite extends SparkSpec {
       "edge-document NB scores diverge between probe and composed paths")
   }
 
-  test("auto dispatch: over-budget model falls back and still matches") {
-    val m = Classifier.trainNaiveBayes(docs, col("lang") === "en", minCount = 2)
-    val expected = Classifier.scoreNaiveBayes(docs, m, col("lang") === "en")
-      .orderBy("doc_id").collect()
-    spark.conf.set("graft.nb.broadcastMaxRows", "1")
-    try {
-      val fallback = Classifier.scoreNaiveBayesAuto(docs, m, col("lang") === "en")
-        .orderBy("doc_id").collect()
-      assert(expected.sameElements(fallback), "shuffle fallback diverges")
-    } finally spark.conf.unset("graft.nb.broadcastMaxRows")
-    val auto = Classifier.scoreNaiveBayesAuto(docs, m, col("lang") === "en")
-      .orderBy("doc_id").collect()
-    assert(expected.sameElements(auto), "auto broadcast path diverges")
-  }
-
   test("fused train-and-score is bit-identical to the composed chain") {
     // corpus fence for the r14 carried-prior path: every (doc_id,
     // score_micro, pred) cell must match train + composed score
@@ -155,14 +140,11 @@ class ClassifierSuite extends SparkSpec {
     val m = Classifier.trainNaiveBayes(docs, col("lang") === "en", minCount = 2)
     val expected = Classifier.scoreNaiveBayes(docs, m, col("lang") === "en")
       .orderBy("doc_id").collect()
-    spark.conf.set("graft.nb.broadcastMaxRows", "1")
-    try {
-      val fused = Classifier.trainAndScoreNaiveBayes(docs, col("lang") === "en",
-          minCount = 2)
-        .orderBy("doc_id").collect()
-      assert(expected.sameElements(fused),
-        "fused shuffle fallback diverges from the composed chain")
-    } finally spark.conf.unset("graft.nb.broadcastMaxRows")
+    val fused = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(
+      Classifier.trainAndScoreNaiveBayes(docs, col("lang") === "en", minCount = 2)
+        .orderBy("doc_id").collect())
+    assert(expected.sameElements(fused),
+      "fused shuffle fallback diverges from the composed chain")
   }
 
   test("micro-integer scores are partition-count invariant") {

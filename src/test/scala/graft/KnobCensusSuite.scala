@@ -12,14 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class KnobCensusSuite extends AnyFunSuite {
 
   private val declared = Set(
-    // size gates: the driver-side or broadcast budgets of one operator each
-    "graft.bpe.localMaxWords",
+    // the minimum input of the eager-aggregation rule
     "graft.eagerAgg.minBytes",
-    "graft.kmeans.innerBroadcastMaxRows",
-    "graft.lm.broadcastMaxRows",
-    "graft.lm.coalesceMaxRows",
+    // the LSH self-join's exchange width
     "graft.lsh.pinnedWidth",
-    "graft.nb.broadcastMaxRows",
     // the physical layout of registered tables
     "graft.layout.bucketed",
     // Bench's data-scaled shuffle width

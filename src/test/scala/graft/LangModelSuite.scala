@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
+import graft.functions.BigramNllExpr
 import graft.ops.LangModel
 
 /** Behavior gates for the bigram-LM perplexity filter: the smoothed
@@ -18,10 +20,24 @@ class LangModelSuite extends SparkSpec {
 
   private lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-  // the fused scorer's Spark-trained path: the broadcast threshold off
-  // turns its driver-trained path off
-  private def onSparkPath[T](f: => T): T =
-    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(f)
+  // the fused scorer's Spark-trained path with the broadcast probe: a
+  // broadcast threshold that fits the model's rows (at least one) but not
+  // the pair types' turns the driver trainer off and keeps the probe. Both
+  // rows are 56 bytes wide (two strings and a bigint), and the pair types
+  // are every bigram type plus each document's last token, so they
+  // outnumber the model's rows. (The threshold off sends the scorer to the
+  // join path too.)
+  private def onSparkPath[T](d: DataFrame, minCount: Int)(f: => T): T = {
+    val model = LangModel.trainBigramLm(d, LangModel.unigramCounts(d, minCount = minCount),
+      minCount = minCount)
+    val width = EstimationUtils.getSizePerRow(
+      model.select("w1", "w2", "w_micro").queryExecution.analyzed.output).toLong
+    withConf("spark.sql.autoBroadcastJoinThreshold", (width * math.max(1L, model.count())).toString)(f)
+  }
+
+  // whether `scored` is the broadcast probe's projection, not the join scorer
+  private def probeScored(scored: DataFrame): Boolean =
+    scored.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(_.isInstanceOf[BigramNllExpr])))
 
   // halves round away from zero, as in Spark round() / DuckDB ROUND —
   // Java math.round would disagree on negative *.5 micronat values
@@ -136,17 +152,16 @@ class LangModelSuite extends SparkSpec {
   }
 
   test("fused pipeline: wide (uncoalesced) pair-count cache matches too") {
-    // the r14 scale-safety fence: with graft.lm.coalesceMaxRows = 0 the
-    // persisted pair-count frame keeps its full shuffle width (the 100 TB
-    // shape — no single-partition cache), and every score cell must still
-    // equal the composed chain
+    // the r14 scale-safety fence: past the driver trainer the Spark-trained
+    // model reads the pair-count cache at its full width (the 100 TB shape
+    // — no single-partition cache) and the broadcast probe scores it;
+    // every score cell must still equal the composed chain
     val uni = LangModel.unigramCounts(docs, minCount = 2)
     val model = LangModel.trainBigramLm(docs, uni, minCount = 2)
     val want = rows(LangModel.scoreBigramLm(docs, model, uni))
-    spark.conf.set("graft.lm.coalesceMaxRows", "0")
-    try assert(rows(onSparkPath(LangModel.scoreBigramLmFused(docs))) == want,
-      "wide-cache fused scores diverged from composed")
-    finally spark.conf.unset("graft.lm.coalesceMaxRows")
+    val scored = onSparkPath(docs, 2)(LangModel.scoreBigramLmFused(docs))
+    assert(probeScored(scored), s"not the broadcast scorer:\n${scored.queryExecution.optimizedPlan}")
+    assert(rows(scored) == want, "wide-cache fused scores diverged from composed")
   }
 
   test("fused pipeline: over-budget join fallback matches and stays readable") {
@@ -155,22 +170,10 @@ class LangModelSuite extends SparkSpec {
     val uni = LangModel.unigramCounts(docs, minCount = 2)
     val model = LangModel.trainBigramLm(docs, uni, minCount = 2)
     val want = rows(LangModel.scoreBigramLm(docs, model, uni))
-    spark.conf.set("graft.lm.broadcastMaxRows", "0")
-    val scored = try onSparkPath(LangModel.scoreBigramLmFused(docs))
-      finally spark.conf.unset("graft.lm.broadcastMaxRows")
+    val scored = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(LangModel.scoreBigramLmFused(docs))
+    assert(!probeScored(scored), s"not the join scorer:\n${scored.queryExecution.optimizedPlan}")
     assert(rows(scored) == want, "fallback fused scores diverged from composed")
     assert(rows(scored) == want, "second read of the fallback result")
-  }
-
-  test("auto dispatch: budget=0 falls back to the composed join path") {
-    val uni = LangModel.unigramCounts(docs, minCount = 2)
-    val model = LangModel.trainBigramLm(docs, uni, minCount = 2)
-    val want = rows(LangModel.scoreBigramLm(docs, model, uni))
-    spark.conf.set("graft.lm.broadcastMaxRows", "0")
-    try assert(rows(LangModel.scoreBigramLmAuto(docs, model, uni)) == want)
-    finally spark.conf.unset("graft.lm.broadcastMaxRows")
-    assert(rows(LangModel.scoreBigramLmAuto(docs, model, uni)) == want,
-      "default budget (broadcast path) must match too")
   }
 
   test("broadcast scorer raises on degenerate vocabulary (V < 2)") {
@@ -194,15 +197,16 @@ class LangModelSuite extends SparkSpec {
   }
 
   // the fused scorer's two trainers: on the driver from the collected pair
-  // counts (default threshold) and in Spark (threshold off); every cell of
+  // counts (default threshold) and in Spark ([[onSparkPath]]); every cell of
   // every document must agree, and the build of each must take its path
   private def fusedBothPaths(d: DataFrame, minCount: Int): Unit = {
     def exact(df: DataFrame) = df.collect().toSeq.map(_.toSeq).sortBy(_.head.toString)
     val (driver, driverJobs) = ExecProbe.jobs(spark)(LangModel.scoreBigramLmFused(d, minCount = minCount))
-    val (inSpark, sparkJobs) = onSparkPath(
+    val (inSpark, sparkJobs) = onSparkPath(d, minCount)(
       ExecProbe.jobs(spark)(LangModel.scoreBigramLmFused(d, minCount = minCount)))
     assert(driverJobs < sparkJobs,
       s"driver path built in $driverJobs jobs, Spark path in $sparkJobs")
+    assert(probeScored(driver) && probeScored(inSpark), "both paths score with the broadcast probe")
     val (a, b) = (exact(driver), exact(inSpark))
     assert(a.nonEmpty && a == b, s"minCount $minCount: driver-trained scores diverged")
   }
@@ -228,7 +232,7 @@ class LangModelSuite extends SparkSpec {
       val driver = intercept[IllegalArgumentException](
         LangModel.scoreBigramLmFused(d, minCount = minCount).collect())
       val inSpark = intercept[IllegalArgumentException](
-        onSparkPath(LangModel.scoreBigramLmFused(d, minCount = minCount).collect()))
+        onSparkPath(d, minCount)(LangModel.scoreBigramLmFused(d, minCount = minCount).collect()))
       assert(driver.getMessage.contains("V >= 2"))
       assert(driver.getMessage == inSpark.getMessage)
     }

@@ -593,11 +593,11 @@ class PipelineGatesSuite extends SparkSpec {
     val onIt = lshBothPaths(Dedup.minhashNearDuplicates(third, threshold = 0.666667,
       bands = 16, rows = 1))
     assert(onIt.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) == Seq((1L, 2L, 0.666667)))
-    // a repeated id: the kept-vector fallback cannot group it (its map of
-    // band keys gets a duplicate key), so the driver path is held to the
-    // capped-set band join, whose attach joins pair it with both rows
-    val twice = fam.union(Seq[(java.lang.Long, String)]((7L, words.replace("w1 ", "x1 ")))
-      .toDF("doc_id", "text"))
+    // a repeated id, on a row with other text and on an equal row: the
+    // attach joins pair it with every row, on the driver path, the
+    // capped-set band join and the kept-vector fallback
+    val twice = fam.union(Seq[(java.lang.Long, String)]((7L, words.replace("w1 ", "x1 ")),
+      (7L, words + " tail")).toDF("doc_id", "text"))
     def sorted(df: org.apache.spark.sql.DataFrame) = df.orderBy(df.columns.map(col): _*).collect().toSeq
     val withSeven = for ((width, op) <- Seq[(Int, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
         80 -> (Dedup.minhashNearDuplicates(_, threshold = 0.0, bands = 8, rows = 2)),
@@ -608,6 +608,7 @@ class PipelineGatesSuite extends SparkSpec {
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
       val on = sorted(local)
       assert(on == sorted(distributedLsh(twice, width)(op(twice))))
+      assert(on == sorted(withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(op(twice))))
       on.count(r => r.getLong(0) == 7L || r.getLong(1) == 7L)
     }
     assert(withSeven.sum >= 2, s"pairs of id 7 per operator: $withSeven")

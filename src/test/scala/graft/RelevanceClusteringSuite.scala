@@ -111,9 +111,28 @@ class RelevanceClusteringSuite extends SparkSpec {
     assert(a1.values.toSet.size > 1, "degenerate single-cluster result")
   }
 
+  /** Per-cluster inertia (sum of squared distances to the assigned
+    * centroid) and sizes after `iters` Lloyd rounds from the k smallest ids
+    * — the convergence diagnostic of the test below.
+    */
+  private def inertia(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
+    val q = embeddings.select(col("vec_id").cast("long").as("vec_id"),
+      transform(col("embedding"), x => round(x.cast("double") * 1000).cast("long")).as("q"))
+    var centroids = q.filter(col("vec_id") < k)
+      .select(col("vec_id").cast("int").as("cidx"),
+        transform(col("q"), x => x.cast("double")).as("cvec"))
+    for (_ <- 1 to iters) centroids = Clustering.lloydRound(q, centroids)
+    q.crossJoin(broadcast(centroids))
+      .withColumn("__d", Clustering.sqDist(col("q"), col("cvec")))
+      .groupBy("vec_id")
+      .agg(min(struct(col("__d"), col("cidx"))).as("__m"))
+      .groupBy(col("__m.cidx").as("cluster"))
+      .agg(count(lit(1)).as("n"), sum(col("__m.__d")).as("inertia"))
+  }
+
   test("kmeans: Lloyd iterations do not increase total inertia") {
     def total(iters: Int): Double =
-      Clustering.inertia(emb, k = 8, iters = iters)
+      inertia(emb, k = 8, iters = iters)
         .agg(sum("inertia")).as[Double].collect().head
     val i0 = total(0)
     val i2 = total(2)
@@ -278,8 +297,9 @@ class RelevanceClusteringSuite extends SparkSpec {
   }
 
   test("kmeansTwoLevel: fused inner argmin equals the joined struct-min path") {
-    // the r14 fence: budget 0 forces the shuffle-hash join + struct-min
-    // formulation; the default (fused broadcast argmin) must reproduce it
+    // the r14 fence: the broadcast threshold off forces the shuffle-hash
+    // join + struct-min formulation; the default (fused broadcast argmin)
+    // must reproduce it
     // cell for cell — primary AND soft cluster2 — on the real corpus and
     // on a tie-heavy synthetic (duplicate vectors force inner-distance ties)
     def run(df: org.apache.spark.sql.DataFrame, soft: Boolean): Seq[(Long, Int, Int)] =
@@ -290,9 +310,7 @@ class RelevanceClusteringSuite extends SparkSpec {
         .sortBy(_._1).toSeq
     def both(df: org.apache.spark.sql.DataFrame, soft: Boolean): Unit = {
       val fused = run(df, soft)
-      spark.conf.set("graft.kmeans.innerBroadcastMaxRows", "0")
-      val joined = try run(df, soft)
-      finally spark.conf.unset("graft.kmeans.innerBroadcastMaxRows")
+      val joined = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(run(df, soft))
       assert(fused == joined, s"fused inner argmin != joined (soft=$soft)")
     }
     both(emb, soft = false)

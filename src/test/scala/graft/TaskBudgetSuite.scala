@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LocalRelation}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.ops.{Classifier, Clustering, Dedup, DriverBudget, LangModel}
+import graft.ops.{Bpe, Classifier, Clustering, Dedup, DriverBudget, LangModel}
 
 /** Task-count, job-count and cache-release gates for the operators that
   * size their own exchanges and caches: at Spark's default of 200 shuffle
@@ -110,6 +110,26 @@ class TaskBudgetSuite extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty, "ngramJaccardPairs left cache manager entries")
   }
 
+  // semanticDedup's result is an eager checkpoint too: its input cache
+  // (auto-k) and its clustered-vector cache are released before it
+  // returns, and a caller's cache of the input stays in place
+  for ((mode, k) <- Seq("flat k" -> 8, "auto-k" -> 0))
+    test(s"semanticDedup [$mode]: cache manager left as found") {
+      def run(in: DataFrame) = Dedup.semanticDedup(in, k = k, minCosine = 0.3)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).toSeq.sorted
+      spark.catalog.clearCache()
+      val rows = run(emb)
+      info(s"${rows.length} rows")
+      assert(rows.nonEmpty)
+      assert(spark.sharedState.cacheManager.isEmpty, "semanticDedup left cache manager entries")
+      val input = emb.persist()
+      try {
+        assert(run(input) == rows)
+        assert(input.storageLevel != StorageLevel.NONE, "semanticDedup dropped the caller's cache")
+      } finally input.unpersist()
+      assert(spark.sharedState.cacheManager.isEmpty, "semanticDedup left cache manager entries")
+    }
+
   // the embeddings table beside the documents table
   private lazy val emb = spark.read.parquet(docs.inputFiles.head.replace("documents", "embeddings"))
     .filter(col("vec_id") < 200)
@@ -168,12 +188,65 @@ class TaskBudgetSuite extends SparkSpec {
       assert(spark.sharedState.cacheManager.isEmpty, s"$name left cache manager entries")
     }
 
+  // The off-switch census: every DriverBudget gate, on a small input, takes
+  // its driver or broadcast path at the default threshold and its
+  // distributed path with the threshold off. The last field reads the path
+  // taken from the result, the jobs its call and read ran, and the shuffle
+  // exchanges they ran.
+  private def onDriver(out: DataFrame): Boolean = out.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+  // the scorers' join paths explode the documents' tokens; the broadcast
+  // probes score each document in one projection
+  private def noExplode(out: DataFrame): Boolean =
+    !out.queryExecution.optimizedPlan.exists(_.isInstanceOf[Generate])
+  private val census = Seq[(String, () => DataFrame, DataFrame => DataFrame,
+      (DataFrame, Long, Seq[ExecProbe.Exchange]) => Boolean)](
+    ("minhashNearDuplicates", () => docs,
+      Dedup.minhashNearDuplicates(_, threshold = 0.7, bands = 8, rows = 4), (o, _, _) => onDriver(o)),
+    ("simhashNearDuplicates", () => docs, Dedup.simhashNearDuplicates(_, maxHamming = 6),
+      (o, _, _) => onDriver(o)),
+    ("simhashNearDuplicatesWide", () => docs, Dedup.simhashNearDuplicatesWide(_, maxHamming = 12),
+      (o, _, _) => onDriver(o)),
+    ("connectedComponents", () => localPairs, Dedup.connectedComponents(_), (o, _, _) => onDriver(o)),
+    ("kmeans", () => emb, Clustering.kmeans(_, k = 8, iters = 2), (o, _, _) => onDriver(o)),
+    // the driver trainer's jobs budget above; the Spark trainer runs more
+    ("scoreBigramLmFused trainer", () => docs, LangModel.scoreBigramLmFused(_), (_, j, _) => j <= 4),
+    ("scoreBigramLmFused scorer", () => docs, LangModel.scoreBigramLmFused(_), (o, _, _) => noExplode(o)),
+    ("trainAndScoreNaiveBayes scorer", () => docs,
+      Classifier.trainAndScoreNaiveBayes(_, col("lang") === "en"), (o, _, _) => noExplode(o)),
+    // the joined inner assignment groups every vector by its id for the
+    // struct-min; the fused one is a projection
+    ("kmeansTwoLevel inner assignment", () => emb,
+      Clustering.kmeansTwoLevel(_, kSuper = 2, kInner = 4, iters = 1),
+      (_, _, xs) => !xs.exists(_.keys == Seq("vec_id"))),
+    // the distributed rounds run a pair-count job and a checkpoint each
+    ("learnMerges", () => docs, Bpe.learnMerges(_, nMerges = 5), (_, j, _) => j < 5))
+
+  test("off-switch census: every DriverBudget gate off at threshold -1") {
+    val wrong = for ((name, input, op, driverPath) <- census; threshold <- Seq(None, Some("-1"))) yield {
+      val in = input()
+      def run() = ExecProbe.exchanges(spark)(ExecProbe.jobs(spark) {
+        val out = op(in)
+        out.collect()
+        out
+      })
+      val ((out, jobs), xs) = threshold.fold(run())(withConf("spark.sql.autoBroadcastJoinThreshold", _)(run()))
+      val onDriverPath = driverPath(out, jobs, xs)
+      val at = s"$name, threshold ${threshold.getOrElse("default")}: $jobs jobs"
+      info(s"$at, ${if (onDriverPath) "driver or broadcast" else "distributed"} path")
+      Option.when(onDriverPath != threshold.isEmpty)(s"$at, exchanges $xs")
+    }
+    assert(wrong.flatten.isEmpty, s"wrong path: ${wrong.flatten.mkString("; ")}")
+  }
+
   test("DriverBudget: rows of a width, none with the threshold off, below Int.MaxValue") {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     withConf(key, "1600") {
       assert(DriverBudget.rows(spark, 16) == 100)
       assert(DriverBudget.rows(spark, 56) == 28)
       assert(DriverBudget.rows(spark, 1601) == 0)
+      // Spark's estimated widths: (string, string, bigint) 56 bytes, (string, bigint) 36
+      assert(DriverBudget.rows(spark.range(1).selectExpr("'a' AS w1", "'b' AS w2", "id AS c")) == 28)
+      assert(DriverBudget.rows(spark.range(1).selectExpr("'a' AS token", "id AS w")) == 44)
     }
     for (off <- Seq("-1", "0")) withConf(key, off) {
       assert(DriverBudget.rows(spark, 16) == 0, s"threshold $off")
